@@ -72,20 +72,6 @@ def q_scan_project_filter(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def q_const_project(spark: SparkSession, sf: str) -> DataFrame:
-    """ConstProject: no-table SELECT. Retired from the oracle registry in
-    round 7 (50-row driver cap; ConstProjectNode stays oracle-covered by
-    the constant columns in ``q_expressions``) — the no-table form is
-    exercised by tests/test_sql.py::test_const_project."""
-    return R.const_project(
-        spark,
-        three=(F.lit(1) + F.lit(2)).cast("long"),
-        s=F.concat(F.lit("a"), F.lit("b")),
-        half=(F.lit(1.0) / 2).cast("double"),
-        t=F.lit(True) & F.lit(False),
-    )
-
-
 def q_group_agg(spark: SparkSession, sf: str) -> DataFrame:
     """GroupAggrerationNode: TPC-H Q1-shaped group aggregate."""
     li = load_table(spark, sf, "lineitem")

@@ -83,7 +83,7 @@ def _jvm_source(spark, path: str, schema) -> DataFrame:
     """JVM-only staged request source: ``spark.read.text`` over a
     FIXED-SIZE padded file (the scan's FileIndex caches the length at
     compile time, so the file must never change size — the writer pads
-    with newlines), one base64-cell CSV-ish line per request row, decoded
+    with ONE line of spaces), one base64-cell CSV-ish line per row, decoded
     and cast entirely with Catalyst expressions. This keeps the serving
     hot path free of Python workers: a 1-row ``mapInArrow`` roundtrip
     costs ~200 ms/execution on this host regardless of data — the
@@ -106,15 +106,14 @@ def _jvm_source(spark, path: str, schema) -> DataFrame:
             decoded = F.decode(decoded, "UTF-8").cast(f.dataType)
         col = F.when(cell == "~", F.lit(None).cast(f.dataType)).otherwise(decoded)
         cols.append(col.alias(f.name))
-    # every encoded line ends with a trailing "," so no real row is ever
-    # the empty string; empty lines are exactly the padding
-    return raw.where(F.length("value") > 0).select(*cols)
+    # every encoded row ends with a trailing ","; the padding line never does
+    return raw.where(F.col("value").endswith(",")).select(*cols)
 
 
-def _encode_staged_lines(table, pad_bytes: int, schema=None) -> bytes:
-    """Encode an Arrow table of request rows into the fixed-size staged
-    text payload (base64 cells, "~" nulls, trailing comma, newline pad).
-    ``timestamp``-typed fields encode as epoch-MICROS (decoded by
+def _encode_rows(table, schema=None) -> bytes:
+    """Encode an Arrow table of rows into staged text lines (base64
+    cells, "~" nulls, a trailing comma, one newline-terminated line per
+    row). ``timestamp``-typed fields encode as epoch-MICROS (decoded by
     ``timestamp_micros`` — timezone-free on the wire). Both staging
     producers (``toArrow`` and ``LocalDataToArrowConversion``) emit
     TZ-AWARE datetimes for timestamp columns, so the epoch math is
@@ -163,11 +162,16 @@ def _encode_staged_lines(table, pad_bytes: int, schema=None) -> bytes:
             raw = str(v)
         return base64.b64encode(raw.encode("utf-8")).decode("ascii")
 
-    lines = [
-        ",".join(fmt(k, v) for k, v in row.items()) + ","
+    return "".join(
+        ",".join(fmt(k, v) for k, v in row.items()) + ",\n"
         for row in table.to_pylist()
-    ]
-    data = ("\n".join(lines) + "\n").encode("utf-8") if lines else b""
+    ).encode("utf-8")
+
+
+def _pad_staged(data: bytes, pad_bytes: int) -> bytes:
+    """``data`` padded to exactly ``pad_bytes`` with ONE line of spaces,
+    which the source's trailing-comma filter drops (a newline pad would
+    make every scan read one empty record per pad byte)."""
     if len(data) > pad_bytes:
         raise ValueError(
             f"staged request batch encodes to {len(data)} bytes, over the "
@@ -176,7 +180,8 @@ def _encode_staged_lines(table, pad_bytes: int, schema=None) -> bytes:
             "higher BEFORE the deployment compiles, or serve the batch "
             "through the uncompiled DataFrame path."
         )
-    return data + b"\n" * (pad_bytes - len(data))
+    room = pad_bytes - len(data)
+    return data + (b" " * (room - 1) + b"\n" if room else b"")
 
 
 def _exact_collect_plan(df: DataFrame, schema):
@@ -318,8 +323,17 @@ class CompiledRequestPlan:
       correct/fast split: analysis of an already-resolved tree is cheap;
       the Python-side lowering never re-runs.
     - ``key`` (from ``SqlDeployment._serving_key``) pins the engine state
-      the plan captured: any DML epoch bump / TTL pin / mode change makes
+      the plan captured: a TTL pin / mode / db change, and every write
+      except an absorbed INSERT, bumps an epoch past it and makes
       ``run_request`` drop and recompile.
+    - in JVM mode the plan also owns an APPEND LOG, a second fixed-size
+      staged file that serving history reads as ``store ∪ log`` before its
+      TTL filters. An online ``INSERT … VALUES`` into the request table
+      is written through to it by :meth:`absorb` (which then advances the
+      epoch in ``key``), so the next serve sees the row without
+      re-lowering — the analog of a tablet ``Put`` being readable by the
+      very next request. A log that would overflow its fixed size is not
+      written; the key stays stale and the next serve recompiles.
 
     Both serve arms are EAGER and hold the per-plan lock across
     stage+collect, so concurrent callers (the ThreadingHTTPServer RESTful
@@ -363,14 +377,23 @@ class CompiledRequestPlan:
         )
         from openmldb_spark.engine import servingmat
 
+        #: encoded rows of the append log (JVM mode only; see absorb)
+        self._log_data = b""
+        self._log = os.path.join(self._dir, "appended.txt")
+        appended = None
         if self._jvm_mode:
             src = _jvm_source(self.spark, self._staged, dep.input_schema)
+            self._write_file(self._log, _pad_staged(b"", self._pad))
+            appended = servingmat.mark_staged(
+                _jvm_source(self.spark, self._log, dep.input_schema)
+            )
         else:
             src = self.spark.range(0, 1, numPartitions=1).mapInArrow(
                 _staged_reader(self._staged), dep.input_schema
             )
         # marker filter (constant-folded away) so servingmat.offer can
-        # refuse subtrees reading the staged source in EITHER mode
+        # refuse subtrees reading the staged source in EITHER mode — or the
+        # append log, whose rows change without a recompile
         src = servingmat.mark_staged(src)
         self._src = src
         # serving-static materialization: history-only intermediates the
@@ -378,13 +401,14 @@ class CompiledRequestPlan:
         # plan's lifetime and materialize NOW, so serves read in-memory
         # state instead of re-running their shuffle chains — the analog of
         # the reference tablet's resident segment indexes. Invalidation is
-        # already correct: any DML bumps the serving key, which drops this
-        # plan (and these caches) before the next serve.
+        # already correct: they never read the staged source or the append
+        # log (both marked), and every write the log does not absorb bumps
+        # the serving key, which drops this plan (and these caches).
 
         self._materialized: list = []
         with servingmat.collecting(self._materialized):
             self.plan = dep._run_request_on(
-                dep._query_with_params(None), src, None
+                dep._query_with_params(None), src, None, appended=appended
             )
         for df in self._materialized:
             df.count()
@@ -454,19 +478,61 @@ class CompiledRequestPlan:
             return self._reroot(self._serve_spark)
         return self.plan.where(F.lit(True))
 
-    def _write_staged(self, table) -> None:
-        tmp = self._staged + ".tmp"
-        if self._jvm_mode:
-            with open(tmp, "wb") as f:
-                f.write(
-                    _encode_staged_lines(table, self._pad, self.dep.input_schema)
-                )
-        else:
-            import pyarrow as pa
+    @staticmethod
+    def _write_file(path: str, data: bytes) -> None:
+        tmp = path + ".tmp"
+        with open(tmp, "wb") as f:
+            f.write(data)
+        os.replace(tmp, path)
 
-            with pa.ipc.new_file(tmp, table.schema) as w:
-                w.write_table(table)
+    def _write_staged(self, table) -> None:
+        if self._jvm_mode:
+            self._write_file(
+                self._staged,
+                _pad_staged(
+                    _encode_rows(table, self.dep.input_schema), self._pad
+                ),
+            )
+            return
+        import pyarrow as pa
+
+        tmp = self._staged + ".tmp"
+        with pa.ipc.new_file(tmp, table.schema) as w:
+            w.write_table(table)
         os.replace(tmp, self._staged)
+
+    def absorb(self, rows: list, expect_key: tuple, new_key: tuple) -> bool:
+        """Write-through of an online INSERT into the request table: append
+        ``rows`` (already coerced to the input schema) to the append log
+        and move ``key`` from ``expect_key`` (the pre-insert serving key)
+        to ``new_key`` (the post-insert one). Runs under the serve lock,
+        so a serve sees the log before or after the append, never half of
+        it. Returns False, leaving the key stale so the next serve
+        recompiles, when the plan is Arrow-staged or released, its key is
+        no longer ``expect_key``, or the log would overflow its fixed size.
+
+        Rows encode through ``LocalDataToArrowConversion``, like
+        :meth:`serve_rows`, so log rows are bit-identical to the store's
+        ``createDataFrame`` rows and a later recompile serves the same
+        answers."""
+        from pyspark.sql.conversion import LocalDataToArrowConversion
+
+        if not self._jvm_mode or not rows:
+            return False
+        data = _encode_rows(
+            LocalDataToArrowConversion.convert(rows, self.dep.input_schema, False),
+            self.dep.input_schema,
+        )
+        with self._lock:
+            if self.key != expect_key:
+                return False
+            data = self._log_data + data
+            if len(data) > self._pad:
+                return False
+            self._write_file(self._log, _pad_staged(data, self._pad))
+            self._log_data = data
+            self.key = new_key
+            return True
 
     def _local_request_table(self, requests: DataFrame):
         """The request batch as an Arrow table WITHOUT a Spark job, when
@@ -551,3 +617,4 @@ class CompiledRequestPlan:
                 df.unpersist()
             self._materialized.clear()
             shutil.rmtree(self._dir, ignore_errors=True)
+            self.key = None  # a released plan absorbs nothing

@@ -60,7 +60,8 @@ class SqlDeployment(PreaggServing):
         self._preagg_hist: Optional[DataFrame] = None
         #: compiled request plan (the reference compiles once per DEPLOY,
         #: ``hybridse/src/vm/engine.cc:453-496``; rebuilt here when
-        #: :meth:`_serving_key` changes — DML epochs / TTL pin / mode)
+        #: :meth:`_serving_key` changes — DML epochs / TTL pin / mode —
+        #: except for INSERTs it absorbs into its append log)
         self._compiled: Optional["CompiledRequestPlan"] = None
         #: escape hatch: False forces the per-call plan-build path
         self.use_compiled = True
@@ -148,9 +149,14 @@ class SqlDeployment(PreaggServing):
         source), and each call only swaps the staged rows — the Spark
         analog of the reference compiling once per DEPLOY and binding rows
         per call (``engine.cc:453-496``, ``sql_cluster_router.h:116-190``
-        CallProcedure). DML on any table the query reads bumps its epoch
-        and the next call recompiles. Explicit-history and parameterized
-        calls build their plan per call, as before.
+        CallProcedure). An online ``INSERT … VALUES`` into the request
+        table is written through to the plan's append log, so the next
+        call sees the row without recompiling. Any other write to a table
+        the query reads (DELETE, TRUNCATE, LOAD DATA, register, an INSERT
+        into a join-side or UNION table, an offline-mode INSERT, or one
+        that would overflow the log) bumps its epoch and the next call
+        recompiles. Explicit-history and parameterized calls build their
+        plan per call, as before.
 
         r13: compiled serves are EAGER — the serve runs (stage + collect)
         under the deployment's plan lock and the returned DataFrame is a
@@ -251,15 +257,43 @@ class SqlDeployment(PreaggServing):
         walk_q(self.query)
         return names
 
+    def _absorbing_plan(self, loc: tuple, schema) -> Optional[tuple]:
+        """``(plan, key)`` when an online INSERT into table ``loc`` (a
+        ``(db, bare)`` pair) can be written through to this deployment's
+        live compiled plan (:meth:`CompiledRequestPlan.absorb`), ``key``
+        being the pre-insert serving key the plan still holds. None — the
+        insert then recompiles the plan, as any write does — when there is
+        no live plan, its key is stale, the rows do not have the input
+        schema, or ``loc`` is not the request table. The query must name
+        that table only as ``request_table``: every such reference binds
+        to the staged request source, so the plan reads the store only
+        through :meth:`_serving_history`, where the log is."""
+        plan = self._compiled
+        if plan is None or schema != self.input_schema:
+            return None
+        eng = self.engine
+        names = [n for n in self._query_table_names() if eng._loc(n) == loc]
+        if names != [self.request_table]:
+            return None
+        key = self._serving_key()
+        return (plan, key) if plan.key == key else None
+
     def _release_compiled(self) -> None:
         if self._compiled is not None:
             self._compiled.release()
             self._compiled = None
 
-    def _serving_history(self, history: Optional[DataFrame]) -> DataFrame:
+    def _serving_history(
+        self,
+        history: Optional[DataFrame],
+        appended: Optional[DataFrame] = None,
+    ) -> DataFrame:
         """Stored history for request-mode serving — TTL-filtered like every
         other online read (the reference's online storage GCs expired rows
         before serving sees them, so batch and request mode agree).
+        ``appended`` (a compiled plan's append log) joins the store BEFORE
+        the filters, so absorbed INSERTs expire exactly like stored rows
+        (``apply_ttl`` evaluates its bound when the serve runs).
 
         DEPLOY-derived absolute indexes (``Engine._auto_index``) additionally
         bound THIS deployment's serving reads: the reference's storage
@@ -272,7 +306,10 @@ class SqlDeployment(PreaggServing):
             return history
         eng = self.engine
         db, bare = eng._loc(self.request_table)
-        df = eng._with_ttl(db, bare, eng.tables[self.request_table])
+        df = eng.tables[self.request_table]
+        if appended is not None:
+            df = df.unionByName(appended)
+        df = eng._with_ttl(db, bare, df)
         td = eng._db_defs.get(db, {}).get(bare)
         if td is None:
             return df
@@ -406,8 +443,9 @@ class SqlDeployment(PreaggServing):
         q: "P.Query",
         requests: DataFrame,
         history: Optional[DataFrame] = None,
+        appended: Optional[DataFrame] = None,
     ) -> DataFrame:
-        hist = self._serving_history(history)
+        hist = self._serving_history(history, appended)
         body = q.body
         hist = self._prune_history_to_request_keys(hist, requests, body)
         hist_from = self._history_from_ref(body)

@@ -748,11 +748,6 @@ def simhash(
     return df.withColumn(out_col, out)
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit fingerprints."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,

@@ -194,40 +194,6 @@ def _validate_index_params(
         )
 
 
-def exact_index(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Persistable exact-dup index: ``(id, fp)``, fp = xxhash64 of the
-    text — the house 64-bit hash-for-set-membership convention (collision
-    odds ~2^-64 per pair; the batch ``exact_dedup`` keys RAW values, which
-    an index can't afford at 100 TB). Parquet it, union new batches on."""
-    return df.select(
-        F.col(id_col).alias("id"), F.xxhash64(F.col(text_col)).alias("fp")
-    )
-
-
-def incremental_exact_dups(
-    new_docs: DataFrame,
-    index: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Exact duplicates of a new batch against an indexed corpus:
-    ``(new_id, corpus_id)`` per fingerprint collision. One equi-join on
-    the 8-byte fingerprint; broadcast-ability is the optimizer's call
-    (the batch side is usually the small one). Drop the new batch's
-    duplicate rows with an anti-join on ``new_id``."""
-    nb = exact_index(new_docs, id_col, text_col)
-    return (
-        nb.alias("n")
-        .join(index.alias("c"), F.col("n.fp") == F.col("c.fp"))
-        .where(F.col("n.id") != F.col("c.id"))
-        .select(
-            F.col("n.id").alias("new_id"), F.col("c.id").alias("corpus_id")
-        )
-    )
-
-
 def incremental_near_dups(
     new_docs: DataFrame,
     index: DataFrame,

@@ -28,20 +28,6 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda x: x != "")
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text)).cast("long")
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Approximate BPE token count: word-ish and non-space-non-word pieces.
-    A cheap, deterministic stand-in for a real tokenizer (~= GPT-style
-    'words + punctuation' counting)."""
-    pieces = F.filter(
-        F.split(text, r"(?<=\W)|(?=\W)"), lambda x: (x != "") & (x != " ")
-    )
-    return F.size(pieces).cast("long")
-
-
 def _stopword_hits(toks: Column, words: list[str]) -> Column:
     arr = F.array(*[F.lit(w) for w in words])
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, F.lower(t))))
@@ -347,16 +333,3 @@ def fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint (md5 hex — portable across engines
     for oracle checks; xxhash64 is the cheaper in-engine alternative)."""
     return F.md5(text)
-
-
-def rolling_fingerprints(text: Column, window_tokens: int = 32, stride: int = 16) -> Column:
-    """Array of md5 fingerprints of overlapping token windows — the
-    building block for fuzzy containment / plagiarism checks."""
-    toks = tokens(text)
-    n = F.size(toks)
-    starts = F.sequence(
-        F.lit(1),
-        F.greatest(n - window_tokens + 1, F.lit(1)),
-        F.lit(stride),
-    )
-    return F.transform(starts, lambda i: F.md5(F.array_join(F.slice(toks, i, window_tokens), " ")))

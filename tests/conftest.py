@@ -36,6 +36,6 @@ def pytest_collection_modifyitems(config, items):
 def spark() -> SparkSession:
     from openmldb_spark.session import get_spark
 
-    s = get_spark(app_name="openmldb_spark_tests", cpus=8)
+    s = get_spark(app_name="openmldb_spark_tests")
     yield s
     s.stop()

@@ -103,10 +103,15 @@ def test_dml_invalidates_compiled_plan(spark):
     assert dep.run_request(req).collect()[0]["s"] == 30 + 31 + 40
     first = dep._compiled
     assert first is not None
+    # an online INSERT into the request table is absorbed: same plan
     eng.execute(
         "INSERT INTO t0 VALUES (4, 'aa', 100, 1590738994000)"
     )
     assert dep.run_request(req).collect()[0]["s"] == 30 + 31 + 100 + 40
+    assert dep._compiled is first, "an absorbed INSERT recompiled"
+    # any other write still recompiles
+    eng.execute("DELETE FROM t0 WHERE id = 4")
+    assert dep.run_request(req).collect()[0]["s"] == 30 + 31 + 40
     assert dep._compiled is not first, "epoch bump did not recompile"
 
 
@@ -737,3 +742,258 @@ def test_exact_collect_plan_handles_dotted_and_nested_names(spark):
     )
     dup = StructType([StructField("x", LongType()), StructField("x", LongType())])
     assert _exact_collect_plan(spark.createDataFrame([], dup), dup) == (None, None)
+
+
+# -- the staged text format and the write-through append log ---------------
+
+
+def test_staged_file_pads_with_one_line(spark, tmp_path):
+    """A staged file is exactly ``pad_bytes`` long, padded with ONE line
+    of spaces (not one empty line per pad byte), and the source returns
+    exactly the encoded rows — none, one, many, all-null — including when
+    the rows fill the file exactly or leave one byte."""
+    import datetime
+
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+
+    from openmldb_spark.engine.compiled import _encode_rows, _jvm_source, _pad_staged
+
+    schema = spark.createDataFrame([], "id int, s string, c7 timestamp").schema
+    ts = datetime.datetime(2020, 5, 29, 8, 1, 2, 345678)
+    cases = {
+        "none": [],
+        "one": [(1, "a,b", ts)],
+        "many": [(i, "s%d" % i, ts) for i in range(40)],
+        "null": [(None, None, None)],
+    }
+    for name, rows in cases.items():
+        table = (
+            LocalDataToArrowConversion.convert(rows, schema, False)
+            if rows
+            else spark.createDataFrame([], schema).toArrow()
+        )
+        enc = _encode_rows(table, schema)
+        for pad in (4096, len(enc) + 1, max(len(enc), 1)):
+            data = _pad_staged(enc, pad)
+            path = tmp_path / f"{name}-{pad}.txt"
+            path.write_bytes(data)
+            assert os.path.getsize(path) == pad
+            assert data.count(b"\n") <= len(rows) + 1
+            got = [tuple(r) for r in _jvm_source(spark, str(path), schema).collect()]
+            assert sorted(got, key=repr) == sorted(rows, key=repr), (name, pad)
+    with pytest.raises(ValueError, match="stagingBytes"):
+        _pad_staged(b"x,\n" * 4, 7)
+
+
+SQL_JOIN = (
+    "SELECT t0.id, t0.c1, sum(t0.c4) OVER w1 AS s, tj.tag AS tag FROM t0 "
+    "LAST JOIN tj ORDER BY tj.c7 ON t0.c1 = tj.c1 WINDOW w1 AS "
+    "(PARTITION BY t0.c1 ORDER BY t0.c7 ROWS_RANGE BETWEEN 10s "
+    "PRECEDING AND CURRENT ROW)"
+)
+
+
+def _join_engine(spark):
+    eng = _engine(spark)
+    eng.execute(
+        "CREATE TABLE tj (c1 string, tag bigint, c7 timestamp,"
+        " INDEX(KEY=(c1), TS=c7))"
+    )
+    eng.execute(
+        "INSERT INTO tj VALUES ('aa', 7, 1590738990000), ('bb', 8, 1590738990000)"
+    )
+    return eng
+
+
+def _uncompiled(dep, rows):
+    dep.use_compiled = False
+    try:
+        return sorted(map(tuple, dep.run_request_rows(_conv(rows))))
+    finally:
+        dep.use_compiled = True
+
+
+def _served(dep, rows):
+    return sorted(map(tuple, dep.run_request_rows(_conv(rows))))
+
+
+def test_inserts_write_through_without_recompiling(spark, monkeypatch):
+    """Several online INSERTs into the request table are absorbed by the
+    live plan's append log: every serve equals the uncompiled path over
+    the grown store, and no new CompiledRequestPlan is built (nothing is
+    lowered again)."""
+    from openmldb_spark.engine import compiled
+
+    eng = _join_engine(spark)
+    dep = eng.execute(f"DEPLOY dwt1 {SQL_JOIN}")
+    req = [(9, "aa", 40, 1590738995000), (10, "bb", 7, 1590738995000)]
+    assert _served(dep, req) == _uncompiled(dep, req)
+    plan = dep._compiled
+    builds = []
+    orig = compiled.CompiledRequestPlan.__init__
+
+    def counting(self, *a, **kw):
+        builds.append(1)
+        orig(self, *a, **kw)
+
+    monkeypatch.setattr(compiled.CompiledRequestPlan, "__init__", counting)
+    eng.execute("INSERT INTO t0 VALUES (20, 'aa', 100, 1590738993500)")
+    eng.execute(
+        "INSERT INTO t0 (id, c1, c7) VALUES (21, 'bb', 1590738994000),"
+        " (22, 'aa', 1590738994500)"
+    )
+    eng.execute("INSERT INTO t0 VALUES (23, NULL, 5, 1590738994600)")
+    got = _served(dep, req)
+    assert dep._compiled is plan and builds == []
+    assert plan._log_data.count(b"\n") == 4
+    assert got == _uncompiled(dep, req)
+    assert {r[0]: r[2] for r in got} == {9: 30 + 31 + 100 + 40, 10: 50 + 7}
+    # the null-key row is history for a null-key request
+    null_req = [(11, None, 1, 1590738995000)]
+    assert _served(dep, null_req) == _uncompiled(dep, null_req)
+    assert builds == []
+
+
+def test_writes_that_cannot_be_absorbed_recompile(spark):
+    """After absorbed INSERTs, a DELETE, a write to a join-side table and
+    an append that would overflow the log each drop the plan, and the
+    recompiled plan serves the same answers as the uncompiled path."""
+    from openmldb_spark.engine.compiled import STAGING_BYTES_CONF
+
+    eng = _join_engine(spark)
+    dep = eng.execute(f"DEPLOY dwt2 {SQL_JOIN}")
+    req = [(9, "aa", 40, 1590738995000)]
+
+    def absorb_then(stmt):
+        _served(dep, req)
+        plan = dep._compiled
+        eng.execute("INSERT INTO t0 VALUES (30, 'aa', 100, 1590738994000)")
+        assert dep._compiled is plan
+        eng.execute(stmt)
+        got = _served(dep, req)
+        assert dep._compiled is not plan, stmt
+        assert got == _uncompiled(dep, req), stmt
+        return got[0]
+
+    assert absorb_then("DELETE FROM t0 WHERE id = 2")[2:] == (30 + 100 + 40, 7)
+    eng.execute("DELETE FROM t0 WHERE id = 30")
+    got = absorb_then("INSERT INTO tj VALUES ('aa', 70, 1590738991000)")
+    assert got[2:] == (30 + 100 + 40, 70)
+    eng.execute("DELETE FROM t0 WHERE id = 30")
+    # overflow: each encoded row here is 41 bytes, so a 100-byte log
+    # holds two rows, not three
+    spark.conf.set(STAGING_BYTES_CONF, "100")
+    try:
+        dep2 = eng.execute(f"DEPLOY dwt3 {SQL_JOIN}")
+        _served(dep2, req)
+        plan = dep2._compiled
+        eng.execute("INSERT INTO t0 VALUES (40, 'aa', 1, 1590738994000)")
+        eng.execute("INSERT INTO t0 VALUES (41, 'aa', 2, 1590738994100)")
+        assert dep2._compiled is plan and plan._log_data.count(b"\n") == 2
+        eng.execute("INSERT INTO t0 VALUES (42, 'aa', 4, 1590738994200)")
+        assert plan._log_data.count(b"\n") == 2, "overflowing append was written"
+        got = _served(dep2, req)
+        assert dep2._compiled is not plan, "an overflowed log did not recompile"
+        assert got == _uncompiled(dep2, req)
+        assert got[0][2] == 30 + 1 + 2 + 4 + 40
+    finally:
+        spark.conf.unset(STAGING_BYTES_CONF)
+
+
+@pytest.mark.parametrize(
+    "ttl,want",
+    [
+        # latest 2 per key: the two inserted rows displace both stored ones
+        ("TTL=2, TTL_TYPE=latest", 7 + 8 + 40),
+        # absolute 2s from max(ts): the inserted 1590738994000 row moves
+        # the bound past both stored rows
+        ("TTL=2s, TTL_TYPE=absolute", 7 + 8 + 40),
+    ],
+)
+def test_absorbed_rows_expire_like_stored_rows(spark, ttl, want):
+    eng = Engine(spark)
+    eng.execute(
+        "CREATE TABLE t0 (id int, c1 string, c4 bigint, c7 timestamp,"
+        f" INDEX(KEY=(c1), TS=c7, {ttl}))"
+    )
+    eng.execute(
+        "INSERT INTO t0 VALUES (1, 'aa', 30, 1590738990000),"
+        " (2, 'aa', 31, 1590738991000)"
+    )
+    dep = eng.execute(f"DEPLOY dttl {SQL}")
+    req = [(9, "aa", 40, 1590738995000)]
+    assert _served(dep, req)[0][2] == 30 + 31 + 40
+    plan = dep._compiled
+    eng.execute("INSERT INTO t0 VALUES (3, 'aa', 7, 1590738993500)")
+    eng.execute("INSERT INTO t0 VALUES (4, 'aa', 8, 1590738994000)")
+    got = _served(dep, req)
+    assert dep._compiled is plan
+    assert got == _uncompiled(dep, req)
+    assert got[0][2] == want
+
+
+def test_offline_insert_leaves_the_log_untouched(spark):
+    eng = _engine(spark)
+    dep = eng.execute(f"DEPLOY dwt4 {SQL}")
+    req = [(9, "aa", 40, 1590738995000)]
+    assert _served(dep, req)[0][2] == 30 + 31 + 40
+    plan = dep._compiled
+    before = open(plan._log, "rb").read()
+    eng.execute("SET @@execute_mode = 'offline'")
+    try:
+        eng.execute("INSERT INTO t0 VALUES (4, 'aa', 100, 1590738994000)")
+    finally:
+        eng.execute("SET @@execute_mode = 'online'")
+    assert plan._log_data == b"" and open(plan._log, "rb").read() == before
+    # online serving never sees offline rows
+    assert _served(dep, req)[0][2] == 30 + 31 + 40
+
+
+def test_insert_racing_a_serving_thread(spark):
+    """A thread serves in a loop while the main thread INSERTs: every
+    serve that starts after an INSERT returns sees that row (and all
+    earlier ones)."""
+    import threading
+    import time
+
+    eng = _engine(spark)
+    dep = eng.execute(f"DEPLOY dwt5 {SQL}")
+    req = _conv([(9, "aa", 40, 1590738995000)])
+    dep.run_request_rows(req)  # compile
+    stop = threading.Event()
+    seen = []
+    errors = []
+
+    def serve_loop():
+        try:
+            while not stop.is_set():
+                t = time.perf_counter()
+                seen.append((t, dep.run_request_rows(req)[0]["s"]))
+        except Exception as e:  # pragma: no cover - surfaced below
+            errors.append(e)
+
+    th = threading.Thread(target=serve_loop)
+    th.start()
+    done = []  # (time the INSERT returned, history sum it completes)
+    total = 30 + 31
+    try:
+        for i in range(3):
+            time.sleep(0.3)
+            eng.execute(
+                "INSERT INTO t0 VALUES (%d, 'aa', %d, %d)"
+                % (40 + i, 10 ** i, 1590738993000 + i)
+            )
+            total += 10 ** i
+            done.append((time.perf_counter(), total))
+        deadline = time.perf_counter() + 120
+        while not [t for t, _ in seen if t > done[-1][0]] and not errors:
+            assert time.perf_counter() < deadline, "no serve after the last INSERT"
+            time.sleep(0.05)
+    finally:
+        stop.set()
+        th.join(timeout=120)
+    assert not th.is_alive()
+    assert not errors, errors
+    for t, s in seen:
+        floor = max([tot for at, tot in done if at <= t], default=30 + 31)
+        assert s - 40 >= floor, (t, s, done)

@@ -20,6 +20,9 @@ except ImportError:
 from test_yaml_cases import _eq, _parse_rows, _parse_schema, shard_files, smoke_stride
 
 CASE_DIR = os.path.join(os.path.dirname(__file__), "engine_cases")
+#: input files the cases load, as ``{casedata}/...`` (each one written out
+#: from the expected rows of the cases that load it)
+CASE_DATA = os.path.join(CASE_DIR, "data")
 
 
 def _load_cases():
@@ -52,6 +55,7 @@ def test_engine_yaml_case(spark, path, case, tmp_path):
 
     def _sub(stmt: str) -> str:
         stmt = stmt.replace("{tmpdir}", str(tmp_path))
+        stmt = stmt.replace("{casedata}", CASE_DATA)
         # reference {currentTime}[-offset] row values: one `now` per case
         return re.sub(
             r"\{currentTime\}(?:-(\d+))?",
