@@ -24,8 +24,8 @@ SimHash / embedding), similarity search, text analysis, multimodal column
 plumbing.
 """
 
-from openmldb_spark.session import get_spark, load_table, load_tables
+from openmldb_spark.session import get_spark, load_table
 
 __version__ = "0.1.0"
 
-__all__ = ["get_spark", "load_table", "load_tables", "__version__"]
+__all__ = ["get_spark", "load_table", "__version__"]

@@ -48,18 +48,18 @@ def resolve_staging_dir(master: str, explicit: str | None) -> str | None:
 STAGING_BYTES_CONF = "spark.openmldb.serving.stagingBytes"
 DEFAULT_STAGING_BYTES = 262_144
 
-#: serving-tuned confs applied to an ISOLATED serving session (a
-#: ``newSession()`` clone — own conf, shared SparkContext/catalog/cache):
-#: AQE's per-stage materialization and 32-task shuffle stages are built
-#: for data-sized queries, but a serve's shuffles carry request-row-sized
-#: data (history is key-pruned), so the fixed tiny plan wins ~40% wall
-#: latency. Serves re-root the compiled plan's ANALYZED tree onto the
-#: clone, so physical planning picks the serving confs up while the
-#: user's session confs are NEVER touched — a batch query planned
-#: concurrently with a serve sees its own AQE/partition settings
-#: (the r11 swap-and-restore was session-global and racy). Set false to
-#: serve on the engine session with its normal confs.
-FAST_CONFS_CONF = "spark.openmldb.serving.fastConfs"
+# Serving-tuned confs are applied to an ISOLATED serving session (a
+# ``newSession()`` clone — own conf, shared SparkContext/catalog/cache):
+# AQE's per-stage materialization and 32-task shuffle stages are built
+# for data-sized queries, but a serve's shuffles carry request-row-sized
+# data (history is key-pruned), so the fixed tiny plan wins ~40% wall
+# latency. Serves re-root the compiled plan's ANALYZED tree onto the
+# clone, so physical planning picks the serving confs up while the
+# user's session confs are NEVER touched — a batch query planned
+# concurrently with a serve sees its own AQE/partition settings (swapping
+# confs on the shared session per serve was session-global and racy).
+
+#: shuffle fan-out of the serving session (default 1), re-read per serve
 SERVING_SHUFFLE_PARTITIONS_CONF = "spark.openmldb.serving.shufflePartitions"
 
 #: simple types the JVM text staging can round-trip exactly (base64 cell
@@ -251,11 +251,10 @@ def _serving_session(spark):
     """The isolated serving session: a ``newSession()`` clone sharing the
     SparkContext, catalog and cache manager but owning its conf — AQE off
     and a tiny shuffle fan-out are set ONCE here instead of swapped on
-    the shared session per serve (see ``FAST_CONFS_CONF``). ``newSession``
-    does NOT inherit runtime-set confs (session timezone, ANSI flags, …
-    would silently reset and change serve SEMANTICS), so the engine
-    session's conf state is copied first, then the two serving overrides
-    applied."""
+    the shared session per serve. ``newSession`` does NOT inherit
+    runtime-set confs (session timezone, ANSI flags, … would silently
+    reset and change serve SEMANTICS), so the engine session's conf
+    state is copied first, then the two serving overrides applied."""
     clone = spark.newSession()
     for k, v in spark.conf.getAll.items():
         if v is None:
@@ -454,17 +453,14 @@ class CompiledRequestPlan:
 
     def _fresh_serve_df(self) -> DataFrame:
         """A fresh Dataset over the compiled plan for one serve — on the
-        serving clone when enabled (serve-time opt-out honored), else the
-        engine session (``.where(lit(True))`` forces a new physical plan
-        there; see the class docstring's stale-shuffle note). The clone's
+        serving clone when there is one, else the engine session
+        (``.where(lit(True))`` forces a new physical plan there; see the
+        class docstring's stale-shuffle note). The clone's
         conf snapshot froze at compile time; the semantics-bearing confs
         are re-synced per serve so a post-deploy ``SET`` of the session
         timezone or ANSI mode reaches compiled serves like it reaches the
         uncompiled path (planning confs intentionally stay pinned)."""
-        if (
-            self._serve_spark is not None
-            and self.spark.conf.get(FAST_CONFS_CONF, "true") == "true"
-        ):
+        if self._serve_spark is not None:
             for k in self._SEMANTIC_CONFS:
                 v = self.spark.conf.get(k, None)
                 if v is not None and self._serve_spark.conf.get(k, None) != v:

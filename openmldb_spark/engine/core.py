@@ -335,25 +335,42 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
             self._dbs[db][bare] = df
             self._bump_epoch(db, bare)
 
-    def _store_append(
-        self, name: str, new: DataFrame, offline: Optional[bool] = None
+    def _append_rows(
+        self, db: str, bare: str, rows: list, offline: bool = False
     ) -> None:
-        """Append rows to a table's store. Offline appends write through
-        the offline-info ledger (into ``parts['base']``) so symbolic paths
-        added by ALTER TABLE are never double-counted and later
-        mode='append' loads keep the inserted rows."""
-        if offline is None:
-            offline = self._offline_mode
-        db, bare = self._loc(name)
+        """Append ``rows`` (value lists already coerced to the store's
+        schema) to table ``(db, bare)``: the one write path of ``INSERT …
+        VALUES`` and the REST one-row ``PUT``.
+
+        Offline appends write through the offline-info ledger (into
+        ``parts['base']``) so symbolic paths added by ALTER TABLE are never
+        double-counted and later mode='append' loads keep the inserted
+        rows. Online appends bump the table epoch, and every deployment
+        whose live compiled plan serves the table as request history
+        absorbs the rows into its append log instead of recompiling
+        (:meth:`SqlDeployment._absorbing_plan`,
+        :meth:`CompiledRequestPlan.absorb`)."""
+        online = self._dbs[db][bare]
         if offline:
+            store = self._db_off.get(db, {}).get(bare, online)
+            new = self.spark.createDataFrame(rows, store.schema)
             parts = self._off_ledger(db, bare)
             parts["base"] = (
                 new if parts["base"] is None else parts["base"].unionByName(new)
             )
             self._off_rebuild(db, bare)
-        else:
-            self._dbs[db][bare] = self._dbs[db][bare].unionByName(new)
-            self._bump_epoch(db, bare)
+            return
+        new = self.spark.createDataFrame(rows, online.schema)
+        live = []
+        for deps in self._db_deps.values():
+            for dep in deps.values():
+                hit = dep._absorbing_plan((db, bare), online.schema)
+                if hit is not None:
+                    live.append((dep, *hit))
+        self._dbs[db][bare] = online.unionByName(new)
+        self._bump_epoch(db, bare)
+        for dep, plan, key in live:
+            plan.absorb(rows, key, dep._serving_key())
 
     def _table_view(self) -> dict[str, DataFrame]:
         """Resolution mapping for the Lowerer: current db's tables under

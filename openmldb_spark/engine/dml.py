@@ -69,8 +69,7 @@ class DmlMixin:
             raise ValueError(
                 f"unexpected tokens after INSERT VALUES: {render(toks[i:i+3])}"
             )
-        existing = self._store_get(name)
-        schema = existing.schema
+        schema = self._store_get(name).schema
         if cols:
             order = {c: k for k, c in enumerate(cols)}
             rows = [
@@ -80,20 +79,7 @@ class DmlMixin:
         rows = [
             [_coerce(v, f.dataType) for v, f in zip(r, schema.fields)] for r in rows
         ]
-        new = self.spark.createDataFrame(rows, schema)
-        # write-through: live compiled plans serving this table as history
-        # absorb the rows instead of recompiling (SqlDeployment.run_request)
-        live = []
-        if not self._offline_mode:
-            loc = self._loc(name)
-            for deps in self._db_deps.values():
-                for dep in deps.values():
-                    hit = dep._absorbing_plan(loc, schema)
-                    if hit is not None:
-                        live.append((dep, *hit))
-        self._store_append(name, new)
-        for dep, plan, key in live:
-            plan.absorb(rows, key, dep._serving_key())
+        self._append_rows(*self._loc(name), rows, self._offline_mode)
         return None
 
     def _delete(self, sql_text: str):

@@ -178,11 +178,7 @@ class SqlDeployment(PreaggServing):
             and parameters is None
             and self.input_schema is not None
         ):
-            key = self._serving_key()
-            if self._compiled is None or self._compiled.key != key:
-                self._release_compiled()
-                self._compiled = CompiledRequestPlan(self, key)
-            return self._compiled.serve(requests)
+            return self._live_plan().serve(requests)
         q = self._query_with_params(parameters)
         return self._run_request_on(q, requests, history)
 
@@ -198,14 +194,19 @@ class SqlDeployment(PreaggServing):
         no compiled plan applies (e.g. no input schema)."""
         rows = list(rows)
         if self.use_compiled and not self.has_params and self.input_schema is not None:
-            key = self._serving_key()
-            if self._compiled is None or self._compiled.key != key:
-                self._release_compiled()
-                self._compiled = CompiledRequestPlan(self, key)
-            return self._compiled.serve_rows(rows)
+            return self._live_plan().serve_rows(rows)
         return self.run_request(
             self.engine.spark.createDataFrame(rows, self.input_schema)
         ).collect()
+
+    def _live_plan(self) -> CompiledRequestPlan:
+        """The compiled plan for the current serving key: the live one,
+        or a fresh compile replacing it when a write made it stale."""
+        key = self._serving_key()
+        if self._compiled is None or self._compiled.key != key:
+            self._release_compiled()
+            self._compiled = CompiledRequestPlan(self, key)
+        return self._compiled
 
     def _serving_key(self) -> tuple:
         """Staleness token for the compiled plan: the epoch of EVERY table

@@ -116,18 +116,6 @@ class AggSpec:
     array: Optional[Callable[[Column, Callable], Column]] = None
     #: resolved_fields -> Column for groupBy().agg(). None => window-only.
     group: Optional[Callable[[dict[str, Column]], Column]] = None
-    #: optional Arrow-batched evaluation (r14, guide §4.2): the window
-    #: engine routes the reduction through ONE vectorized Python UDF
-    #: instead of per-row interpreted HOF chains when every array-path
-    #: aggregate in the call provides it. ``arrow(elems, getter)`` returns
-    #: ``(cols, make_fn)`` — ``cols`` are per-row NULL-FREE primitive
-    #: array Columns to ship across the boundary (null-free so Arrow→
-    #: pandas keeps exact int64/float32 dtypes instead of coercing to
-    #: float64), and ``make_fn(element_dtypes) -> row_fn(*cells) -> str``
-    #: builds the per-row Python reduction, or returns None when a dtype
-    #: has no exactness-proven Python equivalent (the engine then falls
-    #: back to the HOF path for that aggregate).
-    arrow: Optional[Callable] = None
     #: order-sensitive aggregates (ew_avg, drawdown, lag, ...) need sorted frames
     order_sensitive: bool = dc_field(default=False)
     #: spec-specific parameters the window engine needs for native lowering

@@ -11,9 +11,6 @@ the section headers below for per-family file:line cites).
 
 from __future__ import annotations
 
-import decimal
-import math
-from functools import cmp_to_key
 from typing import Callable, Optional
 
 from pyspark.sql import Column
@@ -119,208 +116,6 @@ def _cate_arr(
     return arr
 
 
-# ---------------------------------------------------------------------------
-# Arrow-batched evaluation of the cate reductions (r14, guide §4.2; VERDICT
-# r13 item 3). The per-row HOF reduction above is CodegenFallback —
-# O(K·frame) interpreted expression evals per row. The ``arrow`` lowering
-# ships the frame's (value, key) arrays — NULL-FILTERED JVM-side so Arrow →
-# pandas keeps exact primitive dtypes (int64 stays int64, float32 stays
-# float32; a single null would coerce the whole cell to float64) — to ONE
-# vectorized Python UDF whose per-row reduction is proven bit-identical to
-# the HOF form:
-#
-# - integer sums replicate JVM wraparound (one final mod == per-step mod),
-# - double folds run in the same element order with the same ``first*0``
-#   seed (inf/NaN seeds propagate identically),
-# - float32 folds stay in np.float32 arithmetic,
-# - "%.6f"/"%f" formatting replicates java.util.Formatter: HALF_UP on the
-#   exact binary expansion (decimal.Decimal(x) IS that expansion),
-# - min/max/value-sorts replicate Spark's total order (NaN greatest,
-#   -0.0 < 0.0; the value_desc comparator's NaN-falls-through-to-key
-#   behavior is kept verbatim),
-# - string keys sort identically (Spark compares UTF8String bytes; UTF-8
-#   byte order == code-point order == Python str order).
-#
-# Unsupported dtypes (timestamp/decimal keys, non-numeric values) return
-# None and the engine keeps the HOF path for that aggregate.
-# ---------------------------------------------------------------------------
-
-_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
-
-_Q6 = decimal.Decimal("0.000001")
-# prec 500: 1e308 has ~315 integer digits + 6 dp; HALF_UP is the context
-# rounding (Context.quantize takes no kwargs in the C implementation)
-_FMT_CTX = decimal.Context(prec=500, rounding=decimal.ROUND_HALF_UP)
-
-
-def _java_fmt6(x: float) -> str:
-    """java.util.Formatter '%.6f' / '%f': HALF_UP rounding applied to the
-    SHORTEST ROUND-TRIP decimal representation of the double (Java's
-    FormattedFloatingDecimal reuses the Double.toString digits, then pads/
-    rounds) — NOT the exact binary expansion (1e300 prints as 1 followed
-    by 300 zeros, 5e-07 prints 0.000001) and NOT C printf (half-even).
-    Python's repr() is the same shortest-round-trip form, so
-    Decimal(repr(x)) reproduces Java's digits; measured against Spark's
-    format_string on adversarial doubles in tests/test_arrow_cate.py."""
-    if math.isnan(x):
-        return "NaN"
-    if math.isinf(x):
-        return "Infinity" if x > 0 else "-Infinity"
-    return str(_FMT_CTX.quantize(decimal.Decimal(repr(x)), _Q6))
-
-
-def _wrap_int(v: int, bits: int) -> int:
-    half = 1 << (bits - 1)
-    return ((v + half) % (1 << bits)) - half
-
-
-def _lt_total(a, b) -> bool:
-    """Java Double.compare(a, b) < 0: NaN greatest, -0.0 < 0.0."""
-    if math.isnan(a):
-        return False
-    if math.isnan(b):
-        return True
-    if a < b:
-        return True
-    if a > b:
-        return False
-    return math.copysign(1.0, a) < math.copysign(1.0, b)
-
-
-def _key_disp(k_dtype: str):
-    """Python display fn matching Spark's CAST(k AS STRING), for key dtypes
-    whose Python sort order also matches Spark's; None = unsupported."""
-    if k_dtype == "string":
-        return lambda k: k
-    if k_dtype in _INT_BITS:
-        return lambda k: str(k)
-    if k_dtype == "boolean":
-        return lambda k: "true" if k else "false"
-    if k_dtype == "date":
-        return lambda k: k.isoformat()
-    return None
-
-
-def _gt_spark(a, b) -> bool:
-    """Spark SQL '>' on numerics: NaN is greater than every other value
-    (and equal to itself) — unlike IEEE/Python, where NaN compares false."""
-    if a != a:  # a is NaN
-        return not b != b
-    if b != b:
-        return False
-    return a > b
-
-
-def _cmp_value_desc(a, b) -> int:
-    """The value_desc array_sort comparator, verbatim: (v desc, k desc)
-    under Spark comparison semantics (NaN greatest; -0.0 == 0.0 falls
-    through to the key)."""
-    if _gt_spark(a[1], b[1]):
-        return -1
-    if _gt_spark(b[1], a[1]):
-        return 1
-    if a[0] > b[0]:
-        return -1
-    if a[0] < b[0]:
-        return 1
-    return 0
-
-
-def _make_cate_row_fn(agg: str, n: Optional[int], order: str, v_dtype: str, k_dtype: str):
-    disp = _key_disp(k_dtype)
-    if disp is None:
-        return None
-    if v_dtype in _INT_BITS:
-        kind, bits = "i", _INT_BITS[v_dtype]
-    elif v_dtype == "double":
-        kind, bits = "d", 0
-    elif v_dtype == "float":
-        kind, bits = "f", 0
-    else:
-        return None
-    # result kind decides the _fmt_num branch: fractional -> %.6f, else str
-    res_frac = (kind in ("d", "f") and agg in ("sum", "min", "max")) or agg == "avg"
-
-    def reduce_group(g):
-        if agg == "count":
-            return len(g)
-        if agg == "avg":
-            acc = 0.0
-            for v in g:
-                acc += float(v)
-            return acc / len(g)
-        if agg == "sum":
-            acc = g[0] * (0 if kind == "i" else g[0].__class__(0))
-            for v in g:
-                acc = acc + v
-            return _wrap_int(acc, bits) if kind == "i" else acc
-        if kind == "i":  # min / max on exact ints
-            return min(g) if agg == "min" else max(g)
-        best = g[0]
-        if agg == "min":
-            for v in g[1:]:
-                if _lt_total(v, best):
-                    best = v
-        else:
-            for v in g[1:]:
-                if _lt_total(best, v):
-                    best = v
-        return best
-
-    def row_fn(vs, ks) -> str:
-        ksl = ks.tolist()
-        if not ksl:
-            return ""
-        if kind == "i":
-            vals = [int(x) for x in vs.tolist()]
-        elif kind == "d":
-            vals = vs.tolist()
-        else:  # float32: keep np.float32 scalars so the fold stays f32
-            vals = list(vs)
-        groups: dict = {}
-        for kk, vv in zip(ksl, vals):
-            g = groups.get(kk)
-            if g is None:
-                groups[kk] = [vv]
-            else:
-                g.append(vv)
-        if kind == "f":
-            import numpy as _np
-
-            with _np.errstate(all="ignore"):
-                items = [(k, reduce_group(groups[k])) for k in sorted(groups)]
-        else:
-            items = [(k, reduce_group(groups[k])) for k in sorted(groups)]
-        if order == "key_desc":
-            items.reverse()
-        elif order == "value_desc":
-            items.sort(key=cmp_to_key(_cmp_value_desc))
-        if n is not None:
-            items = items[:n]
-        if res_frac:
-            return ",".join(f"{disp(k)}:{_java_fmt6(float(v))}" for k, v in items)
-        return ",".join(f"{disp(k)}:{v}" for k, v in items)
-
-    return row_fn
-
-
-def _cate_arrow(agg: str, n: Optional[int], order: str):
-    def arrow(e: Column, f: Callable):
-        elig = F.filter(e, lambda s: f("k")(s).isNotNull() & f("v")(s).isNotNull())
-        vs = F.transform(elig, f("v"))
-        ks = F.transform(elig, f("k"))
-
-        def make(dtypes: list[str]):
-            from pyspark.sql.types import StringType
-
-            fn = _make_cate_row_fn(agg, n, order, dtypes[0], dtypes[1])
-            return None if fn is None else (fn, StringType())
-
-        return [vs, ks], make
-
-    return arrow
-
-
 def _cate_spec(
     name: str,
     agg: str,
@@ -343,7 +138,6 @@ def _cate_spec(
         native=None,
         array=arr,
         group=lambda f: _group_via_collect(arr, f),
-        arrow=_cate_arrow(agg, n, order),
     )
 
 
@@ -495,58 +289,6 @@ def _ratio_fmt(groups: Column, n: int, by_value: bool) -> Column:
     )
 
 
-def _make_ratio_row_fn(n: int, by_value: bool, k_dtype: str):
-    disp = _key_disp(k_dtype)
-    if disp is None:
-        return None
-
-    def row_fn(ks, cs) -> str:
-        ksl = ks.tolist()
-        if not ksl:
-            return ""
-        groups: dict = {}
-        for kk, cc in zip(ksl, cs.tolist()):
-            g = groups.get(kk)
-            if g is None:
-                groups[kk] = [cc, 1]
-            else:
-                g[0] += cc
-                g[1] += 1
-        # hits/total are exact ints; float division == the JVM's
-        # size(filter).cast(double)/size(grp) bit-for-bit
-        items = [(k, groups[k][0] / groups[k][1]) for k in sorted(groups)]
-        if by_value:
-            items.sort(key=cmp_to_key(_cmp_value_desc))
-        else:
-            items.reverse()
-        if n >= 0:
-            items = items[:n]
-        return ",".join(f"{disp(k)}:{_java_fmt6(v)}" for k, v in items)
-
-    return row_fn
-
-
-def _ratio_arrow(n: int, by_value: bool):
-    def arrow(e: Column, f: Callable):
-        elig = F.filter(e, lambda s: f("k")(s).isNotNull() & f("v")(s).isNotNull())
-        ks = F.transform(elig, f("k"))
-        # cond as a null-free int so Arrow keeps an exact primitive cell:
-        # F.filter(grp, c) keeps only TRUE rows, so null == false here
-        cs = F.transform(
-            elig, lambda s: F.when(f("c")(s), F.lit(1)).otherwise(F.lit(0))
-        )
-
-        def make(dtypes: list[str]):
-            from pyspark.sql.types import StringType
-
-            fn = _make_ratio_row_fn(n, by_value, dtypes[0])
-            return None if fn is None else (fn, StringType())
-
-        return [ks, cs], make
-
-    return arrow
-
-
 def _ratio_cate_spec(name: str, value: ColumnOrName, cond: Column, cat: ColumnOrName, n: int, by_value: bool) -> AggSpec:
     fields = {"v": _c(value), "c": cond, "k": _c(cat)}
     arr = _ratio_cate_arr(n, by_value)
@@ -556,7 +298,6 @@ def _ratio_cate_spec(name: str, value: ColumnOrName, cond: Column, cat: ColumnOr
         native=None,
         array=arr,
         group=lambda f: _group_via_collect(arr, f),
-        arrow=_ratio_arrow(n, by_value),
     )
 
 

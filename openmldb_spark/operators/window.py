@@ -54,39 +54,6 @@ ColumnOrName = Union[Column, str]
 _RID = "__omsk_rid"
 _ORD = "__omsk_ord"
 _FLAG = "__omsk_flag"
-_ARROW_OUT = "__omsk_arrw"
-
-
-def _arrow_reduce_udf(fns: dict, n_cols: int):
-    """One pandas UDF evaluating every Arrow-capable aggregate of the call:
-    input is a struct of per-row arrays (a0..a<n-1>), output a struct of
-    one string per aggregate. Built once per window_agg call."""
-    from pyspark.sql.functions import PandasUDFType
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType(
-        [StructField(nm, rtype) for nm, (_, _, rtype) in fns.items()]
-    )
-    items = list(fns.items())
-
-    def _reduce(pdf):
-        import pandas as pd
-
-        cols = [pdf[f"a{j}"].tolist() for j in range(n_cols)]
-        data = {}
-        for nm, (idxs, fn, _) in items:
-            data[nm] = [fn(*cells) for cells in zip(*(cols[j] for j in idxs))]
-        return pd.DataFrame(data, index=pdf.index)
-
-    # struct-in/struct-out is a SCALAR pandas UDF whose batches arrive as
-    # pd.DataFrame; the type-hint inference path has no spelling for that
-    # signature (UNSUPPORTED_SIGNATURE), so pass the eval type explicitly
-    import warnings
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", UserWarning)
-        return F.pandas_udf(_reduce, returnType=out_schema,
-                            functionType=PandasUDFType.SCALAR)
 
 _INTERVAL_MS = {
     "ms": 1, "s": 1000, "min": 60_000, "m": 60_000,
@@ -443,80 +410,13 @@ def window_agg(
         if wdef.maxsize is not None and wdef.exclude_current_row:
             elems = _take_last(elems, F.lit(wdef.maxsize))
 
-        # r14 (guide §4.2, VERDICT r13 item 3): aggregates that provide an
-        # Arrow lowering evaluate their per-row frame reduction in ONE
-        # vectorized Python UDF instead of the interpreted HOF chain
-        # (CodegenFallback, O(K·frame) expression evals per row for the
-        # cate family). The frame semantics (bounds, MAXSIZE, EXCLUDE ...)
-        # stay JVM-side in `elems` above; only the reduction crosses, as
-        # null-free primitive arrays (exact dtypes across Arrow). Python
-        # reductions are proven bit-identical per aggregate (see
-        # aggregates_cate.py); dtypes without such a proof fall back to
-        # the HOF path. Toggle: spark.graft.window.arrowReduce.
-        arrow_handled: set[str] = set()
-        use_arrow = (
-            str(
-                df.sparkSession.conf.get("spark.graft.window.arrowReduce", "true")
-            ).lower()
-            == "true"
-        )
-        if use_arrow:
-            acols: list[Column] = []
-            col_idx: dict[str, int] = {}
-            pending: dict[str, tuple[list[int], object]] = {}
-            for i, (name, spec) in enumerate(array_specs.items()):
-                if spec.arrow is None:
-                    continue
-                getter = lambda fk, i=i: (lambda s: s[slot_of[(i, fk)]])
-                res = spec.arrow(elems, getter)
-                if res is None:
-                    continue
-                cols_i, make_i = res
-                # aggregates over the same (value, key) expressions produce
-                # textually identical array columns (the struct slots are
-                # already shared): ship and evaluate each distinct array
-                # ONCE — sum_cate+count_cate over one pair otherwise double
-                # both the interpreted filter/transform passes and the
-                # Arrow bytes
-                idxs = []
-                for c in cols_i:
-                    key = str(c)
-                    if key not in col_idx:
-                        col_idx[key] = len(acols)
-                        acols.append(c)
-                    idxs.append(col_idx[key])
-                pending[name] = (idxs, make_i)
-            if pending:
-                packed = F.struct(*[c.alias(f"a{j}") for j, c in enumerate(acols)])
-                ptype = df.select(packed.alias("__p")).schema[0].dataType
-                dtypes = [
-                    fld.dataType.elementType.simpleString() for fld in ptype.fields
-                ]
-                fns = {}
-                for name, (idxs, make) in pending.items():
-                    made = make([dtypes[j] for j in idxs])
-                    if made is not None:
-                        fn, rtype = made
-                        fns[name] = (idxs, fn, rtype)
-                if fns:
-                    df = df.withColumn(_ARROW_OUT, _arrow_reduce_udf(fns, len(acols))(packed))
-                    for name in fns:
-                        native_cols[name] = F.col(_ARROW_OUT)[name]
-                        arrow_handled.add(name)
-
         for i, (name, spec) in enumerate(array_specs.items()):
-            if name in arrow_handled:
-                continue
             getter = lambda fk, i=i: (lambda s: s[slot_of[(i, fk)]])
             native_cols[name] = spec.array(elems, getter)
 
     # select("*") (not a by-name re-projection) so joined inputs keep their
     # alias qualifiers and duplicate column names survive untouched
-    drops = (
-        ([] if keep_order else [_ORD, _RID])
-        + ([] if keep_flag else [_FLAG])
-        + [_ARROW_OUT]
-    )
+    drops = ([] if keep_order else [_ORD, _RID]) + ([] if keep_flag else [_FLAG])
     return df.select("*", *[c.alias(n) for n, c in native_cols.items()]).drop(*drops)
 
 

@@ -1,5 +1,5 @@
 """Plans: DEPLOY (named feature queries) and request-mode evaluation."""
 
-from openmldb_spark.plans.deploy import Deployment, deploy, get_deployment
+from openmldb_spark.plans.deploy import Deployment, deploy
 
-__all__ = ["Deployment", "deploy", "get_deployment"]
+__all__ = ["Deployment", "deploy"]

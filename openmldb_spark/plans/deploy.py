@@ -24,9 +24,6 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
-_REGISTRY: dict[str, "Deployment"] = {}
-
-
 @dataclass
 class Deployment:
     name: str
@@ -59,10 +56,4 @@ def deploy(
     fn: Callable[[DataFrame, DataFrame], DataFrame],
     input_schema: Optional[StructType] = None,
 ) -> Deployment:
-    d = Deployment(name, fn, input_schema)
-    _REGISTRY[name] = d
-    return d
-
-
-def get_deployment(name: str) -> Deployment:
-    return _REGISTRY[name]
+    return Deployment(name, fn, input_schema)

@@ -397,13 +397,10 @@ class ApiServer:
                 )
         except ValueError:
             return _err("Translate to insert row failed")
-        new = eng.spark.createDataFrame([tuple(row)], store.schema)
         # PUT is an ONLINE insert (the reference's ExecuteInsert writes the
-        # tablet store regardless of session execute_mode); the epoch bump
-        # keeps derived caches (long-window pre-agg) honest for HTTP
-        # writes too (r9 review finding)
-        eng._dbs[db][t] = store.unionByName(new)
-        eng._bump_epoch(db, t)
+        # tablet store regardless of session execute_mode), through the
+        # same path as INSERT: epoch bump and compiled-plan write-through
+        eng._append_rows(db, t, [row])
         return _ok()
 
     # -- procedures / deployments --------------------------------------------

@@ -19,20 +19,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: tables shipped by the test-data generator (TESTDATA.md)
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 #: columns stored as parquet TIMESTAMP(NANOS) that Spark 4 reads as long
 #: (nanoseconds since epoch) under nanosAsLong; we convert to TIMESTAMP_NTZ.
 _NANO_TS_COLUMNS = {"events": ("ts",)}
@@ -105,7 +91,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES) -> dict[str, DataFrame]:
-    """Load several test-data tables as a dict of DataFrames."""
-    return {n: load_table(spark, sf_dir, n) for n in names}

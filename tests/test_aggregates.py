@@ -1,6 +1,8 @@
 """UDAF semantics pinned to the reference's documented examples
 (default_udf_library.cc / feature_zero_def.cc / sum_by_category_def.cc)."""
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -232,3 +234,412 @@ def test_group_agg_having_dataframe_path(spark):
         having=F.count(F.lit(1)) >= 2,
     ).collect()
     assert len(out) == 1 and out[0]["k"] == "a" and out[0]["s"] == 6
+
+
+# ---------------------------------------------------------------------------
+# *_cate window outputs pinned on adversarial inputs: NaN / ±inf / -0.0
+# doubles, 1e300 and 5e-07 under "%.6f", astral-plane and private-use string
+# keys, bigint wraparound, float32 folds and overflow, int / bool / date /
+# timestamp keys, null values / keys / conditions, and empty frames ("")
+# ---------------------------------------------------------------------------
+
+_BIG = "1" + "0" * 300  # the integer digits of 1e300 under "%.6f"
+_W4 = WindowDef(partition_by=["g"], order_by="seq", rows=4)
+
+
+def _adversarial_double_rows():
+    nan, inf = float("nan"), float("inf")
+    vals = [1.5, -0.0, 0.0, nan, -inf, inf, None, 0.125, 1 / 3, 2.0, -7.25,
+            1e300, -1e300, 5e-324, 0.15, 0.25, 1 / 128, None, 3.5, 0.0000005]
+    keys = ["a", "b", None, "a", "\U00010000", "\ue000", "b", "a", "z", "b",
+            "a", "c", "c", "a", "b", "a", "c", "a", "", "b"]
+    return [(i % 3, i, v, k) for i, (v, k) in enumerate(zip(vals, keys))]
+
+
+def _ratio_rows():
+    rows = [
+        (i % 3, i, None if i % 11 == 7 else float(i),
+         None if i % 13 == 5 else f"k{i % 4}")
+        for i in range(40)
+    ]
+    return rows + [(0, 100, float("nan"), "k0")]  # NaN is not null: eligible
+
+
+_D = datetime.date
+
+CATE_WINDOW_CASES = [
+    pytest.param(
+        _adversarial_double_rows(),
+        "g int, seq long, v double, k string",
+        _W4,
+        lambda: {
+            "sum_cate": A.sum_cate("v", "k"),
+            "count_cate": A.count_cate("v", "k"),
+            "avg_cate": A.avg_cate("v", "k"),
+            "min_cate": A.min_cate("v", "k"),
+            "max_cate": A.max_cate("v", "k"),
+            "top2_key_sum": A.top_n_key_sum_cate_where("v", F.col("v") > 0, "k", 2),
+            "top2_val_sum": A.top_n_value_sum_cate_where("v", F.col("v") > 0, "k", 2),
+            "top2_val_max": A.top_n_value_max_cate_where(
+                "v", F.col("v").isNotNull(), "k", 2
+            ),
+        },
+        {
+            "sum_cate": [
+                "a:1.500000", "b:-0.000000", "", "a:NaN", "b:-0.000000,\U00010000:NaN",
+                "\ue000:NaN", "a:NaN", "a:0.125000,b:-0.000000,\U00010000:NaN",
+                "z:0.333333,\ue000:NaN", "a:NaN,b:2.000000",
+                "a:-7.125000,b:-0.000000,\U00010000:NaN",
+                f"c:{_BIG}.000000,z:0.333333,\ue000:NaN",
+                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+                "a:-7.125000,b:-0.000000,\U00010000:NaN",
+                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:NaN",
+                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+                "a:-7.125000,c:0.007813,\U00010000:NaN",
+                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:NaN",
+                f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
+                "a:-7.125000,b:0.000001,c:0.007813",
+            ],
+            "count_cate": [
+                "a:1", "b:1", "", "a:2", "b:1,\U00010000:1", "\ue000:1", "a:2",
+                "a:1,b:1,\U00010000:1", "z:1,\ue000:1", "a:2,b:1",
+                "a:2,b:1,\U00010000:1", "c:1,z:1,\ue000:1", "a:2,b:1,c:1",
+                "a:3,b:1,\U00010000:1", "b:1,c:1,z:1,\ue000:1", "a:2,b:1,c:1",
+                "a:3,c:1,\U00010000:1", "b:1,c:1,z:1,\ue000:1", ":1,a:1,b:1,c:1",
+                "a:3,b:1,c:1",
+            ],
+            "avg_cate": [
+                "a:1.500000", "b:0.000000", "", "a:NaN",
+                "b:0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:NaN",
+                "a:0.125000,b:0.000000,\U00010000:-Infinity",
+                "z:0.333333,\ue000:Infinity", "a:NaN,b:2.000000",
+                "a:-3.562500,b:0.000000,\U00010000:-Infinity",
+                f"c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+                "a:-2.375000,b:0.000000,\U00010000:-Infinity",
+                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+                "a:-2.375000,c:0.007813,\U00010000:-Infinity",
+                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+                f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
+                "a:-2.375000,b:0.000001,c:0.007813",
+            ],
+            "min_cate": [
+                "a:1.500000", "b:-0.000000", "", "a:1.500000",
+                "b:-0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:1.500000",
+                "a:0.125000,b:-0.000000,\U00010000:-Infinity",
+                "z:0.333333,\ue000:Infinity", "a:1.500000,b:2.000000",
+                "a:-7.250000,b:-0.000000,\U00010000:-Infinity",
+                f"c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+                f"a:1.500000,b:2.000000,c:-{_BIG}.000000",
+                "a:-7.250000,b:-0.000000,\U00010000:-Infinity",
+                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+                f"a:0.250000,b:2.000000,c:-{_BIG}.000000",
+                "a:-7.250000,c:0.007813,\U00010000:-Infinity",
+                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+                f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
+                "a:-7.250000,b:0.000001,c:0.007813",
+            ],
+            "max_cate": [
+                "a:1.500000", "b:-0.000000", "", "a:NaN",
+                "b:-0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:NaN",
+                "a:0.125000,b:-0.000000,\U00010000:-Infinity",
+                "z:0.333333,\ue000:Infinity", "a:NaN,b:2.000000",
+                "a:0.125000,b:-0.000000,\U00010000:-Infinity",
+                f"c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+                "a:0.125000,b:-0.000000,\U00010000:-Infinity",
+                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+                "a:0.125000,c:0.007813,\U00010000:-Infinity",
+                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+                f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
+                "a:0.125000,b:0.000001,c:0.007813",
+            ],
+            "top2_key_sum": [
+                "a:1.500000", "", "", "a:NaN", "", "\ue000:NaN", "a:NaN", "a:0.125000",
+                "\ue000:NaN,z:0.333333", "b:2.000000,a:NaN", "a:0.125000",
+                "\ue000:NaN,z:0.333333", "b:2.000000,a:NaN", "a:0.125000",
+                "\ue000:NaN,z:0.333333", "b:2.000000,a:NaN", "c:0.007813,a:0.125000",
+                "\ue000:NaN,z:0.333333", "b:2.000000,a:0.250000",
+                "c:0.007813,b:0.000001",
+            ],
+            "top2_val_sum": [
+                "a:1.500000", "", "", "a:NaN", "", "\ue000:NaN", "a:NaN", "a:0.125000",
+                "\ue000:NaN,z:0.333333", "a:NaN,b:2.000000", "a:0.125000",
+                f"\ue000:NaN,c:{_BIG}.000000", "a:NaN,b:2.000000", "a:0.125000",
+                f"\ue000:NaN,c:{_BIG}.000000", "a:NaN,b:2.000000",
+                "a:0.125000,c:0.007813", f"\ue000:NaN,c:{_BIG}.000000",
+                ":3.500000,b:2.000000", "a:0.125000,c:0.007813",
+            ],
+            "top2_val_max": [
+                "a:1.500000", "b:-0.000000", "", "a:NaN",
+                "b:-0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:NaN",
+                "a:0.125000,b:-0.000000", "\ue000:Infinity,z:0.333333",
+                "a:NaN,b:2.000000", "a:0.125000,b:-0.000000",
+                f"\ue000:Infinity,c:{_BIG}.000000", "a:NaN,b:2.000000",
+                "a:0.125000,b:-0.000000", f"\ue000:Infinity,c:{_BIG}.000000",
+                "a:NaN,b:2.000000", "a:0.125000,c:0.007813",
+                f"\ue000:Infinity,c:{_BIG}.000000", ":3.500000,b:2.000000",
+                "a:0.125000,c:0.007813",
+            ],
+        },
+        id="adversarial_doubles",
+    ),
+    pytest.param(
+        [
+            (0, 0, 2**62, 1.5, "a"),
+            (0, 1, 2**62, 2.5, "a"),  # long sum wraps in-frame
+            (0, 2, -5, float("nan"), "b"),
+            (0, 3, None, 0.125, None),
+            (0, 4, 7, None, "b"),
+            (1, 5, 2**31 - 1, -0.0, "x"),
+            (1, 6, 1, 0.0, "x"),
+            (1, 7, -(2**60), 3.0e38, "y"),
+            (1, 8, -(2**60), 3.0e38, "y"),  # float32 sum overflows to inf
+        ],
+        "g int, seq long, lv long, fv float, k string",
+        _W4,
+        lambda: {
+            "s_l": A.sum_cate("lv", "k"),
+            "mn_f": A.min_cate("fv", "k"),
+            "s_f": A.sum_cate("fv", "k"),
+            "a_f": A.avg_cate("fv", "k"),
+        },
+        {
+            "s_l": [
+                "a:4611686018427387904", "a:-9223372036854775808",
+                "a:-9223372036854775808,b:-5", "a:-9223372036854775808,b:-5",
+                "a:-9223372036854775808,b:2", "x:2147483647", "x:2147483648",
+                "x:2147483648,y:-1152921504606846976",
+                "x:2147483648,y:-2305843009213693952",
+            ],
+            "mn_f": [
+                "a:1.500000", "a:1.500000", "a:1.500000,b:NaN", "a:1.500000,b:NaN",
+                "a:1.500000,b:NaN", "x:-0.000000", "x:-0.000000",
+                "x:-0.000000,y:300000000549775580000000000000000000000.000000",
+                "x:-0.000000,y:300000000549775580000000000000000000000.000000",
+            ],
+            "s_f": [
+                "a:1.500000", "a:4.000000", "a:4.000000,b:NaN", "a:4.000000,b:NaN",
+                "a:4.000000,b:NaN", "x:-0.000000", "x:0.000000",
+                "x:0.000000,y:300000000549775580000000000000000000000.000000",
+                "x:0.000000,y:Infinity",
+            ],
+            "a_f": [
+                "a:1.500000", "a:2.000000", "a:2.000000,b:NaN", "a:2.000000,b:NaN",
+                "a:2.000000,b:NaN", "x:0.000000", "x:0.000000",
+                "x:0.000000,y:300000000549775580000000000000000000000.000000",
+                "x:0.000000,y:300000000549775580000000000000000000000.000000",
+            ],
+        },
+        id="bigint_wrap_and_float32",
+    ),
+    pytest.param(
+        [
+            (0, 0, 1.0, 10, True, _D(2020, 1, 2)),
+            (0, 1, 2.0, 2, False, _D(2019, 12, 31)),
+            (0, 2, 3.0, 10, True, _D(2020, 1, 2)),
+            (0, 3, 4.0, None, None, None),
+            (0, 4, 5.0, -3, False, _D(2021, 6, 1)),
+        ],
+        "g int, seq long, v double, ki long, kb boolean, kd date",
+        _W4,
+        lambda: {
+            "by_int": A.sum_cate("v", "ki"),  # numeric key order, not "10"<"2"
+            "by_bool": A.count_cate("v", "kb"),
+            "by_date": A.max_cate("v", "kd"),
+        },
+        {
+            "by_int": [
+                "10:1.000000", "2:2.000000,10:1.000000", "2:2.000000,10:4.000000",
+                "2:2.000000,10:4.000000", "-3:5.000000,2:2.000000,10:4.000000",
+            ],
+            "by_bool": [
+                "true:1", "false:1,true:1", "false:1,true:2", "false:1,true:2",
+                "false:2,true:2",
+            ],
+            "by_date": [
+                "2020-01-02:1.000000", "2019-12-31:2.000000,2020-01-02:1.000000",
+                "2019-12-31:2.000000,2020-01-02:3.000000",
+                "2019-12-31:2.000000,2020-01-02:3.000000",
+                "2019-12-31:2.000000,2020-01-02:3.000000,2021-06-01:5.000000",
+            ],
+        },
+        id="int_bool_date_keys",
+    ),
+    pytest.param(
+        [(0, 0, 1.0, datetime.datetime(2020, 1, 1))],
+        "g int, seq long, v double, kt timestamp",
+        _W4,
+        lambda: {"s": A.sum_cate("v", "kt")},
+        {
+            "s": [
+                "2020-01-01 00:00:00:1.000000",
+            ],
+        },
+        id="timestamp_key",
+    ),
+    pytest.param(
+        _ratio_rows(),
+        "g int, seq long, v double, k string",
+        _W4,
+        lambda: {
+            "kr": A.top_n_key_ratio_cate("v", F.col("v") > 20, "k", 2),
+            "vr": A.top_n_value_ratio_cate("v", F.col("v") > 20, "k", 2),
+            "kr_all": A.top_n_key_ratio_cate("v", F.col("v") > 20, "k", -1),
+            "vr_zero": A.top_n_value_ratio_cate("v", F.col("v") > 20, "k", 0),
+            # null conds count in the denominator only
+            "kr_nullc": A.top_n_key_ratio_cate(
+                "v", F.when(F.col("seq") % 5 == 0, F.col("v") > 10), "k", 3
+            ),
+        },
+        {
+            "kr": [
+                "k0:0.000000", "k1:0.000000", "k2:0.000000", "k3:0.000000,k0:0.000000",
+                "k1:0.000000,k0:0.000000", "k2:0.000000", "k3:0.000000,k2:0.000000",
+                "k1:0.000000,k0:0.000000", "k2:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000", "k2:0.000000,k1:0.000000",
+                "k3:0.000000,k2:0.000000", "k3:0.000000,k2:0.000000",
+                "k2:0.000000,k1:0.000000", "k3:0.000000,k2:0.000000",
+                "k3:0.000000,k2:0.000000", "k2:0.000000,k1:0.000000",
+                "k3:0.000000,k2:0.000000", "k3:0.000000,k2:0.000000",
+                "k3:0.000000,k2:0.000000", "k3:0.000000,k2:0.000000",
+                "k3:0.000000,k1:0.500000", "k3:0.000000,k2:0.500000",
+                "k3:0.500000,k2:0.000000", "k3:0.000000,k1:1.000000",
+                "k3:0.000000,k2:1.000000", "k3:1.000000,k2:0.500000",
+                "k3:0.500000,k1:1.000000", "k3:0.000000,k2:1.000000",
+                "k3:1.000000,k2:1.000000", "k3:1.000000,k2:1.000000",
+                "k3:0.000000,k2:1.000000", "k3:1.000000,k2:1.000000",
+                "k3:1.000000,k2:1.000000", "k2:1.000000,k1:1.000000",
+                "k3:1.000000,k2:1.000000", "k3:1.000000,k2:1.000000",
+                "k2:1.000000,k1:1.000000", "k3:1.000000,k2:1.000000",
+                "k3:1.000000,k2:1.000000", "k3:1.000000,k2:1.000000",
+            ],
+            "vr": [
+                "k0:0.000000", "k1:0.000000", "k2:0.000000", "k3:0.000000,k0:0.000000",
+                "k1:0.000000,k0:0.000000", "k2:0.000000", "k3:0.000000,k2:0.000000",
+                "k1:0.000000,k0:0.000000", "k2:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000", "k2:0.000000,k1:0.000000",
+                "k3:0.000000,k2:0.000000", "k3:0.000000,k2:0.000000",
+                "k2:0.000000,k1:0.000000", "k3:0.000000,k2:0.000000",
+                "k3:0.000000,k2:0.000000", "k2:0.000000,k1:0.000000",
+                "k3:0.000000,k2:0.000000", "k3:0.000000,k2:0.000000",
+                "k3:0.000000,k2:0.000000", "k3:0.000000,k2:0.000000",
+                "k1:0.500000,k3:0.000000", "k2:0.500000,k3:0.000000",
+                "k3:0.500000,k2:0.000000", "k1:1.000000,k0:0.500000",
+                "k2:1.000000,k1:0.500000", "k3:1.000000,k2:0.500000",
+                "k1:1.000000,k0:1.000000", "k2:1.000000,k1:1.000000",
+                "k3:1.000000,k2:1.000000", "k3:1.000000,k2:1.000000",
+                "k2:1.000000,k1:1.000000", "k3:1.000000,k2:1.000000",
+                "k3:1.000000,k2:1.000000", "k2:1.000000,k1:1.000000",
+                "k3:1.000000,k2:1.000000", "k3:1.000000,k2:1.000000",
+                "k2:1.000000,k1:1.000000", "k3:1.000000,k2:1.000000",
+                "k3:1.000000,k2:1.000000", "k3:1.000000,k2:1.000000",
+            ],
+            "kr_all": [
+                "k0:0.000000", "k1:0.000000", "k2:0.000000", "k3:0.000000,k0:0.000000",
+                "k1:0.000000,k0:0.000000", "k2:0.000000",
+                "k3:0.000000,k2:0.000000,k0:0.000000", "k1:0.000000,k0:0.000000",
+                "k2:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000,k0:0.000000",
+                "k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000,k0:0.000000",
+                "k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000,k0:0.000000",
+                "k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k1:0.500000,k0:0.000000",
+                "k3:0.000000,k2:0.500000,k1:0.000000,k0:0.000000",
+                "k3:0.500000,k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k1:1.000000,k0:0.500000",
+                "k3:0.000000,k2:1.000000,k1:0.500000,k0:0.000000",
+                "k3:1.000000,k2:0.500000,k1:0.000000,k0:0.000000",
+                "k3:0.500000,k1:1.000000,k0:1.000000",
+                "k3:0.000000,k2:1.000000,k1:1.000000,k0:0.500000",
+                "k3:1.000000,k2:1.000000,k1:0.000000,k0:0.000000",
+                "k3:1.000000,k2:1.000000,k1:1.000000,k0:1.000000",
+                "k3:0.000000,k2:1.000000,k1:1.000000,k0:1.000000",
+                "k3:1.000000,k2:1.000000,k0:0.500000",
+                "k3:1.000000,k2:1.000000,k1:1.000000,k0:1.000000",
+                "k2:1.000000,k1:1.000000,k0:1.000000",
+                "k3:1.000000,k2:1.000000,k0:1.000000",
+                "k3:1.000000,k2:1.000000,k1:1.000000,k0:1.000000",
+                "k2:1.000000,k1:1.000000,k0:1.000000",
+                "k3:1.000000,k2:1.000000,k0:1.000000",
+                "k3:1.000000,k2:1.000000,k1:1.000000,k0:1.000000",
+                "k3:1.000000,k2:1.000000,k1:1.000000,k0:1.000000",
+            ],
+            "vr_zero": [""] * 41,
+            "kr_nullc": [
+                "k0:0.000000", "k1:0.000000", "k2:0.000000", "k3:0.000000,k0:0.000000",
+                "k1:0.000000,k0:0.000000", "k2:0.000000",
+                "k3:0.000000,k2:0.000000,k0:0.000000", "k1:0.000000,k0:0.000000",
+                "k2:0.000000,k0:0.000000", "k3:0.000000,k2:0.000000,k1:0.000000",
+                "k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000",
+                "k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k0:0.000000",
+                "k3:0.500000,k2:0.000000,k1:0.000000",
+                "k2:0.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000",
+                "k3:1.000000,k2:0.000000,k1:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000",
+                "k3:1.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000",
+                "k3:1.000000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:0.500000",
+                "k3:0.000000,k2:0.000000,k1:0.000000",
+                "k3:0.500000,k1:0.000000,k0:0.000000",
+                "k3:0.000000,k2:0.000000,k1:1.000000",
+                "k3:0.000000,k2:0.000000,k1:0.000000",
+                "k3:0.000000,k2:1.000000,k1:0.000000",
+                "k3:0.000000,k2:0.000000,k1:1.000000",
+                "k3:0.000000,k2:0.000000,k0:0.500000",
+                "k3:0.000000,k2:1.000000,k1:0.000000",
+                "k2:0.000000,k1:1.000000,k0:0.000000",
+                "k3:0.500000,k2:0.000000,k0:0.000000",
+                "k3:0.000000,k2:1.000000,k1:0.000000",
+                "k2:0.000000,k1:0.500000,k0:0.000000",
+                "k3:1.000000,k2:0.000000,k0:0.000000",
+                "k3:0.000000,k2:1.000000,k1:0.000000",
+                "k3:0.000000,k2:1.000000,k1:0.000000",
+            ],
+        },
+        id="ratio_cate",
+    ),
+    pytest.param(
+        _adversarial_double_rows(),
+        "g int, seq long, v double, k string",
+        # the upper end pushes the first rows' frames before the partition
+        # start: the eligible set is empty -> ""
+        WindowDef(partition_by=["g"], order_by="seq", rows=4, end_rows=2),
+        lambda: {"s": A.sum_cate("v", "k")},
+        {
+            "s": [
+                "", "", "", "", "", "", "a:1.500000", "b:-0.000000", "", "a:NaN",
+                "b:-0.000000,\U00010000:NaN", "\ue000:NaN", "a:NaN",
+                "a:0.125000,b:-0.000000,\U00010000:NaN", "z:0.333333,\ue000:NaN",
+                "a:NaN,b:2.000000", "a:-7.125000,\U00010000:NaN",
+                f"c:{_BIG}.000000,z:0.333333,\ue000:NaN",
+                f"b:2.000000,c:-{_BIG}.000000", "a:-7.125000",
+            ],
+        },
+        id="empty_frame",
+    ),
+]
+
+
+@pytest.mark.parametrize("rows,schema,wdef,aggs,want", CATE_WINDOW_CASES)
+def test_cate_window_outputs(spark, rows, schema, wdef, aggs, want):
+    out = window_agg(spark.createDataFrame(rows, schema), wdef, aggs())
+    got = out.orderBy("seq").collect()
+    assert {n: [r[n] for r in got] for n in want} == want

@@ -353,8 +353,6 @@ def test_serving_session_isolated_from_batch_confs(spark):
     DURING an in-flight serve still plans with AQE on."""
     import threading
 
-    from openmldb_spark.engine.compiled import FAST_CONFS_CONF
-
     eng = _engine(spark)
     dep = eng.execute(f"DEPLOY tjvm3 {SQL}")
     dep.run_request_rows(_conv([(9, "aa", 40, 1590738995000)]))
@@ -394,13 +392,6 @@ def test_serving_session_isolated_from_batch_confs(spark):
         t.join()
     assert aqe_seen and all(aqe_seen), f"{aqe_seen.count(False)} AQE-off plans"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    # serve-time opt-out: back to the engine session with its own confs
-    spark.conf.set(FAST_CONFS_CONF, "false")
-    try:
-        assert cp._fresh_serve_df().sparkSession is spark
-        assert len(dep.run_request_rows(_conv([(9, "bb", 1, 1590738995000)]))) == 1
-    finally:
-        spark.conf.unset(FAST_CONFS_CONF)
 
 
 def test_nested_request_schema_falls_back_to_arrow_staging(spark):
@@ -997,3 +988,53 @@ def test_insert_racing_a_serving_thread(spark):
     for t, s in seen:
         floor = max([tot for at, tot in done if at <= t], default=30 + 31)
         assert s - 40 >= floor, (t, s, done)
+
+
+def test_rest_put_writes_through_like_insert(spark):
+    """A REST one-row PUT into the request table takes the INSERT path:
+    the live plan absorbs the row (same plan object, no recompile) and
+    the next serve equals the uncompiled path over the grown store."""
+    import json
+
+    from openmldb_spark.restful import ApiServer
+
+    eng = _engine(spark)
+    dep = eng.execute(f"DEPLOY dput {SQL}")
+    req = [(9, "aa", 40, 1590738995000)]
+    assert _served(dep, req)[0][2] == 30 + 31 + 40
+    plan = dep._compiled
+    r = ApiServer(eng).handle(
+        "PUT",
+        f"/dbs/{eng.current_db}/tables/t0",
+        json.dumps({"value": [[20, "aa", 100, 1590738993500]]}),
+    )
+    assert r == {"code": 0, "msg": "ok"}
+    got = _served(dep, req)
+    assert dep._compiled is plan
+    assert got == _uncompiled(dep, req)
+    assert got[0][2] == 30 + 31 + 100 + 40
+
+
+SQL_CATE = (
+    "SELECT id, c1, count_cate(c4, c1) OVER w1 as cc FROM t0 WINDOW w1 AS "
+    "(PARTITION BY t0.c1 ORDER BY t0.c7 ROWS_RANGE BETWEEN 10s "
+    "PRECEDING AND CURRENT ROW)"
+)
+
+
+def test_cate_window_plans_have_no_python_stage(spark):
+    """The *_cate reduction stays inside the JVM: neither the executed
+    serve plan nor the batch plan of a count_cate deployment carries a
+    Python evaluation node."""
+    eng = _engine(spark)
+    dep = eng.execute(f"DEPLOY dcate {SQL_CATE}")
+    got = dep.run_request_rows(_conv([(9, "aa", 40, 1590738995000)]))
+    assert got[0]["cc"] == "aa:3"
+    plans = {
+        "serve": dep._compiled._fresh_serve_df(),
+        "batch": dep.run_batch(),
+    }
+    for mode, df in plans.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, f"{mode} plan has {node}:\n{plan}"
