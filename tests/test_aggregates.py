@@ -267,124 +267,132 @@ def _ratio_rows():
 
 _D = datetime.date
 
+# one case per family over the same rows, so a wrong output names its family
+_ADV_AGGS = {
+    "sum_cate": lambda: A.sum_cate("v", "k"),
+    "count_cate": lambda: A.count_cate("v", "k"),
+    "avg_cate": lambda: A.avg_cate("v", "k"),
+    "min_cate": lambda: A.min_cate("v", "k"),
+    "max_cate": lambda: A.max_cate("v", "k"),
+    "top2_key_sum": lambda: A.top_n_key_sum_cate_where("v", F.col("v") > 0, "k", 2),
+    "top2_val_sum": lambda: A.top_n_value_sum_cate_where("v", F.col("v") > 0, "k", 2),
+    "top2_val_max": lambda: A.top_n_value_max_cate_where(
+        "v", F.col("v").isNotNull(), "k", 2
+    ),
+}
+
+_ADV_WANT = {
+    "sum_cate": [
+        "a:1.500000", "b:-0.000000", "", "a:NaN", "b:-0.000000,\U00010000:NaN",
+        "\ue000:NaN", "a:NaN", "a:0.125000,b:-0.000000,\U00010000:NaN",
+        "z:0.333333,\ue000:NaN", "a:NaN,b:2.000000",
+        "a:-7.125000,b:-0.000000,\U00010000:NaN",
+        f"c:{_BIG}.000000,z:0.333333,\ue000:NaN",
+        f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+        "a:-7.125000,b:-0.000000,\U00010000:NaN",
+        f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:NaN",
+        f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+        "a:-7.125000,c:0.007813,\U00010000:NaN",
+        f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:NaN",
+        f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
+        "a:-7.125000,b:0.000001,c:0.007813",
+    ],
+    "count_cate": [
+        "a:1", "b:1", "", "a:2", "b:1,\U00010000:1", "\ue000:1", "a:2",
+        "a:1,b:1,\U00010000:1", "z:1,\ue000:1", "a:2,b:1",
+        "a:2,b:1,\U00010000:1", "c:1,z:1,\ue000:1", "a:2,b:1,c:1",
+        "a:3,b:1,\U00010000:1", "b:1,c:1,z:1,\ue000:1", "a:2,b:1,c:1",
+        "a:3,c:1,\U00010000:1", "b:1,c:1,z:1,\ue000:1", ":1,a:1,b:1,c:1",
+        "a:3,b:1,c:1",
+    ],
+    "avg_cate": [
+        "a:1.500000", "b:0.000000", "", "a:NaN",
+        "b:0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:NaN",
+        "a:0.125000,b:0.000000,\U00010000:-Infinity",
+        "z:0.333333,\ue000:Infinity", "a:NaN,b:2.000000",
+        "a:-3.562500,b:0.000000,\U00010000:-Infinity",
+        f"c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+        f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+        "a:-2.375000,b:0.000000,\U00010000:-Infinity",
+        f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+        f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+        "a:-2.375000,c:0.007813,\U00010000:-Infinity",
+        f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+        f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
+        "a:-2.375000,b:0.000001,c:0.007813",
+    ],
+    "min_cate": [
+        "a:1.500000", "b:-0.000000", "", "a:1.500000",
+        "b:-0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:1.500000",
+        "a:0.125000,b:-0.000000,\U00010000:-Infinity",
+        "z:0.333333,\ue000:Infinity", "a:1.500000,b:2.000000",
+        "a:-7.250000,b:-0.000000,\U00010000:-Infinity",
+        f"c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+        f"a:1.500000,b:2.000000,c:-{_BIG}.000000",
+        "a:-7.250000,b:-0.000000,\U00010000:-Infinity",
+        f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+        f"a:0.250000,b:2.000000,c:-{_BIG}.000000",
+        "a:-7.250000,c:0.007813,\U00010000:-Infinity",
+        f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+        f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
+        "a:-7.250000,b:0.000001,c:0.007813",
+    ],
+    "max_cate": [
+        "a:1.500000", "b:-0.000000", "", "a:NaN",
+        "b:-0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:NaN",
+        "a:0.125000,b:-0.000000,\U00010000:-Infinity",
+        "z:0.333333,\ue000:Infinity", "a:NaN,b:2.000000",
+        "a:0.125000,b:-0.000000,\U00010000:-Infinity",
+        f"c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+        f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+        "a:0.125000,b:-0.000000,\U00010000:-Infinity",
+        f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+        f"a:NaN,b:2.000000,c:-{_BIG}.000000",
+        "a:0.125000,c:0.007813,\U00010000:-Infinity",
+        f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
+        f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
+        "a:0.125000,b:0.000001,c:0.007813",
+    ],
+    "top2_key_sum": [
+        "a:1.500000", "", "", "a:NaN", "", "\ue000:NaN", "a:NaN", "a:0.125000",
+        "\ue000:NaN,z:0.333333", "b:2.000000,a:NaN", "a:0.125000",
+        "\ue000:NaN,z:0.333333", "b:2.000000,a:NaN", "a:0.125000",
+        "\ue000:NaN,z:0.333333", "b:2.000000,a:NaN", "c:0.007813,a:0.125000",
+        "\ue000:NaN,z:0.333333", "b:2.000000,a:0.250000",
+        "c:0.007813,b:0.000001",
+    ],
+    "top2_val_sum": [
+        "a:1.500000", "", "", "a:NaN", "", "\ue000:NaN", "a:NaN", "a:0.125000",
+        "\ue000:NaN,z:0.333333", "a:NaN,b:2.000000", "a:0.125000",
+        f"\ue000:NaN,c:{_BIG}.000000", "a:NaN,b:2.000000", "a:0.125000",
+        f"\ue000:NaN,c:{_BIG}.000000", "a:NaN,b:2.000000",
+        "a:0.125000,c:0.007813", f"\ue000:NaN,c:{_BIG}.000000",
+        ":3.500000,b:2.000000", "a:0.125000,c:0.007813",
+    ],
+    "top2_val_max": [
+        "a:1.500000", "b:-0.000000", "", "a:NaN",
+        "b:-0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:NaN",
+        "a:0.125000,b:-0.000000", "\ue000:Infinity,z:0.333333",
+        "a:NaN,b:2.000000", "a:0.125000,b:-0.000000",
+        f"\ue000:Infinity,c:{_BIG}.000000", "a:NaN,b:2.000000",
+        "a:0.125000,b:-0.000000", f"\ue000:Infinity,c:{_BIG}.000000",
+        "a:NaN,b:2.000000", "a:0.125000,c:0.007813",
+        f"\ue000:Infinity,c:{_BIG}.000000", ":3.500000,b:2.000000",
+        "a:0.125000,c:0.007813",
+    ],
+}
+
 CATE_WINDOW_CASES = [
-    pytest.param(
-        _adversarial_double_rows(),
-        "g int, seq long, v double, k string",
-        _W4,
-        lambda: {
-            "sum_cate": A.sum_cate("v", "k"),
-            "count_cate": A.count_cate("v", "k"),
-            "avg_cate": A.avg_cate("v", "k"),
-            "min_cate": A.min_cate("v", "k"),
-            "max_cate": A.max_cate("v", "k"),
-            "top2_key_sum": A.top_n_key_sum_cate_where("v", F.col("v") > 0, "k", 2),
-            "top2_val_sum": A.top_n_value_sum_cate_where("v", F.col("v") > 0, "k", 2),
-            "top2_val_max": A.top_n_value_max_cate_where(
-                "v", F.col("v").isNotNull(), "k", 2
-            ),
-        },
-        {
-            "sum_cate": [
-                "a:1.500000", "b:-0.000000", "", "a:NaN", "b:-0.000000,\U00010000:NaN",
-                "\ue000:NaN", "a:NaN", "a:0.125000,b:-0.000000,\U00010000:NaN",
-                "z:0.333333,\ue000:NaN", "a:NaN,b:2.000000",
-                "a:-7.125000,b:-0.000000,\U00010000:NaN",
-                f"c:{_BIG}.000000,z:0.333333,\ue000:NaN",
-                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
-                "a:-7.125000,b:-0.000000,\U00010000:NaN",
-                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:NaN",
-                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
-                "a:-7.125000,c:0.007813,\U00010000:NaN",
-                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:NaN",
-                f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
-                "a:-7.125000,b:0.000001,c:0.007813",
-            ],
-            "count_cate": [
-                "a:1", "b:1", "", "a:2", "b:1,\U00010000:1", "\ue000:1", "a:2",
-                "a:1,b:1,\U00010000:1", "z:1,\ue000:1", "a:2,b:1",
-                "a:2,b:1,\U00010000:1", "c:1,z:1,\ue000:1", "a:2,b:1,c:1",
-                "a:3,b:1,\U00010000:1", "b:1,c:1,z:1,\ue000:1", "a:2,b:1,c:1",
-                "a:3,c:1,\U00010000:1", "b:1,c:1,z:1,\ue000:1", ":1,a:1,b:1,c:1",
-                "a:3,b:1,c:1",
-            ],
-            "avg_cate": [
-                "a:1.500000", "b:0.000000", "", "a:NaN",
-                "b:0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:NaN",
-                "a:0.125000,b:0.000000,\U00010000:-Infinity",
-                "z:0.333333,\ue000:Infinity", "a:NaN,b:2.000000",
-                "a:-3.562500,b:0.000000,\U00010000:-Infinity",
-                f"c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
-                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
-                "a:-2.375000,b:0.000000,\U00010000:-Infinity",
-                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
-                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
-                "a:-2.375000,c:0.007813,\U00010000:-Infinity",
-                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
-                f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
-                "a:-2.375000,b:0.000001,c:0.007813",
-            ],
-            "min_cate": [
-                "a:1.500000", "b:-0.000000", "", "a:1.500000",
-                "b:-0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:1.500000",
-                "a:0.125000,b:-0.000000,\U00010000:-Infinity",
-                "z:0.333333,\ue000:Infinity", "a:1.500000,b:2.000000",
-                "a:-7.250000,b:-0.000000,\U00010000:-Infinity",
-                f"c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
-                f"a:1.500000,b:2.000000,c:-{_BIG}.000000",
-                "a:-7.250000,b:-0.000000,\U00010000:-Infinity",
-                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
-                f"a:0.250000,b:2.000000,c:-{_BIG}.000000",
-                "a:-7.250000,c:0.007813,\U00010000:-Infinity",
-                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
-                f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
-                "a:-7.250000,b:0.000001,c:0.007813",
-            ],
-            "max_cate": [
-                "a:1.500000", "b:-0.000000", "", "a:NaN",
-                "b:-0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:NaN",
-                "a:0.125000,b:-0.000000,\U00010000:-Infinity",
-                "z:0.333333,\ue000:Infinity", "a:NaN,b:2.000000",
-                "a:0.125000,b:-0.000000,\U00010000:-Infinity",
-                f"c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
-                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
-                "a:0.125000,b:-0.000000,\U00010000:-Infinity",
-                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
-                f"a:NaN,b:2.000000,c:-{_BIG}.000000",
-                "a:0.125000,c:0.007813,\U00010000:-Infinity",
-                f"b:0.150000,c:{_BIG}.000000,z:0.333333,\ue000:Infinity",
-                f":3.500000,a:0.250000,b:2.000000,c:-{_BIG}.000000",
-                "a:0.125000,b:0.000001,c:0.007813",
-            ],
-            "top2_key_sum": [
-                "a:1.500000", "", "", "a:NaN", "", "\ue000:NaN", "a:NaN", "a:0.125000",
-                "\ue000:NaN,z:0.333333", "b:2.000000,a:NaN", "a:0.125000",
-                "\ue000:NaN,z:0.333333", "b:2.000000,a:NaN", "a:0.125000",
-                "\ue000:NaN,z:0.333333", "b:2.000000,a:NaN", "c:0.007813,a:0.125000",
-                "\ue000:NaN,z:0.333333", "b:2.000000,a:0.250000",
-                "c:0.007813,b:0.000001",
-            ],
-            "top2_val_sum": [
-                "a:1.500000", "", "", "a:NaN", "", "\ue000:NaN", "a:NaN", "a:0.125000",
-                "\ue000:NaN,z:0.333333", "a:NaN,b:2.000000", "a:0.125000",
-                f"\ue000:NaN,c:{_BIG}.000000", "a:NaN,b:2.000000", "a:0.125000",
-                f"\ue000:NaN,c:{_BIG}.000000", "a:NaN,b:2.000000",
-                "a:0.125000,c:0.007813", f"\ue000:NaN,c:{_BIG}.000000",
-                ":3.500000,b:2.000000", "a:0.125000,c:0.007813",
-            ],
-            "top2_val_max": [
-                "a:1.500000", "b:-0.000000", "", "a:NaN",
-                "b:-0.000000,\U00010000:-Infinity", "\ue000:Infinity", "a:NaN",
-                "a:0.125000,b:-0.000000", "\ue000:Infinity,z:0.333333",
-                "a:NaN,b:2.000000", "a:0.125000,b:-0.000000",
-                f"\ue000:Infinity,c:{_BIG}.000000", "a:NaN,b:2.000000",
-                "a:0.125000,b:-0.000000", f"\ue000:Infinity,c:{_BIG}.000000",
-                "a:NaN,b:2.000000", "a:0.125000,c:0.007813",
-                f"\ue000:Infinity,c:{_BIG}.000000", ":3.500000,b:2.000000",
-                "a:0.125000,c:0.007813",
-            ],
-        },
-        id="adversarial_doubles",
+    *(
+        pytest.param(
+            _adversarial_double_rows(),
+            "g int, seq long, v double, k string",
+            _W4,
+            lambda n=n: {n: _ADV_AGGS[n]()},
+            {n: want},
+            id=f"adversarial_doubles-{n}",
+        )
+        for n, want in _ADV_WANT.items()
     ),
     pytest.param(
         [
