@@ -165,7 +165,7 @@ def q_expressions(spark: SparkSession, sf: str) -> DataFrame:
         F.col("p_size").bitwiseAND(F.lit(7)).cast("long").alias("size_and7"),
         (~(F.col("p_size") % 2 == 0)).alias("odd_size"),
         # ConstProjectNode coverage (constant expressions, no input
-        # dependence) — folded in here when const_project was retired from
+        # dependence) — folded in here when the standalone const query left
         # the registry (round 7, 50-row driver cap)
         (F.lit(1) + F.lit(2)).cast("long").alias("const_three"),
         F.concat(F.lit("a"), F.lit("b")).alias("const_s"),
@@ -820,9 +820,9 @@ def q_dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
 
     Candidates come from the SSJoin prefix index (guaranteed recall for
     J >= t — the MinHash-banding arm was provably redundant here and was
-    cut per VERDICT r3 item 3; `jaccard_dedup(exact=False)` and
-    `minhash_dedup` keep the banding path, unit-tested in
-    tests/test_pipeline.py), then every candidate is verified by EXACT
+    cut per VERDICT r3 item 3; `jaccard_dedup(exact=False)` keeps the
+    banding path, unit-tested in tests/test_pipeline.py), then every
+    candidate is verified by EXACT
     Jaccard. The output therefore equals the all-pairs exact-Jaccard dedup,
     which DuckDB recomputes independently — making this operator fully
     oracle-checkable (rows+schema+hash), per VERDICT r1 item 1."""
@@ -1132,9 +1132,8 @@ def q_embedding_ivf_topk_join(spark: SparkSession, sf: str) -> DataFrame:
     # subvectors), Arrow-batched argmin encode, and ADC scoring are all
     # deterministic argmin/dot arithmetic, so DuckDB recomputes the
     # encode AND the approximate ranking bit-for-bit. Disjoint query set
-    # (50 <= vec_id < 65) keeps every arm independently value-hashed;
-    # trained codebooks (pq_train) stay pytest-pinned (distributed
-    # Lloyd's is not SQL-expressible). Folded HERE (not embedding_topk)
+    # (50 <= vec_id < 65) keeps every arm independently value-hashed.
+    # Folded HERE (not embedding_topk)
     # because this entry is outside bench.py's r2-comparable set.
     from openmldb_spark.pipeline.pq import (
         pq_encode,
@@ -2449,7 +2448,7 @@ def oracle_sql() -> dict[str, str]:
                                  x -> x <> '') AS toks
               FROM documents
             ), sh AS (
-              -- mirror shingles()'s short-doc fallback: under n tokens,
+              -- mirror the shingle pipeline's short-doc fallback: under n tokens,
               -- the whole token list rejoined is the one shingle (ADVICE
               -- r10: without this, <5-token docs vanish from the oracle)
               SELECT doc_id,

@@ -8,87 +8,12 @@ hash agg), sliding windows (native WindowExec), array-eval windows (MAXSIZE),
 LAST JOIN (dedupe-right plan), window-union, minhash dedup (HOF pipeline),
 embedding top-k (broadcast NL join), text quality (pure projection).
 
-Adjudication of the r2->r4 last_join drift (0.818s -> 2.082s on an
-unchanged plan): reproducible, not host noise — the row_number-window
-dedupe's generated code needed ~6 executions to JIT-warm (fresh-JVM reps
-measured [3.5, 2.9, 3.5, 3.4, 4.1, 3.4, 1.3, 1.1]s at sf0.1), so
-best-of-2 always sampled the cold tier. Fixed at the root in round 5: the
-dedupe-right plan now uses max_by(payload, (order, tiebreaks)) — a hash
-aggregate with map-side partial combine that both JIT-warms immediately
-(fresh-JVM best-of-3: 0.44s) and shuffles at most one candidate per key
-per input partition instead of every right row.
-
-Adjudication of the r2->r5 embedding_topk drift (0.453 -> 1.014 -> 1.784s
-on an unchanged plan), same fresh-JVM protocol (round 6): reps WITH the
-corpus repartition [7.766, 1.118, 0.958]s; reps WITHOUT it
-[8.764, 1.216, 1.035]s. Verdict: the shuffle is NOT the cost at this
-scale (the sf0.1 corpus is ONE 2000-row parquet partition) — the ~7.8s
-first rep is plan-shape cold-start (mapInPandas worker pipeline + window
-codegen), steady state is ~1.0s either way, so best-of-2 should land
-~1.1s. The r5 1.78s reading was cross-query JVM contamination: earlier
-bench queries persist() intermediates (dedup_minhash's shared sets) that
-stay cached into later timings — clearCache() between queries (below)
-removes that tier. The repartition itself is now conditional on source
-partition count in all three ANN entry points (similarity._spread), which
-removes the Exchange whenever the scan is already parallel — the 100 TB
-case.
-
-Adjudication of the r5->r6 embedding_lsh_topk_join drift (1.42 -> 2.24s
-on a plan whose only change was the shared _spread guard), same
-fresh-JVM protocol (round 7): reps ALONE [3.387, 1.571, 1.512, 1.444]s;
-reps in BENCH ORDER (after the four dedup/text/topk queries with
-clearCache between, exactly as below) [1.665, 1.721, 1.310, 1.183]s.
-Verdict: steady state is ~1.2-1.6s — unchanged from r5 — and the first
-rep alone carries a ~3.4s whole-stage-codegen cold tier (the double-sided
-bucketize + HOF dot-product plan compiles a large generated class); the
-r6 2.24 reading was that tier plus host noise landing on both reps of a
-best-of-2. The _spread guard is NOT the cost (it removes an Exchange;
-bench order, which exercises it, is FASTER than alone). No plan change
-needed; plan shapes are pinned in tests/test_plan_shapes.py.
-
-Adjudication of the dedup_minhash full-bench readings (2.28s r6 ->
-13-14s in two round-7 full-bench runs), same protocol (round 7, ~20
-controlled runs): steady state is UNCHANGED at ~2.2-3.3s (fresh JVM reps
-[16.6, 3.5]; full-15-query-prefix 3-rep runs [6.1, 2.2, 2.0],
-[6.4, 2.5, 2.3], [12.6, 2.4, 3.3]), but a STOCHASTIC 2-10x tier strikes
-individual executions in a long-lived JVM — identical back-to-back runs
-read [9.0, 4.9, 6.6] then [25.9, 19.9, 3.1]. Event-log data: the slow
-executions inflate the shingle-stage CPU (sum of task run time 76s vs
-~27s for the same cached-read plan), GC and code-cache full_count stay
-low, the per_doc cache IS hit (InMemoryTableScan present), and no
-specific prefix query is the trigger (both bisect halves reproduce it) —
-i.e. JIT deopt/profile-pollution noise amplified by host load, not a
-plan or cache regression (plan pinned in tests/test_plan_shapes.py;
-oracle row green). Every 3+-rep run has at least one steady-state rep,
-so the susceptible query runs extra reps (REPS below) — min-of-N is
-exactly the existing methodology for isolating engine time from
-execution-environment tiers.
+Protocol: one JVM, and every query runs ``MIN_REPS`` count() reps and
+``MIN_REPS`` noop-sink reps with ``clearCache()`` between queries. The
+JSON publishes each query's minimum next to every rep, so a run hit by a
+host or JIT stall shows it in its own numbers. Performance claims are
+made with ``perfbench/`` (``BENCHMARK.json``), not with this harness.
 """
-
-#
-# Adjudication of the r9->r10 embedding_lsh_topk_join reading (published
-# 1.611 -> 4.574s; round 11, fresh-JVM A/B under the exact bench warmup,
-# 6 reps, clearCache between, sf0.1): CURRENT code
-# [5.719, 2.326, 2.124, 2.117, 1.868, 1.967]s; the r9 code tree (92ec73c,
-# same protocol, same host window) [4.051, 2.192, 1.932, 1.908, 1.851,
-# 1.920]s. Verdict: steady state is ~1.9-2.3s on BOTH trees — no code
-# drift (the r10 bands=8 default change never touches this bands=1-pinned
-# query; plan pin green). r9's published 1.611 was a favorable host band,
-# and r10's 4.574 was the in-bench JIT tier striking all three reps of a
-# min-of-3 after ~548 prior codegen stages. Two fixes: (1) this query
-# joins the REPS map (min-of-5, the dedup_minhash mechanism), and
-# (2) the session now reserves a 512m JVM code cache
-# (session.py get_spark) — JDK17's 240m default fills over a 22-query
-# bench and forces late queries into interpreted/deopt execution, which
-# is the tier's root mechanism.
-# directions; round 8, same fresh-JVM protocol, sf0.1, clearCache between
-# reps): [2.635, 1.502, 1.155, 1.212, 1.123, 1.133]s. Verdict: steady
-# state ~1.1-1.2s, one ~2.6s plan-cold first rep (mapInPandas scoring
-# pipeline + window codegen), no stochastic tier beyond rep 1 in this
-# run — the judge's r7 [5.1-6.5] window was a host stall (their own five
-# other queries hit steady state minutes earlier in the same JVM). The
-# plan is pinned (test_plan_shapes); REPS=4 + the global min-of-3 makes
-# the published number the steady state.
 
 from __future__ import annotations
 
@@ -127,42 +52,9 @@ BENCH_QUERIES = [
     "embedding_lsh_topk_join",
 ]
 
-# Adjudication of a full-run host tier (round 13, optimization): one bench
-# run read 36.9s total with window_frame_bounds at 9.9s x3 reps (35x its
-# r12 line) while interleaved queries with different plans ran at normal
-# speed. Standalone re-measurement minutes later: 0.65s on a byte-identical
-# plan; a second full bench run read 11.42s total; jcmd sampling during
-# that run showed the 512m code cache at ~105 MB used. Verdict: the
-# documented stochastic tier can strike ALL reps of adjacent queries in
-# one run (per-generated-class JIT state — other plans' classes keep
-# running fast), so single-run totals are only trustworthy when a re-run
-# or standalone probes corroborate them. No code or protocol change —
-# min-of-N within one run cannot defend against a multi-minute tier, and
-# reordering reps across queries would break the per-query JIT-warm
-# methodology the r5/r7 adjudications established.
-#: every query runs at least this many reps (r7 verdict: the stochastic
-#: 2-10x host/JIT tier documented in the adjudications above can hit BOTH
-#: reps of a best-of-2 — four r7 artifact numbers landed 2-4x above their
-#: fresh-JVM steady states on unchanged code; min-of-3 guarantees a
-#: steady-state rep with high probability on this host)
+#: reps per query and per series (count, noop); the published time is
+#: the minimum
 MIN_REPS = 3
-
-#: extra reps for queries with an adjudicated stochastic JIT tier (module
-#: docstring): min-of-N needs one steady-state rep to land
-REPS = {
-    "dedup_minhash": 4,
-    "embedding_topk": 4,
-    "embedding_lsh_topk_join": 5,
-    # r11: reps [1.059, 9.719, 3.52] in one run — the documented
-    # stochastic host/JIT tier strikes the shingle explode; min-of-4
-    "contamination_ngram": 4,
-    # r14: in-bench count reps read [2.393, 2.034, 1.94] while the same
-    # freshly-built plan in a fresh JVM reads [2.293, 0.315, 0.329, 0.29]
-    # — the r13-adjudicated per-generated-class JIT tier striking all
-    # three reps after ~14 prior queries; min-of-5 gives the steady-state
-    # rep a chance to land
-    "dedup_exact": 5,
-}
 
 
 def main() -> None:
@@ -176,7 +68,7 @@ def main() -> None:
         raise SystemExit(f"bench.py: BENCH_QUERIES missing from queries(): {missing}")
 
     # warm the JVM + file cache with a cheap action (expressions reads the
-    # small part table; const_project left the registry in round 7)
+    # small part table)
     qs["expressions"](spark, sf_dir).count()
     # pre-spawn the Arrow/Python workers (numpy+pandas import per worker is
     # a one-time environment cost, not a per-query cost)
@@ -187,15 +79,11 @@ def main() -> None:
     noop_timings: dict[str, float] = {}
     noop_reps_out: dict[str, list[float]] = {}
     for name in BENCH_QUERIES:
-        # min-of-N: the host (shared microVM) shows transient 10-30x
-        # stalls and a stochastic JIT tier that can hit whichever query is
-        # running; min-of-N isolates engine time from host noise. count()
-        # forces full evaluation without collecting payloads to the
-        # driver. Per-rep arrays are published in the JSON so the artifact
-        # itself shows the environment tier instead of hiding it.
+        # count() forces full evaluation without collecting payloads to
+        # the driver; per-rep arrays are published in the JSON
         best, n = None, 0
         reps: list[float] = []
-        for _ in range(max(MIN_REPS, REPS.get(name, 0))):
+        for _ in range(MIN_REPS):
             t0 = time.perf_counter()
             n = qs[name](spark, sf_dir).count()
             dt = time.perf_counter() - t0
@@ -205,8 +93,7 @@ def main() -> None:
         reps_out[name] = reps
         print(f"# {name}: {timings[name]:.3f}s {reps} ({n} rows)", file=sys.stderr)
         # drop blocks persist()ed inside the query so one query's cache
-        # pressure can't tax the next timing (r6 embedding_topk
-        # adjudication: cached-block GC pressure was the cross-round tier)
+        # pressure can't tax the next timing
         spark.catalog.clearCache()
 
         # r13 measurement-bug fix (declared in OPTIMIZATION_r13.md, guide
@@ -219,7 +106,7 @@ def main() -> None:
         # is published alongside as queries_noop/value_noop.
         nbest = None
         nreps: list[float] = []
-        for _ in range(max(MIN_REPS, REPS.get(name, 0))):
+        for _ in range(MIN_REPS):
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0

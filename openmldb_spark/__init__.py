@@ -16,12 +16,14 @@ The reference system is used only to pin down *semantics*:
                                                  -> :mod:`openmldb_spark.functions.aggregates`
 - LOAD DATA / SELECT INTO                        -> :mod:`openmldb_spark.sources.loader`
 - table+index+TTL metadata                       -> :mod:`openmldb_spark.catalog`
-- DEPLOY (named feature queries)                 -> :mod:`openmldb_spark.plans.deploy`
+- DEPLOY (named feature queries)                 -> :mod:`openmldb_spark.engine.deploy`
 
 Beyond reference parity, :mod:`openmldb_spark.pipeline` adds the operators a
-large-scale (100 TB) training-data pipeline needs: dedup (exact / MinHash-LSH /
-SimHash / embedding), similarity search, text analysis, multimodal column
-plumbing.
+large-scale (100 TB) training-data pipeline needs: dedup (exact / exact
+n-gram Jaccard / SimHash / embedding), similarity search (brute-force, LSH,
+IVF, product quantization), text analysis, sampling, image features; and
+:mod:`openmldb_spark.streaming` adds event-time windowed aggregation and its
+SQL spelling.
 """
 
 from openmldb_spark.session import get_spark, load_table

@@ -150,17 +150,6 @@ def apply_ttl(
     raise ValueError(f"unknown ttl_type {index.ttl_type!r}")
 
 
-def layout_for_index(df: DataFrame, index: IndexDef, num_partitions: Optional[int] = None) -> DataFrame:
-    """Physically co-locate data per the index (performance hint only):
-    hash-partition by key, time-sort within partitions — the layout every
-    window chain over this index wants, paid once."""
-    parts = [F.col(k) for k in index.keys]
-    out = df.repartition(*([num_partitions] if num_partitions else []), *parts)
-    if index.ts_col:
-        out = out.sortWithinPartitions(*index.keys, index.ts_col)
-    return out
-
-
 def save_bucketed(
     df: DataFrame,
     table: str,
@@ -170,7 +159,7 @@ def save_bucketed(
 ) -> None:
     """Persist a table bucketed by the index key (+ time-sorted files).
 
-    The durable form of :func:`layout_for_index`: Spark's bucket metadata
+    The durable form of an index layout: Spark's bucket metadata
     lets later equi-joins and aggregations on the key run WITHOUT a
     shuffle on this side (the reference's index gives its online engine
     seek paths; bucketing gives our batch engine co-located joins). Both

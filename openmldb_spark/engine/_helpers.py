@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from openmldb_spark.catalog import IndexDef, TableDef
 from openmldb_spark.jobs import JOB_SCHEMA, JobManager
-from openmldb_spark.plans.deploy import Deployment
 from openmldb_spark.sources.loader import load_data, select_into
 from openmldb_spark.sql import parser as P
 from openmldb_spark.sql.lowering import Lowerer

@@ -1,5 +1,5 @@
 """The compiled request plan — build once per deployment, swap staged
-Arrow rows per call (the Spark analog of the reference's per-DEPLOY
+request rows per call (the Spark analog of the reference's per-DEPLOY
 compiled-plan cache, ``hybridse/src/vm/engine.cc:453-496``). Split from
 :mod:`openmldb_spark.engine.serving` (house <=900-line module bar)."""
 
@@ -63,8 +63,8 @@ DEFAULT_STAGING_BYTES = 262_144
 SERVING_SHUFFLE_PARTITIONS_CONF = "spark.openmldb.serving.shufflePartitions"
 
 #: simple types the JVM text staging can round-trip exactly (base64 cell
-#: -> decode -> cast, all Catalyst expressions); nested/interval types
-#: fall back to the Arrow mapInArrow source
+#: -> decode -> cast, all Catalyst expressions); a deployment whose input
+#: schema has nested/interval types serves through the per-call path
 _JVM_STAGEABLE = {
     "boolean", "byte", "short", "integer", "long", "float", "double",
     "string", "binary", "date", "timestamp", "timestamp_ntz",
@@ -84,10 +84,8 @@ def _jvm_source(spark, path: str, schema) -> DataFrame:
     FIXED-SIZE padded file (the scan's FileIndex caches the length at
     compile time, so the file must never change size — the writer pads
     with ONE line of spaces), one base64-cell CSV-ish line per row, decoded
-    and cast entirely with Catalyst expressions. This keeps the serving
-    hot path free of Python workers: a 1-row ``mapInArrow`` roundtrip
-    costs ~200 ms/execution on this host regardless of data — the
-    dominant term of the r10 serve latency."""
+    and cast entirely with Catalyst expressions, so the serving hot path
+    starts no Python worker."""
     raw = spark.read.text(path)
     parts = F.split(F.col("value"), ",", -1)
     cols = []
@@ -275,26 +273,6 @@ def _serving_session(spark):
     return clone
 
 
-def _staged_reader(path: str):
-    """Task-side reader for the compiled plan's request source: yields the
-    Arrow batches staged at ``path`` AT EXECUTION TIME — the plan is fixed,
-    only the staged file's contents change between calls. Runs as ONE task
-    (the source is ``range(0,1,1,1).mapInArrow``); batches are Spark's own
-    Arrow encoding of the request rows (``DataFrame.toArrow``), so types
-    round-trip exactly. On a cluster the staged path must live on shared
-    storage (it is a tiny request batch, not data-sized)."""
-    import pyarrow as pa
-
-    def reader(batches):
-        for _ in batches:  # drain the 1-row driver source
-            pass
-        with pa.ipc.open_file(path) as rd:
-            for i in range(rd.num_record_batches):
-                yield rd.get_batch(i)
-
-    return reader
-
-
 class CompiledRequestPlan:
     """A deployment's request plan, compiled ONCE and re-served by swapping
     staged request rows — the Spark analog of the reference's per-DEPLOY
@@ -307,12 +285,11 @@ class CompiledRequestPlan:
     - the request source reads a staged file when the job RUNS, so new
       rows flow through the already-built plan without re-lowering (parse
       + Lowerer + per-intermediate-Dataset Catalyst analysis — ~50% of
-      the uncached per-call latency, ``bench_request.py``). Two source
-      shapes: simple-typed schemas stage as a FIXED-SIZE padded text file
-      read by ``spark.read.text`` + Catalyst decode/cast projections —
-      zero Python stages per serve (a 1-row ``mapInArrow`` roundtrip
-      costs ~200 ms/execution here, the dominant r10 latency term) —
-      while nested types fall back to ``mapInArrow`` over Arrow IPC.
+      the uncached per-call latency). The rows stage as a FIXED-SIZE
+      padded text file read by ``spark.read.text`` + Catalyst decode/cast
+      projections, so a serve runs zero Python stages. Only input schemas
+      :func:`_jvm_stageable` accepts compile; ``SqlDeployment`` serves any
+      other through its per-call path.
     - each serve returns a FRESH Dataset over the cached ANALYZED plan
       (re-rooted onto the isolated serving session, else
       ``.where(lit(True))``): re-collecting the same Dataset would REUSE
@@ -325,7 +302,7 @@ class CompiledRequestPlan:
       the plan captured: a TTL pin / mode / db change, and every write
       except an absorbed INSERT, bumps an epoch past it and makes
       ``run_request`` drop and recompile.
-    - in JVM mode the plan also owns an APPEND LOG, a second fixed-size
+    - the plan also owns an APPEND LOG, a second fixed-size
       staged file that serving history reads as ``store ∪ log`` before its
       TTL filters. An online ``INSERT … VALUES`` into the request table
       is written through to it by :meth:`absorb` (which then advances the
@@ -357,42 +334,28 @@ class CompiledRequestPlan:
         if root is not None:
             os.makedirs(root, exist_ok=True)
         self._dir = tempfile.mkdtemp(prefix=f"omsk_req_{dep.name}_", dir=root)
-        # JVM text staging wherever the input schema allows (every serve
-        # then runs zero Python stages); Arrow mapInArrow for nested types
-        self._jvm_mode = _jvm_stageable(dep.input_schema)
-        if self._jvm_mode:
-            self._pad = int(
-                self.spark.conf.get(
-                    STAGING_BYTES_CONF, str(DEFAULT_STAGING_BYTES)
-                )
-            )
-            self._staged = os.path.join(self._dir, "requests.txt")
-        else:
-            self._staged = os.path.join(self._dir, "requests.arrow")
+        self._pad = int(
+            self.spark.conf.get(STAGING_BYTES_CONF, str(DEFAULT_STAGING_BYTES))
+        )
+        self._staged = os.path.join(self._dir, "requests.txt")
         # stage an empty batch so compile-time analysis sees the schema
-        # (and, in JVM mode, the FIXED file size the scan will cache)
+        # and the FIXED file size the scan will cache
         self._write_staged(
             self.spark.createDataFrame([], dep.input_schema).toArrow()
         )
         from openmldb_spark.engine import servingmat
 
-        #: encoded rows of the append log (JVM mode only; see absorb)
+        #: encoded rows of the append log (see absorb)
         self._log_data = b""
         self._log = os.path.join(self._dir, "appended.txt")
-        appended = None
-        if self._jvm_mode:
-            src = _jvm_source(self.spark, self._staged, dep.input_schema)
-            self._write_file(self._log, _pad_staged(b"", self._pad))
-            appended = servingmat.mark_staged(
-                _jvm_source(self.spark, self._log, dep.input_schema)
-            )
-        else:
-            src = self.spark.range(0, 1, numPartitions=1).mapInArrow(
-                _staged_reader(self._staged), dep.input_schema
-            )
+        src = _jvm_source(self.spark, self._staged, dep.input_schema)
+        self._write_file(self._log, _pad_staged(b"", self._pad))
+        appended = servingmat.mark_staged(
+            _jvm_source(self.spark, self._log, dep.input_schema)
+        )
         # marker filter (constant-folded away) so servingmat.offer can
-        # refuse subtrees reading the staged source in EITHER mode — or the
-        # append log, whose rows change without a recompile
+        # refuse subtrees reading the staged source — or the append log,
+        # whose rows change without a recompile
         src = servingmat.mark_staged(src)
         self._src = src
         # serving-static materialization: history-only intermediates the
@@ -482,20 +445,10 @@ class CompiledRequestPlan:
         os.replace(tmp, path)
 
     def _write_staged(self, table) -> None:
-        if self._jvm_mode:
-            self._write_file(
-                self._staged,
-                _pad_staged(
-                    _encode_rows(table, self.dep.input_schema), self._pad
-                ),
-            )
-            return
-        import pyarrow as pa
-
-        tmp = self._staged + ".tmp"
-        with pa.ipc.new_file(tmp, table.schema) as w:
-            w.write_table(table)
-        os.replace(tmp, self._staged)
+        self._write_file(
+            self._staged,
+            _pad_staged(_encode_rows(table, self.dep.input_schema), self._pad),
+        )
 
     def absorb(self, rows: list, expect_key: tuple, new_key: tuple) -> bool:
         """Write-through of an online INSERT into the request table: append
@@ -504,7 +457,7 @@ class CompiledRequestPlan:
         to ``new_key`` (the post-insert one). Runs under the serve lock,
         so a serve sees the log before or after the append, never half of
         it. Returns False, leaving the key stale so the next serve
-        recompiles, when the plan is Arrow-staged or released, its key is
+        recompiles, when the plan is released, its key is
         no longer ``expect_key``, or the log would overflow its fixed size.
 
         Rows encode through ``LocalDataToArrowConversion``, like
@@ -513,7 +466,7 @@ class CompiledRequestPlan:
         answers."""
         from pyspark.sql.conversion import LocalDataToArrowConversion
 
-        if not self._jvm_mode or not rows:
+        if not rows:
             return False
         data = _encode_rows(
             LocalDataToArrowConversion.convert(rows, self.dep.input_schema, False),

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from openmldb_spark.catalog import IndexDef, TableDef  # noqa: F401
 from openmldb_spark.jobs import JOB_SCHEMA, JobManager  # noqa: F401
-from openmldb_spark.plans.deploy import Deployment  # noqa: F401
 from openmldb_spark.sources.loader import load_data, select_into  # noqa: F401
 from openmldb_spark.sql import parser as P  # noqa: F401
 from openmldb_spark.sql.lowering import Lowerer  # noqa: F401
@@ -154,8 +153,8 @@ class DdlMixin:
 
     def _create_index(self, sql_text: str):
         """CREATE INDEX idx ON t (keys) OPTIONS (ts=..., ttl=..., ttl_type=...)
-        (ref: CREATE_INDEX_STATEMENT.md). Index metadata only — layout is
-        applied on demand via catalog.layout_for_index / apply_ttl."""
+        (ref: CREATE_INDEX_STATEMENT.md). Index metadata only — TTL is
+        applied on demand via catalog.apply_ttl."""
         m = re.match(
             r"\s*CREATE\s+INDEX\s+(\w+)\s+ON\s+(\w+)\s*\(([^)]*)\)\s*"
             r"(?:OPTIONS\s*\(([^)]*)\))?\s*;?\s*$",

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from openmldb_spark.catalog import IndexDef, TableDef  # noqa: F401
 from openmldb_spark.jobs import JOB_SCHEMA, JobManager  # noqa: F401
-from openmldb_spark.plans.deploy import Deployment  # noqa: F401
 from openmldb_spark.sources.loader import load_data, select_into  # noqa: F401
 from openmldb_spark.sql import parser as P  # noqa: F401
 from openmldb_spark.sql.lowering import Lowerer  # noqa: F401

@@ -11,11 +11,10 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from openmldb_spark.plans.deploy import Deployment
 from openmldb_spark.sql import parser as P
 from openmldb_spark.sql.lowering import Lowerer
 
-from openmldb_spark.engine.compiled import CompiledRequestPlan
+from openmldb_spark.engine.compiled import CompiledRequestPlan, _jvm_stageable
 from openmldb_spark.engine.preagg_serving import PreaggServing
 
 
@@ -100,6 +99,18 @@ class SqlDeployment(PreaggServing):
         t = engine.tables.get(self.request_table)
         self.input_schema = t.schema if t is not None else None
 
+    def _serves_compiled(self) -> bool:
+        """Whether engine-store serves go through the compiled plan. A
+        parameterized body has no single plan, and an input schema the
+        staged text source cannot round-trip (nested types) has no staged
+        source; both take the per-call path."""
+        return (
+            self.use_compiled
+            and not self.has_params
+            and self.input_schema is not None
+            and _jvm_stageable(self.input_schema)
+        )
+
     def _query_with_params(self, parameters: Optional[Sequence]) -> P.Query:
         """The deployed query, with positional ``?`` placeholders bound to
         ``parameters`` (reference parameterized-query surface: the SDK
@@ -155,8 +166,8 @@ class SqlDeployment(PreaggServing):
         the query reads (DELETE, TRUNCATE, LOAD DATA, register, an INSERT
         into a join-side or UNION table, an offline-mode INSERT, or one
         that would overflow the log) bumps its epoch and the next call
-        recompiles. Explicit-history and parameterized calls build their
-        plan per call, as before.
+        recompiles. Explicit-history and parameterized calls, and input
+        schemas with nested types, build their plan per call.
 
         r13: compiled serves are EAGER — the serve runs (stage + collect)
         under the deployment's plan lock and the returned DataFrame is a
@@ -171,13 +182,7 @@ class SqlDeployment(PreaggServing):
                 f"{requests.schema.simpleString()} != contract "
                 f"{self.input_schema.simpleString()}"
             )
-        if (
-            self.use_compiled
-            and not self.has_params
-            and history is None
-            and parameters is None
-            and self.input_schema is not None
-        ):
+        if history is None and parameters is None and self._serves_compiled():
             return self._live_plan().serve(requests)
         q = self._query_with_params(parameters)
         return self._run_request_on(q, requests, history)
@@ -191,9 +196,9 @@ class SqlDeployment(PreaggServing):
         produces bit-identical batches to ``DataFrame.toArrow``), stage
         into the compiled plan, and the serve job is the only job. Returns
         the collected result rows. Falls back to the DataFrame path when
-        no compiled plan applies (e.g. no input schema)."""
+        no compiled plan applies (see :meth:`_serves_compiled`)."""
         rows = list(rows)
-        if self.use_compiled and not self.has_params and self.input_schema is not None:
+        if self._serves_compiled():
             return self._live_plan().serve_rows(rows)
         return self.run_request(
             self.engine.spark.createDataFrame(rows, self.input_schema)
@@ -650,13 +655,3 @@ class SqlDeployment(PreaggServing):
         drop paths."""
         self._release_preagg()
         self._release_compiled()
-
-    def as_deployment(self) -> Deployment:
-        """Adapter to the callable-based deploy registry."""
-        return Deployment(
-            self.name,
-            lambda req, hist: self.run_request(req, hist),
-            self.input_schema,
-        )
-
-

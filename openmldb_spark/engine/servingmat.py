@@ -9,14 +9,12 @@ its one-time plan, the SQL lowering *offers* reusable intermediates here
 (today: LAST JOIN's deduped right side — a full shuffle + two sort
 aggregates otherwise re-executed on every serve). An offer is accepted
 only when the subtree is provably history-only: its analyzed plan must
-not read the staged request source. The compiled plan tags BOTH staged
-source shapes (Arrow ``mapInArrow`` and the JVM ``spark.read.text``
-mode) with a constant-folded marker filter (:data:`STAGED_MARKER` —
-visible in the ANALYZED plan, erased by the optimizer, so the serve
-plan is unchanged); ``offer`` refuses any subtree whose analyzed plan
-carries the marker, and keeps the ``MapInArrow`` check as belt and
-braces (the SQL surface never emits Python-evaluated operators, so any
-such node is a staged reader). Accepted offers are persisted,
+not read the staged request source. The compiled plan tags its staged
+``spark.read.text`` sources (the request rows and the append log) with a
+constant-folded marker filter (:data:`STAGED_MARKER` — visible in the
+ANALYZED plan, erased by the optimizer, so the serve plan is
+unchanged); ``offer`` refuses any subtree whose analyzed plan carries
+the marker. Accepted offers are persisted,
 materialized eagerly at compile time, and unpersisted when the compiled
 plan is released or invalidated.
 
@@ -34,15 +32,15 @@ from pyspark.sql import DataFrame
 _tls = threading.local()
 
 #: literal planted as a no-op filter on the compiled plan's staged
-#: request source (both staging modes); ``offer`` keys refusal on it
+#: request source and append log; ``offer`` keys refusal on it
 STAGED_MARKER = "__omsk_staged_request_source__"
 
 
 def mark_staged(df: DataFrame) -> DataFrame:
-    """Tag a staged request source so :func:`offer` can recognize it in
-    ANY staging mode: a filter on a non-null string literal survives
-    analysis (where ``offer`` looks) and constant-folds away before
-    physical planning (zero serve-time cost)."""
+    """Tag a staged request source so :func:`offer` can recognize it: a
+    filter on a non-null string literal survives analysis (where
+    ``offer`` looks) and constant-folds away before physical planning
+    (zero serve-time cost)."""
     from pyspark.sql import functions as F
 
     return df.where(F.lit(STAGED_MARKER).isNotNull())
@@ -69,7 +67,7 @@ def offer(df: DataFrame) -> DataFrame:
         return df
     try:
         analyzed = df._jdf.queryExecution().analyzed().toString()
-        static = STAGED_MARKER not in analyzed and "MapInArrow" not in analyzed
+        static = STAGED_MARKER not in analyzed
     except Exception:  # pragma: no cover - defensive: never break a build
         return df
     if not static:

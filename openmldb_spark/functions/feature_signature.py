@@ -1,21 +1,19 @@
-"""Feature-signature / training-instance formatters.
+"""Feature-signature / training-instance formatters (DataFrame API).
 
 Reference: ``hybridse/src/udf/default_defs/feature_signature_def.cc`` —
-``continuous`` (:440), ``discrete`` (:453), ``binary_label`` (:474),
-``multiclass_label`` (:487), ``gcformat_index`` (:500),
-``regression_label`` (:513) tag columns with a signature kind; the
-``gcformat`` / ``csv`` / ``libsvm`` formatters fold tagged columns into one
-training-instance string per row (GCFormat :214-290, CSV :292-345,
-LIBSVM :347-437).
+``continuous`` (:440) and ``binary_label`` (:474) tag columns with a
+signature kind; the ``csv`` / ``libsvm`` formatters fold tagged columns
+into one training-instance string per row (CSV :292-345, LIBSVM
+:347-437). The full signature family in SQL (``discrete``, the other
+labels, ``gcformat``) lowers in :mod:`openmldb_spark.sql.rewrite`.
 
 Design here: a signature is a small Python wrapper (kind + formatted
 Column) — slot numbering depends only on the *static* argument kinds, so
 it is computed in Python and the per-row work stays entirely in Catalyst
 expressions (concat/when — no UDFs).
 
-Documented divergences: 64-bit hashes use xxhash64 instead of
-farm_fingerprint (same stance as functions.scalar.farm_fingerprint);
-``continuous`` of an integer-typed column formats like a double
+Documented divergence: ``continuous`` of an integer-typed column formats
+like a double
 ("5.000000") unless ``integer=True`` is passed (C++ overload resolution
 picked this statically).
 """
@@ -29,11 +27,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 CONTINUOUS = 100
-DISCRETE = 101
 BINARY_LABEL = 200
-MULTICLASS_LABEL = 201
-REGRESSION_LABEL = 202
-INDEX = 300
 
 
 def _c(x) -> Column:
@@ -52,37 +46,14 @@ def _fmt_continuous(c: Column, integer: bool) -> Column:
 class Sig:
     kind: int
     value: Column              # formatted string column (null = missing)
-    bucket: Optional[int] = None
 
 
 def continuous(col, *, integer: bool = False) -> Sig:
     return Sig(CONTINUOUS, _fmt_continuous(_c(col), integer))
 
 
-def discrete(col, bucket: Optional[int] = None) -> Sig:
-    h = F.xxhash64(_c(col))
-    if bucket is not None and bucket > 0:
-        h = F.pmod(h, F.lit(bucket))
-    return Sig(DISCRETE, h.cast("string"), bucket if (bucket or 0) > 0 else None)
-
-
 def binary_label(col) -> Sig:
     return Sig(BINARY_LABEL, _c(col).cast("boolean").cast("int").cast("string"))
-
-
-def multiclass_label(col) -> Sig:
-    return Sig(MULTICLASS_LABEL, _c(col).cast("long").cast("string"))
-
-
-def regression_label(col, *, integer: bool = False) -> Sig:
-    return Sig(REGRESSION_LABEL, _fmt_continuous(_c(col), integer))
-
-
-def gcformat_index(col) -> Sig:
-    return Sig(INDEX, _c(col).cast("string"))
-
-
-_LABELS = (BINARY_LABEL, MULTICLASS_LABEL, REGRESSION_LABEL)
 
 
 def _join_features(parts: list[Column]) -> Column:
@@ -95,60 +66,24 @@ def _join_features(parts: list[Column]) -> Column:
     return F.concat_ws(" ", *parts)
 
 
-def gcformat(*sigs: Sig) -> Column:
-    """'<label> <index>| slot:slot_hash:value slot:hash ...' (GCFormat
-    :276-285: label + (index or ' ') + '| ' + features)."""
-    label = F.lit("")
-    index: Optional[Column] = None
-    feats: list[Column] = []
-    slot = 1
-    for s in sigs:
-        if s.kind in _LABELS:
-            label = F.coalesce(s.value, F.lit(""))
-        elif s.kind == INDEX:
-            index = s.value
-        elif s.kind == CONTINUOUS:
-            slot_hash = F.xxhash64(F.lit(slot).cast("long")).cast("string")
-            # concat null-propagates: NULL value -> NULL slot (dropped by
-            # _join_features) — the isNotNull guard double-evaluated the
-            # formatted value (r13)
-            feats.append(F.concat(F.lit(f"{slot}:"), slot_hash, F.lit(":"), s.value))
-            slot += 1
-        elif s.kind == DISCRETE:
-            feats.append(F.concat(F.lit(f"{slot}:"), s.value))
-            slot += 1
-    idx_part = (
-        F.concat(F.lit(" "), index) if index is not None else F.lit(" ")
-    )
-    return F.concat(label, idx_part, F.lit("| "), _join_features(feats))
-
-
 def csv_format(*sigs: Sig) -> Column:
     """Comma-joined slots, null -> empty cell (CSV :292-345)."""
-    cells = [F.coalesce(s.value, F.lit("")) for s in sigs if s.kind != INDEX]
+    cells = [F.coalesce(s.value, F.lit("")) for s in sigs]
     return F.concat_ws(",", *cells) if cells else F.lit("")
 
 
 def libsvm(*sigs: Sig) -> Column:
-    """'<label> slot:value hash:1 ...' (LIBSVM :347-437; bucketed discrete
-    occupies ``bucket`` slots: feature id = slot + hash%bucket)."""
+    """'<label> slot:value ...' (LIBSVM :347-437)."""
     label: Optional[Column] = None
     feats: list[Column] = []
     slot = 1
     for s in sigs:
-        if s.kind in _LABELS:
+        if s.kind == BINARY_LABEL:
             label = s.value
-        elif s.kind == CONTINUOUS:
+        else:
             # concat null-propagates; NULL slots are skipped by concat_ws
             feats.append(F.concat(F.lit(f"{slot}:"), s.value))
             slot += 1
-        elif s.kind == DISCRETE:
-            if s.bucket:
-                fid = (F.lit(slot).cast("long") + s.value.cast("long")).cast("string")
-                feats.append(F.concat(fid, F.lit(":1")))
-                slot += s.bucket
-            else:
-                feats.append(F.concat(s.value, F.lit(":1")))
     if label is None:
         return _join_features(feats)
     # concat_ws skips NULLs, so a NULL-or-empty label (nullif) and NULL

@@ -9,60 +9,25 @@ rewrites by hand in hybridse/src/passes/, SURVEY §4.1).
 
 | Reference physical op                       | Here                      |
 |---------------------------------------------|---------------------------|
-| PhysicalTableProviderNode  (physical_op.h:582)  | table_scan             |
-| PhysicalPartitionProviderNode (:633)        | catalog.layout_for_index  |
-| PhysicalSimpleProjectNode  (:784)           | simple_project            |
-| PhysicalRowProjectNode     (:738)           | row_project               |
-| PhysicalConstProjectNode   (:759)           | const_project             |
-| PhysicalFilterNode         (:1721)          | filter_                   |
-| PhysicalRenameNode         (:1781)          | rename                    |
 | PhysicalGroupNode + GroupAggrerationNode (:652,:846) | group_agg       |
-| PhysicalAggregationNode    (:814)           | full_agg                  |
 | PhysicalDistinctNode       (:1799)          | distinct_                 |
 | PhysicalSortNode           (:1694)          | sort_                     |
 | PhysicalLimitNode          (:1759)          | limit_                    |
 | PhysicalSetOperationNode   (:1441)          | union_ (+ except/intersect as free upgrades) |
-| PhysicalInsertNode / DeleteNode (:1935,:1895)| insert_into / delete_where (anti-join rewrite) |
+| PhysicalDeleteNode         (:1895)          | delete_where (anti-join rewrite) |
+
+Scan, project, filter, rename and full-table aggregation lower straight
+from the SQL front end (``sql/lowering``) to DataFrame calls.
 """
 
 from __future__ import annotations
 
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ColumnOrName = Union[Column, str]
-
-
-def table_scan(spark: SparkSession, name_or_path: str) -> DataFrame:
-    if name_or_path.endswith(".parquet") or "/" in name_or_path:
-        return spark.read.parquet(name_or_path)
-    return spark.table(name_or_path)
-
-
-def simple_project(df: DataFrame, *cols: ColumnOrName) -> DataFrame:
-    """Column refs / renames / casts only (ref restricts to no function calls;
-    Spark collapses it into adjacent projects anyway)."""
-    return df.select(*cols)
-
-
-def row_project(df: DataFrame, **exprs: Column) -> DataFrame:
-    """Arbitrary per-row scalar expressions, aliased by keyword."""
-    return df.select(*[e.alias(n) for n, e in exprs.items()])
-
-
-def const_project(spark: SparkSession, **exprs: Column) -> DataFrame:
-    """No-table SELECT (e.g. SELECT 1+1)."""
-    return spark.range(1).select(*[e.alias(n) for n, e in exprs.items()])
-
-
-def filter_(df: DataFrame, cond: Column) -> DataFrame:
-    return df.where(cond)
-
-
-def rename(df: DataFrame, alias: str) -> DataFrame:
-    return df.alias(alias)
 
 
 def group_agg(
@@ -73,10 +38,6 @@ def group_agg(
 ) -> DataFrame:
     out = df.groupBy(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
     return out.filter(having) if having is not None else out
-
-
-def full_agg(df: DataFrame, aggs: dict[str, Column]) -> DataFrame:
-    return df.agg(*[c.alias(n) for n, c in aggs.items()])
 
 
 def distinct_(df: DataFrame) -> DataFrame:
@@ -104,10 +65,6 @@ def except_(a: DataFrame, b: DataFrame, *, all: bool = False) -> DataFrame:
 
 def intersect_(a: DataFrame, b: DataFrame, *, all: bool = False) -> DataFrame:
     return a.intersectAll(b) if all else a.intersect(b)
-
-
-def insert_into(df: DataFrame, table: str) -> None:
-    df.write.insertInto(table)
 
 
 def delete_where(df: DataFrame, cond: Column) -> DataFrame:

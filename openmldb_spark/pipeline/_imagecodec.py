@@ -5,8 +5,7 @@
 Everything here is stdlib+numpy with NO optional-library dependency:
 uncompressed BMP, 8-bit PNG and baseline JPEG decode to real pixels
 (the correctness ORACLE of the production-codec contract — see
-``multimodal.JPEG_ORACLE_BUDGET_PER_TASK``), plus the minimal PNG
-encoder used by ``resize_images``. PIL-aware routing (which path a
+``multimodal.JPEG_ORACLE_BUDGET_PER_TASK``). PIL-aware routing (which path a
 payload takes when the production codec is importable) lives in
 ``multimodal``, not here.
 """
@@ -495,58 +494,5 @@ def _native(fn, payload: bytes):
         zlib.error,
     ) as e:
         raise OSError(f"malformed payload: {e}") from None
-
-
-def _encode_png(rgb) -> bytes:
-    """Minimal PNG encoder (color type 2, filter 0, one IDAT) — stdlib
-    zlib; the output of :func:`resize_images`' real path."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w = rgb.shape[:2]
-
-    def chunk(tag, data):
-        raw = tag + data
-        return struct.pack(">I", len(data)) + raw + struct.pack(
-            ">I", zlib.crc32(raw) & 0xFFFFFFFF
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raster = b"".join(
-        b"\x00" + np.ascontiguousarray(rgb[y, :, :3], dtype=np.uint8).tobytes()
-        for y in range(h)
-    )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raster))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _jpeg_n_components(payload: bytes) -> int:
-    """Component count (Nf) from the SOF segment — a cheap marker walk, no
-    entropy decode. Returns 1 when the header cannot be parsed (the real
-    decoder then raises its own OSError)."""
-    import struct
-
-    pos = 2
-    try:
-        while pos + 4 <= len(payload):
-            if payload[pos] != 0xFF:
-                return 1
-            marker = payload[pos + 1]
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                pos += 2
-                continue
-            seg_len = struct.unpack(">H", payload[pos + 2:pos + 4])[0]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                return payload[pos + 9]  # Nf: after len(2)+prec(1)+h(2)+w(2)
-            pos += 2 + seg_len
-    except (IndexError, struct.error):
-        pass
-    return 1
 
 

@@ -1,6 +1,4 @@
-"""Persisted IVF index for embedding similarity — the ANN sibling of the
-incremental MinHash index (:mod:`openmldb_spark.pipeline.incremental`):
-embed a 100 TB corpus once, persist its inverted-file layout, and serve
+"""Persisted IVF index for embedding similarity: embed a 100 TB corpus once, persist its inverted-file layout, and serve
 top-k probes and new-batch ingestion without ever re-scanning (or
 re-clustering) the corpus.
 
@@ -35,7 +33,6 @@ pipeline tooling (SURVEY §6 pipeline additions).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -188,113 +185,6 @@ def ivf_probe(
     )
 
 
-def ivf_pq_corpus_index(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    codebooks,
-    *,
-    corpus_id: str,
-    corpus_vec: str,
-) -> DataFrame:
-    """The IVF-PQ index row set: ``(id, pq_code, cidx)`` — nearest-centroid
-    bucket assignment (zero-shuffle, broadcast centroids) composed with PQ
-    encoding (zero-shuffle, broadcast codebooks). This is the full 100 TB
-    layout: write it ``.partitionBy("cidx")`` and the stored row is
-    ``m`` small ints + an id — probes partition-prune to nprobe buckets
-    at the FILE level AND never read a float vector (ADC scores the
-    codes). Float vectors exist only transiently inside the encode scan."""
-    from .pq import pq_encode
-
-    assigned = ivf_corpus_index(
-        corpus, centroids, corpus_id=corpus_id, corpus_vec=corpus_vec
-    )
-    return pq_encode(assigned, vec_col="vec", codebooks=codebooks).select(
-        "id", "pq_code", "cidx"
-    )
-
-
-def ivf_pq_probe(
-    queries: DataFrame,
-    index_codes: DataFrame,
-    centroids: DataFrame,
-    codebooks,
-    *,
-    query_id: str,
-    query_vec: str,
-    k: int = 10,
-    nprobe: int = 4,
-    exclude_self: bool = True,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Approximate cosine top-k against an IVF-PQ index:
-    ``(query_id, neighbor_id, cos, rank)`` with ``cos`` the ADC (PQ)
-    approximation — :func:`ivf_probe`'s bucket mechanics (checkpointed
-    assignment, literal ``cidx IN (...)`` for file-level partition
-    pruning, broadcast query side, (cos desc, id asc) ranking) with PQ
-    codes in place of vectors: candidates score via per-query ``m × k``
-    lookup tables in an Arrow-batched pandas UDF, so the probe reads
-    nprobe/n_centroids of the index files and ZERO float vectors."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from .pq import _check_split, _normalize
-
-    cent_arr = _cent_arr(centroids)
-    CB = np.asarray(codebooks, dtype=np.float64)
-    mm, kk, ds = CB.shape
-    qa = _assign_by_centroids(
-        queries, query_id, query_vec, "query_id", int(nprobe), cent_arr
-    ).withColumnRenamed("__v", "__qv").localCheckpoint()
-    probed = sorted(r["__cidx"] for r in qa.select("__cidx").distinct().collect())
-    # per-query ADC lookup tables, broadcast once (bounded query side)
-    qrows = qa.select("query_id", "__qv").dropDuplicates(["query_id"]).collect()
-    qids = [r["query_id"] for r in qrows]
-    if qids:
-        Qn = _normalize([r["__qv"] for r in qrows])
-        _check_split(Qn.shape[1], mm)
-        LUT = np.einsum("qjd,jkd->qjk", Qn.reshape(len(qids), mm, ds), CB)
-    else:
-        LUT = np.zeros((0, mm, kk))
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast(({q: i for i, q in enumerate(qids)}, LUT))
-
-    @pandas_udf("double")
-    def adc(qid: pd.Series, code: pd.Series) -> pd.Series:
-        pos, LUT_l = bc.value
-        qi = qid.map(pos).to_numpy()
-        codes = np.asarray(list(code), dtype=np.int64)
-        s = np.zeros(len(qi))
-        for j in range(LUT_l.shape[1]):
-            s += LUT_l[qi, j, codes[:, j]]
-        return pd.Series(s)
-
-    ca = index_codes.where(F.col("cidx").isin(probed)).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("pq_code").alias("__code"),
-        F.col("cidx").alias("__cidx"),
-    )
-    if max_bucket is not None:
-        bsize = ca.groupBy("__cidx").agg(F.count(F.lit(1)).alias("__bsize"))
-        ca = (
-            ca.join(F.broadcast(bsize), "__cidx")
-            .filter(F.col("__bsize") <= max_bucket)
-            .drop("__bsize")
-        )
-    scored = ca.join(
-        F.broadcast(qa.select("query_id", "__cidx")), "__cidx"
-    ).select(
-        "query_id", "neighbor_id", adc(F.col("query_id"), F.col("__code")).alias("cos")
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
 def ivf_assignment_stats(indexed: DataFrame, centroids: DataFrame) -> DataFrame:
     """Per-bucket assignment-quality stats over an already-assigned index
     slice: ``(cidx, n, mean_cos, min_cos)`` — cosine of each vector to
@@ -303,10 +193,9 @@ def ivf_assignment_stats(indexed: DataFrame, centroids: DataFrame) -> DataFrame:
     ``groupBy(cidx)`` collapsing to ≤ n_centroids output rows — no
     re-assignment, no extra pass over the vectors beyond the one scan.
     This is the measured input the "re-train centroids?" decision needs:
-    compare a new batch's distribution against the build-time one
-    (:meth:`IvfIndexStore.drift_stats`) — a batch whose mean cosine to
-    its assigned centroids falls well below the build-time mean is
-    drifting out of the trained partitioning."""
+    compare a new batch's distribution against the build-time one — a
+    batch whose mean cosine to its assigned centroids falls well below
+    the build-time mean is drifting out of the trained partitioning."""
     # r13: the cosine is projected ONCE per row (it sat inside both the
     # avg and the min aggregate expressions — two full folds per row), and
     # each centroid's norm is precomputed on the ≤n_centroids broadcast
@@ -329,272 +218,3 @@ def ivf_assignment_stats(indexed: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-class IvfIndexStore:
-    """Parquet-backed lifecycle for the persisted IVF index: centroids
-    written once at :meth:`build`, corpus vectors appended in
-    cidx-partitioned parquet (:meth:`ingest` — no re-clustering; Spark's
-    dynamic ``mode("append")`` adds files under the existing bucket
-    directories), probes via :func:`ivf_probe` with file-level partition
-    pruning. Centroid drift is an offline decision — re-train and
-    :meth:`build` a fresh root — but it is an OBSERVED one:
-    :meth:`drift_stats` (or ``ingest(return_drift=True)``) compares each
-    batch's per-bucket cosine distribution against the build-time
-    baseline persisted at :meth:`build`, reusing the ingest assignment
-    (zero extra shuffles beyond one tiny ≤ n_centroids-row aggregate).
-
-    Layout under ``root``: ``centroids/`` (``(cidx, centroid)``) and
-    ``index/`` partitioned by ``cidx``.
-
-    Filesystem contract: lifecycle checks resolve ``root`` through the
-    Hadoop FileSystem API — the same resolution Spark's parquet
-    reader/writer applies — so bare paths under an HDFS/object-store
-    ``fs.defaultFS``, ``file:`` URIs, and remote URIs all keep the
-    lifecycle and the data on ONE filesystem (r12 verdict: the ``os.*``
-    lifecycle silently split them on any non-``file:`` defaultFS)."""
-
-    def __init__(self, spark, root: str):
-        from ._hadoopfs import HadoopFs
-
-        self.spark = spark
-        self.root = root
-        self.centroids_path = root.rstrip("/") + "/centroids"
-        self.index_path = root.rstrip("/") + "/index"
-        self.stats_path = root.rstrip("/") + "/stats"
-        self.pq_index_path = root.rstrip("/") + "/pq_index"
-        self.pq_codebooks_path = root.rstrip("/") + "/pq_codebooks"
-        self._fs = HadoopFs(spark, root)
-
-    def exists(self) -> bool:
-        """True iff BOTH the centroid table and the corpus index hold
-        COMMITTED writes (``_SUCCESS`` markers): a build that crashed
-        between the centroid write and the index write (or mid index
-        write) must read as "no store" — probing centroids-only state
-        fails confusingly, and ``build()`` is errorifexists, so the
-        caller's signal for "remove the root and rebuild" is exists()
-        going False while the directories linger."""
-        return self._fs.is_complete_write(
-            self.centroids_path
-        ) and self._fs.is_complete_write(self.index_path)
-
-    def centroids(self) -> DataFrame:
-        return self.spark.read.parquet(self.centroids_path)
-
-    def index(self) -> DataFrame:
-        return self.spark.read.parquet(self.index_path)
-
-    def build(
-        self,
-        corpus: DataFrame,
-        *,
-        corpus_id: str,
-        corpus_vec: str,
-        n_centroids: int = 16,
-        seed: int = 42,
-        centroids=None,
-    ) -> None:
-        """Write the centroid table (md5 sample of ``corpus``, or a
-        trained matrix via ``centroids=``) and the corpus's bucketed
-        index (errorifexists — rebuilds are explicit)."""
-        cent = ivf_centroids(
-            corpus, corpus_id=corpus_id, corpus_vec=corpus_vec,
-            n_centroids=n_centroids, seed=seed, centroids=centroids,
-        )
-        cent.write.parquet(self.centroids_path)
-        ivf_corpus_index(
-            corpus, self.centroids(), corpus_id=corpus_id, corpus_vec=corpus_vec
-        ).write.partitionBy("cidx").parquet(self.index_path)
-        # build-time assignment-quality baseline for drift_stats — read
-        # back from the files just written (one extra columnar scan; a
-        # localCheckpoint of the assignment would pin a second full copy
-        # of the corpus in executor storage, which does not fly at the
-        # 100 TB design point) — the write streams straight to parquet
-        ivf_assignment_stats(self.index(), self.centroids()).write.parquet(
-            self.stats_path
-        )
-
-    def build_stats(self) -> DataFrame:
-        """The build-time assignment-quality baseline ``(cidx, n,
-        mean_cos, min_cos)``. Stores built before the stats table
-        existed — or whose stats write was torn (no ``_SUCCESS`` commit
-        marker: a partial table would silently skew every drift
-        comparison) — recompute it from the stored index ON DEMAND and
-        persist it: one full index scan, explicit and once.
-        Single-writer, like the rest of the store lifecycle."""
-        if not self._fs.is_complete_write(self.stats_path):
-            self._fs.delete(self.stats_path)
-            ivf_assignment_stats(self.index(), self.centroids()).write.parquet(
-                self.stats_path
-            )
-        return self.spark.read.parquet(self.stats_path)
-
-    def build_pq(
-        self,
-        corpus: DataFrame,
-        *,
-        corpus_id: str,
-        corpus_vec: str,
-        codebooks,
-    ) -> None:
-        """Add the IVF-PQ layer to an existing store: persist the
-        codebooks (``pq_codebooks/`` — ``(j, c, centroid)`` rows) and the
-        code-only bucketed index (``pq_index/`` — ``(id, pq_code)``
-        partitioned by ``cidx``; ``m`` small ints per vector, no floats).
-        ``codebooks`` is a numpy ``(m, k, dsub)`` array from
-        :func:`~openmldb_spark.pipeline.pq.pq_train` or
-        :func:`~openmldb_spark.pipeline.pq.pq_sampled_codebooks`.
-        Requires :meth:`build` to have written the centroids first."""
-        import numpy as np
-
-        CB = np.asarray(codebooks, dtype=np.float64)
-        mm, kk, _ = CB.shape
-        self.spark.createDataFrame(
-            [
-                (j, c, CB[j][c].tolist())
-                for j in range(mm)
-                for c in range(kk)
-            ],
-            "j int, c int, centroid array<double>",
-        ).write.parquet(self.pq_codebooks_path)
-        ivf_pq_corpus_index(
-            corpus, self.centroids(), CB,
-            corpus_id=corpus_id, corpus_vec=corpus_vec,
-        ).write.partitionBy("cidx").parquet(self.pq_index_path)
-
-    def pq_codebooks(self):
-        """The stored codebooks as numpy ``(m, k, dsub)``."""
-        import numpy as np
-
-        rows = self.spark.read.parquet(self.pq_codebooks_path).collect()
-        mm = 1 + max(r["j"] for r in rows)
-        kk = 1 + max(r["c"] for r in rows)
-        ds = len(rows[0]["centroid"])
-        CB = np.zeros((mm, kk, ds))
-        for r in rows:
-            CB[r["j"], r["c"]] = r["centroid"]
-        return CB
-
-    def ingest_pq(self, batch: DataFrame, *, corpus_id: str, corpus_vec: str) -> None:
-        """Encode a new batch against the STORED centroids + codebooks and
-        append its code rows under the existing bucket partitions."""
-        ivf_pq_corpus_index(
-            batch, self.centroids(), self.pq_codebooks(),
-            corpus_id=corpus_id, corpus_vec=corpus_vec,
-        ).write.partitionBy("cidx").mode("append").parquet(self.pq_index_path)
-
-    def probe_pq(
-        self,
-        queries: DataFrame,
-        *,
-        query_id: str,
-        query_vec: str,
-        k: int = 10,
-        nprobe: int = 4,
-        exclude_self: bool = True,
-        max_bucket: int | None = None,
-    ) -> DataFrame:
-        """ADC top-k against the stored code-only index — file-level
-        partition pruning to the probed buckets, zero float vectors read."""
-        return ivf_pq_probe(
-            queries, self.spark.read.parquet(self.pq_index_path),
-            self.centroids(), self.pq_codebooks(),
-            query_id=query_id, query_vec=query_vec,
-            k=k, nprobe=nprobe, exclude_self=exclude_self,
-            max_bucket=max_bucket,
-        )
-
-    def ingest(
-        self,
-        batch: DataFrame,
-        *,
-        corpus_id: str,
-        corpus_vec: str,
-        return_drift: bool = False,
-    ) -> DataFrame | None:
-        """Assign a new batch against the STORED centroids and append its
-        rows under the existing bucket partitions. With
-        ``return_drift=True`` the drift comparison is computed from the
-        SAME (checkpointed) assignment that was appended — zero extra
-        assignment passes; the checkpoint is BATCH-sized, bounded, unlike
-        a build-time corpus checkpoint — and returned (see
-        :meth:`drift_stats`)."""
-        indexed = ivf_corpus_index(
-            batch, self.centroids(), corpus_id=corpus_id, corpus_vec=corpus_vec
-        )
-        if not return_drift:
-            indexed.write.partitionBy("cidx").mode("append").parquet(
-                self.index_path
-            )
-            return None
-        indexed = indexed.localCheckpoint()
-        indexed.write.partitionBy("cidx").mode("append").parquet(self.index_path)
-        return self._drift(ivf_assignment_stats(indexed, self.centroids()))
-
-    def drift_stats(
-        self, batch: DataFrame, *, corpus_id: str, corpus_vec: str
-    ) -> DataFrame:
-        """Centroid-drift check WITHOUT ingesting: assign ``batch`` to
-        the stored centroids (zero-shuffle broadcast assignment) and
-        compare its per-bucket cosine distribution to the build-time
-        baseline. Returns one row per bucket touched by either side:
-        ``(cidx, n_batch, mean_cos_batch, min_cos_batch, n_build,
-        mean_cos_build, min_cos_build, delta_mean_cos)`` —
-        ``delta_mean_cos`` < 0 means the batch sits farther from its
-        centroids than the build did; sustained strongly-negative deltas
-        are the measured signal that re-training (an offline rebuild
-        decision, see the class docstring) is due."""
-        return self._drift(
-            ivf_assignment_stats(
-                ivf_corpus_index(
-                    batch, self.centroids(),
-                    corpus_id=corpus_id, corpus_vec=corpus_vec,
-                ),
-                self.centroids(),
-            )
-        )
-
-    def _drift(self, batch_stats: DataFrame) -> DataFrame:
-        base = self.build_stats().select(
-            "cidx",
-            F.col("n").alias("n_build"),
-            F.col("mean_cos").alias("mean_cos_build"),
-            F.col("min_cos").alias("min_cos_build"),
-        )
-        b = batch_stats.select(
-            "cidx",
-            F.col("n").alias("n_batch"),
-            F.col("mean_cos").alias("mean_cos_batch"),
-            F.col("min_cos").alias("min_cos_batch"),
-        )
-        return (
-            b.join(base, "cidx", "full_outer")
-            .withColumn(
-                "n_batch", F.coalesce(F.col("n_batch"), F.lit(0).cast("long"))
-            )
-            .withColumn(
-                "delta_mean_cos",
-                F.col("mean_cos_batch") - F.col("mean_cos_build"),
-            )
-            .select(
-                "cidx", "n_batch", "mean_cos_batch", "min_cos_batch",
-                "n_build", "mean_cos_build", "min_cos_build",
-                "delta_mean_cos",
-            )
-        )
-
-    def probe(
-        self,
-        queries: DataFrame,
-        *,
-        query_id: str,
-        query_vec: str,
-        k: int = 10,
-        nprobe: int = 4,
-        exclude_self: bool = True,
-        max_bucket: int | None = None,
-    ) -> DataFrame:
-        return ivf_probe(
-            queries, self.index(), self.centroids(),
-            query_id=query_id, query_vec=query_vec,
-            k=k, nprobe=nprobe, exclude_self=exclude_self,
-            max_bucket=max_bucket,
-        )

@@ -1,14 +1,12 @@
 """Duplicate-cluster assignment: connected components over near-dup PAIRS
-(the output of ``minhash_lsh_pairs`` / ``overlap_jaccard_pairs`` /
-``ngram_jaccard_pairs``), plus quality-aware representative picking.
+(e.g. the output of ``overlap_jaccard_pairs``), plus quality-aware
+representative picking.
 
 Why it exists: the pair-based dedup ops keep the min-id of each pair —
 correct for REMOVAL (a component's min id is never the larger side of any
 pair), but it cannot tell you WHICH docs form one duplicate group, how
 big the groups are, or keep the highest-QUALITY member instead of the
-smallest id. ``minhash_dedup``'s own docstring defers transitive closure
-("run iteratively if full closure is needed") — this module is that
-closure, done properly.
+smallest id. This module computes that transitive closure.
 
 Algorithm: min-label propagation with per-round pointer doubling (the
 hash-to-min family — Rastogi et al., "Finding Connected Components in

@@ -14,28 +14,17 @@ Scale shape (the reason this is not a per-row array intersection):
 - Nothing quadratic: hot shingles cost what they cost on the corpus side
   only; the join is hash-probe per shingle.
 
-Reuses :func:`openmldb_spark.pipeline.dedup.shingles` (lowercased,
-distinct word n-grams; short docs fall back to the whole text as one
-shingle) so contamination and MinHash dedup agree on what a shingle is.
+Reuses the dedup ops' hashed shingle pipeline (lowercased, distinct word
+n-grams; short docs fall back to the whole text as one shingle) so
+contamination and dedup agree on what a shingle is.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
-from .dedup import _hash_shingles_array, shingles
-
-
-def benchmark_shingles(
-    benchmark: DataFrame, text_col: str = "text", *, n: int = 5
-) -> DataFrame:
-    """Distinct shingle set of the benchmark corpus, one column ``__bm_s``.
-    Intended to be tiny; callers broadcast it."""
-    return (
-        benchmark.select(F.explode(shingles(F.col(text_col), n)).alias("__bm_s"))
-        .distinct()
-    )
+from .dedup import _hash_shingles_array
 
 
 def _hashed_doc_shingles(
@@ -43,8 +32,7 @@ def _hashed_doc_shingles(
 ) -> DataFrame:
     """(id, exploded distinct 64-bit shingle hash) — the zero-string shingle
     pipeline shared with the dedup ops (multiply-shift combine of word
-    xxhash64s; short docs fall back to one whole-text shingle, same as
-    :func:`openmldb_spark.pipeline.dedup.shingles`)."""
+    xxhash64s; short docs fall back to one whole-text shingle)."""
     return _hash_shingles_array(docs, id_col, text_col, n).select(
         F.col("__dd_id").alias(id_col),
         F.explode(F.array_distinct("__dd_sh")).alias("__s"),
@@ -75,8 +63,8 @@ def ngram_contamination(
     of materializing, exploding, broadcasting and hash-probing shingle
     STRINGS (~n words of text per shingle per occurrence). Membership
     counts are identical up to the house set-over-hash convention
-    (~2^-64/pair collisions, the same contract ``jaccard_dedup`` and
-    ``stream_decontaminate`` already carry).
+    (~2^-64/pair collisions, the same contract ``jaccard_dedup``
+    already carries).
 
     Empty-document contract (adjudicated r14, ADVICE r13 #1): documents
     whose text is NULL/empty/whitespace-only produce an empty shingle
@@ -109,86 +97,4 @@ def ngram_contamination(
     )
     return stats.withColumn("contamination_ratio", ratio).withColumn(
         "is_contaminated", (F.col("contamination_ratio") >= flag_threshold)
-    )
-
-
-#: default ceiling on the benchmark's distinct-shingle count for the
-#: STREAMING formulation: the set is serialized into the plan as a literal
-#: array and ``array_intersect`` re-derives its probe hash set on every
-#: row, so cost is O(|benchmark|) per document and the plan itself grows
-#: with the eval corpus. 100k int64 hashes ~ 800 KB of plan — the point
-#: where the batch op's broadcast join is strictly better.
-MAX_STREAM_BENCHMARK_SHINGLES = 100_000
-
-
-def stream_decontaminate(
-    stream: DataFrame,
-    benchmark: DataFrame,
-    *,
-    n: int = 5,
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    flag_threshold: float = 0.5,
-    max_benchmark_shingles: int = MAX_STREAM_BENCHMARK_SHINGLES,
-) -> DataFrame:
-    """Per-document contamination stats for a STREAMING document source —
-    same output columns as :func:`ngram_contamination`, appended to the
-    stream's own columns.
-
-    The streaming-native formulation is STATELESS: the benchmark's
-    distinct shingle set is collected ONCE (driver-side — eval corpora
-    are MBs by definition, the same boundedness the batch op's broadcast
-    relies on), hashed to a sorted int64 literal array, and each incoming
-    document intersects its own shingle-hash array against it in a pure
-    projection. No state store, no watermark requirement, works in
-    append mode — a per-doc groupBy over an unkeyed stream would instead
-    grow unbounded state.
-
-    Set semantics match the batch op through 64-bit shingle hashing
-    (collision odds ~2^-64/pair — the house set-over-hash convention,
-    :func:`openmldb_spark.pipeline.dedup.jaccard_dedup`); a test pins
-    stream-vs-batch equality on the same rows. Also valid on a batch
-    DataFrame (the projection is mode-agnostic).
-
-    Boundedness is ENFORCED, not assumed: the literal costs
-    O(|benchmark|) per document (``array_intersect`` re-derives its probe
-    set each row) and inflates every serialized task, so a benchmark with
-    more than ``max_benchmark_shingles`` distinct shingles raises with a
-    pointer at :func:`ngram_contamination` — the broadcast-join batch op
-    that scales to arbitrarily large suites. Raise the cap explicitly
-    only when the per-row CPU and plan size are an accepted trade.
-    """
-    bench_hashes = [
-        r[0]
-        for r in benchmark_shingles(benchmark, bench_text_col, n=n)
-        .select(F.xxhash64("__bm_s"))
-        .collect()
-    ]
-    if len(bench_hashes) > max_benchmark_shingles:
-        raise ValueError(
-            f"benchmark has {len(bench_hashes):,} distinct shingles, over the "
-            f"stateless-streaming cap of {max_benchmark_shingles:,}: the set is "
-            "embedded in the plan and probed O(|benchmark|) per document. Use "
-            "ngram_contamination (broadcast join, one shuffle) for benchmark "
-            "suites this large, or pass max_benchmark_shingles= explicitly."
-        )
-    bench_hashes.sort()  # deterministic plan/literal across collect orders
-    bench_arr: Column = (
-        F.lit(bench_hashes).cast("array<bigint>")
-        if bench_hashes
-        else F.array().cast("array<bigint>")
-    )
-    doc_hashes = F.transform(
-        shingles(F.col(text_col), n), lambda s: F.xxhash64(s)
-    )
-    n_sh = F.size(doc_hashes)
-    n_cont = F.size(F.array_intersect(doc_hashes, bench_arr))
-    ratio = F.round(
-        n_cont / F.when(n_sh > 0, n_sh.cast("double")).otherwise(1.0), 4
-    )
-    return (
-        stream.withColumn("n_shingles", n_sh.cast("long"))
-        .withColumn("n_contaminated", n_cont.cast("long"))
-        .withColumn("contamination_ratio", ratio)
-        .withColumn("is_contaminated", ratio >= flag_threshold)
     )

@@ -4,25 +4,16 @@ All operators are deterministic (fixed hash seeds — reproducible across
 runs and cluster sizes) and shuffle-bounded:
 
 - :func:`exact_dedup`        — hash-groupBy; one shuffle on the dedup key.
-- :func:`minhash_signatures` — shingle → k minhashes, all inside
-  higher-order functions (JVM, no Python row loop).
-- :func:`minhash_lsh_pairs`  — band → bucket → within-bucket candidate
-  pairs; the classic MinHash-LSH join. Shuffles on (band, bucket-hash);
-  bucket sizes are the only fan-out, controlled by band/row geometry.
-- :func:`minhash_dedup`      — pairs → cluster reps (min doc id) → filter.
 - :func:`simhash`            — 64-bit SimHash via bit-bucketed token hash
   sums (JVM-side; no Python).
-- :func:`ngram_jaccard_pairs`— exact Jaccard verification on candidate
-  pairs (re-shingles both sides of each candidate pair only).
-- :func:`prefix_filter_candidates` — SSJoin/PPJoin prefix filtering:
-  candidate pairs with GUARANTEED recall for exact Jaccard >= t.
 - :func:`jaccard_dedup`      — exact-Jaccard dedup = prefix filter
-  (SSJoin recall guarantee) -> exact set verification; equals the
-  all-pairs answer without materializing all pairs. Slower than
-  estimate-thresholded :func:`minhash_dedup` at tiny scale (extra
-  verification stages) but its output is engine-independent — the
-  correctness oracle recomputes it exactly. ``exact=False`` swaps the
-  candidate source for MinHash-LSH banding (probabilistic recall).
+  (SSJoin/PPJoin recall guarantee for exact Jaccard >= t) -> exact set
+  verification; equals the all-pairs answer without materializing all
+  pairs, and its output is engine-independent — the correctness oracle
+  recomputes it exactly. ``exact=False`` swaps the candidate source for
+  MinHash-LSH banding (probabilistic recall).
+- :func:`overlap_jaccard_pairs` — exact n-gram Jaccard pairs gated on a
+  minimum rare-shingle overlap (the SSJoin-shaped pair search).
 - :func:`embedding_dedup`    — cosine near-dup via random-hyperplane LSH
   buckets + in-bucket verification.
 
@@ -131,33 +122,6 @@ def exact_dedup(
     )
 
 
-def shingles(text: Column, n: int = 5, *, words: bool = True) -> Column:
-    """n-gram shingle set of a text column (word or character shingles),
-    as array<string>. Empty/short docs yield their whole text as the one
-    shingle so they can still bucket together."""
-    if words:
-        toks = F.filter(F.split(F.lower(text), r"\s+"), lambda x: x != "")
-        k = F.size(toks) - (n - 1)
-        grams = F.when(
-            k >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            ),
-        ).otherwise(F.array(F.array_join(toks, " ")))
-    else:
-        t = F.lower(text)
-        k = F.length(t) - (n - 1)
-        grams = F.when(
-            k >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-                lambda i: F.substring(t, i, n),
-            ),
-        ).otherwise(F.array(t))
-    return F.array_distinct(grams)
-
-
 def _hash_shingles_array(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int, n_part: Optional[int] = None
 ) -> DataFrame:
@@ -220,75 +184,6 @@ def _hash_shingles_exploded(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    *,
-    id_col: Optional[str] = None,
-    num_hashes: int = 32,
-    shingle_n: int = 5,
-    words: bool = True,
-    out_col: str = "minhash",
-) -> DataFrame:
-    """Append ``out_col``: array<bigint> of ``num_hashes`` minhash values.
-
-    Each hash i is min over shingles of xxhash64(i-salted shingle) —
-    deterministic, seedable, entirely JVM-side.
-
-    With ``id_col`` (the scale path — REQUIRED by the LSH pipeline):
-    explode shingles, hash each shingle ONCE (xxhash64), derive the
-    ``num_hashes`` permutations arithmetically (``a_i*h + b_i`` universal
-    hashing — pure codegen'd long math), and groupBy-min per slot. The
-    aggregation's shuffle boundary *materializes* the signature, so the
-    shingle pipeline runs exactly once no matter how many downstream
-    expressions (bands, join sides) reference it — without it Catalyst
-    inlines the whole hashing expression into every use and recomputes it
-    O(bands) times.
-    Without ``id_col``: pure-projection form (no shuffle) for one-shot use.
-    """
-    sh = shingles(F.col(text_col), shingle_n, words=words)
-
-    if id_col is not None:
-        # spread the (interpreted, CPU-bound) shingling across all cores —
-        # a small parquet file otherwise arrives as one partition / one task
-        n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        if words:
-            exploded = _hash_shingles_exploded(df, id_col, text_col, shingle_n, n_part)
-        else:
-            exploded = (
-                df.select(F.col(id_col).alias("__dd_id"), F.col(text_col))
-                .repartition(n_part)
-                .select("__dd_id", F.explode(sh).alias("__dd_sh"))
-                .select("__dd_id", F.xxhash64("__dd_sh").alias("__dd_h"))
-            )
-        mins = [
-            F.min(F.col("__dd_h") * F.lit(_PERM_A[i]) + F.lit(_PERM_B[i])).alias(f"__dd_h{i}")
-            for i in range(num_hashes)
-        ]
-        sig_df = (
-            exploded.groupBy("__dd_id")
-            .agg(*mins)
-            .select(
-                "__dd_id",
-                F.array(*[F.col(f"__dd_h{i}") for i in range(num_hashes)]).alias(out_col),
-            )
-        )
-        return df.join(sig_df, df[id_col] == sig_df["__dd_id"]).drop("__dd_id")
-
-    df = df.withColumn("__dd_sh", sh)
-
-    # closure factory: `i=i` in the lambda would raise its arity to 2 and make
-    # pyspark bind the transform *index* lambda-variable to `i`, collapsing
-    # all num_hashes salts to one value
-    def _salted(i: int):
-        return lambda s: F.xxhash64(F.concat(F.lit(f"{i}|"), s))
-
-    sig = F.array(
-        *[F.array_min(F.transform(F.col("__dd_sh"), _salted(i))) for i in range(num_hashes)]
-    )
-    return df.withColumn(out_col, sig).drop("__dd_sh")
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
@@ -298,9 +193,8 @@ def minhash_lsh_candidates(
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Distinct candidate pairs (a < b) from banded LSH over minhash
-    signatures — the banding/bucketing half of :func:`minhash_lsh_pairs`,
-    without the signature-similarity scoring join (use directly when the
-    verification step is an exact recomputation, so the estimated Jaccard
+    signatures, without a signature-similarity scoring join (the
+    verification step is an exact recomputation, so an estimated Jaccard
     would be dead weight).
 
     Buckets larger than ``max_bucket`` are dropped (boilerplate guard) —
@@ -359,142 +253,6 @@ def minhash_lsh_candidates(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    *,
-    sig_col: str = "minhash",
-    bands: int = 8,
-    max_bucket: int = 1000,
-    min_jaccard_est: float = 0.0,
-) -> DataFrame:
-    """Candidate near-duplicate pairs (a < b) from banded LSH over minhash
-    signatures; estimated Jaccard = fraction of matching signature slots."""
-    sig = F.col(sig_col)
-    cand = minhash_lsh_candidates(
-        df, id_col, sig_col=sig_col, bands=bands, max_bucket=max_bucket
-    )
-    sa = df.select(F.col(id_col).alias("a"), sig.alias("sa"))
-    sb = df.select(F.col(id_col).alias("b"), sig.alias("sb"))
-    pairs = (
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .select(
-            "a",
-            "b",
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y),
-                        lambda eq: eq,
-                    )
-                )
-                / F.size(F.col("sa"))
-            ).alias("jaccard_est"),
-        )
-        .filter(F.col("jaccard_est") >= min_jaccard_est)
-    )
-    return pairs
-
-
-def minhash_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 5,
-    threshold: float = 0.8,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Remove near-duplicates: keep the min-id representative of each
-    near-dup group (single-hop clustering: a row is dropped if it pairs with
-    any smaller id at >= threshold estimated Jaccard).
-
-    Single-hop (not full connected components) is the standard large-scale
-    simplification: transitive chains longer than one hop survive one extra
-    round; run iteratively if full closure is needed.
-    """
-    sigs = minhash_signatures(
-        df, text_col, id_col=id_col, num_hashes=num_hashes, shingle_n=shingle_n
-    ).select(id_col, "minhash")
-    # signatures feed both sides of the LSH self-join — persist so the
-    # shingle+hash pipeline runs once (at real scale: checkpoint to storage)
-    sigs = sigs.persist()
-    # materialize NOW: the signature pipeline feeds three join branches in
-    # the final DAG; a lazy persist lets Spark race all three through the
-    # uncached subtree in one job (observed 10-20x wall swings). One eager
-    # pass pins the cost. (At real scale: checkpoint to storage instead.)
-    sigs.count()
-    pairs = minhash_lsh_pairs(
-        sigs, id_col, bands=bands, max_bucket=max_bucket, min_jaccard_est=threshold
-    )
-    losers = pairs.select(F.col("b").alias(id_col)).distinct()
-    out = df.join(losers, id_col, "left_anti")
-    return out
-
-
-def prefix_filter_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    shingle_n: int = 5,
-    threshold: float = 0.7,
-    words: bool = True,
-) -> DataFrame:
-    """Candidate pairs (a < b) with **guaranteed 100% recall** for exact
-    n-gram Jaccard >= ``threshold``, via prefix filtering (the SSJoin /
-    PPJoin family: Chaudhuri et al. 2006, Xiao et al. 2008).
-
-    Order every document's shingle set by a global total order; if
-    J(x, y) >= t then x and y must share a token inside each side's first
-    ``|x| - ceil(t*|x|) + 1`` tokens, so indexing only prefixes finds every
-    qualifying pair — deterministic, no probabilistic recall argument
-    (unlike MinHash banding). The global order is ascending document
-    frequency (rare tokens first), which at scale keeps the inverted prefix
-    index dominated by near-unique tokens: the classic frequency trick that
-    makes the self-join's fan-out tiny. A size filter
-    (``t*|x| <= |y| <= |x|/t``) prunes length-incompatible pairs.
-
-    Shuffles: explode->groupBy(token) for df counts, join back, groupBy(id)
-    to rebuild sorted sets, then the prefix-token self-join. All key-bounded;
-    no all-pairs stage anywhere.
-    """
-    sh = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(shingles(F.col(text_col), shingle_n, words=words)).alias("__s"),
-    )
-    dfreq = sh.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-    ranked = sh.join(dfreq, "__s")
-    per_doc = ranked.groupBy("__id").agg(
-        F.array_sort(F.collect_list(F.struct("__df", "__s"))).alias("__ts")
-    )
-    n = F.size("__ts")
-    plen = (n - F.ceil(F.lit(float(threshold)) * n) + 1).cast("int")
-    pref = per_doc.select(
-        F.col("__id"),
-        n.alias("__n"),
-        F.explode(
-            F.transform(F.slice(F.col("__ts"), F.lit(1), plen), lambda e: e["__s"])
-        ).alias("__p"),
-    )
-    a = pref.select(F.col("__id").alias("a"), F.col("__n").alias("na"), "__p")
-    b = pref.select(F.col("__id").alias("b"), F.col("__n").alias("nb"), "__p")
-    t = float(threshold)
-    return (
-        a.join(b, "__p")
-        .filter(
-            (F.col("a") < F.col("b"))
-            & (F.col("nb") >= F.lit(t) * F.col("na"))
-            & (F.col("na") >= F.lit(t) * F.col("nb"))
-        )
-        .select("a", "b")
-        .distinct()
-    )
-
-
 def jaccard_dedup(
     df: DataFrame,
     id_col: str,
@@ -513,7 +271,7 @@ def jaccard_dedup(
     iff some smaller id has exact Jaccard >= ``threshold`` with it.
 
     With ``exact=True`` (default) candidates come from prefix filtering
-    alone (SSJoin/PPJoin family — see :func:`prefix_filter_candidates`):
+    alone (SSJoin/PPJoin family):
     the prefix lemma guarantees 100% recall for exact Jaccard >= t, so a
     MinHash-banding arm would be pure overhead — every banding candidate
     is either already found by the prefix index or fails verification.
@@ -561,8 +319,7 @@ def jaccard_dedup(
         if eager_materialize:
             # materialize NOW: three branches (prefix index, both verify
             # sides) otherwise race through the uncached shingle pipeline
-            # in one job — the same 10-20x first-run swing minhash_dedup
-            # pins with its eager count(). This is an EXTRA full action
+            # in one job — a 10-20x first-run swing. This is an EXTRA full action
             # (a second scan of the shingle pipeline), so the 100 TB path
             # opts out (eager_materialize=False) and instead checkpoints
             # per_doc to storage (df.checkpoint() / write+read) — the
@@ -746,44 +503,6 @@ def simhash(
     # empty-doc guard
     out = F.element_at(F.transform(F.array(toks), _with_toks), 1)
     return df.withColumn(out_col, out)
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    shingle_n: int = 3,
-    candidates: Optional[DataFrame] = None,
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity on candidate pairs.
-
-    Candidates default to MinHash-LSH output (never all-pairs — quadratic).
-    Returns (a, b, jaccard) with exact set Jaccard over n-gram shingles.
-    """
-    if candidates is None:
-        sigs = minhash_signatures(
-            df, text_col, id_col=id_col, num_hashes=num_hashes, shingle_n=shingle_n
-        )
-        candidates = minhash_lsh_pairs(sigs, id_col, bands=bands).select("a", "b")
-    sh = df.select(
-        F.col(id_col).alias("__id"), shingles(F.col(text_col), shingle_n).alias("__sh")
-    )
-    out = (
-        candidates.select("a", "b")
-        .join(sh.withColumnRenamed("__id", "a").withColumnRenamed("__sh", "sha"), "a")
-        .join(sh.withColumnRenamed("__id", "b").withColumnRenamed("__sh", "shb"), "b")
-        .select(
-            "a",
-            "b",
-            _set_jaccard(F.col("sha"), F.col("shb")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out
 
 
 def overlap_jaccard_pairs(

@@ -1,13 +1,13 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched ``mapInPandas``.
+"""Multimodal column plumbing: media as opaque binary columns with typed
+metadata, processed via Arrow-batched ``mapInPandas``
+(:func:`extract_image_features`).
 
 The Spark-side architecture is real and tested: schemas, partition-size
 control, UDF signatures, batch shapes. Decoders: uncompressed BMP, 8-bit
 PNG, and baseline JPEG are decoded NATIVELY (pure stdlib+numpy — real
-pixels, real dims), PCM WAV headers via stdlib ``wave``; exotic image
-shapes (progressive JPEG, 16-bit PNG) and compressed audio run PIL/codec
-libs when importable and otherwise fall back to deterministic stubs
-(those libraries are not in this container), so the plumbing has
+pixels, real dims); exotic image shapes (progressive JPEG, 16-bit PNG)
+run PIL when importable and otherwise fall back to deterministic stubs
+(Pillow is an optional dependency), so the plumbing has
 testable, reproducible outputs either way. Nothing but the decode body
 changes when a real codec lands. Perf note: the native decoders are
 vectorized where the format allows (BMP raster, PNG filters 0/1/2, the
@@ -37,7 +37,6 @@ from typing import Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -52,10 +51,8 @@ from openmldb_spark.pipeline._imagecodec import (  # noqa: F401 - re-exported
     _decode_image_stub,
     _decode_jpeg,
     _decode_png,
-    _encode_png,
     _gray_features,
     _jpeg_gray,
-    _jpeg_n_components,
     _luma,
     _native,
     _png_rgb,
@@ -234,186 +231,3 @@ def extract_image_features(
             )
 
     return df.select("media_id", "mime", "payload").mapInPandas(run, IMAGE_FEATURES_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per (media_id, frame_ts).
-
-    The decode itself is stubbed; the row explosion (the part that matters
-    for partitioning: a 2-hour video = 7200 rows) is real Spark.
-    """
-    n_frames = (F.col("duration_ms") / every_ms).cast("int")
-    return (
-        df.filter(F.col("modality") == "video")
-        .withColumn(
-            "frame_ts_ms",
-            F.explode(F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(1))),
-        )
-        .withColumn("frame_ts_ms", F.col("frame_ts_ms") * every_ms)
-        .select("media_id", "mime", "frame_ts_ms")
-    )
-
-
-AUDIO_FEATURES_SCHEMA = (
-    "media_id string, mime string, n_bytes long, duration_ms int, "
-    "mfcc array<float>"
-)
-
-
-def _decode_audio_stub(payload: bytes) -> tuple[int, list[float]]:
-    """Audio decoder with a REAL header contract for PCM WAV (stdlib
-    ``wave`` — no audio libs needed): a RIFF/WAVE payload's duration_ms
-    comes from its actual header (frames / framerate), pinning the decode
-    contract the way the PNG path pins image dims. The mfcc-shaped vector
-    stays a deterministic sha1-derived stub (real MFCCs need librosa /
-    soundfile DSP — absent in this sandbox; swap in
-
-        import soundfile as sf; data, rate = sf.read(io.BytesIO(payload))
-
-    when available). Non-WAV payloads keep the fully-deterministic fake.
-    """
-    if not payload:
-        raise NotImplementedError("empty payload: real decoder required")
-    h = hashlib.sha1(payload).digest()
-    mfcc = [b / 255.0 - 0.5 for b in h[2:15]]
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        import io
-        import wave
-
-        with wave.open(io.BytesIO(payload)) as w:
-            rate = w.getframerate()
-            duration_ms = int(w.getnframes() * 1000 / rate) if rate else 0
-        return duration_ms, mfcc
-    duration_ms = 1000 + int.from_bytes(h[:2], "big")
-    return duration_ms, mfcc
-
-
-def extract_audio_features(df: DataFrame) -> DataFrame:
-    """payload -> (duration, mfcc-shaped vector) via Arrow-batched
-    mapInPandas — same batch/memory profile as the image path."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = _payload_list(pdf["payload"])
-            n_bytes: list[int] = []
-            durs: list[Optional[int]] = []
-            mfccs: list[Optional[list[float]]] = []
-            for payload in payloads:
-                n_bytes.append(len(payload))
-                try:
-                    dur, mfcc = _decode_audio_stub(payload)
-                except NotImplementedError:
-                    dur, mfcc = None, None
-                durs.append(dur)
-                mfccs.append(mfcc)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].tolist(),
-                    "mime": pdf["mime"].tolist(),
-                    "n_bytes": n_bytes,
-                    "duration_ms": durs,
-                    "mfcc": mfccs,
-                }
-            )
-
-    return df.select("media_id", "mime", "payload").mapInPandas(run, AUDIO_FEATURES_SCHEMA)
-
-
-def _decode_rgb(payload: bytes):
-    """HxWx3 uint8 RGB from any natively-decodable payload (BMP / 8-bit
-    PNG / baseline JPEG — JPEG yields replicated luma); OSError otherwise.
-
-    A COLOR (multi-component) JPEG is deferred to PIL when importable
-    (OSError here -> the caller's PIL branch): the native path
-    reconstructs luma only, and the same input class must not change
-    output fidelity with the path taken (ADVICE r8). Without PIL the
-    native replicated-luma resize stands, documented."""
-    import numpy as np
-
-    if payload[:2] == b"BM":
-        return _native(_bmp_rgb, payload)
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return _native(_png_rgb, payload)
-    if payload[:2] == b"\xff\xd8":
-        if _PILImage is not None and _jpeg_n_components(payload) > 1:
-            raise OSError("color JPEG deferred to PIL")
-        g = (_native(_jpeg_gray, payload) * 255.0).astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
-    raise OSError("no native decoder for this payload")
-
-
-RESIZED_SCHEMA = "media_id string, mime string, width int, height int, payload binary"
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    *,
-    require_codec: "bool | str" = "auto",
-    jpeg_budget_per_task: int = JPEG_ORACLE_BUDGET_PER_TASK,
-) -> DataFrame:
-    """Resize plan: payload -> resized payload, via mapInPandas.
-    ``require_codec``/``jpeg_budget_per_task``: the production-codec
-    contract, exactly as in :func:`extract_image_features`.
-
-    BMP / 8-bit PNG / baseline JPEG payloads are REALLY resized in-sandbox
-    (native decode -> nearest-neighbor numpy resample -> minimal PNG
-    re-encode); PIL handles anything else when importable; otherwise a
-    deterministic truncate-or-pad stub keeps output size tracking the
-    target dims. COLOR (multi-component) JPEGs route to PIL whenever it is
-    importable — the native path reconstructs luma only, and path choice
-    must not change fidelity for the same input class (ADVICE r8); with no
-    PIL they resize as replicated luma (grayscale PNG out), documented. The Spark-side contract is identical on every path:
-    binary in, binary out, one row per image, output partition sizing
-    inherited from the input (control with arrow.maxRecordsPerBatch as in
-    the module docstring).
-    """
-    _check_codec(require_codec, _PILImage)  # plan-build fast fail
-    target = width * height // 8  # stub: bytes proportional to pixel count
-
-    def _resize_one(payload: bytes) -> Optional[bytes]:
-        import numpy as np
-
-        if not payload:
-            return None
-        try:
-            rgb = _decode_rgb(payload)
-            sh, sw = rgb.shape[:2]
-            ys = (np.arange(height) * sh // height).clip(0, sh - 1)
-            xs = (np.arange(width) * sw // width).clip(0, sw - 1)
-            return _encode_png(rgb[ys][:, xs])
-        except OSError:
-            pass
-        if _PILImage is not None:  # pragma: no cover - PIL absent in sandbox
-            try:
-                img = _PILImage.open(io.BytesIO(payload)).resize((width, height))
-                buf = io.BytesIO()
-                img.save(buf, format="PNG")
-                return buf.getvalue()
-            except OSError:
-                return None
-        reps = -(-target // len(payload))  # ceil
-        return (payload * reps)[:target]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # re-armed per TASK: this executor's codec state, not the driver's
-        guarded = _check_codec(require_codec, _pil_available())
-        jpegs_seen = 0
-        for pdf in batches:
-            payloads = _payload_list(pdf["payload"])
-            if guarded:
-                jpegs_seen += sum(p[:2] == b"\xff\xd8" for p in payloads)
-                if jpegs_seen > jpeg_budget_per_task:
-                    raise _jpeg_budget_error(jpeg_budget_per_task)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].tolist(),
-                    "mime": pdf["mime"].tolist(),
-                    "width": width,
-                    "height": height,
-                    "payload": [_resize_one(p) for p in payloads],
-                }
-            )
-
-    return df.select("media_id", "mime", "payload").mapInPandas(run, RESIZED_SCHEMA)

@@ -15,11 +15,6 @@ Spark-first decomposition (mirroring :mod:`.similarity`'s house rules —
 corpus streams once, queries broadcast, no cross-join materialization,
 no unbounded driver collect):
 
-- :func:`pq_train` — per-subspace Lloyd's k-means, ONE corpus scan per
-  iteration: each Arrow batch emits per-(subspace, code) partial
-  (sum, count) arrays, posexploded and reduced by a map-side-combining
-  sum to ``m × k × (dsub+1)`` tiny rows (the ``kmeans_centroids``
-  reduction shape — never per-dimension codegen, never vector collects).
 - :func:`pq_sampled_codebooks` — the PORTABLE codebook: the ``k``
   corpus rows with smallest md5 hash donate their subvectors (the exact
   sampling rule of ``ivf_centroids``). No training state — bit-exactly
@@ -84,8 +79,7 @@ def pq_sampled_codebooks(
     smallest ``md5(seed|id)`` hash — the exact deterministic sampling of
     ``ivf_centroids``, numbered in (hash, id) order — donate their
     L2-normalized subvectors. Returns a numpy ``(m, k, dim/m)`` float64
-    array. Bit-reproducible in SQL (the DuckDB oracle path); use
-    :func:`pq_train` for trained codebooks at real scale."""
+    array. Bit-reproducible in SQL (the DuckDB oracle path)."""
     import numpy as np
 
     h = F.conv(
@@ -110,89 +104,6 @@ def pq_sampled_codebooks(
         reps = -(-k // V.shape[0])
         V = np.tile(V, (reps, 1))[:k]
     return V.reshape(k, m, dim // m).transpose(1, 0, 2).copy()
-
-
-def pq_train(
-    corpus: DataFrame,
-    *,
-    corpus_id: str,
-    corpus_vec: str,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 5,
-    seed: int = 42,
-):
-    """Per-subspace Lloyd's k-means codebooks — numpy ``(m, k, dim/m)``.
-
-    100 TB shape: ONE corpus scan per iteration. Each Arrow batch assigns
-    every subvector to its nearest code by exact L2 (one matmul per
-    subspace) and emits per-(subspace, code) partial sums with the member
-    count riding as the last array element; a posexplode + ONE sum
-    aggregate reduces them map-side to ``m × k × (dsub+1)`` rows
-    (``kmeans_centroids``'s dim-robust reduction — no per-dimension
-    aggregate expressions, no vector collects). Initialization is
-    :func:`pq_sampled_codebooks` (deterministic md5 sample); empty codes
-    keep their previous centroid. Like any distributed float reduction,
-    training is deterministic up to float-sum association order; encoding
-    and search against a FIXED codebook are fully deterministic."""
-    import numpy as np
-
-    spark = corpus.sparkSession
-    C = pq_sampled_codebooks(
-        corpus, corpus_id=corpus_id, corpus_vec=corpus_vec, m=m, k=k, seed=seed
-    )
-    dsub = C.shape[2]
-    vecs = corpus.select(F.col(corpus_vec).alias("__v"))
-
-    for _ in range(int(iters)):
-        bc = spark.sparkContext.broadcast(C)
-
-        def partials(batches):
-            import pandas as pd
-
-            CB = bc.value
-            mm, kk, ds = CB.shape
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = _normalize(list(pdf["__v"]))
-                out = {"__cid": [], "__sum": []}
-                for j in range(mm):
-                    X = V[:, j * ds:(j + 1) * ds]
-                    # argmin_c ||x - c||^2 = argmin_c (||c||^2 - 2 x·c)
-                    d2 = (CB[j] ** 2).sum(axis=1)[None, :] - 2.0 * (X @ CB[j].T)
-                    assign = np.argmin(d2, axis=1)
-                    for cid in np.unique(assign):
-                        sel = assign == cid
-                        out["__cid"].append(int(j * kk + cid))
-                        out["__sum"].append(
-                            X[sel].sum(axis=0).tolist() + [float(sel.sum())]
-                        )
-                yield pd.DataFrame(out)
-
-        agg = (
-            vecs.mapInPandas(partials, "__cid int, __sum array<double>")
-            .select("__cid", F.posexplode("__sum").alias("__pos", "__s"))
-            .groupBy("__cid", "__pos")
-            .agg(F.sum("__s").alias("__s"))
-            .collect()
-        )
-        acc = np.zeros((m * k, dsub))
-        cnts = np.zeros(m * k)
-        for r in agg:
-            if r["__pos"] == dsub:
-                cnts[r["__cid"]] = r["__s"]
-            else:
-                acc[r["__cid"], r["__pos"]] = r["__s"]
-        newC = C.copy()
-        for j in range(m):
-            for c in range(k):
-                n = cnts[j * k + c]
-                if n > 0:
-                    newC[j, c] = acc[j * k + c] / n
-        C = newC
-        bc.unpersist()
-    return C
 
 
 def pq_encode(
@@ -329,61 +240,3 @@ def pq_topk(
     )
 
 
-def pq_topk_rerank(
-    corpus_codes: DataFrame,
-    corpus_vecs: DataFrame,
-    queries: DataFrame,
-    *,
-    corpus_id: str,
-    code_col: str,
-    vec_col: str,
-    query_id: str,
-    query_vec: str,
-    codebooks,
-    k: int = 10,
-    rerank_factor: int = 4,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Two-stage retrieval: ADC over the codes produces a
-    ``k × rerank_factor`` shortlist per query (the cheap stage — no float
-    vectors read), then EXACT cosine re-scores only the shortlist rows
-    and re-ranks to the final ``k`` — the standard PQ recall recovery
-    (approximation error only matters if it reorders across the
-    shortlist boundary).
-
-    Cost shape: stage one is :func:`pq_topk` (code scan + bounded
-    shuffle); stage two joins the shortlist — ``k × rerank_factor ×
-    n_queries`` ids, broadcastable — against the vector table, so the
-    exact scoring reads the float column for shortlist rows only (a
-    broadcast-semi-joined scan, never an all-pairs product). With
-    ``rerank_factor`` large enough to cover the corpus this equals
-    ``brute_force_topk`` exactly (pinned in tests)."""
-    from .similarity import cosine
-
-    short = pq_topk(
-        corpus_codes, queries,
-        corpus_id=corpus_id, code_col=code_col,
-        query_id=query_id, query_vec=query_vec,
-        codebooks=codebooks, k=int(k) * int(rerank_factor),
-        exclude_self=exclude_self,
-    ).select("query_id", "neighbor_id")
-    vecs = corpus_vecs.select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-    )
-    qv = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv")
-    )
-    scored = (
-        short.join(vecs, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id", "neighbor_id",
-            cosine(F.col("__qv"), F.col("__cv")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )

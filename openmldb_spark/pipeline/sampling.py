@@ -16,15 +16,9 @@ step before tokenize-and-concat training ingestion:
   document straddling a boundary belongs to the chunk where it STARTS.
   One window cumsum per group — pure Catalyst, SQL-expressible (the
   DuckDB oracle recomputes it bit-for-bit).
-- :func:`pack_greedy` — exact greedy packing (a new pack starts when the
-  next document would overflow the budget; oversized documents get their
-  own pack). Inherently sequential per group -> Arrow-batched
-  ``applyInPandas`` per group, state = one counter pair; verified in
-  tests against a pure-Python model.
 
 At 100 TB: sampling is zero shuffles — a filter over a hash projection
-that pushes nothing to the driver; packing and grouped budget_chunks
-shuffle once on the group key; ungrouped budget_chunks (by=None) is a
+that pushes nothing to the driver; grouped budget_chunks shuffles once on the group key; ungrouped budget_chunks (by=None) is a
 two-pass distributed prefix sum (range shuffle + per-partition windows +
 broadcast offsets) — never a single-reducer global window.
 """
@@ -51,22 +45,6 @@ def _sample_hash(id_col: Column, seed: int) -> Column:
     chr(0))."""
     id_s = F.coalesce(id_col.cast("string"), F.lit("\x00"))
     return portable_token_hash(F.concat(F.lit(f"{seed}|"), id_s))
-
-
-def hash_fraction(
-    df: DataFrame,
-    id_col: str,
-    fraction: float,
-    *,
-    seed: int = 0,
-) -> DataFrame:
-    """Keep a deterministic ``fraction`` of rows, selected by salted md5 of
-    ``id_col`` — reproducible across runs/partitionings, disjoint across
-    seeds (different salt -> independent selection)."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    thr = int(fraction * _RES)
-    return df.where((_sample_hash(F.col(id_col), seed) % _RES) < thr)
 
 
 def stratified_sample(
@@ -175,39 +153,3 @@ def budget_chunks(
     )
 
 
-def pack_greedy(
-    df: DataFrame,
-    *,
-    token_col: str,
-    order_col: str,
-    budget: int,
-    by: str,
-    out_col: str = "pack_id",
-) -> DataFrame:
-    """Exact greedy packing per ``by`` group: walk documents in
-    ``order_col`` order, open a new pack whenever adding the next document
-    would exceed ``budget`` (a document larger than the budget gets a pack
-    of its own). The scan is inherently sequential, so it runs as one
-    Arrow-batched pandas pass per group — state is two counters, group
-    size bounds memory (the 100 TB layout is many groups, e.g. source or
-    date, not one)."""
-    if budget <= 0:
-        raise ValueError(f"budget must be positive, got {budget}")
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(list(df.schema.fields) + [StructField(out_col, LongType())])
-
-    def pack(pdf):
-        pdf = pdf.sort_values(order_col, kind="mergesort").reset_index(drop=True)
-        packs, cur_id, cur_tok = [], 0, 0
-        for t in pdf[token_col]:
-            t = int(t)
-            if cur_tok > 0 and cur_tok + t > budget:
-                cur_id += 1
-                cur_tok = 0
-            packs.append(cur_id)
-            cur_tok += t
-        pdf[out_col] = packs
-        return pdf
-
-    return df.groupBy(by).applyInPandas(pack, schema)

@@ -9,8 +9,8 @@
   scanned exactly once. The global top-k is the exact top-k of the
   per-batch top-k union (the (cos desc, id asc) order is total).
 - :func:`lsh_topk` — random-hyperplane-bucketed approximate search: only
-  candidates sharing a bucket are scored. Queries are broadcast — the
-  request-serving shape (small query set, huge corpus).
+  candidates sharing a bucket are scored. Queries are broadcast. Kept as
+  the independent test oracle of :func:`lsh_topk_join`.
 - :func:`lsh_topk_join` — the corpus-vs-corpus scale path ("nearest
   neighbors for every document"): NO driver-side collect anywhere. Both
   sides get bucket ids, candidates come from an equi-join on bucket id,
@@ -339,18 +339,6 @@ def _band_seeds(seed, bands: int) -> list:
     return [seed] if bands <= 1 else [f"{seed}|{t}" for t in range(bands)]
 
 
-def _lit_double_array(vals) -> Column:
-    """One-parse array<double> literal. ``F.array(*[F.lit(v) ...])`` costs a
-    py4j round-trip per element — at 8 planes x 64 dims x 2 join sides that
-    is ~1000 driver calls per plan build, and plan BUILD (not execution)
-    measured as the dominant cost of the portable LSH bench query (guide
-    §1: 1.3-1.7s build vs 0.5-0.7s exec at sf0.1). A single ``F.expr``
-    parse builds the same CreateArray(double literals) JVM-side.
-    ``repr(float)`` is the shortest round-trip form and Spark parses
-    double literals correctly rounded, so values are bit-identical."""
-    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in vals) + ")")
-
-
 def _portable_bucket(
     df: DataFrame,
     id_col: str,
@@ -544,7 +532,8 @@ def kmeans_centroids(
     sample used by :func:`ivf_topk_join` (stable across runs and cluster
     sizes); empty clusters keep their previous centroid. Returns a numpy
     (k, dim) float64 matrix of UNIT-NORM centroids, accepted by
-    :func:`ivf_topk` / :func:`ivf_topk_join` via ``centroids=``.
+    :func:`ivf_topk_join` via ``centroids=``. Kept to train the centroids
+    the IVF tests feed to :func:`ivf_topk_join` and ``annindex``.
     """
     import numpy as np
 
@@ -624,124 +613,6 @@ def kmeans_centroids(
         C = newC
         bc.unpersist()
     return C
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    corpus_id: str,
-    corpus_vec: str,
-    query_id: str,
-    query_vec: str,
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
-    exclude_self: bool = True,
-    centroids=None,
-) -> DataFrame:
-    """IVF-bucketed approximate cosine top-k — the inverted-file ANN scale
-    path next to :func:`lsh_topk`'s hyperplane one.
-
-    Every corpus vector belongs to the bucket of its nearest centroid
-    (argmax cosine over a broadcast centroid matrix, computed inline per
-    Arrow batch); each query probes its ``nprobe`` nearest centroids and
-    exact-scores only those buckets' members. ``nprobe == n_centroids``
-    degenerates to brute force; the dial trades recall for the fraction
-    of the corpus scored (~nprobe/n_centroids on balanced buckets).
-
-    Default centroids are hash-sampled corpus vectors — the
-    ``n_centroids`` rows with smallest ``xxhash64(seed|id)``, a
-    deterministic sampling that is stable across runs and cluster sizes
-    (TakeOrdered: no full sort). Pass ``centroids=`` (a (k, dim) matrix,
-    e.g. from :func:`kmeans_centroids`) for trained buckets — the
-    plumbing (assign/probe/score) is identical.
-
-    Queries are broadcast (the serving shape); the corpus streams through
-    exactly once, one numpy matmul per batch, never materializing the
-    corpus×query cross join. Output schema matches
-    :func:`brute_force_topk`; fewer than k rows per query can return when
-    the probed buckets are small.
-    """
-    import numpy as np
-
-    spark = corpus.sparkSession
-    if centroids is not None:
-        Cen = np.asarray(centroids, dtype=np.float64)
-    else:
-        cent_rows = (
-            corpus.select(corpus_id, corpus_vec)
-            .withColumn("__h", F.xxhash64(F.concat_ws("|", F.lit(seed), F.col(corpus_id))))
-            .orderBy("__h")
-            .limit(int(n_centroids))
-            .collect()
-        )
-        Cen = np.asarray([r[1] for r in cent_rows], dtype=np.float64)
-    cen_n = np.linalg.norm(Cen, axis=1, keepdims=True)
-    cen_n[cen_n == 0.0] = 1.0
-    CenN = Cen / cen_n
-
-    qrows = queries.select(query_id, query_vec).collect()
-    qids = [r[0] for r in qrows]
-    Q = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    q_n = np.linalg.norm(Q, axis=1, keepdims=True)
-    q_n[q_n == 0.0] = 1.0  # all-zero query: cos 0 everywhere, not NaN ranks
-    Qn = Q / q_n
-    npb = min(int(nprobe), CenN.shape[0])
-    # per-query probe set: nprobe nearest centroids by cosine
-    qc = Qn @ CenN.T                       # (n_queries, n_centroids)
-    probes = np.argsort(-qc, axis=1)[:, :npb]
-    bc = spark.sparkContext.broadcast((qids, Qn, probes, CenN))
-
-    id_t = _id_sql_type(corpus, corpus_id)
-    out_schema = f"query_id {_id_sql_type(queries, query_id)}, neighbor_id {id_t}, cos double"
-
-    def score(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
-
-        qids_l, Qn_l, probes_l, CenN_l = bc.value
-        qarr = np.asarray(qids_l)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.asarray(list(pdf[corpus_vec]), dtype=np.float64)
-            cn = np.linalg.norm(C, axis=1, keepdims=True)
-            cn[cn == 0.0] = 1.0
-            Cn = C / cn
-            assign = np.argmax(Cn @ CenN_l.T, axis=1)  # (batch,) bucket ids
-            cids = pdf[corpus_id].to_numpy()
-            outs = []
-            for qi in range(len(qarr)):
-                mask = np.isin(assign, probes_l[qi])
-                if not mask.any():
-                    continue
-                cos = Cn[mask] @ Qn_l[qi]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qarr[qi],
-                            "neighbor_id": cids[mask],
-                            "cos": cos,
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs)
-
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    scored = _spread(corpus.select(corpus_id, corpus_vec), n_part).mapInPandas(
-        score, out_schema
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
 
 
 def _centroid_array(cent: DataFrame) -> DataFrame:
@@ -824,8 +695,8 @@ def ivf_topk_join(
     centroids=None,
 ) -> DataFrame:
     """IVF approximate top-k as a centroid-bucket equi-join — the
-    corpus-vs-corpus scale path (no driver collect anywhere), and the
-    oracle-checkable sibling of :func:`ivf_topk`.
+    corpus-vs-corpus scale path (no driver collect anywhere), whose
+    portable arm the DuckDB oracle recomputes exactly.
 
     Default centroids are the ``n_centroids`` corpus rows with smallest
     portable md5 hash (computable identically in any SQL engine) — or

@@ -1,5 +1,1 @@
-"""Plans: DEPLOY (named feature queries) and request-mode evaluation."""
-
-from openmldb_spark.plans.deploy import Deployment, deploy
-
-__all__ = ["Deployment", "deploy"]
+"""Plans: long-window pre-aggregation (:mod:`.longwindow`)."""

@@ -80,26 +80,6 @@ def preaggregate(
     )
 
 
-def preagg_merge(old: DataFrame, delta: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Incrementally fold a new pre-agg delta (from :func:`preaggregate`
-    over freshly arrived events) into an existing pre-agg table — the batch/
-    streaming maintenance loop of the reference's on-insert AggrBuffer
-    update (``aggregator.cc``): run ``preaggregate`` on each micro-batch /
-    daily increment and ``preagg_merge`` it into the stored table.
-    """
-    gb = [*keys, "bucket"]
-    return (
-        old.unionByName(delta)
-        .groupBy(*gb)
-        .agg(
-            F.sum("sum_v").alias("sum_v"),
-            F.sum("cnt_v").alias("cnt_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-        )
-    )
-
-
 def request_long_window(
     requests: DataFrame,
     history: DataFrame,

@@ -1,225 +1,17 @@
 """Streaming mode — continuous feature computation (Structured Streaming).
 
 The reference has no streaming SQL surface (SURVEY §2.8): its "streaming" is
-rows inserted into tablets + per-request window features computed as-of-now.
-The equivalent here:
+rows inserted into tablets + per-request window features computed as-of-now,
+which the compiled request plan of ``Engine`` DEPLOY serves here. What this
+package adds is Spark's own event-time surface:
 
-- :func:`request_mode_stream` — ``foreachBatch`` loop: each micro-batch of
-  request rows is evaluated by a :class:`~openmldb_spark.plans.deploy.Deployment`
-  against the history table (train/serve-consistent with ``run_batch``).
-- TTL ≈ watermark + state timeout (see catalog.apply_ttl for the batch form).
 - :mod:`.eventtime` — tumble/hop/session windowed aggregation + watermark
-  late-data semantics + exact dedup; :mod:`.sqlsurface` — the SQL spelling
-  (batch + stream, one query text); :mod:`.sliding` — per-key sliding
-  features via ``applyInPandasWithState``; :mod:`.fuzzydedup` — MinHash
-  band-bucket NEAR-dup detection (r10, stateful stream keys).
+  late-data semantics (TTL ≈ watermark + state timeout);
+- :mod:`.sqlsurface` — the SQL spelling of the same windows through
+  ``Engine.register_stream`` + ``Engine.execute`` (batch + stream, one
+  query text).
 
-Kafka/Pulsar connector parity = ``spark.readStream.format("kafka")`` — no
-code needed beyond configuration; gated behind import so the package works
-without streaming deps.
+Kafka/Pulsar connector parity = ``spark.readStream.format("kafka")``
+registered with ``Engine.register_stream`` — no code needed beyond
+configuration.
 """
-
-from __future__ import annotations
-
-from typing import Callable, Optional, Sequence
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def request_mode_stream(
-    request_stream: DataFrame,
-    history: DataFrame,
-    deployment,
-    sink: Callable[[DataFrame, int], None],
-    *,
-    checkpoint_dir: Optional[str] = None,
-    trigger_seconds: int = 10,
-):
-    """Continuously evaluate ``deployment`` for arriving request rows.
-
-    request_stream : streaming DataFrame (e.g. readStream from Kafka/files)
-    history        : static (or slowly-refreshed) history table
-    sink           : callback(features_df, batch_id) — write wherever
-
-    Returns the StreamingQuery (call ``.awaitTermination()``).
-    """
-
-    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        feats = deployment.run_request(batch_df, history)
-        sink(feats, batch_id)
-
-    writer = request_stream.writeStream.foreachBatch(run_batch).trigger(
-        processingTime=f"{trigger_seconds} seconds"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
-
-
-def ann_serving_stream(
-    query_stream: DataFrame,
-    corpus: DataFrame,
-    topk_fn: Callable[[DataFrame, DataFrame], DataFrame],
-    sink: Callable[[DataFrame, int], None],
-    *,
-    checkpoint_dir: Optional[str] = None,
-    trigger_seconds: int = 10,
-):
-    """Serve ANN top-k for arriving query vectors (the request-mode story
-    for the similarity family): each micro-batch of query rows is evaluated
-    by ``topk_fn(corpus, batch_df)`` against the static (or slowly-refreshed)
-    corpus state table.
-
-    ``topk_fn`` is a partial of :func:`~openmldb_spark.pipeline.similarity.
-    ivf_topk` / ``lsh_topk`` / ``brute_force_topk`` with everything but
-    (corpus, queries) bound — the BATCH plan runs per micro-batch, so
-    stream results equal batch results by construction (the same
-    broadcast-queries serving shape those functions already use).
-
-    Returns the StreamingQuery (call ``.awaitTermination()``).
-    """
-
-    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sink(topk_fn(corpus, batch_df), batch_id)
-
-    writer = query_stream.writeStream.foreachBatch(run_batch).trigger(
-        processingTime=f"{trigger_seconds} seconds"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
-
-
-def long_window_serving_stream(
-    event_stream: DataFrame,
-    history: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    range_ms: int,
-    bucket_ms: int,
-    agg: str,
-    sink: Callable[[DataFrame, int], None],
-    *,
-    checkpoint_dir: Optional[str] = None,
-    trigger_seconds: int = 10,
-    state_dir: Optional[str] = None,
-    checkpoint_every: int = 8,
-):
-    """Pre-agg maintenance on ingest (SURVEY §4.3, reference
-    ``src/storage/aggregator.cc``: AggrBuffer updated per insert): each
-    micro-batch of events is folded into the maintained per-(key, bucket)
-    pre-agg table via ``preagg_merge`` and appended to raw history, then the
-    batch's own rows are served as request rows by ``request_long_window``
-    from full pre-agg buckets + the two raw edge buckets — never a full
-    R-range scan.
-
-    Exactness assumes event-time arrives in order across batches (the
-    reference's tablet insert path assumes the same); a late row would need
-    watermarked re-serving, which is out of scope here.
-
-    State is BOUNDED two ways (r5 verdict: the naive per-batch
-    ``unionByName(...).persist()`` chain grows lineage and cached blocks
-    per batch):
-
-    - ``state_dir`` set (the at-scale shape): raw history appends to a
-      ``bucket``-partitioned parquet table (the layout
-      ``request_long_window`` partition-prunes for its edge scans) and the
-      merged pre-agg rewrites an alternating small parquet — no in-memory
-      chain at all, every batch re-plans from flat file scans.
-    - ``state_dir`` unset (in-memory demo): the chain is truncated with an
-      eager ``localCheckpoint`` every ``checkpoint_every`` batches, so
-      lineage depth and cached-block count stay O(checkpoint_every).
-
-    Returns the StreamingQuery (call ``.awaitTermination()``).
-    """
-    from openmldb_spark.plans.longwindow import (
-        preagg_merge,
-        preaggregate,
-        request_long_window,
-    )
-
-    if state_dir:
-        spark = history.sparkSession
-        hdir = f"{state_dir}/history"
-        pdirs = [f"{state_dir}/preagg0", f"{state_dir}/preagg1"]
-        bucket = F.floor(F.col(ts_col) / F.lit(bucket_ms)).cast("long")
-        (history.withColumn("bucket", bucket)
-                .write.partitionBy("bucket").mode("overwrite").parquet(hdir))
-        (preaggregate(history, keys, ts_col, value_col, bucket_ms)
-            .write.mode("overwrite").parquet(pdirs[0]))
-        slot = {"n": 0}
-
-        def run_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            batch = batch_df.persist()
-            (batch.withColumn("bucket", bucket)
-                  .write.partitionBy("bucket").mode("append").parquet(hdir))
-            cur, nxt = slot["n"], 1 - slot["n"]
-            merged = preagg_merge(
-                spark.read.parquet(pdirs[cur]),
-                preaggregate(batch, keys, ts_col, value_col, bucket_ms),
-                keys,
-            )
-            merged.write.mode("overwrite").parquet(pdirs[nxt])
-            slot["n"] = nxt
-            new_hist = spark.read.parquet(hdir)
-            new_pre = spark.read.parquet(pdirs[nxt])
-            reqs = batch.withColumn("__req_id", F.monotonically_increasing_id())
-            feats = request_long_window(
-                reqs, new_hist, new_pre, list(keys), ts_col, value_col,
-                range_ms, bucket_ms, agg, request_id="__req_id",
-            ).drop("__req_id")
-            sink(feats, batch_id)
-            batch.unpersist()
-    else:
-        state = {
-            "history": history.persist(),
-            "preagg": preaggregate(history, keys, ts_col, value_col, bucket_ms).persist(),
-            "n": 0,
-        }
-
-        def run_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            batch = batch_df.persist()
-            new_hist = state["history"].unionByName(batch)
-            new_pre = preagg_merge(
-                state["preagg"],
-                preaggregate(batch, keys, ts_col, value_col, bucket_ms),
-                keys,
-            )
-            state["n"] += 1
-            if state["n"] % checkpoint_every == 0:
-                # truncate the union/merge lineage chain (eager: materialize
-                # before the old state is dropped)
-                new_hist = new_hist.localCheckpoint(eager=True)
-                new_pre = new_pre.localCheckpoint(eager=True)
-            else:
-                new_hist = new_hist.persist()
-                new_pre = new_pre.persist()
-                new_pre.count()  # materialize before the old state is dropped
-            old_hist, old_pre = state["history"], state["preagg"]
-            state["history"], state["preagg"] = new_hist, new_pre
-            reqs = batch.withColumn("__req_id", F.monotonically_increasing_id())
-            feats = request_long_window(
-                reqs, new_hist, new_pre, list(keys), ts_col, value_col,
-                range_ms, bucket_ms, agg, request_id="__req_id",
-            ).drop("__req_id")
-            sink(feats, batch_id)
-            old_hist.unpersist()
-            old_pre.unpersist()
-            batch.unpersist()
-
-    writer = event_stream.writeStream.foreachBatch(run_batch).trigger(
-        processingTime=f"{trigger_seconds} seconds"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()

@@ -1,9 +1,6 @@
 """Native event-time windowed aggregation with watermarks — the pure
 Structured-Streaming rollup path (tumbling / hopping windows + late-data
-handling), complementing the dialect-semantics paths in this package
-(``request_mode_stream`` evaluates deployments per request row;
-``sliding.stream_window_agg`` keeps per-key history state for
-row-anchored frames).
+handling); :mod:`.sqlsurface` lowers the SQL spelling onto it.
 
 These are Spark's own streaming aggregations: state is managed by the
 HDFSBackedStateStore / RocksDB per (key, window) — NOT per-row history —
@@ -97,22 +94,3 @@ def _windowed_agg(
     )
 
 
-def stream_exact_dedup(
-    stream: DataFrame,
-    *,
-    keys: Sequence[str],
-    ts_col: str,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact deduplication — the ingest-side arm of the batch
-    ``pipeline.dedup.exact_dedup``: keep the first row seen per ``keys``
-    within the watermark horizon. State is one row per distinct key,
-    EVICTED once the watermark passes (Spark's
-    ``dropDuplicatesWithinWatermark``) — the 100 TB-stream property:
-    without the watermark bound, exact-dedup state grows with every
-    distinct key ever seen. A duplicate arriving after its twin's state
-    expired is admitted (horizon semantics, pinned in tests) — the
-    full-history guarantee belongs to the batch op downstream.
-    """
-    src = _with_event_ts(stream, ts_col, watermark)
-    return src.dropDuplicatesWithinWatermark([*keys]).drop("__ev_ts")

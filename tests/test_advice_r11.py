@@ -10,7 +10,7 @@ from openmldb_spark.pipeline.contamination import ngram_contamination
 
 def test_contamination_oracle_matches_on_short_docs(spark):
     """ADVICE r10 #1: the DuckDB oracle dropped docs with <n tokens while
-    shingles() falls back to the whole text as one shingle — a latent gate
+    the shingle pipeline falls back to the whole text as one shingle — a latent gate
     mismatch masked by the sf0.001 corpus's 10-token minimum. The oracle
     now mirrors the fallback; pin equality on a corpus that HAS short docs."""
     rows = [
@@ -63,8 +63,6 @@ def test_require_codec_true_raises_without_pil(spark):
     df = _media_df(spark, [_gray_jpeg()])
     with pytest.raises(ImportError, match="Pillow"):
         M.extract_image_features(df, require_codec=True)
-    with pytest.raises(ImportError, match="Pillow"):
-        M.resize_images(df, 4, 4, require_codec=True)
 
 
 def test_require_codec_rejects_bad_value(spark):
@@ -85,8 +83,6 @@ def test_auto_budget_raises_on_large_jpeg_input(spark):
     df = _media_df(spark, [_gray_jpeg()] * 5)
     with pytest.raises(Exception, match="pure-Python oracle decoder"):
         M.extract_image_features(df, jpeg_budget_per_task=3).collect()
-    with pytest.raises(Exception, match="pure-Python oracle decoder"):
-        M.resize_images(df, 4, 4, jpeg_budget_per_task=3).collect()
 
 
 def test_auto_budget_passes_under_and_codec_false_always(spark):

@@ -28,8 +28,6 @@ def test_codec_guard_evaluates_on_the_executor(spark, monkeypatch):
     # ...but the serve fails loudly from the executor-side probe
     with pytest.raises(Exception, match="Pillow"):
         plan.collect()
-    with pytest.raises(Exception, match="Pillow"):
-        M.resize_images(df, 4, 4, require_codec=True).collect()
 
     # auto mode: the budget arms task-side even though the driver
     # believes a codec exists
@@ -48,7 +46,7 @@ def test_imagecodec_split_keeps_public_surface():
 
     for name in (
         "_bmp_rgb", "_decode_bmp", "_decode_png", "_png_rgb",
-        "_decode_jpeg", "_jpeg_gray", "_jpeg_n_components",
-        "_encode_png", "_gray_features", "_native", "_decode_image_stub",
+        "_decode_jpeg", "_jpeg_gray", "_gray_features", "_native",
+        "_decode_image_stub",
     ):
         assert getattr(M, name) is getattr(C, name), name

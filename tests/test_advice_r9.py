@@ -1,22 +1,14 @@
-"""Regression pins for the round-8 ADVICE findings fixed in round 9.
-
-1. multimodal.py align_restart: a stuffed FF 00 immediately before an RST
-   marker must not truncate the scan mid-padding (DRI round-trip test).
-2. multimodal.py resize_images: color baseline JPEGs keep color when PIL
-   is importable (fall through) instead of silently degrading to
-   replicated luma on the native path.
-3. sampling.py budget_chunks(by=None): one physical range assignment for
-   both consumers (tests/test_sampling.py::
-   test_budget_chunks_global_one_physical_assignment).
-4. lowering.py no-aggregate-inside-OVER fallback: Spark-native aggregate
-   heads keep the dialect error instead of reaching per-row projection.
+"""Regression pin for a round-8 ADVICE finding fixed in round 9:
+lowering.py's no-aggregate-inside-OVER fallback — Spark-native aggregate
+heads keep the dialect error instead of reaching per-row projection.
+(The budget_chunks(by=None) finding is pinned in tests/test_sampling.py::
+test_budget_chunks_global_one_physical_assignment.)
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 
-# -- #4: Spark aggregate heads rejected by the OVER fallback ---------------
+# -- Spark aggregate heads rejected by the OVER fallback -------------------
 def test_spark_aggregate_over_window_keeps_dialect_error(spark):
     from openmldb_spark.sql import parser as P
     from openmldb_spark.sql.lowering import Lowerer
@@ -56,50 +48,3 @@ def _sof3_jpeg() -> bytes:
     )
 
 
-def test_jpeg_component_count_walk():
-    from openmldb_spark.pipeline import multimodal as M
-
-    assert M._jpeg_n_components(_sof3_jpeg()) == 3
-    assert M._jpeg_n_components(b"\xff\xd8\xff\xd9") == 1
-    assert M._jpeg_n_components(b"junk") == 1
-
-
-def test_color_jpeg_defers_to_pil_when_importable(monkeypatch):
-    from openmldb_spark.pipeline import multimodal as M
-
-    class _FakePIL:  # stands in for PIL.Image being importable
-        pass
-
-    monkeypatch.setattr(M, "_PILImage", _FakePIL)
-    with pytest.raises(OSError, match="deferred to PIL"):
-        M._decode_rgb(_sof3_jpeg())
-    # without PIL the native luma path stands (here: fails later in the
-    # real decoder because the crafted header has no scan — NOT the
-    # deferral error)
-    monkeypatch.setattr(M, "_PILImage", None)
-    with pytest.raises(OSError) as ei:
-        M._decode_rgb(_sof3_jpeg())
-    assert "deferred" not in str(ei.value)
-
-
-def test_color_jpeg_resize_keeps_color_with_real_pil():
-    """PIL-present contract (r8 verdict item #8 / ADVICE #2): skipped in
-    the sandbox; on an installed cluster image the fast path takes over
-    and a color JPEG resize preserves chroma."""
-    try:
-        from PIL import Image
-    except ImportError:
-        pytest.skip("PIL not importable in this environment")
-    import io
-
-    import numpy as np
-
-    from openmldb_spark.pipeline import multimodal as M
-
-    rgb = np.zeros((8, 8, 3), dtype=np.uint8)
-    rgb[:, :, 0] = 200  # red
-    buf = io.BytesIO()
-    Image.fromarray(rgb).save(buf, format="JPEG")
-    out = M._decode_rgb  # deferral raises...
-    with pytest.raises(OSError, match="deferred to PIL"):
-        out(buf.getvalue())

@@ -1,15 +1,14 @@
-"""Persisted IVF index (pipeline/annindex.py) — the ANN sibling of the
-incremental MinHash index. The decisive contract: ivf_probe over
-ivf_corpus_index(corpus, C) == ivf_topk_join(corpus, ..., same C/seed)
-exactly, so the persisted-index path inherits the join sibling's DuckDB
-oracle transitively; plus the scale property the layout exists for —
-probes PARTITION-PRUNE a cidx-partitioned parquet index."""
+"""Persisted IVF index (pipeline/annindex.py). The decisive contract:
+ivf_probe over ivf_corpus_index(corpus, C) == ivf_topk_join(corpus, ...,
+same C/seed) exactly, so the persisted-index path inherits the join
+sibling's DuckDB oracle transitively; plus the scale property the layout
+exists for — probes PARTITION-PRUNE a cidx-partitioned parquet index."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from openmldb_spark.pipeline import similarity as S
 from openmldb_spark.pipeline.annindex import (
+    ivf_assignment_stats,
     ivf_centroids,
     ivf_corpus_index,
     ivf_probe,
@@ -102,6 +101,30 @@ def test_partitioned_parquet_probe_prunes_buckets(spark, tmp_path):
     assert read is not None and 0 < read <= 10 < n_buckets, (read, n_buckets)
 
 
+def test_assignment_stats_bounds_and_batch_split(spark):
+    """ivf_assignment_stats: every indexed row lands in its bucket's ``n``,
+    cosines to the own centroid are bounded, and stats of two disjoint
+    batches add up to the stats of their union."""
+    emb = load_table(spark, SF, "embeddings")
+    cent = ivf_centroids(emb, n_centroids=8, seed=42, **IDK)
+    idx = ivf_corpus_index(emb, cent, **IDK)
+    full = {r["cidx"]: r for r in ivf_assignment_stats(idx, cent).collect()}
+    assert sum(r["n"] for r in full.values()) == emb.count()
+    assert all(-1.0 <= r["min_cos"] <= r["mean_cos"] <= 1.0 for r in full.values())
+
+    parts = [
+        {r["cidx"]: r for r in ivf_assignment_stats(
+            idx.where(F.col("id") % 2 == m), cent).collect()}
+        for m in (0, 1)
+    ]
+    for cidx, r in full.items():
+        halves = [p[cidx] for p in parts if cidx in p]
+        assert sum(h["n"] for h in halves) == r["n"]
+        assert min(h["min_cos"] for h in halves) == r["min_cos"]
+        mean = sum(h["n"] * h["mean_cos"] for h in halves) / r["n"]
+        assert abs(mean - r["mean_cos"]) < 1e-9
+
+
 def test_incremental_append_equals_rebuilt_join(spark):
     """Ingesting a new batch = ivf_corpus_index(batch, SAME centroids)
     unioned onto the stored index; the probe must equal ivf_topk_join
@@ -147,56 +170,6 @@ def test_max_bucket_and_self_exclusion_parity(spark):
     assert any(q == n and c == 1.0 for q, n, c, _ in got)
 
 
-def test_probe_serves_through_ann_stream(spark, tmp_path):
-    """The serving story: query vectors stream in, each micro-batch probes
-    the PERSISTED (cidx-partitioned parquet) index via ann_serving_stream
-    — stream results equal the batch probe (same plan per micro-batch,
-    partition pruning included)."""
-    import time
-
-    from openmldb_spark.streaming import ann_serving_stream
-
-    emb = load_table(spark, SF, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select("vec_id", "embedding")
-    cent = ivf_centroids(emb, n_centroids=16, seed=42, **IDK)
-    p = str(tmp_path / "ivf_index")
-    ivf_corpus_index(emb, cent, **IDK).write.partitionBy("cidx").parquet(p)
-    stored = spark.read.parquet(p)
-
-    def topk(index, qs):
-        return ivf_probe(qs, index, cent, k=3, nprobe=2, **QK)
-    expected = _rows(topk(stored, queries))
-    assert expected
-
-    qdir = tmp_path / "queries"
-    qdir.mkdir()
-    queries.coalesce(1).write.parquet(str(qdir / "batch0"))
-    stream = (
-        spark.readStream.schema(queries.schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(qdir))
-    )
-    got: list = []
-    q = ann_serving_stream(
-        stream,
-        stored,
-        topk,
-        sink=lambda df, bid: got.extend(df.collect()),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        trigger_seconds=1,
-    )
-    try:
-        deadline = time.time() + 60
-        while not got and time.time() < deadline:
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cos"], 9), r["rank"])
-        for r in got
-    ) == expected
-
-
 def test_probe_empty_queries_and_empty_index(spark):
     """Degenerate inputs stay well-formed: no queries -> empty result
     (the probed-bucket IN-list is empty); empty index -> empty result."""
@@ -208,133 +181,6 @@ def test_probe_empty_queries_and_empty_index(spark):
     empty_idx = idx.where(F.lit(False))
     some = emb.where(F.col("vec_id") < 3)
     assert ivf_probe(some, empty_idx, cent, k=3, nprobe=2, **QK).count() == 0
-
-
-def test_ivf_index_store_lifecycle(spark, tmp_path):
-    """IvfIndexStore: build (centroids + bucketed index) -> ingest a
-    batch against the stored centroids -> probe equals ivf_topk_join
-    over the rebuilt corpus; bucket partitions still prune."""
-    emb = load_table(spark, SF, "embeddings")
-    old = emb.where(F.col("vec_id") % 3 != 0)
-    new = emb.where(F.col("vec_id") % 3 == 0)
-    queries = emb.where(F.col("vec_id") < 12)
-
-    from openmldb_spark.pipeline.annindex import IvfIndexStore
-
-    # r13: lifecycle runs through the Hadoop FileSystem API, so URI roots
-    # (refused in r12 while the lifecycle was os.*) work end-to-end
-    uri_store = IvfIndexStore(spark, "file://" + str(tmp_path / "ivf_uri"))
-    assert not uri_store.exists()
-    uri_store.build(old.limit(20), n_centroids=4, seed=42, **IDK)
-    assert uri_store.exists()
-    assert uri_store.probe(queries.limit(3), k=2, nprobe=2, **QK).count() > 0
-
-    store = IvfIndexStore(spark, str(tmp_path / "ivf"))
-    assert not store.exists()
-    store.build(old, n_centroids=16, seed=42, **IDK)
-    assert store.exists()
-    store.ingest(new, **IDK)
-
-    got = _rows(store.probe(queries, k=4, nprobe=3, **QK))
-    cent_rows = sorted(
-        (r["cidx"], r["centroid"]) for r in store.centroids().collect()
-    )
-    M = [c for _, c in cent_rows]
-    want = _rows(
-        S.ivf_topk_join(
-            emb, queries, corpus_id="vec_id", corpus_vec="embedding",
-            query_id="vec_id", query_vec="embedding",
-            k=4, nprobe=3, centroids=M,
-        )
-    )
-    assert got == want and len(got) > 0
-    # the appended rows landed under the existing cidx partitions
-    import os
-
-    parts = [d for d in os.listdir(str(tmp_path / "ivf" / "index")) if d.startswith("cidx=")]
-    assert parts and store.index().count() == emb.count()
-
-
-@pytest.mark.slow
-def test_drift_stats_baseline_and_identical_batch(spark, tmp_path):
-    """r13 (r12 verdict #6): drift observability. Build persists the
-    per-bucket assignment-quality baseline; a batch drawn from the SAME
-    distribution as the build (here: the build rows themselves) shows
-    delta_mean_cos == 0 per touched bucket, and the no-ingest
-    drift_stats equals the drift returned by ingest(return_drift=True)
-    computed from the ingest's own assignment."""
-    from openmldb_spark.pipeline.annindex import IvfIndexStore
-
-    emb = load_table(spark, SF, "embeddings")
-    old = emb.where(F.col("vec_id") % 3 != 0)
-    store = IvfIndexStore(spark, str(tmp_path / "ivf"))
-    store.build(old, n_centroids=8, seed=42, **IDK)
-
-    base = {r["cidx"]: r for r in store.build_stats().collect()}
-    assert base and all(r["n"] > 0 for r in base.values())
-    assert all(-1.0 <= r["min_cos"] <= r["mean_cos"] <= 1.0 for r in base.values())
-
-    same = {r["cidx"]: r for r in store.drift_stats(old, **IDK).collect()}
-    assert set(same) == set(base)
-    for cidx, r in same.items():
-        assert r["n_batch"] == r["n_build"] == base[cidx]["n"]
-        assert abs(r["delta_mean_cos"]) < 1e-12, (cidx, r["delta_mean_cos"])
-
-    # a disjoint batch through ingest(return_drift=True): same shape,
-    # stats computed from the ingested assignment itself
-    new = emb.where(F.col("vec_id") % 3 == 0)
-    drift = store.ingest(new, return_drift=True, **IDK)
-    rows = {r["cidx"]: r for r in drift.collect()}
-    assert sum(r["n_batch"] for r in rows.values()) == new.count()
-    # build-side columns still reflect the BUILD baseline, not the append
-    for cidx, r in rows.items():
-        if r["n_build"] is not None:
-            assert r["n_build"] == base[cidx]["n"]
-    # and the probe path still works over the appended index
-    assert store.probe(emb.limit(3), k=2, nprobe=2, **QK).count() > 0
-
-
-def test_build_stats_backfills_pre_r13_store(spark, tmp_path):
-    """A store built before the stats table existed recomputes the
-    baseline from the stored index on demand and persists it."""
-    import os
-
-    from openmldb_spark.pipeline.annindex import IvfIndexStore
-
-    emb = load_table(spark, SF, "embeddings").limit(30)
-    store = IvfIndexStore(spark, str(tmp_path / "ivf"))
-    store.build(emb, n_centroids=4, seed=42, **IDK)
-    # simulate a pre-r13 store: drop the stats table
-    import shutil
-
-    shutil.rmtree(store.stats_path)
-    assert not os.path.isdir(store.stats_path)
-    got = store.build_stats()
-    assert os.path.isdir(store.stats_path)
-    assert sum(r["n"] for r in got.collect()) == 30
-
-
-def test_ivf_exists_requires_both_committed_tables(spark, tmp_path):
-    """A torn build (centroids committed, index missing or uncommitted)
-    must read as 'no store' — the caller's signal to remove the root and
-    rebuild (build() is errorifexists)."""
-    import os
-    import shutil
-
-    from openmldb_spark.pipeline.annindex import IvfIndexStore
-
-    root = str(tmp_path / "ivf")
-    store = IvfIndexStore(spark, root)
-    store.build(
-        load_table(spark, SF, "embeddings").limit(20), n_centroids=4, **IDK
-    )
-    assert store.exists()
-    # torn: index never written
-    shutil.rmtree(store.index_path)
-    assert not IvfIndexStore(spark, root).exists()
-    # torn: index partial (no commit marker)
-    os.makedirs(store.index_path)
-    assert not IvfIndexStore(spark, root).exists()
 
 
 def _py_ivf_pq_oracle(spark, emb, queries, CB, n_centroids, nprobe, k):
@@ -393,89 +239,3 @@ def _py_ivf_pq_oracle(spark, emb, queries, CB, n_centroids, nprobe, k):
     return sorted(want)
 
 
-def test_ivf_pq_probe_matches_python_oracle(spark):
-    from openmldb_spark.pipeline.annindex import (
-        ivf_pq_corpus_index,
-        ivf_pq_probe,
-    )
-    from openmldb_spark.pipeline.pq import pq_sampled_codebooks
-
-    emb = load_table(spark, SF, "embeddings")
-    queries = emb.where(F.col("vec_id") < 8)
-    CB = pq_sampled_codebooks(emb, m=8, k=16, seed=42, **IDK)
-    cent = ivf_centroids(emb, n_centroids=8, seed=42, **IDK)
-    idx = ivf_pq_corpus_index(emb, cent, CB, **IDK)
-    assert set(idx.columns) == {"id", "pq_code", "cidx"}  # codes only
-    got = sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cos"], 9), r["rank"])
-        for r in ivf_pq_probe(
-            queries, idx, cent, CB,
-            query_id="vec_id", query_vec="embedding", k=4, nprobe=3,
-        ).collect()
-    )
-    want = _py_ivf_pq_oracle(spark, emb, queries, CB, 8, 3, 4)
-    assert got == want and len(got) > 0
-
-
-@pytest.mark.slow
-def test_ivf_pq_store_lifecycle_and_pruning(spark, tmp_path):
-    """build_pq -> probe_pq == direct ivf_pq_probe; ingest_pq append ==
-    rebuilt index; the code-only probe partition-prunes at the file
-    level like the float probe."""
-    from openmldb_spark.pipeline.annindex import (
-        IvfIndexStore,
-        ivf_pq_corpus_index,
-        ivf_pq_probe,
-    )
-    from openmldb_spark.pipeline.pq import pq_sampled_codebooks
-
-    emb = load_table(spark, SF, "embeddings")
-    old = emb.where(F.col("vec_id") % 3 != 0)
-    new = emb.where(F.col("vec_id") % 3 == 0)
-    queries = emb.where(F.col("vec_id") < 8)
-    CB = pq_sampled_codebooks(old, m=8, k=16, seed=42, **IDK)
-
-    store = IvfIndexStore(spark, str(tmp_path / "ivf"))
-    store.build(old, n_centroids=16, seed=42, **IDK)
-    store.build_pq(old, codebooks=CB, **IDK)
-    store.ingest_pq(new, **IDK)
-
-    out = store.probe_pq(queries, k=4, nprobe=3, **QK)
-    got = sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cos"], 9), r["rank"])
-        for r in out.collect()
-    )
-    direct = ivf_pq_corpus_index(emb, store.centroids(), CB, **IDK)
-    want = sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cos"], 9), r["rank"])
-        for r in ivf_pq_probe(
-            queries, direct, store.centroids(), CB,
-            query_id="vec_id", query_vec="embedding", k=4, nprobe=3,
-        ).collect()
-    )
-    assert got == want and len(got) > 0
-
-    # file-level pruning: the executed scan reads <= probed partitions
-    plan = out._jdf.queryExecution().executedPlan()
-    stack, read = [plan], None
-    while stack:
-        n = stack.pop()
-        cls = n.getClass().getSimpleName()
-        if "FileSourceScan" in cls:
-            it = n.metrics().iterator()
-            while it.hasNext():
-                kv = it.next()
-                if kv._1() == "numPartitions":
-                    read = kv._2().value()
-        if "AdaptiveSparkPlan" in cls:
-            stack.append(n.executedPlan())
-        elif "QueryStage" in cls:
-            stack.append(n.plan())
-        for i in range(n.children().size()):
-            stack.append(n.children().apply(i))
-    n_buckets = store.spark.read.parquet(store.pq_index_path).select(
-        "cidx"
-    ).distinct().count()
-    assert read is not None and 0 < read <= 8 * 3 and read < n_buckets, (
-        read, n_buckets,
-    )

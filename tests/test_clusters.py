@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from openmldb_spark.pipeline.clusters import dedup_clusters, pick_representatives
-from openmldb_spark.pipeline.dedup import minhash_lsh_pairs, minhash_signatures
+from openmldb_spark.pipeline.dedup import overlap_jaccard_pairs
 
 
 def _clusters(df):
@@ -39,10 +39,9 @@ def test_min_label_matches_pair_based_removal_on_real_pairs(spark):
     """The component-min label equals what the pair-based drop keeps: the
     set of ids that are never the larger side of any (transitive) pair."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sigs = minhash_signatures(docs, "text", id_col="doc_id", num_hashes=32)
-    pairs = minhash_lsh_pairs(
-        sigs, "doc_id", bands=8, min_jaccard_est=0.7
-    ).select(F.col("a").cast("long"), F.col("b").cast("long"))
+    pairs = overlap_jaccard_pairs(docs, "doc_id", "text").select(
+        F.col("a").cast("long"), F.col("b").cast("long")
+    )
     if pairs.isEmpty():
         pytest.skip("no near-dup pairs at this sf")
     labels = dedup_clusters(pairs)

@@ -317,7 +317,7 @@ def test_jvm_staging_round_trips_every_simple_type(spark):
         (4, True, 0, 0, -0.0, 1.7976931348623157e308, "~", "a,b", None, ts),
     ]
     got = dep.run_request_rows(rows)
-    assert dep._compiled is not None and dep._compiled._jvm_mode
+    assert dep._compiled is not None
     want = dep._run_request_on(
         dep._query_with_params(None),
         spark.createDataFrame(rows, dep.input_schema),
@@ -394,7 +394,9 @@ def test_serving_session_isolated_from_batch_confs(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def test_nested_request_schema_falls_back_to_arrow_staging(spark):
+def test_nested_request_schema_serves_per_call(spark):
+    """A nested input schema has no staged text source, so the deployment
+    serves through the per-call path and never builds a compiled plan."""
     import datetime
 
     eng = Engine(spark)
@@ -410,21 +412,19 @@ def test_nested_request_schema_falls_back_to_arrow_staging(spark):
         " WINDOW w1 AS (PARTITION BY id ORDER BY c7 ROWS BETWEEN"
         " 10 PRECEDING AND CURRENT ROW)"
     )
-    import datetime
-
     got = dep.run_request_rows(
         [(1, ["x", "y"], datetime.datetime(2020, 5, 29, 9, 0, 0))]
     )
-    assert dep._compiled is not None and not dep._compiled._jvm_mode
+    assert dep._compiled is None
     assert got[0]["tags"] == ["x", "y"] and got[0]["c"] == 2
 
 
 def test_offer_refuses_staged_source_in_both_modes(spark):
     """servingmat.offer must decline any subtree reading the staged
-    request source regardless of staging mode. The JVM text mode has no
-    MapInArrow node, so refusal keys on the STAGED_MARKER tag — which
-    must survive analysis (where offer looks) and constant-fold away
-    before execution (zero serve cost)."""
+    request source. The staged text source has no MapInArrow node, so
+    refusal keys on the STAGED_MARKER tag — which must survive analysis
+    (where offer looks) and constant-fold away before execution (zero
+    serve cost)."""
     from openmldb_spark.engine import servingmat
 
     src = servingmat.mark_staged(spark.range(3).toDF("x"))
@@ -463,7 +463,7 @@ def test_self_last_join_on_request_table_jvm_mode(spark):
     compiled = sorted(
         map(tuple, dep.run_request(_req(spark, dep, rows)).collect())
     )
-    assert dep._compiled is not None and dep._compiled._jvm_mode
+    assert dep._compiled is not None
     # nothing offered over the request source was materialized
     assert dep._compiled._materialized == []
     dep.use_compiled = False
@@ -516,7 +516,7 @@ def test_jvm_staging_timestamps_survive_non_utc_session(spark):
         dep = eng.execute(f"DEPLOY dtz {SQL}")
         req = _req(spark, dep, [(9, "aa", 40, 1590738995000)])
         compiled = sorted(map(tuple, dep.run_request(req).collect()))
-        assert dep._compiled is not None and dep._compiled._jvm_mode
+        assert dep._compiled is not None
         # the serving clone inherited the engine session's timezone
         assert (
             dep._compiled._serve_spark.conf.get("spark.sql.session.timeZone")
@@ -544,7 +544,7 @@ def test_empty_request_dataframe_serves_empty(spark):
     dep = eng.execute(f"DEPLOY dempty {SQL}")
     empty = spark.createDataFrame([], dep.input_schema)
     assert dep.run_request(empty).collect() == []
-    assert dep._compiled is not None and dep._compiled._jvm_mode
+    assert dep._compiled is not None
     # and a non-empty serve right after still works (staged file intact)
     got = dep.run_request(_req(spark, dep, [(9, "aa", 40, 1590738995000)]))
     assert got.collect()[0]["s"] == 30 + 31 + 40

@@ -26,7 +26,7 @@ def test_csv_format(spark, df):
     out = df.select(
         "id",
         FS.csv_format(
-            FS.multiclass_label(F.col("label")),
+            FS.binary_label(F.col("label")),
             FS.continuous(F.col("f1")),
             FS.continuous(F.col("f3")),
         ).alias("inst"),
@@ -51,39 +51,6 @@ def test_libsvm_format(spark, df):
     assert got[1] == "1 1:1.500000"
     assert got[2] == "0 1:2.000000 2:3.250000"
     assert got[3] == "1 2:7.000000"
-
-
-def test_libsvm_bucketed_discrete(spark, df):
-    out = df.select(
-        "id",
-        FS.libsvm(
-            FS.binary_label(F.col("label")),
-            FS.discrete(F.col("f2"), bucket=10),
-            FS.continuous(F.col("f3")),
-        ).alias("inst"),
-    ).collect()
-    row2 = {r["id"]: r["inst"] for r in out}[2]
-    label, *feats = row2.split(" ")
-    assert label == "0"
-    # discrete occupies slots 1..10, continuous lands at slot 11
-    fid = int(feats[0].split(":")[0])
-    assert 1 <= fid <= 10 and feats[0].endswith(":1")
-    assert feats[1].startswith("11:")
-
-
-def test_gcformat_shape(spark, df):
-    out = df.select(
-        FS.gcformat(
-            FS.multiclass_label(F.col("label")),
-            FS.gcformat_index(F.col("id")),
-            FS.continuous(F.col("f1")),
-            FS.discrete(F.col("f2")),
-        ).alias("inst"),
-    ).collect()
-    for r in out:
-        label, rest = r["inst"].split(" ", 1)
-        idx, feats = rest.split("| ")
-        assert label in ("0", "1") and idx.strip().isdigit()
 
 
 def test_window_split(spark):

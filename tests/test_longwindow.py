@@ -2,7 +2,7 @@
 the brute-force sliding window exactly."""
 
 import pytest
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from openmldb_spark.plans.longwindow import preaggregate, request_long_window
 
@@ -60,23 +60,6 @@ def test_matches_bruteforce(spark, hist, agg):
         )
     )
     assert bad.count() == 0, bad.collect()
-
-
-def test_preagg_incremental_merge(spark, hist):
-    from openmldb_spark.plans.longwindow import preagg_merge
-
-    old_part = hist.where(F.col("ts") < 105000)
-    new_part = hist.where(F.col("ts") >= 105000)
-    merged = preagg_merge(
-        preaggregate(old_part, ["uid"], "ts", "v", B),
-        preaggregate(new_part, ["uid"], "ts", "v", B),
-        ["uid"],
-    )
-    full = preaggregate(hist, ["uid"], "ts", "v", B)
-    key = lambda r: (r["uid"], r["bucket"])
-    m = {key(r): (r["sum_v"], r["cnt_v"], r["min_v"], r["max_v"]) for r in merged.collect()}
-    f = {key(r): (r["sum_v"], r["cnt_v"], r["min_v"], r["max_v"]) for r in full.collect()}
-    assert m == f
 
 
 def test_preagg_is_smaller_and_complete(spark, hist):

@@ -49,49 +49,12 @@ def test_exact_dedup_partition_pin_is_size_aware(spark, docs):
     assert n == min(knob, max(2, -(-est // (64 << 10))))
 
 
-def test_minhash_signature_deterministic(spark, docs):
-    s1 = D.minhash_signatures(docs, "text", num_hashes=16).collect()
-    s2 = D.minhash_signatures(docs, "text", num_hashes=16).collect()
-    m1 = {r["doc_id"]: r["minhash"] for r in s1}
-    m2 = {r["doc_id"]: r["minhash"] for r in s2}
-    assert m1 == m2
-    assert m1[1] == m1[4]  # identical text -> identical signature
-    assert len(m1[1]) == 16
-
-
-def test_minhash_lsh_finds_near_dups(spark, docs):
-    sigs = D.minhash_signatures(docs, "text", num_hashes=32, shingle_n=3)
-    pairs = D.minhash_lsh_pairs(sigs, "doc_id", bands=16).collect()
-    found = {(r["a"], r["b"]) for r in pairs}
-    assert (1, 4) in found            # exact dup always caught
-    assert (1, 2) in found or (2, 4) in found  # near-dup caught
-    assert all(p[0] < p[1] for p in found)
-
-
-def test_minhash_dedup_drops_duplicates(spark, docs):
-    out = D.minhash_dedup(docs, "doc_id", "text", num_hashes=32, bands=16,
-                          shingle_n=3, threshold=0.9)
-    ids = {r["doc_id"] for r in out.collect()}
-    assert 1 in ids and 4 not in ids  # min-id representative survives
-    assert 3 in ids and 5 in ids      # distinct docs untouched
-
-
 def test_simhash_near_dups_close(spark, docs):
     out = {r["doc_id"]: r["simhash"] for r in D.simhash(docs, "text").collect()}
     assert out[1] == out[4]
     d_near = bin(out[1] ^ out[2]).count("1")
     d_far = bin(out[1] ^ out[3]).count("1")
     assert d_near < d_far
-
-
-def test_ngram_jaccard_exact_values(spark, docs):
-    cands = spark.createDataFrame([(1, 4), (1, 3)], "a long, b long")
-    out = D.ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_n=3, candidates=cands, threshold=0.0
-    ).collect()
-    j = {(r["a"], r["b"]): r["jaccard"] for r in out}
-    assert j[(1, 4)] == 1.0
-    assert j[(1, 3)] < 0.1
 
 
 def test_brute_force_topk(spark):
@@ -214,14 +177,6 @@ def test_multimodal_plumbing(spark):
     assert out["m1"]["n_bytes"] == 12
     assert out["m1"]["width"] is not None and len(out["m1"]["feat"]) == 8
     assert out["m2"]["width"] is None  # stub raises -> nulls, row survives
-
-
-def test_frame_sample_plan(spark):
-    rows = [("v1", "video", "video/mp4", None, None, None, 5500)]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    out = M.frame_sample_plan(df, every_ms=1000).collect()
-    assert len(out) == 5
-    assert {r["frame_ts_ms"] for r in out} == {0, 1000, 2000, 3000, 4000}
 
 
 @pytest.mark.slow
@@ -355,28 +310,6 @@ def test_lsh_topk_portable_plan_builds_without_driver_actions(spark, monkeypatch
     assert set(["query_id", "neighbor_id", "cos", "rank"]) <= set(out.columns)
 
 
-def test_multimodal_audio_and_resize(spark):
-    from openmldb_spark.pipeline import multimodal as M
-
-    rows = [
-        ("m1", "audio/wav", b"payload-one"),
-        ("m2", "audio/wav", b""),
-        ("m3", "image/png", b"imagebytes"),
-    ]
-    df = spark.createDataFrame(rows, "media_id string, mime string, payload binary")
-    audio = {r["media_id"]: r for r in M.extract_audio_features(df).collect()}
-    assert audio["m1"]["duration_ms"] is not None and len(audio["m1"]["mfcc"]) == 13
-    assert audio["m2"]["duration_ms"] is None  # empty payload -> stub declines
-    # deterministic: same payload -> same features
-    audio2 = {r["media_id"]: r for r in M.extract_audio_features(df).collect()}
-    assert audio["m1"]["mfcc"] == audio2["m1"]["mfcc"]
-
-    resized = {r["media_id"]: r for r in M.resize_images(df, 32, 16).collect()}
-    assert resized["m3"]["width"] == 32 and resized["m3"]["height"] == 16
-    assert len(resized["m3"]["payload"]) == 32 * 16 // 8
-    assert resized["m2"]["payload"] is None
-
-
 def test_jaccard_dedup_equals_all_pairs_bruteforce(spark):
     """The exactness contract: MinHash-LSH ∪ prefix-filter candidates +
     exact verification == brute-force all-pairs Jaccard dedup, on random
@@ -490,56 +423,6 @@ def test_jaccard_dedup_hot_token_df_cap(spark):
     assert uncapped == [0, 100]
 
 
-def test_ivf_topk_full_probe_equals_bruteforce(spark):
-    """nprobe == n_centroids scores every bucket -> exact brute force."""
-    import random
-
-    from openmldb_spark.pipeline import similarity as S
-
-    rng = random.Random(3)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(120)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = df.where(F.col("vec_id") < 5)
-    kw = dict(corpus_id="vec_id", corpus_vec="embedding",
-              query_id="vec_id", query_vec="embedding", k=4)
-    exact = {(r["query_id"], r["rank"]): r["neighbor_id"]
-             for r in S.brute_force_topk(df, q, **kw).collect()}
-    ivf = {(r["query_id"], r["rank"]): r["neighbor_id"]
-           for r in S.ivf_topk(df, q, n_centroids=6, nprobe=6, **kw).collect()}
-    assert ivf == exact
-
-
-def test_ivf_topk_clustered_recall(spark):
-    """On well-separated clusters a single-probe IVF search still finds the
-    exact in-cluster neighbors (the point of the bucket structure)."""
-    import random
-
-    from openmldb_spark.pipeline import similarity as S
-
-    rng = random.Random(9)
-    rows = []
-    for c in range(4):                       # 4 orthogonal-ish clusters
-        base = [0.0] * 8
-        base[c * 2] = 1.0
-        for i in range(25):
-            rows.append(
-                (c * 100 + i,
-                 [b + rng.uniform(-0.05, 0.05) for b in base])
-            )
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = df.where(F.col("vec_id").isin(0, 100, 200, 300))
-    kw = dict(corpus_id="vec_id", corpus_vec="embedding",
-              query_id="vec_id", query_vec="embedding", k=5)
-    exact = {(r["query_id"], r["rank"]): r["neighbor_id"]
-             for r in S.brute_force_topk(df, q, **kw).collect()}
-    ivf = {(r["query_id"], r["rank"]): r["neighbor_id"]
-           for r in S.ivf_topk(df, q, n_centroids=12, nprobe=3, **kw).collect()}
-    # every exact neighbor is in the same cluster as its query, and a
-    # 3-probe search over 12 hash-sampled centroids must recover them all
-    hits = sum(1 for key, nb in exact.items() if ivf.get(key) == nb)
-    assert hits / len(exact) >= 0.9, f"recall {hits}/{len(exact)}"
-
-
 def test_ivf_topk_join_full_probe_equals_bruteforce(spark):
     """Join-variant IVF with nprobe == n_centroids probes every bucket —
     exact brute force, with zero driver-side collects in the plan."""
@@ -605,17 +488,6 @@ def test_image_decode_contract_real_png(spark):
     assert abs(out["feat"][1] - 0.114) < 0.01
 
 
-def test_image_resize_contract_real_png(spark):
-    png = _tiny_png([(10, 20, 30)], width=1, height=1)
-    rows = [("p1", "image", "image/png", bytearray(png), None, None, None)]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    (out,) = M.resize_images(df, 4, 4).collect()
-    assert out["payload"] is not None
-    assert (out["width"], out["height"]) == (4, 4)
-    if M._PILImage is not None:  # real path re-encodes as PNG
-        assert bytes(out["payload"][:8]) == b"\x89PNG\r\n\x1a\n"
-
-
 def test_topk_no_exchange_when_source_parallel(spark):
     """The ANN scoring path must not shuffle the vector payload when the
     source scan already yields enough partitions (r6: conditional
@@ -640,35 +512,6 @@ def test_topk_no_exchange_when_source_parallel(spark):
     # scored rows — everything below the mapInPandas scoring is shuffle-free
     scoring_side = plan.split("MapInPandas")[-1]
     assert "Exchange" not in scoring_side, scoring_side
-
-
-def test_audio_wav_header_contract(spark):
-    """The audio decode contract is REAL for PCM WAV (stdlib wave): a
-    synthesized 44.1 kHz mono WAV of exactly 441 frames must report
-    10 ms duration through the full Spark path — mirroring the PNG
-    dimension contract on the image side (r5 verdict item 10)."""
-    import io
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(44100)
-        w.writeframes(struct.pack("<441h", *([1000] * 441)))
-    payload = buf.getvalue()
-
-    df = spark.createDataFrame(
-        [("a1", "audio/wav", bytearray(payload)),
-         ("a2", "application/octet-stream", bytearray(b"not-a-wav"))],
-        "media_id string, mime string, payload binary",
-    )
-    out = {r["media_id"]: r for r in M.extract_audio_features(df).collect()}
-    assert out["a1"]["duration_ms"] == 10  # 441 / 44100 s
-    assert len(out["a1"]["mfcc"]) == 13
-    # non-WAV payloads keep the deterministic stub (>= 1000 ms floor)
-    assert out["a2"]["duration_ms"] >= 1000
 
 
 def _tiny_bmp(pixel_rows, bpp=24, top_down=False):
@@ -1058,39 +901,10 @@ def test_jpeg_decoder_error_contract(spark):
     assert out["n_bytes"] == len(bad)
 
 
-def test_resize_real_path_roundtrip(spark):
-    # BMP in -> real nearest-neighbor resample -> PNG out whose pixels
-    # decode back exactly (2x2 checkerboard upsampled to 4x4 blocks)
-    import numpy as np
-
-    W, K = (255, 255, 255), (0, 0, 0)
-    bmp = _tiny_bmp([[W, K], [K, W]])
-    rows = [("r1", "image", "image/bmp", bytearray(bmp), None, None, None)]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    (out,) = M.resize_images(df, 4, 4).collect()
-    assert bytes(out["payload"][:8]) == b"\x89PNG\r\n\x1a\n"
-    rgb = M._png_rgb(bytes(out["payload"]))
-    assert rgb.shape == (4, 4, 3)
-    # each source pixel becomes a 2x2 block
-    exp = np.array([[1, 1, 0, 0], [1, 1, 0, 0], [0, 0, 1, 1], [0, 0, 1, 1]]) * 255
-    assert (rgb[:, :, 0] == exp).all()
-    # JPEG input also resizes for real (replicated-luma RGB)
-    img = np.full((8, 8), 200, dtype=np.uint8)
-    q = np.ones(64, dtype=np.int32)
-    jpg = _jpeg_encode_gray(img, q)
-    rows = [("r2", "image", "image/jpeg", bytearray(jpg), None, None, None)]
-    (out2,) = M.resize_images(
-        spark.createDataFrame(rows, M.MEDIA_SCHEMA), 2, 2
-    ).collect()
-    rgb2 = M._png_rgb(bytes(out2["payload"]))
-    assert rgb2.shape == (2, 2, 3)
-    assert abs(int(rgb2[0, 0, 0]) - 200) <= 2
-
-
 def test_kmeans_centroids_separate_clusters(spark):
     # three tight clusters around orthogonal axes: trained centroids land
     # on the axes (cosine spherical k-means), and feeding them to
-    # ivf_topk with nprobe=1 still finds each point's in-cluster
+    # ivf_topk_join with nprobe=1 still finds each point's in-cluster
     # neighbors — tighter buckets than hash-sampled centroids guarantee
     import numpy as np
 
@@ -1109,7 +923,7 @@ def test_kmeans_centroids_separate_clusters(spark):
     assert (np.abs(C).max(axis=1) > 0.99).all()
     # and the three centroids claim three DIFFERENT axes
     assert sorted(np.abs(C).argmax(axis=1)) == [0, 1, 2]
-    out = S.ivf_topk(
+    out = S.ivf_topk_join(
         df, df.where(F.col("vec_id") < 3),
         corpus_id="vec_id", corpus_vec="v", query_id="vec_id", query_vec="v",
         k=5, nprobe=1, centroids=C,
@@ -1193,13 +1007,13 @@ def test_ann_recall_on_real_testdata(spark):
             for r in S.lsh_topk(emb, q, planes=4, seed=42, bands=1,
                                 **kw).collect()}
     ivf = {(r["query_id"], r["neighbor_id"])
-           for r in S.ivf_topk(emb, q, n_centroids=8, nprobe=4, seed=42,
-                               **kw).collect()}
+           for r in S.ivf_topk_join(emb, q, n_centroids=8, nprobe=4, seed=42,
+                                    **kw).collect()}
     C = S.kmeans_centroids(emb, vec_col="embedding", id_col="vec_id",
                            k=8, iters=3)
     ivf_t = {(r["query_id"], r["neighbor_id"])
-             for r in S.ivf_topk(emb, q, nprobe=4, centroids=C,
-                                 **kw).collect()}
+             for r in S.ivf_topk_join(emb, q, nprobe=4, centroids=C,
+                                      **kw).collect()}
     n = len(exact)
     assert n == 50
     # pins are regression tripwires calibrated to MEASURED values on this
@@ -1276,8 +1090,6 @@ def test_native_decoders_contract_on_malformed_payloads(spark):
     for b in bads:
         with _pytest.raises(OSError):
             M._decode_image(b)
-        with _pytest.raises(OSError):
-            M._decode_rgb(b)
     rows = [(f"m{i}", "image", "x", bytearray(b), None, None, None)
             for i, b in enumerate(bads)]
     df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
@@ -1334,13 +1146,15 @@ def test_overlap_jaccard_pairs_equals_bruteforce(spark):
         ).collect()
     }
 
-    # brute force over distinct string shingle sets
-    sets = {
-        r["doc_id"]: set(r["g"])
-        for r in df.select(
-            "doc_id", F.array_distinct(D.shingles(F.col("text"), 3)).alias("g")
-        ).collect()
-    }
+    # brute force over distinct word 3-gram sets (a doc shorter than 3
+    # words is its whole text as one shingle)
+    def word_ngrams(text, n=3):
+        toks = text.lower().split()
+        if len(toks) < n:
+            return {" ".join(toks)}
+        return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+    sets = {doc_id: word_ngrams(text) for doc_id, text in rows}
     dfreq: dict = {}
     for s in sets.values():
         for g in s:

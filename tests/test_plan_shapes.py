@@ -160,14 +160,11 @@ def test_hot_bucket_caps_are_anti_joins_not_windows(spark):
     from openmldb_spark.pipeline import dedup as D
     import numpy as np
 
-    docs = spark.createDataFrame(
-        [(i, f"some text body number {i % 7} repeated") for i in range(64)],
-        "doc_id long, text string",
+    mh = spark.createDataFrame(
+        [(i, [(i % 7) * 100 + j for j in range(8)]) for i in range(64)],
+        "doc_id long, minhash array<long>",
     )
-    mh = D.minhash_signatures(
-        docs, "text", id_col="doc_id", num_hashes=8, shingle_n=3
-    )
-    cand = D.minhash_lsh_pairs(mh, "doc_id", bands=4, max_bucket=10)
+    cand = D.minhash_lsh_candidates(mh, "doc_id", bands=4, max_bucket=10)
     plan = _plan(cand)
     assert "partial_count" in plan, plan
     assert "LeftAnti" in plan, plan

@@ -1,6 +1,6 @@
 """Product quantization (pipeline/pq.py): codebook determinism, encode
-exactness vs a numpy oracle, ADC top-k vs a python oracle, Lloyd's error
-monotonicity, and recall against the exact brute-force ranking."""
+exactness vs a numpy oracle, ADC top-k vs a python oracle, and recall
+against the exact brute-force ranking."""
 
 import numpy as np
 import pytest
@@ -11,7 +11,6 @@ from openmldb_spark.pipeline.pq import (
     pq_encode,
     pq_sampled_codebooks,
     pq_topk,
-    pq_train,
 )
 from openmldb_spark.session import load_table
 
@@ -108,34 +107,15 @@ def test_adc_topk_matches_python_oracle(spark):
     assert got == sorted(want) and len(got) == 10 * 5
 
 
-def test_train_reduces_quantization_error(spark):
-    emb = load_table(spark, SF, "embeddings").limit(200)
-    CB0 = pq_sampled_codebooks(emb, m=8, k=8, **IDK)
-    CB1 = pq_train(emb, m=8, k=8, iters=3, **IDK)
-    assert CB1.shape == CB0.shape
-
-    V = _norm([r["embedding"] for r in emb.select("embedding").collect()])
-
-    def err(CB):
-        codes = _py_encode(V, CB)
-        m, k_, ds = CB.shape
-        rec = np.concatenate(
-            [CB[j][codes[:, j]] for j in range(m)], axis=1
-        )
-        return float(((V - rec) ** 2).sum())
-
-    assert err(CB1) <= err(CB0) + 1e-9
-    assert err(CB1) < err(CB0)  # Lloyd's actually moved on this data
-
-
 def test_pq_recall_against_brute_force(spark):
     emb = load_table(spark, SF, "embeddings")
     queries = emb.where(F.col("vec_id") < 20)
     # random unit vectors are PQ's WORST case (no cluster structure to
-    # exploit); m=16 x k=256 (16 bytes/vector — a 16x cut vs float32[64],
-    # far more at production dims) measures recall@10 ~0.84 here, pinned
-    # with margin. Real embedding corpora sit well above this floor.
-    CB = pq_train(emb, m=16, k=256, iters=2, **IDK)
+    # exploit); m=16 x k=256 sampled codebooks (16 bytes/vector — a 16x
+    # cut vs float32[64], far more at production dims) measure recall@10
+    # 0.795 here, pinned with margin. Real embedding corpora sit well
+    # above this floor.
+    CB = pq_sampled_codebooks(emb, m=16, k=256, **IDK)
     enc = pq_encode(emb, vec_col="embedding", codebooks=CB)
     approx = pq_topk(
         enc, queries, corpus_id="vec_id", code_col="pq_code",
@@ -170,48 +150,3 @@ def test_empty_queries_and_compression_shape(spark):
     assert len(row["pq_code"]) == 8 and len(row["embedding"]) == 64
 
 
-def test_rerank_full_factor_equals_brute_force(spark):
-    """With a shortlist covering the whole corpus, exact re-rank must
-    equal brute_force_topk row for row; at the default factor, recall is
-    at least plain ADC's (re-ordering within the shortlist can only fix
-    approximation inversions)."""
-    emb = load_table(spark, SF, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
-    CB = pq_sampled_codebooks(emb, m=8, k=16, **IDK)
-    enc = pq_encode(emb, vec_col="embedding", codebooks=CB)
-    n = emb.count()
-
-    from openmldb_spark.pipeline.pq import pq_topk_rerank
-
-    kw = dict(
-        corpus_id="vec_id", code_col="pq_code", vec_col="embedding",
-        query_id="vec_id", query_vec="embedding", codebooks=CB, k=5,
-    )
-    full = pq_topk_rerank(enc, emb, queries, rerank_factor=n, **kw)
-    exact = S.brute_force_topk(
-        emb, queries, corpus_id="vec_id", corpus_vec="embedding",
-        query_id="vec_id", query_vec="embedding", k=5,
-    )
-    key = lambda df: sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cos"], 9), r["rank"])
-        for r in df.collect()
-    )
-    assert key(full) == key(exact) and len(key(full)) == 50
-
-    adc = pq_topk(
-        enc, queries, corpus_id="vec_id", code_col="pq_code",
-        query_id="vec_id", query_vec="embedding", codebooks=CB, k=5,
-    )
-    rr = pq_topk_rerank(enc, emb, queries, rerank_factor=4, **kw)
-    truth = {}
-    for r in exact.collect():
-        truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-
-    def recall(df):
-        hits = tot = 0
-        for r in df.collect():
-            tot += 1
-            hits += r["neighbor_id"] in truth[r["query_id"]]
-        return hits / tot
-
-    assert recall(rr) >= recall(adc)

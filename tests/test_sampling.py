@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from openmldb_spark.pipeline import sampling as SA
 
@@ -12,25 +11,6 @@ from openmldb_spark.pipeline import sampling as SA
 def docs(spark):
     rows = [(i, f"lang{i % 3}", (i * 37) % 950 + 50) for i in range(300)]
     return spark.createDataFrame(rows, "doc_id long, lang string, n_tokens long")
-
-
-def test_hash_fraction_deterministic_and_partition_invariant(docs):
-    a = {r.doc_id for r in SA.hash_fraction(docs, "doc_id", 0.4, seed=7).collect()}
-    b = {
-        r.doc_id
-        for r in SA.hash_fraction(docs.repartition(13), "doc_id", 0.4, seed=7).collect()
-    }
-    assert a == b  # pure function of the id — partitioning never matters
-    assert 0.25 < len(a) / 300 < 0.55
-    c = {r.doc_id for r in SA.hash_fraction(docs, "doc_id", 0.4, seed=8).collect()}
-    assert c != a  # a different seed is an independent selection
-    # a larger fraction at the same seed is a superset (threshold grows)
-    d = {r.doc_id for r in SA.hash_fraction(docs, "doc_id", 0.6, seed=7).collect()}
-    assert a <= d
-    assert SA.hash_fraction(docs, "doc_id", 0.0).count() == 0
-    assert SA.hash_fraction(docs, "doc_id", 1.0).count() == 300
-    with pytest.raises(ValueError):
-        SA.hash_fraction(docs, "doc_id", 1.5)
 
 
 def test_stratified_sample_thresholds(docs):
@@ -126,36 +106,6 @@ def _greedy_model(tokens, budget):
         packs.append(cur_id)
         cur += t
     return packs
-
-
-def test_pack_greedy_matches_model(docs):
-    out = SA.pack_greedy(
-        docs, token_col="n_tokens", order_col="doc_id", budget=2500, by="lang"
-    ).collect()
-    by_lang = {}
-    for r in sorted(out, key=lambda r: (r.lang, r.doc_id)):
-        by_lang.setdefault(r.lang, []).append(r)
-    for lang, rows in by_lang.items():
-        model = _greedy_model([r.n_tokens for r in rows], 2500)
-        assert [r.pack_id for r in rows] == model, lang
-        # no pack exceeds the budget unless it is a single oversized doc
-        sizes = {}
-        for r in rows:
-            sizes[r.pack_id] = sizes.get(r.pack_id, 0) + r.n_tokens
-        for pid, total in sizes.items():
-            members = [r for r in rows if r.pack_id == pid]
-            assert total <= 2500 or len(members) == 1
-
-
-def test_pack_greedy_oversized_doc_gets_own_pack(spark):
-    df = spark.createDataFrame(
-        [(1, "a", 100), (2, "a", 9999), (3, "a", 100)],
-        "doc_id long, lang string, n_tokens long",
-    )
-    out = {r.doc_id: r.pack_id for r in SA.pack_greedy(
-        df, token_col="n_tokens", order_col="doc_id", budget=500, by="lang"
-    ).collect()}
-    assert out == {1: 0, 2: 1, 3: 2}
 
 
 def test_budget_chunks_global_one_physical_assignment(docs):

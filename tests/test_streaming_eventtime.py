@@ -216,45 +216,3 @@ def test_session_window_drops_beyond_watermark(spark, tmp_path):
     assert 2_000 not in by_start        # the dropped row never re-emits
 
 
-def test_stream_exact_dedup_within_watermark(spark, tmp_path):
-    from openmldb_spark.streaming.eventtime import stream_exact_dedup
-
-    src = tmp_path / "dsrc"
-    src.mkdir()
-    stream = (
-        spark.readStream.schema("k string, ts bigint, v double")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
-    out = stream_exact_dedup(
-        stream, keys=["k"], ts_col="ts", watermark="10 seconds"
-    )
-    got: list = []
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(lambda df, bid: got.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "dckpt"))
-        .start()
-    )
-    batches = [
-        [("a", 1_000, 1.0), ("a", 2_000, 2.0), ("b", 1_000, 3.0)],  # dup a
-        [("a", 5_000, 4.0)],                       # still within horizon
-        [("c", 120_000, 5.0)],                     # watermark -> 110s
-        [("a", 130_000, 6.0)],                     # a's state expired
-    ]
-    try:
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(
-                rows, "k string, ts bigint, v double"
-            ).coalesce(1).write.parquet(str(src / f"b{i}"))
-            _drain(q)
-    finally:
-        q.stop()
-    per_key: dict = {}
-    for r in got:
-        per_key.setdefault(r["k"], []).append(r["v"])
-    # within the horizon only ONE `a` survives; after expiry it re-admits
-    assert per_key["b"] == [3.0] and per_key["c"] == [5.0]
-    assert len(per_key["a"]) == 2 and per_key["a"][0] == 1.0
-    assert per_key["a"][1] == 6.0

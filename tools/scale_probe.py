@@ -209,61 +209,6 @@ def probes():
             > -1
         )
 
-    def clusters_reps(spark, sf):
-        # r11 arm (the pick_representatives broadcast claim-check): LSH
-        # pairs -> connected components -> quality-aware representatives.
-        # The claim: the iteration and the representative join shuffle
-        # PAIRS-sized data, never corpus-sized (the docs side of the
-        # representative join is broadcast-joined, plan-pinned in
-        # tests/test_clusters.py). Planted duplicates are bounded PAIRS by
-        # construction, so the edge set grows ~linearly with the corpus
-        # and shuffle totals must too.
-        from openmldb_spark.pipeline import dedup as D
-        from openmldb_spark.pipeline import similarity as S
-        from openmldb_spark.pipeline.clusters import (
-            dedup_clusters,
-            pick_representatives,
-        )
-
-        d = S._spread(load_table(spark, sf, "documents"), 32)
-        sigs = D.minhash_signatures(
-            d.select("doc_id", "text"), "text",
-            id_col="doc_id", num_hashes=32, shingle_n=3,
-        )
-        pairs = D.minhash_lsh_pairs(
-            sigs, "doc_id", bands=8, min_jaccard_est=0.7
-        )
-        clusters = dedup_clusters(pairs)
-        docs = d.select(
-            "doc_id", F.length("text").cast("double").alias("q")
-        )
-        return pick_representatives(docs, clusters, "doc_id", score_col="q")
-
-    def incremental_dedup(spark, sf):
-        # r11 arm (pipeline/incremental.py claim-check): a FIXED 500-doc
-        # ingestion batch against a corpus index that grows 10x. The
-        # claim: per-batch cost is O(batch x bands) plus the bucket join —
-        # the batch side's shuffle is CONSTANT as the corpus grows; only
-        # the index scan/join side grows linearly.
-        from openmldb_spark.pipeline import similarity as S
-        from openmldb_spark.pipeline.incremental import (
-            incremental_near_dups,
-            minhash_index,
-            minhash_signature_table,
-        )
-
-        d = S._spread(load_table(spark, sf, "documents"), 32)
-        corpus = d.where(F.col("doc_id") >= 500)
-        batch = d.where(F.col("doc_id") < 500)  # fixed at both scales
-        idx = minhash_index(corpus, "doc_id", "text",
-                            num_hashes=32, bands=8, shingle_n=3)
-        sigs = minhash_signature_table(corpus, "doc_id", "text",
-                                       num_hashes=32, shingle_n=3)
-        return incremental_near_dups(
-            batch, idx, "doc_id", "text", signatures=sigs,
-            num_hashes=32, bands=8, shingle_n=3, min_jaccard_est=0.5,
-        )
-
     def ivf_drift_stats(spark, sf):
         # r13 arm (annindex drift-observability claim-check): the
         # build-time baseline pass — zero-shuffle assignment + per-bucket
@@ -320,8 +265,6 @@ def probes():
         "embedding_lsh_banded": lsh_banded,
         "embedding_ivf_topk_join": ivf_join_arm,
         "budget_chunks_global": budget_global,
-        "clusters_reps": clusters_reps,
-        "incremental_dedup": incremental_dedup,
         "ivf_drift_stats": ivf_drift_stats,
         "pq_adc_topk": pq_adc_topk,
     }
