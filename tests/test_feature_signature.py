@@ -53,6 +53,60 @@ def test_libsvm_format(spark, df):
     assert got[3] == "1 2:7.000000"
 
 
+def _sql_inst(spark, df, call):
+    out = sql(spark, f"SELECT id, {call} AS inst FROM t", {"t": df})
+    return {r["id"]: r["inst"] for r in out.collect()}
+
+
+def test_sql_csv_and_libsvm_match_dataframe_api(spark, df):
+    """The SQL lowering and the DataFrame API share slot numbering and
+    value formatting."""
+    api = df.select(
+        "id",
+        FS.csv_format(FS.binary_label(F.col("label")), FS.continuous(F.col("f1")),
+                      FS.continuous(F.col("f3"))).alias("csv"),
+        FS.libsvm(FS.binary_label(F.col("label")), FS.continuous(F.col("f1")),
+                  FS.continuous(F.col("f3"))).alias("svm"),
+    ).collect()
+    args = "binary_label(label), continuous(f1), continuous(f3)"
+    assert _sql_inst(spark, df, f"csv({args})") == {r["id"]: r["csv"] for r in api}
+    assert _sql_inst(spark, df, f"libsvm({args})") == {r["id"]: r["svm"] for r in api}
+
+
+def test_libsvm_bucketed_discrete(spark, df):
+    """A bucketed discrete occupies slots 1..10 (slot 1 + pmod(hash, 10),
+    value 1); the continuous after it lands at slot 11."""
+    got = _sql_inst(
+        spark, df, "libsvm(binary_label(label), discrete(f2, 10), continuous(f3))"
+    )
+    h = {r["id"]: r["h"] for r in
+         df.select("id", F.pmod(F.xxhash64("f2"), F.lit(10)).alias("h")).collect()}
+    assert got[2] == f"0 {1 + h[2]}:1 11:3.250000"
+    assert got[1] == f"1 {1 + h[1]}:1"
+
+
+def test_gcformat_shape(spark, df):
+    """'<label> <index>| slot:hash(slot):value ...' for continuous and
+    'slot:hash(value)' for discrete; a NULL continuous drops its feature
+    but keeps its slot."""
+    got = _sql_inst(
+        spark, df,
+        "gcformat(multiclass_label(label), gcformat_index(id), "
+        "continuous(f1), discrete(f2))",
+    )
+    hv = {r["id"]: (r["s1"], r["d"]) for r in df.select(
+        "id", F.xxhash64(F.lit(1).cast("long")).alias("s1"),
+        F.xxhash64("f2").alias("d"),
+    ).collect()}
+    s1, d2 = hv[2]
+    assert got[2] == f"0 2| 1:{s1}:2.000000 2:{d2}"
+    assert got[3] == f"1 3| 2:{hv[3][1]}"
+    for r in got.values():
+        label, rest = r.split(" ", 1)
+        idx, _ = rest.split("| ")
+        assert label in ("0", "1") and idx.strip().isdigit()
+
+
 def test_window_split(spark):
     rows = [
         (1, "A", "a,b", 10),

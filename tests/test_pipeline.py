@@ -57,6 +57,91 @@ def test_simhash_near_dups_close(spark, docs):
     assert d_near < d_far
 
 
+def test_portable_token_hash_is_md5_prefix(spark):
+    """The portable hash is the first 15 hex digits of md5 read base-16 —
+    the definition any SQL engine with md5 can recompute."""
+    import hashlib
+
+    toks = ["", "a", "spark", "läuft", "日本語"]
+    df = spark.createDataFrame([(t,) for t in toks], "t string")
+    got = {r["t"]: r["h"] for r in
+           df.select("t", D.portable_token_hash(F.col("t")).alias("h")).collect()}
+    assert got == {
+        t: int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in toks
+    }
+
+
+def test_simhash_portable_matches_python_vote(spark, docs):
+    """With the portable token hash, every fingerprint bit equals the
+    per-bit majority vote over the lower-cased whitespace tokens (bit set
+    iff more than half the tokens set it)."""
+    import hashlib
+
+    def vote(text):
+        hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
+              for t in text.lower().split()]
+        return sum(1 << j for j in range(64)
+                   if 2 * sum((h >> j) & 1 for h in hs) > len(hs))
+
+    got = {r["doc_id"]: r["simhash"] for r in
+           D.simhash(docs, "text", token_hash=D.portable_token_hash).collect()}
+    want = {r["doc_id"]: vote(r["text"]) for r in docs.collect()}
+    assert got == want
+
+
+def test_simhash_empty_and_null_text_is_zero(spark):
+    df = spark.createDataFrame([(1, ""), (2, None), (3, "   ")], "doc_id long, text string")
+    assert {r["doc_id"]: r["simhash"] for r in D.simhash(df, "text").collect()} == {
+        1: 0, 2: 0, 3: 0
+    }
+
+
+def test_exact_dedup_multi_column_key_keeps_min_id(spark):
+    df = spark.createDataFrame(
+        [(5, "x", 1), (2, "x", 1), (3, "x", 2), (9, "y", 1), (1, "y", 1)],
+        "id long, a string, b int",
+    )
+    out = D.exact_dedup(df, ["a", "b"], id_col="id")
+    assert sorted(r["id"] for r in out.collect()) == [1, 2, 3]
+
+
+def test_minhash_dedup_drops_duplicates(spark, docs):
+    """The MinHash-banding arm (exact=False) still verifies by exact
+    Jaccard: the exact copy goes, its min-id twin and distinct docs stay."""
+    out = D.jaccard_dedup(docs, "doc_id", "text", num_hashes=32, bands=16,
+                          shingle_n=3, threshold=0.9, exact=False)
+    ids = {r["doc_id"] for r in out.collect()}
+    assert 1 in ids and 4 not in ids
+    assert 3 in ids and 5 in ids
+
+
+#: 8-slot signatures over 4 bands of 2: doc 2 shares band 0 with doc 1,
+#: doc 3 shares band 3 with doc 1, doc 4 shares nothing, doc 5 == doc 1
+_SIGS = [
+    (1, [1, 2, 3, 4, 5, 6, 7, 8]),
+    (2, [1, 2, 9, 9, 9, 9, 9, 9]),
+    (3, [0, 0, 0, 0, 0, 0, 7, 8]),
+    (4, [10, 11, 12, 13, 14, 15, 16, 17]),
+    (5, [1, 2, 3, 4, 5, 6, 7, 8]),
+]
+
+
+def test_minhash_lsh_candidates_pair_on_any_shared_band(spark):
+    mh = spark.createDataFrame(_SIGS, "doc_id long, minhash array<long>")
+    got = {(r["a"], r["b"]) for r in
+           D.minhash_lsh_candidates(mh, "doc_id", bands=4).collect()}
+    assert got == {(1, 2), (1, 3), (1, 5), (2, 5), (3, 5)}
+
+
+def test_minhash_lsh_candidates_max_bucket_drops_hot_buckets(spark):
+    """Band-0 and band-3 buckets hold three docs each; with max_bucket=2
+    only the pair co-bucketed in the two-doc bands (1, 5) survives."""
+    mh = spark.createDataFrame(_SIGS, "doc_id long, minhash array<long>")
+    got = {(r["a"], r["b"]) for r in
+           D.minhash_lsh_candidates(mh, "doc_id", bands=4, max_bucket=2).collect()}
+    assert got == {(1, 5)}
+
+
 def test_brute_force_topk(spark):
     vecs = [
         (1, [1.0, 0.0, 0.0]),
@@ -167,6 +252,56 @@ def test_fingerprint_stable(spark, docs):
     fps = {r["doc_id"]: r["fp"] for r in out}
     assert fps[1] == fps[4]
     assert fps[1] != fps[3]
+
+
+def test_fingerprint_is_md5_hex(spark, docs):
+    import hashlib
+
+    got = {r["doc_id"]: r["fp"] for r in
+           docs.select("doc_id", T.fingerprint(F.col("text")).alias("fp")).collect()}
+    assert got == {r["doc_id"]: hashlib.md5(r["text"].encode()).hexdigest()
+                   for r in docs.collect()}
+
+
+def test_tokens_split_on_whitespace_runs(spark):
+    df = spark.createDataFrame([("  a\tb \n\nc  ",), ("",)], "text string")
+    got = [r["t"] for r in df.select(T.tokens(F.col("text")).alias("t")).collect()]
+    assert got == [["a", "b", "c"], []]
+
+
+@pytest.mark.parametrize(
+    "text, lang",
+    [
+        ("The cat and the dog", "en"),
+        ("Der Hund und die Katze", "de"),
+        ("Le chat et les chiens dans la maison", "fr"),
+        ("El perro y los gatos con una pelota", "es"),
+        ("xyzzy 12345 plugh", "und"),
+        ("the der", "en"),  # a tied vote keeps the earlier language
+    ],
+    ids=["en", "de", "fr", "es", "und", "tie_keeps_first"],
+)
+def test_lang_id_stopword_vote(spark, text, lang):
+    df = spark.createDataFrame([(text,)], "text string")
+    (row,) = df.select(T.lang_id(F.col("text")).alias("g")).collect()
+    assert row["g"] == lang
+
+
+def test_quality_features_golden(spark):
+    """'The cat, 42 dogs.': 17 chars, 4 tokens (3+4+2+5 chars), 2 punct,
+    2 digits, 1 upper, 1 en stopword; score = punct 0.2 + digit 0.1 +
+    stopword 0.3 (too short for the length 0.4)."""
+    df = spark.createDataFrame([(1, "The cat, 42 dogs."), (2, "")], "id long, text string")
+    got = {r["id"]: r for r in T.quality_features(df).collect()}
+    r = got[1]
+    assert (r["n_chars_calc"], r["n_tokens"], r["avg_token_len"]) == (17, 4, 3.5)
+    assert (r["punct_ratio"], r["digit_ratio"], r["upper_ratio"]) == (0.1176, 0.1176, 0.0588)
+    assert (r["stopword_ratio"], r["quality_score"]) == (0.25, 0.6)
+    e = got[2]  # empty doc: every ratio is 0, not a division by zero
+    assert (e["n_chars_calc"], e["n_tokens"], e["avg_token_len"]) == (0, 0, 0.0)
+    assert (e["punct_ratio"], e["digit_ratio"], e["stopword_ratio"]) == (0.0, 0.0, 0.0)
+    assert e["quality_score"] == 0.3
+    assert "__qf_toks" not in T.quality_features(df).columns
 
 
 def test_multimodal_plumbing(spark):
@@ -441,6 +576,55 @@ def test_ivf_topk_join_full_probe_equals_bruteforce(spark):
     ivf = {(r["query_id"], r["rank"]): r["neighbor_id"]
            for r in S.ivf_topk_join(df, q, n_centroids=5, nprobe=5, **kw).collect()}
     assert ivf == exact
+
+
+def test_ivf_topk_clustered_recall(spark):
+    """On well-separated clusters a 3-probe search over 12 hash-sampled
+    centroids still finds the exact in-cluster neighbours (the point of
+    the bucket structure)."""
+    import random
+
+    rng = random.Random(9)
+    rows = []
+    for c in range(4):                       # 4 orthogonal-ish clusters
+        base = [0.0] * 8
+        base[c * 2] = 1.0
+        for i in range(25):
+            rows.append((c * 100 + i, [b + rng.uniform(-0.05, 0.05) for b in base]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.where(F.col("vec_id").isin(0, 100, 200, 300))
+    kw = dict(corpus_id="vec_id", corpus_vec="embedding",
+              query_id="vec_id", query_vec="embedding", k=5)
+    exact = {(r["query_id"], r["rank"]): r["neighbor_id"]
+             for r in S.brute_force_topk(df, q, **kw).collect()}
+    ivf = {(r["query_id"], r["rank"]): r["neighbor_id"]
+           for r in S.ivf_topk_join(df, q, n_centroids=12, nprobe=3, **kw).collect()}
+    hits = sum(1 for key, nb in exact.items() if ivf.get(key) == nb)
+    assert hits / len(exact) >= 0.9, f"recall {hits}/{len(exact)}"
+
+
+@pytest.mark.parametrize(
+    "a, b",
+    [([1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
+     ([1.0, 0.0], [0.0, 1.0]),
+     ([1.0, 2.0], [-2.0, -4.0]),
+     ([3.0, 4.0], [3.0, 4.0])],
+    ids=["generic", "orthogonal", "antiparallel", "identical"],
+)
+def test_dot_norm_cosine_match_numpy(spark, a, b):
+    import numpy as np
+
+    df = spark.createDataFrame([(a, b)], "a array<double>, b array<double>")
+    (r,) = df.select(
+        S.dot(F.col("a"), F.col("b")).alias("d"),
+        S.l2_norm(F.col("a")).alias("n"),
+        S.cosine(F.col("a"), F.col("b")).alias("c"),
+    ).collect()
+    va, vb = np.array(a), np.array(b)
+    assert r["d"] == pytest.approx(float(va @ vb), rel=1e-12)
+    assert r["n"] == pytest.approx(float(np.linalg.norm(va)), rel=1e-12)
+    cos = float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb)))
+    assert r["c"] == pytest.approx(cos, rel=1e-12, abs=1e-15)
 
 
 def _tiny_png(pixels, width, height):

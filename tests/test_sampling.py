@@ -25,6 +25,40 @@ def test_stratified_sample_thresholds(docs):
     assert 20 < len(by_lang.get("lang2", ())) < 80  # ~half
 
 
+def test_default_fraction_deterministic_and_partition_invariant(docs):
+    """One stratum at ``default`` is a plain hash-fraction sample: a pure
+    function of (id, seed), so partitioning never matters, a new seed is
+    an independent selection and a larger fraction is a superset."""
+
+    def ids(df, frac, seed=7):
+        return {r.doc_id for r in SA.stratified_sample(
+            df, "lang", {}, id_col="doc_id", default=frac, seed=seed
+        ).collect()}
+
+    a = ids(docs, 0.4)
+    assert a == ids(docs.repartition(13), 0.4)
+    assert 0.25 < len(a) / 300 < 0.55
+    assert ids(docs, 0.4, seed=8) != a
+    assert a <= ids(docs, 0.6)
+    assert ids(docs, 0.0) == set() and len(ids(docs, 1.0)) == 300
+
+
+def test_stratified_sample_rejects_out_of_range_fraction(docs):
+    with pytest.raises(ValueError, match="lang0"):
+        SA.stratified_sample(docs, "lang", {"lang0": 1.5}, id_col="doc_id")
+    with pytest.raises(ValueError, match="lang1"):
+        SA.stratified_sample(docs, "lang", {"lang1": -0.1}, id_col="doc_id")
+
+
+def test_stratified_sample_keeps_null_ids_at_full_fraction(spark):
+    """A NULL id hashes through a sentinel, so fraction 1.0 is identity."""
+    df = spark.createDataFrame(
+        [(None, "x"), (1, "x"), (None, "y")], "doc_id long, lang string"
+    )
+    out = SA.stratified_sample(df, "lang", {"x": 1.0, "y": 1.0}, id_col="doc_id")
+    assert out.count() == 3
+
+
 def test_budget_chunks_matches_model(docs):
     out = SA.budget_chunks(
         docs, token_col="n_tokens", order_col="doc_id", budget=3000, by="lang"

@@ -197,3 +197,125 @@ def test_window_sql_over_batch_table(spark):
     # plain GROUP BY still routes to the batch dialect (no window call)
     plain = eng.execute("SELECT pk, sum(v) AS sv FROM ev GROUP BY pk")
     assert sorted(map(tuple, plain.collect())) == [("a", 8.0), ("b", 7.0)]
+
+
+# -- the window-SQL surface over a batch table vs a pure-Python model ------
+
+#: (pk, ts, v): v values are binary fractions, so every sum/avg is exact in
+#: any summation order; no ts sits on a tumble/hop bound or a session gap
+_EV_ROWS = [
+    ("a", 1000, 1.0), ("a", 4000, 2.0), ("a", 11500, -3.0),
+    ("a", 13000, 5.0), ("a", 31000, 4.0),
+    ("b", 2000, 7.0), ("b", 6500, 0.5), ("b", 26000, 2.5),
+]
+
+_WINDOW_SQL = {
+    "tumble": "tumble(ts, '10s')",
+    "hop": "hop(ts, '5s', '10s')",
+    "session": "session_window(ts, '4s')",
+}
+
+
+def _model_windows(kind, rows):
+    """{(pk, start, end): [v, ...]} for the windows of ``_WINDOW_SQL``."""
+    out: dict = {}
+    if kind == "session":
+        by_pk: dict = {}
+        for pk, ts, v in sorted(rows):
+            by_pk.setdefault(pk, []).append((ts, v))
+        for pk, evs in by_pk.items():
+            cur = []
+            for ts, v in evs:
+                if cur and ts >= cur[-1][0] + 4000:
+                    out[(pk, cur[0][0], cur[-1][0] + 4000)] = [x for _, x in cur]
+                    cur = []
+                cur.append((ts, v))
+            out[(pk, cur[0][0], cur[-1][0] + 4000)] = [x for _, x in cur]
+        return out
+    size, slide = (10000, 10000) if kind == "tumble" else (10000, 5000)
+    for pk, ts, v in rows:
+        start = ts // slide * slide
+        while start > ts - size:
+            out.setdefault((pk, start, start + size), []).append(v)
+            start -= slide
+    return out
+
+
+_MODEL_AGGS = {
+    "sum": sum,
+    "count": len,
+    "avg": lambda vs: sum(vs) / len(vs),
+    "min": min,
+    "max": max,
+}
+
+
+@pytest.fixture(scope="module")
+def ev_engine(spark):
+    from openmldb_spark.engine import Engine
+
+    eng = Engine(spark)
+    eng.register("ev", spark.createDataFrame(_EV_ROWS, "pk string, ts bigint, v double"))
+    return eng
+
+
+@pytest.mark.parametrize("agg", list(_MODEL_AGGS))
+@pytest.mark.parametrize("kind", list(_WINDOW_SQL))
+def test_window_sql_batch_matches_model(ev_engine, kind, agg):
+    """Each window kind x each aggregate over a batch table equals the
+    Python model of Spark's window assignment (tumble/hop: half-open
+    [start, start + size) at multiples of the slide; session: events
+    closer than the gap merge, end = last event + gap)."""
+    out = ev_engine.execute(
+        f"SELECT pk, window_start, window_end, {agg}(v) AS x FROM ev "
+        f"GROUP BY {_WINDOW_SQL[kind]}, pk"
+    )
+    got = sorted(map(tuple, out.collect()))
+    want = sorted(
+        (pk, s, e, _MODEL_AGGS[agg](vs))
+        for (pk, s, e), vs in _model_windows(kind, _EV_ROWS).items()
+    )
+    assert got == want
+
+
+@pytest.mark.parametrize("size", ["'10s'", "'10000'", "10000", "'10 seconds'"])
+def test_window_sql_interval_spellings_agree(ev_engine, size):
+    """Dialect interval spellings ('10s', bare ms, quoted or not) and
+    Spark's own ('10 seconds') name the same tumble size."""
+    out = ev_engine.execute(
+        f"SELECT pk, window_start, count(*) AS n FROM ev "
+        f"GROUP BY tumble(ts, {size}), pk"
+    )
+    want = sorted(
+        (pk, s, len(vs)) for (pk, s, _), vs in _model_windows("tumble", _EV_ROWS).items()
+    )
+    assert sorted(map(tuple, out.collect())) == want
+
+
+@pytest.mark.parametrize(
+    "sql, match",
+    [
+        ("SELECT pk, sum(v) AS s FROM ev GROUP BY tumble(ts, '10s'), pk "
+         "HAVING sum(v) > 1", "no joins/OVER/HAVING/LIMIT"),
+        ("SELECT pk, sum(v) AS s FROM ev GROUP BY tumble(ts, '10s'), pk "
+         "LIMIT 1", "no joins/OVER/HAVING/LIMIT"),
+        ("SELECT pk, sum(v) AS s FROM ev "
+         "GROUP BY tumble(ts, '10s'), hop(ts, '5s', '10s'), pk",
+         "one window call per GROUP BY"),
+        ("SELECT pk, sum(v) AS s FROM ev GROUP BY hop(ts, '10s'), pk",
+         "hop takes 3 arguments"),
+        ("SELECT sum(v) AS s FROM ev GROUP BY tumble(ts, '10s'), upper(pk)",
+         "GROUP BY key must be a plain column"),
+        ("SELECT v, sum(v) AS s FROM ev GROUP BY tumble(ts, '10s'), pk",
+         "non-aggregate item 'v'"),
+        ("SELECT * FROM ev GROUP BY tumble(ts, '10s'), pk",
+         "explicit items"),
+        ("SELECT pk, stddev(v) AS s FROM ev GROUP BY tumble(ts, '10s'), pk",
+         "unsupported streaming select item"),
+    ],
+    ids=["having", "limit", "two_windows", "hop_arity", "expr_key",
+         "non_key_item", "star", "unsupported_agg"],
+)
+def test_window_sql_rejects_unsupported_shapes(ev_engine, sql, match):
+    with pytest.raises(ValueError, match=match):
+        ev_engine.execute(sql)
