@@ -5,8 +5,9 @@ The reference routes statements via CmdType (``node_enum.h:282-330``):
 DDL goes to the nameserver, offline DML (LOAD DATA / SELECT INTO / SELECT)
 to Spark jobs via TaskManager, DEPLOY compiles a named request-mode
 procedure. Here everything is one process: an in-memory catalog of
-DataFrames + table metadata, and ``execute(sql)`` dispatching on the first
-keywords.
+DataFrames + table metadata, and ``execute(sql)``: one classifier
+(``core._classify``, also behind ``Engine.statement_kind``) checks the
+statement's grammar and names the handler that runs it.
 
 Statements:
 
@@ -31,26 +32,7 @@ nothing else — the RequestUnion merge, train/serve consistent by
 construction.
 """
 
-from openmldb_spark.engine.core import Engine, _NsView, _TTLView  # noqa: F401
-from openmldb_spark.engine.deploy import SqlDeployment  # noqa: F401
-from openmldb_spark.engine._helpers import (  # noqa: F401
-    _TYPES,
-    _ALIAS_STOPWORDS,
-    _BOOL_OPTS,
-    _KNOWN_VARIABLES,
-    _LOAD_OPTS,
-    _OUTFILE_OPTS,
-    _check_options,
-    _coerce,
-    _declared_aliases,
-    _infer_fmt,
-    _like_to_regex,
-    _literal,
-    _match_paren,
-    _parse_coltype,
-    _parse_options,
-    _split_commas,
-    _split_statements,
-)
+from openmldb_spark.engine.core import Engine
+from openmldb_spark.engine.serving import SqlDeployment
 
 __all__ = ["Engine", "SqlDeployment"]

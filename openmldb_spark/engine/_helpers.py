@@ -1,22 +1,11 @@
 """Shared constants and token/option helpers for the engine package."""
 
-
 from __future__ import annotations
 
-import copy
-import datetime
 import re
-from typing import Optional, Sequence
+from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from openmldb_spark.catalog import IndexDef, TableDef
-from openmldb_spark.jobs import JOB_SCHEMA, JobManager
-from openmldb_spark.sources.loader import load_data, select_into
-from openmldb_spark.sql import parser as P
-from openmldb_spark.sql.lowering import Lowerer
-from openmldb_spark.sql.parser import Tok, render, tokenize
+from openmldb_spark.sql.parser import Tok, render
 
 _TYPES = {
     "bool": "boolean", "boolean": "boolean",
@@ -268,9 +257,6 @@ def _parse_options(opts_s: str, quoted: Optional[set] = None) -> dict[str, str]:
     return opts
 
 
-#: option keys the reference's LOAD DATA / SELECT INTO accept
-#: (LOAD_DATA_STATEMENT.md:53-66 / SELECT_INTO_STATEMENT.md) — unknown
-#: keys are rejected (test_out_in id 12)
 #: SET-able system variables: the reference's supported set
 #: (SET_STATEMENT.md) plus this repo's ttl_now_ms extension (pins "now"
 #: for deterministic TTL tests)
@@ -285,6 +271,12 @@ _KNOWN_VARIABLES = {
     "ttl_now_ms",
 }
 
+#: where a SELECT's ``INTO OUTFILE '<path>' [OPTIONS(...)]`` tail starts
+_INTO_OUTFILE = re.compile(r"\bINTO\s+OUTFILE\s+", re.IGNORECASE)
+
+#: option keys the reference's LOAD DATA / SELECT INTO accept
+#: (LOAD_DATA_STATEMENT.md:53-66 / SELECT_INTO_STATEMENT.md) — unknown
+#: keys are rejected (test_out_in id 12)
 _LOAD_OPTS = {"format", "delimiter", "header", "null_value", "quote", "mode", "deep_copy", "load_mode", "thread"}
 _OUTFILE_OPTS = {"format", "delimiter", "header", "null_value", "quote", "mode", "coalesce"}
 _BOOL_OPTS = {"header", "deep_copy"}

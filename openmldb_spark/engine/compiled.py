@@ -59,9 +59,6 @@ DEFAULT_STAGING_BYTES = 262_144
 # concurrently with a serve sees its own AQE/partition settings (swapping
 # confs on the shared session per serve was session-global and racy).
 
-#: shuffle fan-out of the serving session (default 1), re-read per serve
-SERVING_SHUFFLE_PARTITIONS_CONF = "spark.openmldb.serving.shufflePartitions"
-
 #: simple types the JVM text staging can round-trip exactly (base64 cell
 #: -> decode -> cast, all Catalyst expressions); a deployment whose input
 #: schema has nested/interval types serves through the per-call path
@@ -263,13 +260,10 @@ def _serving_session(spark):
         except Exception:  # non-modifiable/static conf: context-level anyway
             pass
     clone.conf.set("spark.sql.adaptive.enabled", "false")
-    clone.conf.set(
-        "spark.sql.shuffle.partitions",
-        # default 1: serve shuffles carry request-row-sized data (history
-        # is key-pruned), so even the 2-task fan-out only adds scheduling
-        # latency — measured ~25% p50 on a two-window deploy (r12 A/B)
-        spark.conf.get(SERVING_SHUFFLE_PARTITIONS_CONF, "1"),
-    )
+    # 1: serve shuffles carry request-row-sized data (history is
+    # key-pruned), so even a 2-task fan-out only adds scheduling latency —
+    # measured ~25% p50 on a two-window deploy (r12 A/B)
+    clone.conf.set("spark.sql.shuffle.partitions", "1")
     return clone
 
 
@@ -399,13 +393,10 @@ class CompiledRequestPlan:
     #: engine session onto the serving clone before every serve (a few
     #: gets, rarely a set), so a post-deploy ``SET`` reaches compiled
     #: serves exactly like uncompiled ones. Planning confs (AQE, shuffle
-    #: fan-out) intentionally stay pinned to the serving profile; the
-    #: serve-time shuffle fan-out itself is the one planning knob that
-    #: re-syncs (SERVING_SHUFFLE_PARTITIONS_CONF below), since it is this
-    #: module's own documented surface. Anything semantics-bearing left
-    #: off this list silently diverges between the two paths (ADVICE r12
-    #: named caseSensitive / timeParserPolicy / mapKeyDedupPolicy — now
-    #: listed).
+    #: fan-out) intentionally stay pinned to the serving profile. Anything
+    #: semantics-bearing left off this list silently diverges between the
+    #: two paths (ADVICE r12 named caseSensitive / timeParserPolicy /
+    #: mapKeyDedupPolicy — now listed).
     _SEMANTIC_CONFS = (
         "spark.sql.session.timeZone",
         "spark.sql.ansi.enabled",
@@ -428,12 +419,6 @@ class CompiledRequestPlan:
                 v = self.spark.conf.get(k, None)
                 if v is not None and self._serve_spark.conf.get(k, None) != v:
                     self._serve_spark.conf.set(k, v)
-            # the serving fan-out knob is re-read per serve so a later
-            # SET takes effect without redeploying (ADVICE r12: it froze
-            # at compile time)
-            fan = self.spark.conf.get(SERVING_SHUFFLE_PARTITIONS_CONF, "1")
-            if self._serve_spark.conf.get("spark.sql.shuffle.partitions") != fan:
-                self._serve_spark.conf.set("spark.sql.shuffle.partitions", fan)
             return self._reroot(self._serve_spark)
         return self.plan.where(F.lit(True))
 

@@ -1,45 +1,41 @@
-"""Engine core: catalog state, name mangling, storage split, the statement router (execute/statement_kind), and the offline-info ledger."""
+"""Engine core: catalog state, name mangling, storage split, the offline-info
+ledger, and the one statement router.
+
+Routing is one classifier, :func:`_classify`. It reads a
+statement as written — no catalog, no db-name mangling — applies every
+grammar rule, and returns a :class:`Stmt`: the reference parser's plan-node
+tag (what :meth:`Engine.statement_kind` reports, checked by the 324 ported
+``cases/plan`` cases) and the Engine method that runs it.
+:meth:`Engine.execute` calls the same classifier and dispatches on its
+answer, so the two cannot disagree. Statements the parser accepts but this
+engine does not run (``CREATE GROUP``, ``DELETE JOB``, a bare
+``CREATE TABLE t``, …) are refusal entries in the same table; handlers keep
+only the checks that need the catalog (unknown table, unknown variable,
+existing database)."""
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import datetime  # noqa: F401
-import re  # noqa: F401
-from typing import Optional, Sequence  # noqa: F401
+import re
+from typing import NamedTuple, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
 
-from openmldb_spark.catalog import IndexDef, TableDef  # noqa: F401
-from openmldb_spark.jobs import JOB_SCHEMA, JobManager  # noqa: F401
-from openmldb_spark.sources.loader import load_data, select_into  # noqa: F401
-from openmldb_spark.sql import parser as P  # noqa: F401
-from openmldb_spark.sql.lowering import Lowerer  # noqa: F401
-from openmldb_spark.sql.parser import Tok, render, tokenize  # noqa: F401
+from openmldb_spark.catalog import TableDef
+from openmldb_spark.jobs import JobManager
+from openmldb_spark.sql import parser as P
+from openmldb_spark.sql.lowering import Lowerer
+from openmldb_spark.sql.parser import Tok, render, tokenize
 
-from openmldb_spark.engine._helpers import (  # noqa: F401
-    _TYPES,
-    _ALIAS_STOPWORDS,
-    _BOOL_OPTS,
-    _KNOWN_VARIABLES,
-    _LOAD_OPTS,
-    _OUTFILE_OPTS,
-    _check_options,
-    _coerce,
+from openmldb_spark.engine._helpers import (
+    _INTO_OUTFILE,
     _declared_aliases,
-    _infer_fmt,
-    _like_to_regex,
-    _literal,
     _match_paren,
-    _parse_coltype,
-    _parse_options,
-    _split_commas,
     _split_statements,
 )
-
 from openmldb_spark.engine.ddl import DdlMixin
+from openmldb_spark.engine.deploy import DeployMixin
 from openmldb_spark.engine.dml import DmlMixin
-from openmldb_spark.engine.deploy import DeployMixin, SqlDeployment  # noqa: F401
+from openmldb_spark.engine.serving import SqlDeployment
 from openmldb_spark.engine.show import ShowMixin
 
 
@@ -154,6 +150,241 @@ class _TTLView(dict):
         except KeyError:
             return default
 
+
+class Stmt(NamedTuple):
+    """One classified statement. ``kind`` is the reference parser's top
+    plan-node tag (:meth:`Engine.statement_kind`); ``route`` names the
+    Engine method that runs it. With ``args`` the route was decided on the
+    statement as written and the method takes exactly those; without, it
+    reads the db-mangled statement as ``(toks, sql_text)``."""
+
+    kind: str
+    route: str
+    args: Optional[tuple] = None
+
+
+#: (head, second keyword) -> statement, for kinds whose grammar is the two
+#: keywords (the handler reads the rest); second None matches any
+_STATEMENTS = {
+    ("CREATE", "DATABASE"): Stmt("CMD:create", "_create_database"),
+    ("CREATE", "INDEX"): Stmt("kCreateIndexStmt", "_create_index"),
+    ("CREATE", "PROCEDURE"): Stmt("kCreateSpStmt", "_create_procedure"),
+    # CREATE [OR REPLACE] [TEMP] PROCEDURE (create.yaml id 17)
+    ("CREATE", "OR"): Stmt("kCreateSpStmt", "_create_procedure"),
+    ("CREATE", "TEMP"): Stmt("kCreateSpStmt", "_create_procedure"),
+    ("CREATE", "USER"): Stmt("kCreateUserStmt", "_user_admin"),
+    ("CREATE", "FUNCTION"): Stmt("kCreateFunctionStmt", "_create_function"),
+    ("CREATE", "AGGREGATE"): Stmt("kCreateFunctionStmt", "_create_function"),
+    # nameserver tablet-group management: the parser accepts it, but a
+    # single-SparkSession engine has no cluster topology to group
+    ("CREATE", "GROUP"): Stmt(
+        "CMD:create", "_refuse", ("CREATE GROUP is not supported by this engine",)
+    ),
+    ("ALTER", "USER"): Stmt("kAlterUserStmt", "_user_admin"),
+    ("DROP", "USER"): Stmt("CMD:drop", "_user_admin"),
+    ("DROP", "TABLE"): Stmt("CMD:drop", "_drop_table"),
+    ("DROP", "DATABASE"): Stmt("CMD:drop", "_drop_database"),
+    ("DROP", "FUNCTION"): Stmt("CMD:drop", "_drop_function"),
+    ("DROP", "INDEX"): Stmt("CMD:drop", "_drop_index"),
+    ("DELETE", "FROM"): Stmt("kDeleteStmt", "_delete"),
+    ("LOAD", "DATA"): Stmt("kLoadDataStmt", "_load_data"),
+    ("DESC", None): Stmt("CMD:desc", "_desc"),
+    ("DESCRIBE", None): Stmt("CMD:desc", "_desc"),
+    ("USE", None): Stmt("CMD:use", "_use"),
+    ("TRUNCATE", None): Stmt("CMD:truncate", "_truncate"),
+    ("DEPLOY", None): Stmt("kDeployStmt", "_deploy"),
+    ("EXPLAIN", None): Stmt("kExplainStmt", "_explain"),
+    ("CALL", None): Stmt("kCallStmt", "_call"),
+    # the CLI's session terminator — no interactive session here
+    ("EXIT", None): Stmt("CMD:exit", "_exit", ()),
+}
+
+#: SET [GLOBAL|SESSION] var = value | SET @@[global.|session.]var = value
+_SET = re.compile(
+    r"\s*SET\s+(?:(?:GLOBAL|SESSION)\s+)?(?:@@)?(?:(?:GLOBAL|SESSION)\.)?"
+    r"(\w+)\s*=\s*(.+?)\s*;?\s*$",
+    re.IGNORECASE | re.DOTALL,
+)
+
+#: ALTER TABLE [db.]t (ADD|DROP) OFFLINE_PATH '<path>' [, ...]
+_ALTER_TABLE = re.compile(
+    r"\s*ALTER\s+TABLE\s+[`\w.]+\s+"
+    r"(ADD|DROP)\s+OFFLINE_PATH\s+'[^']*'"
+    r"(\s*,\s*(ADD|DROP)\s+OFFLINE_PATH\s+'[^']*')*\s*;?\s*$",
+    re.IGNORECASE,
+)
+
+#: what plain ``SHOW <what>`` lists (ShowMixin._show)
+_SHOWABLE = {
+    "TABLES", "DATABASES", "DEPLOYMENTS", "VARIABLES", "FUNCTIONS",
+    "PROCEDURES", "COMPONENTS", "CURRENT_USER",
+}
+
+
+def _name_end(toks: list[Tok], i: int) -> int:
+    """Index just past the ``[db.]name`` at toks[i]."""
+    return i + 3 if i + 2 < len(toks) and toks[i + 1].text == "." else i + 1
+
+
+def _dotted(toks: list[Tok], i: int, what: str) -> str:
+    """The ``[db.]name`` that is all of toks[i:], as written: deployment
+    and procedure names resolve their own qualifier (Engine._dep_lookup),
+    so their routes are decided before db-name mangling."""
+    if i >= len(toks) or _name_end(toks, i) != len(toks) or any(
+        t.kind != "name" for t in toks[i::2]
+    ):
+        raise ValueError(f"{what} takes a [db.]name")
+    return "".join(t.text for t in toks[i:])
+
+
+def _like_tail(toks: list[Tok], i: int, what: str) -> Optional[str]:
+    """The optional ``LIKE '<pattern>'`` that ends the statement at toks[i:]."""
+    pattern = None
+    if i < len(toks) and toks[i].upper == "LIKE":
+        if i + 1 >= len(toks) or toks[i + 1].kind != "str":
+            raise ValueError(f"{what} LIKE takes a quoted pattern")
+        pattern = toks[i + 1].text.strip("'\"")
+        i += 2
+    if i < len(toks):
+        raise ValueError(f"unexpected tokens after {what}: {render(toks[i:i + 3])}")
+    return pattern
+
+
+def _classify_show(toks: list[Tok]) -> Stmt:
+    second = toks[1].upper if len(toks) > 1 else ""
+    third = toks[2].upper if len(toks) > 2 else ""
+    if second in ("JOB", "JOBLOG"):
+        # SHOW JOB without an id is a parse error (error_query.yaml id 9)
+        if len(toks) != 3 or not toks[2].text.isdigit():
+            raise ValueError(f"SHOW {second} takes a numeric job id")
+        route = "_show_joblog" if second == "JOBLOG" else "_show_job"
+        return Stmt("CMD:show", route, (int(toks[2].text),))
+    if second == "JOBS":
+        # SHOW JOBS [FROM TASKMANAGER|NAMESERVER] [LIKE 'pat'] (SHOW_JOBS.md)
+        component, i = "TASKMANAGER", 2
+        if third == "FROM":
+            if len(toks) < 4 or toks[3].upper not in ("TASKMANAGER", "NAMESERVER"):
+                raise ValueError("SHOW JOBS FROM takes TASKMANAGER or NAMESERVER")
+            component, i = toks[3].upper, 4
+        args = (component, _like_tail(toks, i, "SHOW JOBS"))
+        return Stmt("kShowStmt" if len(toks) > 2 else "CMD:show", "_show_jobs", args)
+    if second == "TABLE" and third == "STATUS":
+        return Stmt(
+            "CMD:show", "_show_table_status", (_like_tail(toks, 3, "SHOW TABLE STATUS"),)
+        )
+    if second == "CREATE" and third == "TABLE":
+        _dotted(toks, 3, "SHOW CREATE TABLE")  # the route reads it mangled
+        return Stmt("CMD:show", "_show_create")
+    if second == "CREATE" and third == "PROCEDURE":
+        name = _dotted(toks, 3, "SHOW CREATE PROCEDURE")
+        return Stmt("CMD:show", "_show_create_procedure", (name,))
+    if second == "DEPLOYMENT":
+        # SHOW DEPLOYMENT accepts db.name (test_show_deploy id 3)
+        return Stmt("CMD:show", "_show_deployment", (_dotted(toks, 2, "SHOW DEPLOYMENT"),))
+    what, end = second, 2
+    if second in ("SESSION", "GLOBAL") and third == "VARIABLES":
+        # one variable store here (the reference's global/session split is
+        # a cluster concept)
+        what, end = "VARIABLES", 3
+    elif second == "PROCEDURE" and third == "STATUS":
+        # SHOW PROCEDURE STATUS ≡ SHOW PROCEDURES (cmd.yaml ids 9/10)
+        what, end = "PROCEDURES", 3
+    if what not in _SHOWABLE:
+        raise ValueError(f"SHOW {second} not supported")
+    if len(toks) > end:
+        # e.g. `SHOW DEPLOYMENTS name` (test_show_deploy id 2)
+        raise ValueError(f"unexpected tokens after SHOW {second}")
+    return Stmt("CMD:show", "_show", (what,))
+
+
+def _classify(sql_text: str) -> Stmt:
+    """The one statement router: classify ``sql_text`` as written (no
+    catalog, no db-name mangling) and apply every grammar rule; raises on
+    statements the dialect rejects."""
+    if re.match(r"\s*SET\b", sql_text, re.IGNORECASE):
+        # before tokenizing: the '@@var' sigil is not a token
+        m = _SET.match(sql_text)
+        if not m:
+            raise ValueError(f"cannot parse SET statement: {sql_text!r}")
+        # the value is one literal/identifier token (the reference rejects
+        # expressions: cmd.yaml set_select_mode_2, error_unsupport
+        # set_global_to_expr)
+        vtoks = tokenize(m.group(2))
+        if len(vtoks) != 1 or vtoks[0].kind not in ("str", "num", "name"):
+            raise ValueError("SET value must be a single literal")
+        return Stmt("kSetStmt", "_set", (m.group(1).lower(), vtoks[0].text.strip("'\"")))
+    toks = tokenize(sql_text)
+    while toks and toks[-1].text == ";":
+        toks.pop()
+    if not toks:
+        raise ValueError("empty statement")
+    head = toks[0].upper
+    second = toks[1].upper if len(toks) > 1 else ""
+    if head in ("SELECT", "WITH") or (
+        # a parenthesized set-operation arm (union_query.yaml id 5)
+        head == "(" and any(t.upper in ("UNION", "EXCEPT", "INTERSECT") for t in toks)
+    ):
+        if _INTO_OUTFILE.search(sql_text):
+            return Stmt("kSelectIntoStmt", "_select_into")
+        P.parse(sql_text)
+        return Stmt("kQuery", "_query")
+    if head == "SHOW":
+        return _classify_show(toks)
+    if head == "INSERT":
+        # INSERT INTO [db.]t [(cols)] VALUES (...) [, (...)]
+        if second != "INTO" or len(toks) < 4:
+            raise ValueError("INSERT INTO <table> ... VALUES (...)")
+        i = _name_end(toks, 2)
+        if i < len(toks) and toks[i].text == "(":
+            i = _match_paren(toks, i) + 1
+        if i >= len(toks) or toks[i].upper != "VALUES":
+            raise ValueError("INSERT requires VALUES")
+        for k, t in enumerate(toks):
+            if t.kind == "num" and t.text.isdigit():
+                # int64 overflow is a parse error in the reference
+                # (error_unsupport_sql.yaml id 21); a leading '-' folds
+                # into the literal, so the negative range is one wider
+                neg = k > 0 and toks[k - 1].text == "-"
+                if int(t.text) > (1 << 63) - (0 if neg else 1):
+                    raise ValueError(f"integer literal out of int64 range: {t.text}")
+        return Stmt("kInsertStmt", "_insert")
+    if head == "CREATE" and second == "TABLE":
+        i = _name_end(toks, 2)
+        if i < len(toks) and toks[i].upper in ("(", "LIKE"):
+            return Stmt("CREATE", "_create_table")
+        # the parser also takes a bare `CREATE TABLE t` (create.yaml) and
+        # IF NOT EXISTS; this engine creates a table from a column list
+        return Stmt("CREATE", "_refuse", ("CREATE TABLE t (<columns>) expected",))
+    if head == "ALTER" and second == "TABLE":
+        if not _ALTER_TABLE.match(sql_text):
+            raise ValueError("ALTER TABLE t ADD|DROP OFFLINE_PATH '<path>'")
+        return Stmt("kAlterTableStmt", "_alter_table")
+    if head == "DROP" and second == "DEPLOYMENT":
+        name = _dotted(toks, 2, "DROP DEPLOYMENT")
+        if "." in name:
+            # the parser takes db.name, the reference's DROP DEPLOYMENT
+            # does not (test_drop_deploy id 3)
+            return Stmt("CMD:drop", "_refuse", ("DROP DEPLOYMENT takes an unqualified name",))
+        return Stmt("CMD:drop", "_drop_deployment", (name,))
+    if head == "DROP" and second == "PROCEDURE":
+        # the reference's kCmdDropSp takes [db.]name
+        return Stmt("CMD:drop", "_drop_procedure", (_dotted(toks, 2, "DROP PROCEDURE"),))
+    if head in ("STOP", "DELETE") and second == "JOB":
+        if len(toks) != 3:
+            raise ValueError(f"{head} JOB takes a job id")
+        if head == "DELETE":
+            if not toks[2].text.isdigit():
+                raise ValueError("DELETE JOB takes a numeric job id")
+            # JobInfoManager.scala:127 — "Delete job is not supported yet"
+            return Stmt("kDeleteStmt", "_refuse", ("DELETE JOB is not supported",))
+        if not toks[2].text.isdigit():
+            # the parser takes any id token (cmd.yaml `stop JOB abc`)
+            return Stmt("CMD:stop", "_refuse", ("STOP JOB takes a numeric job id",))
+        return Stmt("CMD:stop", "_stop_job", (int(toks[2].text),))
+    st = _STATEMENTS.get((head, second)) or _STATEMENTS.get((head, None))
+    if st is None:
+        raise ValueError(f"unsupported statement: {render(toks[:4])} ...")
+    return st
 
 
 class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
@@ -378,11 +609,12 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
         table — not for the whole catalog on every statement."""
         return _TTLView(self)
 
-    def _mangle_sql(self, sql_text: str) -> str:
-        """Rewrite db-qualified references (`db1.t0`, `db1.t0.c1`) into flat
-        single-token names. Current-db qualifiers are STRIPPED (so `db.t1.c1`
-        with current db `db` resolves subquery alias t1 — reference id 7);
-        other known dbs mangle to `__omdb__{db}__{t}`. Unknown-db refs pass
+    def _mangle_sql(self, sql_text: str) -> tuple[list[Tok], str]:
+        """Tokens and text of ``sql_text`` with db-qualified references
+        (`db1.t0`, `db1.t0.c1`) rewritten into flat single-token names.
+        Current-db qualifiers are STRIPPED (so `db.t1.c1` with current db
+        `db` resolves subquery alias t1 — reference id 7); other known dbs
+        mangle to `__omdb__{db}__{t}`. Unknown-db refs pass
         through untouched and fail resolution downstream, matching the
         reference's 'database not found' errors. A qualifier that is also
         a table/subquery ALIAS declared in this statement is NOT mangled —
@@ -415,7 +647,7 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
                 continue
             out.append(t)
             i += 1
-        return render(out) if changed else sql_text
+        return (out, render(out)) if changed else (toks, sql_text)
 
     def _stream_loc(self, name: str) -> tuple[str, str]:
         """(db, bare) stream key — like :meth:`_loc` but also splits raw
@@ -457,10 +689,7 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
     def execute_script(self, script: str) -> list:
         """Run a ';'-separated statement script; returns per-statement
         results (the reference CLI's batch-file mode)."""
-        out = []
-        for stmt in _split_statements(script):
-            out.append(self.execute(stmt))
-        return out
+        return [self.execute(stmt) for stmt in _split_statements(script)]
 
     @staticmethod
     def statement_kind(sql_text: str) -> str:
@@ -476,129 +705,10 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
         ``CMD:<cmd_type>`` for the CLI-command nodes (show/desc/use/drop/
         create/stop/truncate/exit). Raises on statements the dialect
         rejects. Catalog-free: names are not resolved, so this accepts
-        statements over tables that do not exist (parser parity, not
-        execution)."""
-        if re.match(r"\s*SET\b", sql_text, re.IGNORECASE):
-            # value must be one literal/identifier token (the reference
-            # rejects expressions: cmd.yaml set_select_mode_2,
-            # error_unsupport set_global_to_expr)
-            m = re.match(
-                r"\s*SET\s+(?:(?:GLOBAL|SESSION)\s+|@@(?:(?:global|session)\.)?)?"
-                r"[\w.]+\s*=\s*(.+?)\s*;?\s*$",
-                sql_text,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if not m:
-                raise ValueError(f"cannot parse SET statement: {sql_text!r}")
-            vtoks = tokenize(m.group(1))
-            if len(vtoks) != 1 or vtoks[0].kind not in ("str", "num", "name"):
-                raise ValueError("SET value must be a single literal")
-            return "kSetStmt"
-        toks = tokenize(sql_text)
-        if not toks:
-            raise ValueError("empty statement")
-        head = toks[0].upper
-        second = toks[1].upper if len(toks) > 1 else ""
-        if head in ("SELECT", "WITH") or (
-            # match execute()'s set-op head check: EXCEPT/INTERSECT also
-            # start with a parenthesized arm (ADVICE r7)
-            head == "("
-            and any(t.upper in ("UNION", "EXCEPT", "INTERSECT") for t in toks)
-        ):
-            if re.search(r"\bINTO\s+OUTFILE\s+", sql_text, re.IGNORECASE):
-                return "kSelectIntoStmt"
-            P.parse(sql_text)
-            return "kQuery"
-        if head == "INSERT":
-            body = [t for t in toks if t.text != ";"]
-            if not (len(body) > 3 and body[1].upper == "INTO"):
-                raise ValueError("INSERT INTO <table> ... VALUES (...)")
-            if not any(t.upper == "VALUES" for t in body):
-                raise ValueError("INSERT requires VALUES")
-            for bi, t in enumerate(body):
-                if t.kind == "num" and t.text.isdigit():
-                    # int64 overflow is a parse error in the reference
-                    # (error_unsupport_sql.yaml id 21); a leading '-' folds
-                    # into the literal, so the negative range is one wider
-                    neg = bi > 0 and body[bi - 1].text == "-"
-                    if int(t.text) > (1 << 63) - (0 if neg else 1):
-                        raise ValueError(f"integer literal out of int64 range: {t.text}")
-            return "kInsertStmt"
-        if head == "CREATE":
-            if second == "TABLE":
-                return "CREATE"
-            if second == "DATABASE":
-                return "CMD:create"
-            if second == "INDEX":
-                return "kCreateIndexStmt"
-            if second in ("PROCEDURE", "OR", "TEMP"):
-                # CREATE [OR REPLACE] [TEMP] PROCEDURE (create.yaml id 17)
-                return "kCreateSpStmt"
-            if second == "USER":
-                return "kCreateUserStmt"
-            if second in ("FUNCTION", "AGGREGATE"):
-                return "kCreateFunctionStmt"
-            if second == "GROUP":
-                return "CMD:create"
-            raise ValueError(f"unsupported CREATE {second}")
-        if head == "ALTER":
-            if second == "USER":
-                return "kAlterUserStmt"
-            if second == "TABLE":
-                # validate the action grammar without touching the catalog
-                if not re.match(
-                    r"\s*ALTER\s+TABLE\s+[`\w.]+\s+"
-                    r"(ADD|DROP)\s+OFFLINE_PATH\s+'[^']*'"
-                    r"(\s*,\s*(ADD|DROP)\s+OFFLINE_PATH\s+'[^']*')*\s*;?\s*$",
-                    sql_text,
-                    re.IGNORECASE,
-                ):
-                    raise ValueError("ALTER TABLE t ADD|DROP OFFLINE_PATH '<path>'")
-                return "kAlterTableStmt"
-            raise ValueError(f"unsupported ALTER {second}")
-        if head == "DELETE":
-            if second == "JOB":
-                if len(toks) < 3 or toks[2].kind != "num":
-                    raise ValueError("DELETE JOB takes a numeric job id")
-                return "kDeleteStmt"
-            if second != "FROM":
-                raise ValueError("DELETE FROM <table> WHERE ... | DELETE JOB <id>")
-            return "kDeleteStmt"
-        if head == "DEPLOY":
-            return "kDeployStmt"
-        if head == "LOAD":
-            if second != "DATA":
-                raise ValueError("LOAD DATA INFILE ...")
-            return "kLoadDataStmt"
-        if head == "SHOW":
-            if second == "JOB":
-                if len(toks) < 3 or toks[2].text == ";":
-                    # SHOW JOB without an id is a parse error
-                    # (error_query.yaml id 9)
-                    raise ValueError("SHOW JOB takes a job id")
-                return "CMD:show"
-            if second == "JOBS" and len(toks) > 2 and toks[2].text != ";":
-                return "kShowStmt"
-            return "CMD:show"
-        if head in ("DESC", "DESCRIBE"):
-            return "CMD:desc"
-        if head == "USE":
-            return "CMD:use"
-        if head == "DROP":
-            return "CMD:drop"
-        if head == "STOP":
-            if second != "JOB" or len(toks) < 3 or toks[2].text == ";":
-                raise ValueError("STOP JOB <id>")
-            return "CMD:stop"
-        if head == "TRUNCATE":
-            return "CMD:truncate"
-        if head == "EXIT":
-            return "CMD:exit"
-        if head == "EXPLAIN":
-            return "kExplainStmt"
-        if head == "CALL":
-            return "kCallStmt"
-        raise ValueError(f"unsupported statement: {render(toks[:4])} ...")
+        statements over tables that do not exist. :meth:`execute` routes
+        through the same classifier, so a statement this rejects never
+        runs."""
+        return _classify(sql_text).kind
 
     def execute(self, sql_text: str, parameters: Optional[Sequence] = None):
         """Run one statement. Returns a DataFrame for queries/SHOW, None
@@ -607,252 +717,82 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
         ``parameters`` binds positional ``?`` placeholders (the reference's
         prepared-statement surface — test_insert_prepared.yaml and the SDK's
         parameterized queries): values fold to literals before routing, so
-        every statement kind (INSERT/DELETE/SELECT/...) accepts them."""
+        every statement kind (INSERT/DELETE/SELECT/...) accepts them.
+
+        The statement is classified as written (:func:`_classify`, the
+        grammar :meth:`statement_kind` reports), then handed to its route;
+        routes that read table names see the statement with db-qualified
+        names mangled to flat tokens."""
         if parameters is not None:
             sql_text = P.substitute_params(sql_text, parameters)
-        # SET routes before tokenization (the '@@var' sigil isn't a token)
-        if re.match(r"\s*SET\b", sql_text, re.IGNORECASE):
-            return self._set(sql_text)
-        # DEPLOYMENT statements route BEFORE db-qualifier mangling: the
-        # reference's DROP DEPLOYMENT grammar takes a plain identifier
-        # (db-qualified fails, test_drop_deploy id 3) while SHOW DEPLOYMENT
-        # accepts db.name (test_show_deploy id 3)
-        dm = re.match(
-            r"\s*DROP\s+DEPLOYMENT\s+([\w.]+)\s*;?\s*$", sql_text, re.IGNORECASE
-        )
-        if dm:
-            return self._drop_deployment(dm.group(1))
-        sm = re.match(
-            r"\s*SHOW\s+DEPLOYMENT\s+([\w.]+)\s*;?\s*$", sql_text, re.IGNORECASE
-        )
-        if sm:
-            return self._show_deployment(sm.group(1))
-        # SHOW CREATE PROCEDURE also routes pre-mangle: db.sp stays dotted
-        # for _dep_lookup (the reference's kCmdShowCreateSp takes [db.]name)
-        pm = re.match(
-            r"\s*SHOW\s+CREATE\s+PROCEDURE\s+([\w.]+)\s*;?\s*$",
-            sql_text,
-            re.IGNORECASE,
-        )
-        if pm:
-            return self._show_create_procedure(pm.group(1))
-        # DROP PROCEDURE likewise routes pre-mangle: db.sp must stay dotted
-        # for _dep_lookup (mangling would produce __omdb__db__sp, which
-        # _dep_lookup cannot split back — ADVICE r7)
-        dpm = re.match(
-            r"\s*DROP\s+PROCEDURE\s+([\w.]+)\s*;?\s*$", sql_text, re.IGNORECASE
-        )
-        if dpm:
-            return self._drop_procedure(dpm.group(1))
-        sql_text = self._mangle_sql(sql_text)
-        toks = tokenize(sql_text)
-        if not toks:
-            return None
-        head = toks[0].upper
-        second = toks[1].upper if len(toks) > 1 else ""
-        if head == "CREATE" and second == "DATABASE":
-            if_not_exists = len(toks) > 4 and toks[2].upper == "IF"
-            name = toks[5].text if if_not_exists else toks[2].text
-            if name in self._dbs:
-                if if_not_exists:
-                    return None
-                raise ValueError(f"database {name!r} already exists")
-            self._dbs[name] = {}
-            self._db_defs[name] = {}
-            self._db_deps[name] = {}
-            return None
-        if head == "DROP" and second == "DATABASE":
-            name = toks[4].text if toks[2].upper == "IF" else toks[2].text
-            if name == self.current_db:
-                raise ValueError("cannot drop the current database")
-            self._dbs.pop(name, None)
-            self._db_defs.pop(name, None)
-            for dep in self._db_deps.pop(name, {}).values():
-                dep.release_serving()
-            self._db_off.pop(name, None)
-            for key in [k for k in self._off_parts if k[0] == name]:
-                del self._off_parts[key]
-            for key in [k for k in self._table_ids if k[0] == name]:
-                del self._table_ids[key]
-            return None
-        if head == "USE":
-            if toks[1].text not in self._dbs:
-                raise ValueError(f"database {toks[1].text!r} does not exist")
-            self.current_db = toks[1].text
-            return None
-        if head == "CREATE" and second == "TABLE":
-            return self._create_table(toks)
-        if head == "CREATE" and second in ("FUNCTION", "AGGREGATE"):
-            return self._create_function(sql_text)
-        if head == "DROP" and second == "FUNCTION":
-            # DROP FUNCTION [IF EXISTS] name (cmd.yaml drop_function_*)
-            guarded = len(toks) > 3 and toks[2].upper == "IF"
-            fname = toks[4].text if guarded else toks[2].text
-            if not guarded and fname not in self.functions:
-                raise ValueError(f"function {fname!r} does not exist")
-            self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fname}")
-            self.functions.pop(fname, None)
-            return None
-        if head == "DROP" and second == "TABLE":
-            db, bare = self._loc(toks[2].text)
-            self.tables.pop(toks[2].text, None)
-            self.table_defs.pop(toks[2].text, None)
-            self._db_off.get(db, {}).pop(bare, None)
-            self._off_parts.pop((db, bare), None)
-            self._table_ids.pop((db, bare), None)
-            # deployments serving this table hold .persist()ed pre-agg
-            # buckets — release them (r9 verdict #3: dropping the request
-            # table must not leak the serving caches)
-            for dep in self._db_deps.get(db, {}).values():
-                # a deployment's unqualified request table resolves in the
-                # db it was deployed in, not the session's current one
-                rdb, _, rbare = dep.request_table.rpartition(".")
-                if (rdb or dep.db_name, rbare) == (db, bare):
-                    dep.release_serving()
-            return None
-        if head == "INSERT":
-            return self._insert(toks)
-        if head == "DELETE":
-            if second == "JOB":
-                # JobInfoManager.scala:127 — "Delete job is not supported yet"
-                raise ValueError("DELETE JOB is not supported")
-            return self._delete(sql_text)
-        if head == "TRUNCATE":
-            # TRUNCATE TABLE t | TRUNCATE t (TRUNCATE_TABLE_STATEMENT.md)
-            name = toks[2].text if second == "TABLE" else toks[1].text
-            if name not in self.tables:
-                raise ValueError(f"unknown table {name!r}")
-            self.tables[name] = self.tables[name].limit(0)
-            return None
-        if head in ("DESC", "DESCRIBE"):
-            return self._desc(toks[1].text)
-        if head == "CREATE" and second == "INDEX":
-            return self._create_index(sql_text)
-        if head == "DROP" and second == "INDEX":
-            # DROP INDEX table.index_name (DROP_INDEX_STATEMENT.md)
-            tail = render(toks[2:]).replace(" ", "").rstrip(";")
-            if "." not in tail:
-                # the reference requires the qualified form
-                # (test_delete_index id 4)
-                raise ValueError("DROP INDEX takes <table>.<index_name>")
-            tname, _, iname = tail.rpartition(".")
-            td = self.table_defs.get(tname)
-            if td is not None:
-                td.indexes = [i for i in td.indexes if i.name != iname]
-            return None
-        if head == "ALTER" and second == "TABLE":
-            return self._alter_table(toks)
-        if head in ("CREATE", "ALTER", "DROP") and second == "USER":
-            return self._user_admin(head, toks)
-        if head == "CREATE" and second == "GROUP":
-            # nameserver tablet-group management — no cluster topology to
-            # group in a single-SparkSession engine (the parser accepts it;
-            # see statement_kind)
-            raise ValueError("CREATE GROUP is not supported by this engine")
-        if head == "EXPLAIN":
-            return self._explain(toks, sql_text)
-        if head == "CALL":
-            return self._call(toks)
-        if head == "EXIT":
-            # the CLI's session terminator — no interactive session here
-            return None
-        if head == "LOAD":
-            return self._load_data(sql_text)
-        if head == "DEPLOY":
-            return self._deploy(toks, sql_text)
-        if head == "CREATE" and second == "PROCEDURE":
-            return self._create_procedure(sql_text)
-        if head == "DROP" and second == "PROCEDURE":
-            # reached only for spellings the pre-mangle route didn't match
-            # (e.g. backquoted names) — the name is already bare here
-            return self._drop_procedure(toks[2].text)
-        if head == "SHOW" and second == "JOB" and len(toks) > 2 and toks[2].kind == "num":
-            job = self.jobman.get(int(toks[2].text))
-            return self.spark.createDataFrame([job.row()], JOB_SCHEMA)
-        if head == "SHOW" and second == "JOBLOG":
-            # SHOW JOBLOG job_id (SHOW_JOBLOG.md) — the job's lifecycle log
-            if len(toks) < 3 or toks[2].kind != "num":
-                raise ValueError("SHOW JOBLOG takes a numeric job id")
-            job = self.jobman.get(int(toks[2].text))
-            return self.spark.createDataFrame([(job.log_text(),)], "log string")
-        if head == "SHOW" and second == "JOBS" and len(toks) > 2 and toks[2].text != ";":
-            return self._show_jobs_from(toks)
-        if head == "SHOW" and second == "TABLE" and len(toks) > 2 and toks[2].upper == "STATUS":
-            return self._show_table_status(toks)
-        if (
-            head == "SHOW"
-            and second == "PROCEDURE"
-            and len(toks) > 2
-            and toks[2].upper == "STATUS"
-        ):
-            # SHOW PROCEDURE STATUS ≡ SHOW PROCEDURES (cmd.yaml ids 9/10)
-            return self._show("PROCEDURES")
-        if head == "SHOW" and second == "CURRENT_USER":
-            return self.spark.createDataFrame([(self.current_user,)], "User string")
-        if head == "STOP" and second == "JOB":
-            if len(toks) < 3 or toks[2].kind != "num":
-                raise ValueError("STOP JOB takes a numeric job id")
-            # cancels the job's Spark job group (kills its running stages)
-            # and returns the job row with the final state — the
-            # reference's JobInfoManager.stopJob contract
-            job = self.jobman.stop(int(toks[2].text))
-            return self.spark.createDataFrame([job.row()], JOB_SCHEMA)
-        if head == "SHOW" and second == "CREATE":
-            return self._show_create(toks[3].text)
-        if (
-            head == "SHOW"
-            and second in ("SESSION", "GLOBAL")
-            and len(toks) > 2
-            and toks[2].upper == "VARIABLES"
-        ):
-            # SHOW [SESSION|GLOBAL] VARIABLES — one variable store here
-            # (the reference's global/session split is a cluster concept)
-            if any(t.text != ";" for t in toks[3:]):
-                raise ValueError(f"unexpected tokens after SHOW {second} VARIABLES")
-            return self._show("VARIABLES")
-        if head == "SHOW":
-            if any(t.text != ";" for t in toks[2:]):
-                # e.g. `SHOW DEPLOYMENTS name` — the reference rejects
-                # trailing tokens (test_show_deploy id 2)
-                raise ValueError(f"unexpected tokens after SHOW {second}")
-            return self._show(second)
-        if head in ("SELECT", "WITH") or (
-            head == "(" and any(t.upper in ("UNION", "EXCEPT", "INTERSECT") for t in toks)
-        ):
-            # head == "(": parenthesized set-operation arm
-            # (union_query.yaml id 5)
-            m = re.search(r"\bINTO\s+OUTFILE\s+", sql_text, re.IGNORECASE)
-            if m:
-                return self._select_into(sql_text, m)
-            q = P.parse(sql_text)
-            b = q.body
-            if (
-                isinstance(b, P.Select)
-                and b.from_ is not None
-                and self._stream_loc(b.from_.name) in self._streams
-            ):
-                from openmldb_spark.streaming.sqlsurface import lower_stream_select
+        st = _classify(sql_text)
+        run = getattr(self, st.route)
+        if st.args is not None:
+            return run(*st.args)
+        return run(*self._mangle_sql(sql_text))
 
+    # -- routes: databases, queries, refusals ---------------------------------
+    def _create_database(self, toks: list[Tok], sql_text: str):
+        if_not_exists = len(toks) > 4 and toks[2].upper == "IF"
+        name = toks[5].text if if_not_exists else toks[2].text
+        if name in self._dbs:
+            if if_not_exists:
+                return None
+            raise ValueError(f"database {name!r} already exists")
+        self._dbs[name] = {}
+        self._db_defs[name] = {}
+        self._db_deps[name] = {}
+        return None
+
+    def _drop_database(self, toks: list[Tok], sql_text: str):
+        name = toks[4].text if toks[2].upper == "IF" else toks[2].text
+        if name == self.current_db:
+            raise ValueError("cannot drop the current database")
+        self._dbs.pop(name, None)
+        self._db_defs.pop(name, None)
+        for dep in self._db_deps.pop(name, {}).values():
+            dep.release_serving()
+        self._db_off.pop(name, None)
+        for key in [k for k in self._off_parts if k[0] == name]:
+            del self._off_parts[key]
+        for key in [k for k in self._table_ids if k[0] == name]:
+            del self._table_ids[key]
+        return None
+
+    def _use(self, toks: list[Tok], sql_text: str):
+        if toks[1].text not in self._dbs:
+            raise ValueError(f"database {toks[1].text!r} does not exist")
+        self.current_db = toks[1].text
+        return None
+
+    def _query(self, toks: list[Tok], sql_text: str) -> DataFrame:
+        q = P.parse(sql_text)
+        b = q.body
+        if isinstance(b, P.Select) and b.from_ is not None:
+            from openmldb_spark.streaming.sqlsurface import (
+                has_stream_window,
+                lower_stream_select,
+            )
+
+            # a registered stream lowers to a streaming DataFrame; and
+            # batch≡streaming: the tumble/hop/session_window SQL surface
+            # also runs over BATCH tables — same lowering (F.window /
+            # F.session_window work in batch groupBy; withWatermark is a
+            # no-op there), so one query text serves both modes and the
+            # consistency family can assert batch-over-union == final
+            # streaming state
+            if self._stream_loc(b.from_.name) in self._streams or has_stream_window(b):
                 return lower_stream_select(self, q)
-            if isinstance(b, P.Select) and b.from_ is not None:
-                from openmldb_spark.streaming.sqlsurface import (
-                    has_stream_window,
-                    lower_stream_select,
-                )
+        return Lowerer(self.spark, self._table_view()).query(q, {})
 
-                if has_stream_window(b):
-                    # batch≡streaming: the tumble/hop/session_window SQL
-                    # surface also runs over BATCH tables — same lowering
-                    # (F.window / F.session_window work in batch groupBy;
-                    # withWatermark is a no-op there), so one query text
-                    # serves both modes and the consistency family can
-                    # assert batch-over-union == final streaming state
-                    return lower_stream_select(self, q)
-            return Lowerer(self.spark, self._table_view()).query(q, {})
-        raise ValueError(f"unsupported statement: {render(toks[:4])} ...")
+    def _refuse(self, message: str):
+        """A statement the parser accepts and this engine does not run."""
+        raise ValueError(message)
 
-    # -- SHOW -----------------------------------------------------------------
-    # -- ALTER / users / status surface ---------------------------------------
+    def _exit(self):
+        return None
+
+    # -- table ids and the offline-info ledger ---------------------------------
     def _tid(self, db: str, bare: str) -> int:
         """Stable table id in registration order (the nameserver's tid)."""
         key = (db, bare)

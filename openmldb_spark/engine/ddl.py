@@ -2,47 +2,29 @@
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import datetime  # noqa: F401
-import re  # noqa: F401
-from typing import Optional, Sequence  # noqa: F401
+import re
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from openmldb_spark.catalog import IndexDef, TableDef
+from openmldb_spark.sources.loader import load_data
+from openmldb_spark.sql.parser import Tok, render
 
-from openmldb_spark.catalog import IndexDef, TableDef  # noqa: F401
-from openmldb_spark.jobs import JOB_SCHEMA, JobManager  # noqa: F401
-from openmldb_spark.sources.loader import load_data, select_into  # noqa: F401
-from openmldb_spark.sql import parser as P  # noqa: F401
-from openmldb_spark.sql.lowering import Lowerer  # noqa: F401
-from openmldb_spark.sql.parser import Tok, render, tokenize  # noqa: F401
-
-from openmldb_spark.engine._helpers import (  # noqa: F401
-    _TYPES,
-    _ALIAS_STOPWORDS,
-    _BOOL_OPTS,
-    _KNOWN_VARIABLES,
-    _LOAD_OPTS,
-    _OUTFILE_OPTS,
-    _check_options,
-    _coerce,
-    _declared_aliases,
+from openmldb_spark.engine._helpers import (
     _infer_fmt,
-    _like_to_regex,
-    _literal,
     _match_paren,
     _parse_coltype,
     _parse_options,
     _split_commas,
-    _split_statements,
 )
 
 
 class DdlMixin:
 
     # -- DDL ------------------------------------------------------------------
-    def _create_table(self, toks: list[Tok]):
+    def _create_table(self, toks: list[Tok], sql_text: str):
         name = toks[2].text
+        if toks[3].text == ".":
+            # a qualifier _mangle_sql left alone names no database
+            raise ValueError(f"database {name!r} does not exist")
         if self._stream_loc(name) in self._streams:
             # the SELECT router consults streams FIRST, so a batch table
             # under a stream's name would be unreachable (the mirror of
@@ -79,7 +61,6 @@ class DdlMixin:
             return None
         # body between the outermost parens
         i = 3
-        assert toks[i].text == "(", "CREATE TABLE t (...) expected"
         depth = 0
         j = i
         for j in range(i, len(toks)):
@@ -151,7 +132,7 @@ class DdlMixin:
         iname = opts["NAME"][0].text if "NAME" in opts else f"idx{n}"
         return IndexDef(iname, keys=keys, ts_col=ts, ttl=ttl, ttl_type=ttl_type)
 
-    def _create_index(self, sql_text: str):
+    def _create_index(self, toks: list[Tok], sql_text: str):
         """CREATE INDEX idx ON t (keys) OPTIONS (ts=..., ttl=..., ttl_type=...)
         (ref: CREATE_INDEX_STATEMENT.md). Index metadata only — TTL is
         applied on demand via catalog.apply_ttl."""
@@ -182,7 +163,7 @@ class DdlMixin:
         td.indexes.append(idx)
         return None
 
-    def _alter_table(self, toks: list[Tok]):
+    def _alter_table(self, toks: list[Tok], sql_text: str):
         """``ALTER TABLE [db.]t (ADD|DROP) OFFLINE_PATH 'path' [, ...]`` —
         the reference's only ALTER TABLE form (ALTER_STATEMENT.md;
         AddPathAction/DropPathAction, cases/plan/cmd.yaml alter-table-*):
@@ -190,29 +171,16 @@ class DdlMixin:
         symbolic path is a lazy ``spark.read`` over that path — the offline
         view unions it in; nothing is copied (the reference likewise only
         updates nameserver metadata and reads at query time)."""
-        if len(toks) < 3:
-            raise ValueError("ALTER TABLE <name> ADD|DROP OFFLINE_PATH '<path>'")
         name = toks[2].text
         if name not in self.tables:
             raise ValueError(f"unknown table {name!r}")
         db, bare = self._loc(name)
-        # parse the action list: (ADD|DROP) OFFLINE_PATH '<path>' {, ...}
-        i = 3
-        actions: list[tuple[str, str]] = []
-        while i < len(toks) and toks[i].text != ";":
-            act = toks[i].upper
-            if act not in ("ADD", "DROP"):
-                raise ValueError(f"ALTER TABLE action must be ADD or DROP, got {toks[i].text!r}")
-            if i + 2 >= len(toks) or toks[i + 1].upper != "OFFLINE_PATH":
-                raise ValueError("ALTER TABLE only supports ADD/DROP OFFLINE_PATH")
-            if toks[i + 2].kind != "str":
-                raise ValueError("OFFLINE_PATH takes a quoted path")
-            actions.append((act, toks[i + 2].text.strip("'\"")))
-            i += 3
-            if i < len(toks) and toks[i].text == ",":
-                i += 1
-        if not actions:
-            raise ValueError("ALTER TABLE <name> ADD|DROP OFFLINE_PATH '<path>'")
+        # the action list the classifier checked: (ADD|DROP) OFFLINE_PATH
+        # '<path>' {, ...} — four tokens apart
+        actions = [
+            (toks[k].upper, toks[k + 2].text.strip("'"))
+            for k in range(3, len(toks) - 2, 4)
+        ]
         # apply to a COPY of the ledger and commit only when every action
         # succeeds — a failed multi-action statement must not half-apply
         old = self._off_parts.get((db, bare)) or {"base": None, "sym": {}, "fmt": None}
@@ -237,10 +205,50 @@ class DdlMixin:
         self._off_rebuild(db, bare)
         return None
 
-    def _user_admin(self, head: str, toks: list[Tok]):
+    def _drop_table(self, toks: list[Tok], sql_text: str):
+        db, bare = self._loc(toks[2].text)
+        self.tables.pop(toks[2].text, None)
+        self.table_defs.pop(toks[2].text, None)
+        self._db_off.get(db, {}).pop(bare, None)
+        self._off_parts.pop((db, bare), None)
+        self._table_ids.pop((db, bare), None)
+        # deployments serving this table hold .persist()ed pre-agg
+        # buckets — release them (r9 verdict #3: dropping the request
+        # table must not leak the serving caches)
+        for dep in self._db_deps.get(db, {}).values():
+            # a deployment's unqualified request table resolves in the
+            # db it was deployed in, not the session's current one
+            rdb, _, rbare = dep.request_table.rpartition(".")
+            if (rdb or dep.db_name, rbare) == (db, bare):
+                dep.release_serving()
+        return None
+
+    def _drop_index(self, toks: list[Tok], sql_text: str):
+        """DROP INDEX table.index_name (DROP_INDEX_STATEMENT.md)."""
+        tail = render(toks[2:]).replace(" ", "").rstrip(";")
+        if "." not in tail:
+            # the reference requires the qualified form
+            # (test_delete_index id 4)
+            raise ValueError("DROP INDEX takes <table>.<index_name>")
+        tname, _, iname = tail.rpartition(".")
+        td = self.table_defs.get(tname)
+        if td is not None:
+            td.indexes = [i for i in td.indexes if i.name != iname]
+        return None
+
+    def _truncate(self, toks: list[Tok], sql_text: str):
+        """TRUNCATE TABLE t | TRUNCATE t (TRUNCATE_TABLE_STATEMENT.md)."""
+        name = toks[2].text if toks[1].upper == "TABLE" else toks[1].text
+        if name not in self.tables:
+            raise ValueError(f"unknown table {name!r}")
+        self.tables[name] = self.tables[name].limit(0)
+        return None
+
+    def _user_admin(self, toks: list[Tok], sql_text: str):
         """CREATE/ALTER/DROP USER (+IF [NOT] EXISTS, OPTIONS(password=...))
         — CREATE_USER/ALTER_USER/DROP_USER_STATEMENT.md. Metadata registry:
         one SparkSession has no authentication boundary to enforce."""
+        head = toks[0].upper
         i = 2
         guarded = False
         if len(toks) > i and toks[i].upper == "IF":

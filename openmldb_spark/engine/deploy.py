@@ -1,45 +1,20 @@
 """Deployment DDL: DEPLOY, auto-indexing, CREATE PROCEDURE, SHOW/DROP
 DEPLOYMENT — the serving object itself (SqlDeployment: request mode,
 batch-request optimization, long-window pre-agg, compiled request plan)
-lives in :mod:`openmldb_spark.engine.serving` and is re-exported here."""
+lives in :mod:`openmldb_spark.engine.serving`."""
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import datetime  # noqa: F401
-import re  # noqa: F401
-from typing import Optional, Sequence  # noqa: F401
+import re
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame
 
-from openmldb_spark.catalog import IndexDef, TableDef  # noqa: F401
-from openmldb_spark.jobs import JOB_SCHEMA, JobManager  # noqa: F401
-from openmldb_spark.sources.loader import load_data, select_into  # noqa: F401
-from openmldb_spark.sql import parser as P  # noqa: F401
-from openmldb_spark.sql.lowering import Lowerer  # noqa: F401
-from openmldb_spark.sql.parser import Tok, render, tokenize  # noqa: F401
+from openmldb_spark.catalog import IndexDef
+from openmldb_spark.sql import parser as P
+from openmldb_spark.sql.lowering import Lowerer
+from openmldb_spark.sql.parser import Tok, tokenize
 
-from openmldb_spark.engine.serving import SqlDeployment  # noqa: F401  (re-export: import surface unchanged)
-from openmldb_spark.engine._helpers import (  # noqa: F401
-    _TYPES,
-    _ALIAS_STOPWORDS,
-    _BOOL_OPTS,
-    _KNOWN_VARIABLES,
-    _LOAD_OPTS,
-    _OUTFILE_OPTS,
-    _check_options,
-    _coerce,
-    _declared_aliases,
-    _infer_fmt,
-    _like_to_regex,
-    _literal,
-    _match_paren,
-    _parse_coltype,
-    _parse_options,
-    _split_commas,
-    _split_statements,
-)
+from openmldb_spark.engine.serving import SqlDeployment
 
 
 class DeployMixin:
@@ -190,7 +165,7 @@ class DeployMixin:
         "bool": {"boolean"}, "boolean": {"boolean"},
     }
 
-    def _create_procedure(self, sql_text: str):
+    def _create_procedure(self, toks: list[Tok], sql_text: str):
         """``CREATE PROCEDURE name(p1 t1, const p2 t2, ...) BEGIN <select>;
         END`` — the reference's stored-procedure surface (SQLClusterRouter::
         HandleSQLCreateProcedure; served over HTTP by the APIServer,
@@ -270,19 +245,15 @@ class DeployMixin:
         return db, dep
 
     def _drop_deployment(self, name: str):
-        if "." in name:
-            # the reference's DROP DEPLOYMENT grammar takes a plain
-            # identifier (test_drop_deploy id 3)
-            raise ValueError("DROP DEPLOYMENT takes an unqualified name")
         db, dep = self._dep_lookup(name)
         dep.release_serving()
         del self._db_deps[db][name]
         return None
 
     def _drop_procedure(self, name: str):
-        """DROP PROCEDURE [db.]name — routes pre-mangle (ADVICE r7): the
-        qualifier must reach _dep_lookup dotted, like SHOW CREATE
-        PROCEDURE (the reference's kCmdDropSp takes [db.]name)."""
+        """DROP PROCEDURE [db.]name — the name arrives as written (ADVICE
+        r7: mangling would turn db.sp into a token _dep_lookup cannot
+        split back)."""
         db, dep = self._dep_lookup(name)
         if dep.kind != "procedure":
             raise ValueError(f"procedure {name!r} not found")
@@ -311,5 +282,3 @@ class DeployMixin:
             "deployment string, db string, sql string, section string, "
             "idx int, column_name string, column_type string",
         )
-
-

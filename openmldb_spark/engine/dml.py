@@ -2,48 +2,39 @@
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import datetime  # noqa: F401
-import re  # noqa: F401
-from typing import Optional, Sequence  # noqa: F401
+import re
+from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from openmldb_spark.catalog import IndexDef, TableDef  # noqa: F401
-from openmldb_spark.jobs import JOB_SCHEMA, JobManager  # noqa: F401
-from openmldb_spark.sources.loader import load_data, select_into  # noqa: F401
-from openmldb_spark.sql import parser as P  # noqa: F401
-from openmldb_spark.sql.lowering import Lowerer  # noqa: F401
-from openmldb_spark.sql.parser import Tok, render, tokenize  # noqa: F401
+from openmldb_spark.jobs import JOB_SCHEMA
+from openmldb_spark.sources.loader import load_data, select_into
+from openmldb_spark.sql import parser as P
+from openmldb_spark.sql.lowering import Lowerer
+from openmldb_spark.sql.parser import Tok, render, tokenize
 
-from openmldb_spark.engine._helpers import (  # noqa: F401
-    _TYPES,
-    _ALIAS_STOPWORDS,
-    _BOOL_OPTS,
+from openmldb_spark.engine._helpers import (
+    _INTO_OUTFILE,
     _KNOWN_VARIABLES,
     _LOAD_OPTS,
     _OUTFILE_OPTS,
+    _TYPES,
     _check_options,
     _coerce,
-    _declared_aliases,
-    _infer_fmt,
-    _like_to_regex,
     _literal,
     _match_paren,
-    _parse_coltype,
     _parse_options,
     _split_commas,
-    _split_statements,
 )
 
 
 class DmlMixin:
 
     # -- DML ------------------------------------------------------------------
-    def _insert(self, toks: list[Tok]):
-        # INSERT INTO t [(cols)] VALUES (...), (...)
-        assert toks[1].upper == "INTO"
+    def _insert(self, toks: list[Tok], sql_text: str):
+        # INSERT INTO t [(cols)] VALUES (...), (...) — the shape the
+        # classifier checked
         name = toks[2].text
         if name not in self.tables:
             raise ValueError(f"unknown table {name!r}")
@@ -53,8 +44,7 @@ class DmlMixin:
             j = _match_paren(toks, i)
             cols = [t.text for t in toks[i + 1 : j] if t.kind == "name"]
             i = j + 1
-        assert toks[i].upper == "VALUES"
-        i += 1
+        i += 1  # VALUES
         rows = []
         while i < len(toks) and toks[i].text == "(":
             j = _match_paren(toks, i)
@@ -81,7 +71,7 @@ class DmlMixin:
         self._append_rows(*self._loc(name), rows, self._offline_mode)
         return None
 
-    def _delete(self, sql_text: str):
+    def _delete(self, toks: list[Tok], sql_text: str):
         """DELETE FROM t WHERE cond (ref: docs/en/openmldb_sql/dml/
         DELETE_STATEMENT.md:7) — batch anti-filter rewrite of the managed
         table; rows where the condition is NULL do not match and are kept."""
@@ -102,18 +92,11 @@ class DmlMixin:
         self.tables[name] = delete_where(self.tables[name], cond)
         return None
 
-    def _set(self, sql_text: str):
-        """SET [@@[session.|global.]]var = value (SET_STATEMENT.md);
-        unsupported names are rejected like the reference."""
-        m = re.match(
-            r"\s*SET\s+(?:@@)?(?:(?:SESSION|GLOBAL)\.)?(\w+)\s*=\s*(.+?)\s*;?\s*$",
-            sql_text,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError("SET [@@]var = value")
-        name = m.group(1).lower()
-        value = m.group(2).strip().strip("'\"")
+    def _set(self, name: str, value: str):
+        """SET one session variable (SET_STATEMENT.md; the classifier
+        parsed the statement). One variable store here: the reference's
+        GLOBAL/SESSION split is a cluster concept. Unsupported names are
+        rejected like the reference."""
         if name not in _KNOWN_VARIABLES:
             # the reference rejects unsupported system variables
             # (v040/test_execute_mode.yaml id 2; SET_STATEMENT.md's table
@@ -124,7 +107,7 @@ class DmlMixin:
         self.variables[name] = value
         return None
 
-    def _call(self, toks: list[Tok]) -> DataFrame:
+    def _call(self, toks: list[Tok], sql_text: str) -> DataFrame:
         """CALL deployment (v1, v2, ...) — one-row request-mode invocation;
         arguments match the deployment's request-table schema
         (ref: docs/en/openmldb_sql/dml/CALL_STATEMENT.md)."""
@@ -148,7 +131,7 @@ class DmlMixin:
         req = self.spark.createDataFrame([row], schema)
         return dep.run_request(req)
 
-    def _create_function(self, sql_text: str):
+    def _create_function(self, toks: list[Tok], sql_text: str):
         """``CREATE [AGGREGATE] FUNCTION name(arg type, ...) RETURNS type
         OPTIONS (FILE='fns.py' [, ENTRY='pyname'] [, TYPE='pandas'|'python'])``
         (ref: docs/en/openmldb_sql/ddl/CREATE_FUNCTION.md — the reference
@@ -205,7 +188,17 @@ class DmlMixin:
         self.functions[name] = (is_agg, ret_ddl, path)
         return None
 
-    def _load_data(self, sql_text: str):
+    def _drop_function(self, toks: list[Tok], sql_text: str):
+        # DROP FUNCTION [IF EXISTS] name (cmd.yaml drop_function_*)
+        guarded = len(toks) > 3 and toks[2].upper == "IF"
+        fname = toks[4].text if guarded else toks[2].text
+        if not guarded and fname not in self.functions:
+            raise ValueError(f"function {fname!r} does not exist")
+        self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fname}")
+        self.functions.pop(fname, None)
+        return None
+
+    def _load_data(self, toks: list[Tok], sql_text: str):
         m = re.match(
             r"\s*LOAD\s+DATA\s+INFILE\s+'([^']+)'\s+INTO\s+TABLE\s+(\w+)"
             r"(?:\s+OPTIONS\s*\((.*)\))?\s*;?\s*$",
@@ -333,8 +326,9 @@ class DmlMixin:
             [job.row()], JOB_SCHEMA
         )
 
-    def _select_into(self, sql_text: str, m: "re.Match"):
+    def _select_into(self, toks: list[Tok], sql_text: str):
         # SELECT ... INTO OUTFILE 'path' [OPTIONS(...)]
+        m = _INTO_OUTFILE.search(sql_text)
         tail = sql_text[m.end():]
         tm = re.match(r"'([^']+)'\s*(?:OPTIONS\s*\((.*)\))?\s*;?\s*$", tail,
                       re.IGNORECASE | re.DOTALL)

@@ -2,47 +2,26 @@
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import datetime  # noqa: F401
-import re  # noqa: F401
-from typing import Optional, Sequence  # noqa: F401
+import datetime
+import re
+from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import DataFrame
 
-from openmldb_spark.catalog import IndexDef, TableDef  # noqa: F401
-from openmldb_spark.jobs import JOB_SCHEMA, JobManager  # noqa: F401
-from openmldb_spark.sources.loader import load_data, select_into  # noqa: F401
-from openmldb_spark.sql import parser as P  # noqa: F401
-from openmldb_spark.sql.lowering import Lowerer  # noqa: F401
-from openmldb_spark.sql.parser import Tok, render, tokenize  # noqa: F401
+from openmldb_spark.jobs import JOB_SCHEMA
+from openmldb_spark.sql import parser as P
+from openmldb_spark.sql.lowering import Lowerer
+from openmldb_spark.sql.parser import Tok, render
 
-from openmldb_spark.engine._helpers import (  # noqa: F401
-    _TYPES,
-    _ALIAS_STOPWORDS,
-    _BOOL_OPTS,
-    _KNOWN_VARIABLES,
-    _LOAD_OPTS,
-    _OUTFILE_OPTS,
-    _check_options,
-    _coerce,
-    _declared_aliases,
-    _infer_fmt,
-    _like_to_regex,
-    _literal,
-    _match_paren,
-    _parse_coltype,
-    _parse_options,
-    _split_commas,
-    _split_statements,
-)
+from openmldb_spark.engine._helpers import _like_to_regex
 
 
 class ShowMixin:
 
-    def _desc(self, name: str) -> DataFrame:
+    def _desc(self, toks: list[Tok], sql_text: str) -> DataFrame:
         """DESC t — column name/type/nullability plus index summaries
         (ref: docs/en/openmldb_sql/ddl/DESC_STATEMENT.md)."""
+        name = toks[1].text
         if name not in self.tables:
             raise ValueError(f"unknown table {name!r}")
         rows = [
@@ -61,8 +40,9 @@ class ShowMixin:
             )
         return self.spark.createDataFrame(rows, "field string, type string, null string")
 
-    def _show_create(self, name: str) -> DataFrame:
+    def _show_create(self, toks: list[Tok], sql_text: str) -> DataFrame:
         """SHOW CREATE TABLE t (SHOW_CREATE_TABLE_STATEMENT.md)."""
+        name = toks[3].text
         if name not in self.tables:
             raise ValueError(f"unknown table {name!r}")
         cols = ", ".join(
@@ -82,51 +62,23 @@ class ShowMixin:
         ddl = f"CREATE TABLE {name} ({body})"
         return self.spark.createDataFrame([(name, ddl)], "table string, create_sql string")
 
-    def _show_jobs_from(self, toks: list[Tok]) -> DataFrame:
-        """SHOW JOBS FROM TASKMANAGER|NAMESERVER [LIKE 'pat'] (SHOW_JOBS.md).
-        All this engine's jobs are TaskManager-style offline jobs; the
-        nameserver's internal op list has no analogue (no tablets), so FROM
-        NAMESERVER is always empty."""
-        i = 2
-        component = "TASKMANAGER"
-        if toks[i].upper == "FROM":
-            if i + 1 >= len(toks) or toks[i + 1].upper not in (
-                "TASKMANAGER", "NAMESERVER",
-            ):
-                raise ValueError("SHOW JOBS FROM takes TASKMANAGER or NAMESERVER")
-            component = toks[i + 1].upper
-            i += 2
-        pattern = None
-        if i < len(toks) and toks[i].upper == "LIKE":
-            if i + 1 >= len(toks) or toks[i + 1].kind != "str":
-                raise ValueError("SHOW JOBS ... LIKE takes a quoted pattern")
-            pattern = toks[i + 1].text.strip("'\"")
-            i += 2
-        if i < len(toks) and toks[i].text != ";":
-            raise ValueError(f"unexpected tokens after SHOW JOBS: {render(toks[i:i+3])}")
+    def _show_jobs(self, component: str, pattern: Optional[str]) -> DataFrame:
+        """SHOW JOBS [FROM TASKMANAGER|NAMESERVER] [LIKE 'pat']
+        (SHOW_JOBS.md). All this engine's jobs are TaskManager-style
+        offline jobs; the nameserver's internal op list has no analogue (no
+        tablets), so FROM NAMESERVER is always empty."""
         rows = self.jobman.rows() if component == "TASKMANAGER" else []
         if pattern is not None:
             rx = re.compile("^" + _like_to_regex(pattern) + "$", re.IGNORECASE)
             rows = [r for r in rows if rx.match(str(r[0]))]
         return self.spark.createDataFrame(rows or [], JOB_SCHEMA)
 
-    def _show_table_status(self, toks: list[Tok]) -> DataFrame:
+    def _show_table_status(self, pattern: Optional[str]) -> DataFrame:
         """SHOW TABLE STATUS [LIKE 'db-pattern'] (SHOW_TABLE_STATUS.md) —
         one row per table; the LIKE pattern matches DATABASE names (the
         reference's semantics), no pattern means the current database.
         Sizes come from Catalyst plan statistics (the metadata-level
         answer — no data scan); Rows is the one per-table action."""
-        i = 3
-        pattern = None
-        if i < len(toks) and toks[i].upper == "LIKE":
-            if i + 1 >= len(toks) or toks[i + 1].kind != "str":
-                raise ValueError("SHOW TABLE STATUS LIKE takes a quoted pattern")
-            pattern = toks[i + 1].text.strip("'\"")
-            i += 2
-        if i < len(toks) and toks[i].text != ";":
-            raise ValueError(
-                f"unexpected tokens after SHOW TABLE STATUS: {render(toks[i:i+3])}"
-            )
         if pattern is None:
             dbs = [self.current_db]
         else:
@@ -212,8 +164,8 @@ class ShowMixin:
             return self.spark.createDataFrame(
                 [(d,) for d in sorted(self.databases)], "database_name string"
             )
-        if what == "JOBS":
-            return self.spark.createDataFrame(self.jobman.rows() or [], JOB_SCHEMA)
+        if what == "CURRENT_USER":
+            return self.spark.createDataFrame([(self.current_user,)], "User string")
         if what == "DEPLOYMENTS":
             return self.spark.createDataFrame(
                 [(n,) for n in sorted(self.deployments)] or [], "deployment string"
@@ -267,3 +219,18 @@ class ShowMixin:
                 "Status string, Ns_role string",
             )
         raise ValueError(f"SHOW {what} not supported")
+
+    # -- offline jobs (the reference's TaskManager job table) ------------------
+    def _show_job(self, job_id: int) -> DataFrame:
+        return self.spark.createDataFrame([self.jobman.get(job_id).row()], JOB_SCHEMA)
+
+    def _show_joblog(self, job_id: int) -> DataFrame:
+        """SHOW JOBLOG job_id (SHOW_JOBLOG.md) — the job's lifecycle log."""
+        job = self.jobman.get(job_id)
+        return self.spark.createDataFrame([(job.log_text(),)], "log string")
+
+    def _stop_job(self, job_id: int) -> DataFrame:
+        """Cancel the job's Spark job group (kills its running stages) and
+        return the job row with the final state — the reference's
+        JobInfoManager.stopJob contract."""
+        return self.spark.createDataFrame([self.jobman.stop(job_id).row()], JOB_SCHEMA)

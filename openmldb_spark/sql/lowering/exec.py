@@ -167,13 +167,29 @@ class Lowerer:
         return out
 
     # -- text path: re-render standard SQL, let Catalyst do everything ------
-    def _view(self, df: DataFrame) -> str:
+    def _view(self, df: DataFrame, views: list[str]) -> str:
         name = f"__omsql_v{next(_view_counter)}"
         df.createOrReplaceTempView(name)
+        views.append(name)
         return name
+
+    def _sql(self, parts: list[str], views: list[str]) -> DataFrame:
+        """Run re-rendered SQL, then drop the temp views it reads: the
+        analyzed DataFrame keeps their plans, so the session catalog does
+        not grow with every statement a long-lived engine lowers. The views
+        go through the session catalog itself, because
+        ``spark.catalog.dropTempView`` also uncaches the DataFrame a view
+        names, and a registered table may be a cached one."""
+        try:
+            return self.spark.sql("\n".join(parts))
+        finally:
+            catalog = self.spark._jsparkSession.sessionState().catalog()
+            for name in views:
+                catalog.dropTempView(name)
 
     def _select_text(self, sel: Select, env: dict[str, DataFrame]) -> DataFrame:
         parts: list[str] = ["SELECT"]
+        views: list[str] = []
         if sel.distinct:
             parts.append("DISTINCT")
         items = []
@@ -187,13 +203,13 @@ class Lowerer:
             items.append(txt)
         parts.append(", ".join(items))
         if sel.from_ is not None:
-            parts.append("FROM " + self._from_sql(sel.from_, env))
+            parts.append("FROM " + self._from_sql(sel.from_, env, views))
             for j in sel.joins:
                 kw = {
                     "left": "LEFT JOIN", "inner": "JOIN",
                     "right": "RIGHT JOIN", "full": "FULL JOIN",
                 }[j.kind]
-                parts.append(f"{kw} {self._from_sql(j.table, env)}")
+                parts.append(f"{kw} {self._from_sql(j.table, env, views)}")
                 if j.on is not None:
                     parts.append("ON " + rewrite_expr(j.on))
         if sel.where is not None:
@@ -204,16 +220,16 @@ class Lowerer:
             parts.append("HAVING " + rewrite_expr(sel.having))
         if sel.limit is not None:
             parts.append(f"LIMIT {sel.limit}")
-        return self.spark.sql("\n".join(parts))
+        return self._sql(parts, views)
 
-    def _from_sql(self, ref: TableRef, env: dict[str, DataFrame]) -> str:
+    def _from_sql(self, ref: TableRef, env: dict[str, DataFrame], views: list[str]) -> str:
         """Render a FROM/JOIN operand, registering the resolved DataFrame as
         a temp view so the re-rendered SQL can name it."""
         if ref.subquery is not None:
-            view = self._view(self.query(ref.subquery, env))
+            view = self._view(self.query(ref.subquery, env), views)
             bind = ref.alias or view
             return f"{view} AS `{bind}`"
-        view = self._view(self.resolve(ref.name, env))
+        view = self._view(self.resolve(ref.name, env), views)
         return f"{view} AS `{ref.bind_name}`"
 
     # -- structural path ----------------------------------------------------
@@ -259,7 +275,8 @@ class Lowerer:
             # don't survive a temp view, so qualified refs are stripped —
             # legal when the bare name is unambiguous in the join output.
             cols = df.columns
-            view = self._view(df)
+            views: list[str] = []
+            view = self._view(df, views)
             parts = ["SELECT"]
             if sel.distinct:
                 parts.append("DISTINCT")
@@ -280,7 +297,7 @@ class Lowerer:
                 parts.append("HAVING " + rewrite_expr(_dequalify(sel.having, cols)))
             if sel.limit is not None:
                 parts.append(f"LIMIT {sel.limit}")
-            return self.spark.sql("\n".join(parts))
+            return self._sql(parts, views)
 
         base_cols = list(df.columns)
 

@@ -655,29 +655,6 @@ def test_local_relation_requests_stage_without_a_job(spark):
     assert n_rdd == n_rows + 1, (n_rdd, n_rows)
 
 
-def test_serving_shuffle_partitions_resyncs_per_serve(spark):
-    """ADVICE r12: SERVING_SHUFFLE_PARTITIONS_CONF was read once at
-    compile, so a later SET was silently ignored; it now re-syncs onto
-    the serving clone before every serve."""
-    from openmldb_spark.engine.compiled import SERVING_SHUFFLE_PARTITIONS_CONF
-
-    eng = _engine(spark)
-    dep = eng.execute(f"DEPLOY dfan {SQL}")
-    dep.run_request_rows(_conv([(9, "aa", 40, 1590738995000)]))
-    cp = dep._compiled
-    assert cp is not None and cp._serve_spark is not None
-    assert cp._serve_spark.conf.get("spark.sql.shuffle.partitions") == "1"
-    spark.conf.set(SERVING_SHUFFLE_PARTITIONS_CONF, "2")
-    try:
-        got = dep.run_request_rows(_conv([(10, "aa", 1, 1590738996000)]))
-        assert len(got) == 1
-        assert cp._serve_spark.conf.get("spark.sql.shuffle.partitions") == "2"
-    finally:
-        spark.conf.unset(SERVING_SHUFFLE_PARTITIONS_CONF)
-        dep.run_request_rows(_conv([(11, "aa", 1, 1590738997000)]))
-        assert cp._serve_spark.conf.get("spark.sql.shuffle.partitions") == "1"
-
-
 def test_case_sensitivity_conf_reaches_compiled_serves(spark):
     """The broadened semantic-conf registry: a post-deploy SET of
     spark.sql.caseSensitive reaches the serving clone (the registry

@@ -143,6 +143,40 @@ def test_cte_and_subquery(spark, t1):
     assert out.collect()[0]["n"] == 4
 
 
+def test_text_path_leaves_no_temp_views(spark, t1, dim):
+    """The text lowering names every FROM/JOIN operand and the structural
+    GROUP BY stage through a temp view; each is dropped once ``spark.sql``
+    has analyzed the statement, so a long-lived session's catalog does not
+    grow per query, the results still collect, and a cached table stays
+    cached."""
+    from pyspark import StorageLevel
+
+    def temp_views():
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    dim = dim.select("*").cache()
+    dim.count()
+
+    stmts = [
+        ("SELECT pk1, sum(col1) AS s FROM t1 GROUP BY pk1", {("A", 15), ("B", 30)}),
+        ("SELECT * FROM (SELECT pk1, col1 FROM t1 WHERE id = 1) x", {("A", 1)}),
+        ("SELECT k, sum(v) AS s FROM dim GROUP BY k", {("A", 300), ("B", 700)}),
+        (
+            "SELECT t1.pk1, count(*) AS n FROM t1 LAST JOIN dim ORDER BY dim.rts "
+            "ON t1.pk1 = dim.k GROUP BY t1.pk1",
+            {("A", 5), ("B", 4)},
+        ),
+    ]
+    before = temp_views()
+    for _ in range(3):
+        for text, want in stmts:
+            out = sql(spark, text, {"t1": t1, "dim": dim})
+            assert {tuple(r) for r in out.collect()} == want
+    assert temp_views() == before
+    assert dim.storageLevel != StorageLevel.NONE
+    dim.unpersist()
+
+
 def test_const_project(spark):
     out = sql(spark, "SELECT 1 + 1 AS two", {})
     assert out.collect()[0]["two"] == 2

@@ -11,6 +11,7 @@ Usage: python tools/bench_decode.py [reps]
 """
 
 import json
+import os
 import struct
 import sys
 import time
@@ -53,7 +54,7 @@ def _png(rgb: np.ndarray) -> bytes:
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 30
-    sys.path.insert(0, "tests")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
     from test_pipeline import _jpeg_encode_gray  # hermetic test encoder
 
     from openmldb_spark.pipeline import multimodal as M

@@ -7,6 +7,7 @@ batch with its common-column names.
 Usage: python tools/port_ref_batch_request.py REF_FILE [id ...] > out.yaml
 """
 
+import os
 import sys
 
 import yaml
@@ -86,5 +87,5 @@ def _emit(ref, case, cid) -> None:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     main()

@@ -5,6 +5,7 @@ format run by tests/test_engine_yaml_cases.py.
 Usage: python tools/port_ref_engine_case.py REF_FILE [id ...] > out.yaml
 """
 
+import os
 import sys
 
 import yaml
@@ -221,5 +222,5 @@ def _emit(ref, case, cid) -> None:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     main()

@@ -128,5 +128,5 @@ def _emit(ref, case, cid) -> None:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     main()

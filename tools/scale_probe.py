@@ -105,7 +105,7 @@ def gen(out_dir: str, mult: int) -> None:
 
 
 def probes():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
     from pyspark.sql import functions as F
 
