@@ -24,7 +24,6 @@ from openmldb_spark.session import load_table
 from openmldb_spark.operators.window import WindowDef, window_agg
 from openmldb_spark.operators.window_union import window_union
 from openmldb_spark.operators.last_join import last_join
-from openmldb_spark.operators import relational as R
 from openmldb_spark.functions import aggregates as A
 from openmldb_spark.functions.scalar import fn as sfn, strcmp, earth_distance
 from openmldb_spark.pipeline import dedup as D
@@ -80,16 +79,16 @@ def q_group_agg(spark: SparkSession, sf: str) -> DataFrame:
     # the column and disabled pushdown. unix_millis floors to ms, so
     # `ms <= 904694400000` (1998-09-02T00:00:00Z) == `ts < ..00.001`.
     cutoff = F.lit("1998-09-02 00:00:00.001").cast("timestamp_ntz")
-    return R.group_agg(
-        li.where(F.col("l_shipdate") < cutoff),  # <= 1998-09-02 in epoch-ms
-        ["l_returnflag", "l_linestatus"],
-        {
-            "sum_qty": F.round(F.sum("l_quantity"), 4),
-            "sum_base_price": F.round(F.sum("l_extendedprice"), 4),
-            "sum_disc_price": F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4),
-            "avg_disc": F.round(F.avg("l_discount"), 4),
-            "count_order": F.count(F.lit(1)),
-        },
+    return (
+        li.where(F.col("l_shipdate") < cutoff)  # <= 1998-09-02 in epoch-ms
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
+            F.round(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
+            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("sum_disc_price"),
+            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
+            F.count(F.lit(1)).alias("count_order"),
+        )
     )
 
 
@@ -99,13 +98,11 @@ def q_distinct_sort_limit(spark: SparkSession, sf: str) -> DataFrame:
     (o_custkey repeats ~15x) feeding a high-cardinality TopK sort with a
     tie-free total order."""
     o = load_table(spark, sf, "orders")
-    return R.limit_(
-        R.sort_(
-            R.distinct_(o.select("o_custkey", "o_orderpriority")),
-            F.col("o_custkey").desc(),
-            F.col("o_orderpriority").asc(),
-        ),
-        50,
+    return (
+        o.select("o_custkey", "o_orderpriority")
+        .distinct()
+        .sort(F.col("o_custkey").desc(), F.col("o_orderpriority").asc())
+        .limit(50)
     )
 
 
@@ -121,10 +118,10 @@ def q_set_ops(spark: SparkSession, sf: str) -> DataFrame:
         return df.select(F.lit(op).alias("op"), "o_orderkey", "o_orderstatus")
 
     return (
-        tag(R.union_(hi, urgent), "uall")
-        .unionByName(tag(R.union_(hi, urgent, distinct=True), "udst"))
-        .unionByName(tag(R.except_(hi, urgent), "exc"))
-        .unionByName(tag(R.intersect_(hi, urgent), "int"))
+        tag(hi.unionByName(urgent), "uall")
+        .unionByName(tag(hi.unionByName(urgent).distinct(), "udst"))
+        .unionByName(tag(hi.subtract(urgent), "exc"))
+        .unionByName(tag(hi.intersect(urgent), "int"))
     )
 
 

@@ -182,7 +182,6 @@ _STATEMENTS = {
     ),
     ("ALTER", "USER"): Stmt("kAlterUserStmt", "_user_admin"),
     ("DROP", "USER"): Stmt("CMD:drop", "_user_admin"),
-    ("DROP", "TABLE"): Stmt("CMD:drop", "_drop_table"),
     ("DROP", "DATABASE"): Stmt("CMD:drop", "_drop_database"),
     ("DROP", "FUNCTION"): Stmt("CMD:drop", "_drop_function"),
     ("DROP", "INDEX"): Stmt("CMD:drop", "_drop_index"),
@@ -192,7 +191,6 @@ _STATEMENTS = {
     ("DESCRIBE", None): Stmt("CMD:desc", "_desc"),
     ("USE", None): Stmt("CMD:use", "_use"),
     ("TRUNCATE", None): Stmt("CMD:truncate", "_truncate"),
-    ("DEPLOY", None): Stmt("kDeployStmt", "_deploy"),
     ("EXPLAIN", None): Stmt("kExplainStmt", "_explain"),
     ("CALL", None): Stmt("kCallStmt", "_call"),
     # the CLI's session terminator — no interactive session here
@@ -366,6 +364,19 @@ def _classify(sql_text: str) -> Stmt:
             # does not (test_drop_deploy id 3)
             return Stmt("CMD:drop", "_refuse", ("DROP DEPLOYMENT takes an unqualified name",))
         return Stmt("CMD:drop", "_drop_deployment", (name,))
+    if head == "DROP" and second == "TABLE":
+        # DROP TABLE [IF EXISTS] [db.]name
+        if_exists = [t.upper for t in toks[2:4]] == ["IF", "EXISTS"]
+        name = _dotted(toks, 4 if if_exists else 2, "DROP TABLE")
+        return Stmt("CMD:drop", "_drop_table", (name, if_exists))
+    if head == "DEPLOY":
+        # DEPLOY [IF NOT EXISTS] name [OPTIONS(...)] SELECT ...; the route
+        # reads the SELECT from the statement text
+        if_not_exists = [t.upper for t in toks[1:4]] == ["IF", "NOT", "EXISTS"]
+        i = 4 if if_not_exists else 1
+        if i >= len(toks) or toks[i].kind != "name":
+            raise ValueError("DEPLOY takes a deployment name")
+        return Stmt("kDeployStmt", "_deploy", (toks[i].text, if_not_exists, sql_text))
     if head == "DROP" and second == "PROCEDURE":
         # the reference's kCmdDropSp takes [db.]name
         return Stmt("CMD:drop", "_drop_procedure", (_dotted(toks, 2, "DROP PROCEDURE"),))

@@ -205,10 +205,16 @@ class DdlMixin:
         self._off_rebuild(db, bare)
         return None
 
-    def _drop_table(self, toks: list[Tok], sql_text: str):
-        db, bare = self._loc(toks[2].text)
-        self.tables.pop(toks[2].text, None)
-        self.table_defs.pop(toks[2].text, None)
+    def _drop_table(self, name: str, if_exists: bool):
+        db, _, bare = name.rpartition(".")
+        db, bare = db.strip("`") or self.current_db, bare.strip("`")
+        if bare not in self._dbs.get(db, {}):
+            if if_exists:
+                return None
+            raise ValueError(f"table {name!r} does not exist")
+        del self._dbs[db][bare]
+        self._bump_epoch(db, bare)
+        self._db_defs[db].pop(bare, None)
         self._db_off.get(db, {}).pop(bare, None)
         self._off_parts.pop((db, bare), None)
         self._table_ids.pop((db, bare), None)

@@ -20,24 +20,26 @@ from openmldb_spark.engine.serving import SqlDeployment
 class DeployMixin:
 
     # -- DEPLOY ---------------------------------------------------------------
-    def _deploy(self, toks: list[Tok], sql_text: str):
-        # DEPLOY name [OPTIONS(long_windows='w1:1d,...')] SELECT ...
-        name = toks[1].text
+    def _deploy(self, name: str, if_not_exists: bool, sql_text: str):
+        # DEPLOY [IF NOT EXISTS] name [OPTIONS(long_windows='w1:1d,...')] SELECT ...
         if name in self.deployments:
+            if if_not_exists:
+                return self.deployments[name]
             # the reference rejects a duplicate deployment name
             # (test_create_deploy id 8)
             raise ValueError(f"deployment {name!r} already exists")
+        sql_text = self._mangle_sql(sql_text)[1]
         if self._DBM in sql_text:
             # the reference rejects DEPLOY over db-qualified (cross-db)
             # tables (test_create_deploy ids 6/18) — the deployed procedure
             # is bound to ONE database
             raise ValueError("DEPLOY SQL must not reference other databases")
         om = re.search(
-            r"OPTIONS\s*\(\s*long_windows\s*=\s*'([^']*)'\s*\)", sql_text, re.IGNORECASE
+            r"OPTIONS\s*\(\s*long_windows\s*=\s*(['\"])([^'\"]*)\1\s*\)", sql_text, re.IGNORECASE
         )
         long_windows: dict[str, str] = {}
         if om:
-            for part in om.group(1).split(","):
+            for part in om.group(2).split(","):
                 wname, bucket = part.split(":")
                 long_windows[wname.strip()] = bucket.strip()
         m = re.search(r"\b(SELECT|WITH)\b", sql_text, re.IGNORECASE)

@@ -75,7 +75,6 @@ class DmlMixin:
         """DELETE FROM t WHERE cond (ref: docs/en/openmldb_sql/dml/
         DELETE_STATEMENT.md:7) — batch anti-filter rewrite of the managed
         table; rows where the condition is NULL do not match and are kept."""
-        from openmldb_spark.operators.relational import delete_where
         from openmldb_spark.sql.rewrite import rewrite_expr
 
         m = re.match(
@@ -89,7 +88,8 @@ class DmlMixin:
         if name not in self.tables:
             raise ValueError(f"unknown table {name!r}")
         cond = F.expr(rewrite_expr(tokenize(cond_s)))
-        self.tables[name] = delete_where(self.tables[name], cond)
+        # plain ~cond would drop the NULL-condition rows too
+        self.tables[name] = self.tables[name].where(~F.coalesce(cond, F.lit(False)))
         return None
 
     def _set(self, name: str, value: str):

@@ -1,4 +1,4 @@
-"""Operators: window aggregation, WINDOW UNION, LAST JOIN, relational core."""
+"""Operators: window aggregation, WINDOW UNION, LAST JOIN."""
 
 from openmldb_spark.operators.last_join import last_join
 from openmldb_spark.operators.window import WindowDef, window_agg

@@ -10,34 +10,43 @@ deterministic ``tiebreak`` column and document the divergence (the
 reference's own Spark lowering does the same with dropDuplicates,
 ``JoinPlan.scala:200-205``).
 
-Two Spark-first lowerings:
+One lowering, :func:`lower_last_join`, serves both front ends: the
+DataFrame operator :func:`last_join` and the SQL engine
+(``sql/lowering/exec.py::Lowerer._last_join``) only build its inputs. It
+picks one of two Spark-first plans:
 
-- **dedupe-right** (used when the join condition is keys-only): reduce the
-  right side to one row per key via ``max_by(payload, (order, tiebreaks))``
-  *before* the join, then a plain left join. The aggregate partial-combines
-  map-side (the shuffle carries at most one candidate per key per input
-  partition — a row_number window would shuffle every row and sort); the
-  deduped right is usually small enough for AQE to broadcast. This is the
-  100 TB path: partial-agg(right) -> shrink to |distinct keys| ->
-  broadcast/SMJ.
-- **post-filter** (extra non-equi condition): left join, then keep the
-  max-order row per left row id. Costs a fan-out proportional to match
-  multiplicity; only used when semantics demand it. A condition that
+- **dedupe-right** (the join condition is keys-only): reduce the right side
+  to one row per key via ``max_by(payload, rank)`` *before* the join, then
+  a plain left join. The aggregate partial-combines map-side (the shuffle
+  carries at most one candidate per key per input partition — a
+  row_number window would shuffle every row and sort); the deduped right
+  is usually small enough for AQE to broadcast. This is the 100 TB path:
+  partial-agg(right) -> shrink to |distinct keys| -> broadcast/SMJ.
+- **post-filter** (a non-key condition that reads the left side, or a
+  descending rank column with no exact long reversal): left join, then
+  keep the rank-first row per left row id. Costs a fan-out proportional to
+  match multiplicity; only used when semantics demand it. A condition that
   references ONLY right columns doesn't demand it: the right side is
   pre-filtered and the dedupe-right plan used instead.
+
+Both plans rank from the same list, so a query gets one answer whichever
+plan it takes.
 """
 
 from __future__ import annotations
 
+import itertools
 import logging
+from functools import reduce
 from typing import Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-ColumnOrName = Union[Column, str]
-
 _LID = "__omsk_left_id"
+_RN = "__omsk_rn"
+
+_aliases = itertools.count()
 
 
 def _references_right_only(left: DataFrame, right: DataFrame, condition: Column) -> bool:
@@ -70,6 +79,113 @@ def _references_right_only(left: DataFrame, right: DataFrame, condition: Column)
     return _resolves(right) and not _resolves(left)
 
 
+def _reversed(c: Column, dtype: str) -> Optional[Column]:
+    """An exact order-reversing map of ``c`` onto a long (``~x = -x-1``
+    cannot overflow), or None when the type has none: strings, floating
+    point and decimals keep their descending ranks out of ``max_by``.
+    NULL maps to NULL, so it still loses."""
+    if dtype in ("boolean", "tinyint", "smallint", "int", "bigint"):
+        return F.bitwise_not(c.cast("bigint"))
+    if dtype == "date":
+        return F.bitwise_not(F.unix_date(c))
+    if dtype == "timestamp":
+        return F.bitwise_not(F.unix_micros(c))
+    return None
+
+
+def _dedupe(
+    right: DataFrame, keys: Sequence[str], rank: Sequence[tuple[Column, bool]]
+) -> Optional[DataFrame]:
+    """``right`` cut to its rank-first row per key, or None when the rank
+    has no ``max_by`` form.
+
+    Struct comparison is field by field with NULL smallest, so the struct
+    max is exactly the row the post-filter window ranks first: an
+    ascending entry takes its max with NULL last, a descending one its
+    reversed long. Keys come back from the groupBy output, so Catalyst
+    keeps the hash partitioning on them (struct-field extraction would
+    hide it and re-shuffle the join, breaking the bucketed zero-Exchange
+    layout); only non-key columns ride in the payload, under positional
+    ``__f{i}`` names (the SQL front end's subqueries may repeat a column
+    name)."""
+    cols = right.columns
+    keyset = set(keys)
+    nonkey = [i for i, c in enumerate(cols) if c not in keyset]
+    if not nonkey:
+        return right.distinct()
+    desc = [c for c, d in rank if d]
+    dtypes = iter(right.select(*desc).dtypes if desc else ())
+    fields = []
+    for c, d in rank:
+        if d:
+            c = _reversed(c, next(dtypes)[1])
+            if c is None:
+                return None
+        fields.append(c)
+    order = F.struct(*[f.alias(f"__o{i}") for i, f in enumerate(fields)])
+    payload = F.struct(*[right[i].alias(f"__f{i}") for i in nonkey])
+    return (
+        right.groupBy(*[F.col(k) for k in keys])
+        .agg(F.max_by(payload, order).alias("__omsk_s"))
+        .select(
+            *[
+                F.col(c) if c in keyset else F.col(f"__omsk_s.__f{i}").alias(c)
+                for i, c in enumerate(cols)
+            ]
+        )
+    )
+
+
+def lower_last_join(
+    left: DataFrame,
+    right: DataFrame,
+    alias: str,
+    keys: Sequence[str],
+    on: Optional[Column],
+    rank: Sequence[tuple[Column, bool]],
+    rest: Sequence[Column],
+) -> DataFrame:
+    """The one LAST JOIN lowering.
+
+    right : the right side, aliased ``alias``; ``on``, ``rank`` and
+            ``rest`` name its columns through that alias.
+    keys  : the right key columns ``on`` equates with the left side.
+    on    : the key condition (None: no keys).
+    rank  : ``(column, descending)`` pairs over the right side, most
+            significant first. The match that ranks first wins: the max of
+            an ascending entry, the min of a descending one, NULL last.
+    rest  : the ON conjuncts that are not key equalities.
+
+    Returns the left columns followed by the right columns."""
+    from openmldb_spark.engine import servingmat
+
+    kept = []
+    for c in rest:
+        if _references_right_only(left, right, c):
+            # a right row failing the conjunct can never be the selected
+            # last row, and left rows survive via NULL fill either way:
+            # filtering right first is equivalent and keeps the dedupe plan
+            right = right.filter(c)
+        else:
+            kept.append(c)
+    if keys and not kept:
+        dd = _dedupe(right, keys, rank)
+        if dd is not None:
+            # a compiled serve keeps the deduped side resident
+            return left.join(servingmat.offer(dd).alias(alias), on, "left")
+    lid = left.withColumn(_LID, F.monotonically_increasing_id())
+    conds = [c for c in (on, *kept) if c is not None]
+    joined = lid.join(right, reduce(Column.__and__, conds) if conds else F.lit(True), "left")
+    w = Window.partitionBy(_LID).orderBy(
+        *[c.asc_nulls_last() if d else c.desc_nulls_last() for c, d in rank]
+    )
+    return (
+        joined.withColumn(_RN, F.row_number().over(w))
+        .filter(F.col(_RN) == 1)
+        .drop(_LID, _RN)
+    )
+
+
 def last_join(
     left: DataFrame,
     right: DataFrame,
@@ -85,8 +201,8 @@ def last_join(
     on         : equi-key column name(s), or (left_col, right_col) pairs.
     order_by   : right-side ordering column (ts); max wins. None = unsorted
                  LAST JOIN -> requires ``tiebreak``.
-    condition  : extra join predicate referencing both sides (forces the
-                 post-filter plan).
+    condition  : extra join predicate; one that references both sides
+                 forces the post-filter plan.
     tiebreak   : right-side column(s) breaking order ties deterministically
                  (mandatory for unsorted; recommended when ts can tie).
     right_prefix: optionally rename right columns (prefix) to avoid clashes.
@@ -105,95 +221,25 @@ def last_join(
         )
     tiebreaks = [tiebreak] if isinstance(tiebreak, str) else list(tiebreak or [])
 
-    order_cols: list[Column] = []
-    if order_by is not None:
-        order_cols.append(F.col(order_by).desc_nulls_last())
-    order_cols.extend(F.col(t).desc_nulls_last() for t in tiebreaks)
-
+    alias = f"__omsk_r{next(_aliases)}"
+    # standard equality: null-safe matching (the reference's index join
+    # matches NULL keys) lives in the SQL front end only — Spark rewrites
+    # <=> keys to coalesce(k, lit), which defeats bucketed/co-partitioned
+    # layouts and would force an Exchange on the zero-shuffle path
+    # (tests/test_bucketed.py)
+    on_keys = reduce(
+        Column.__and__, [left[lc] == F.col(f"{alias}.{rc}") for lc, rc in pairs]
+    )
+    ranked = ([order_by] if order_by is not None else []) + tiebreaks
+    out = lower_last_join(
+        left,
+        right.alias(alias),
+        alias,
+        [rc for _, rc in pairs],
+        on_keys,
+        [(F.col(f"{alias}.{c}"), False) for c in ranked],
+        [condition] if condition is not None else [],
+    )
     if right_prefix:
-        renames = {c: f"{right_prefix}{c}" for c in right.columns}
-    else:
-        renames = {}
-
-    if condition is not None and _references_right_only(left, right, condition):
-        # right-side-only predicate: filtering right FIRST is equivalent (a
-        # right row failing the condition can never be the selected last
-        # row, and left rows always survive via NULL fill either way), and
-        # it unlocks the dedupe-right scale plan — no left fan-out, no
-        # per-left-row window over monotonically_increasing_id. VERDICT r3
-        # item 5; semantics per reference docs/en/openmldb_sql/dql/
-        # JOIN_CLAUSE.md:5-11.
-        right = right.filter(condition)
-        condition = None
-
-    if condition is None:
-        # dedupe-right plan: one row per key before the join, via
-        # max_by(payload, (order, tiebreaks)) — a hash aggregate with
-        # map-side partial combine, so the shuffle carries at most one
-        # candidate row per key per input partition. (Rounds 1-4 used a
-        # row_number window here: that shuffles EVERY right row and sorts
-        # each partition — strictly worse at scale, and its codegen took
-        # ~6 executions to JIT-warm, which is what the r2→r4 last_join
-        # bench drift was.) Struct comparison is field-by-field with NULL
-        # smallest, so max picks exactly the row row_number(desc_nulls_last)
-        # ranked first: the isNotNull flag makes any non-null order value
-        # beat every null one, ties fall through to the tiebreak fields.
-        ord_fields: list[Column] = []
-        if order_by is not None:
-            ord_fields.append(F.col(order_by).isNotNull().alias("__nn"))
-            ord_fields.append(F.col(order_by).alias("__o"))
-        ord_fields.extend(F.col(t).alias(f"__t{i}") for i, t in enumerate(tiebreaks))
-        # keys come back from the groupBy output (so Catalyst keeps the
-        # hash-partitioning on them — struct-field extraction would hide
-        # it and re-shuffle the join, breaking the bucketed zero-Exchange
-        # layout); only non-key columns ride in the max_by payload.
-        keyset = {r for _, r in pairs}
-        nonkey_idx = [i for i, c in enumerate(right.columns) if c not in keyset]
-        if nonkey_idx:
-            # positional __f{i} payload fields: robust to duplicate column
-            # names on the right (the SQL front end's subqueries allow them)
-            payload = F.struct(*[right[i].alias(f"__f{i}") for i in nonkey_idx])
-            agged = right.groupBy(*[F.col(r) for _, r in pairs]).agg(
-                F.max_by(payload, F.struct(*ord_fields)).alias("__omsk_s")
-            )
-            deduped = agged.select(
-                *[
-                    F.col(c) if c in keyset else F.col(f"__omsk_s.__f{i}").alias(c)
-                    for i, c in enumerate(right.columns)
-                ]
-            )
-        else:
-            deduped = right.distinct()
-        for old, new in renames.items():
-            deduped = deduped.withColumnRenamed(old, new)
-        cond = None
-        for lc, rc in pairs:
-            # standard equality: null-safe matching (the reference's index
-            # join matches NULL keys) lives in the SQL front end only —
-            # Spark rewrites <=> keys to coalesce(k, lit), which defeats
-            # bucketed/co-partitioned layouts and would force an Exchange
-            # on the zero-shuffle path (tests/test_bucketed.py)
-            c = left[lc] == deduped[renames.get(rc, rc)]
-            cond = c if cond is None else (cond & c)
-        return left.join(deduped, cond, "left")
-
-    # post-filter plan: join then keep max-order match per left row.
-    # The user's condition references *original* right column names, so the
-    # prefix rename happens in the final projection, after join + filter.
-    lid = left.withColumn(_LID, F.monotonically_increasing_id())
-    cond = condition
-    for lc, rc in pairs:
-        cond = cond & (lid[lc] == right[rc])
-    joined = lid.join(right, cond, "left")
-    order_cols = []
-    if order_by is not None:
-        order_cols.append(right[order_by].desc_nulls_last())
-    order_cols.extend(right[t].desc_nulls_last() for t in tiebreaks)
-    w = Window.partitionBy(_LID).orderBy(*order_cols)
-    out = joined.withColumn("__omsk_rn", F.row_number().over(w)).filter(
-        F.col("__omsk_rn") == 1
-    )
-    return out.select(
-        *[lid[c] for c in left.columns],
-        *[right[c].alias(renames.get(c, c)) for c in right.columns],
-    )
+        out = out.toDF(*left.columns, *[f"{right_prefix}{c}" for c in right.columns])
+    return out

@@ -10,9 +10,13 @@ LLVM row functions; we instead split every SELECT into
 - **structural path** — statements using dialect-only constructs
   (``WINDOW`` with ROWS/ROWS_RANGE frames + attributes, ``WINDOW ... UNION``,
   ``LAST JOIN``) are lowered explicitly onto
-  :mod:`openmldb_spark.operators.window` / ``window_union`` / the as-of
-  join plans, with scalar sub-expressions still going through ``F.expr``
-  (so they stay inside whole-stage codegen).
+  :mod:`openmldb_spark.operators.window` / ``window_union`` /
+  ``last_join`` (``Lowerer._last_join`` only builds the inputs of
+  ``last_join.lower_last_join``, the lowering the DataFrame operator
+  shares), with scalar sub-expressions still going through ``F.expr``
+  (so they stay inside whole-stage codegen). A GROUP BY over a LAST JOIN
+  groups the joined relation with the same two group stages as any other
+  GROUP BY.
 
 No Python UDFs on either path.
 
@@ -26,8 +30,6 @@ the statement-shape classification and token utilities, :mod:`.exec` the
 
 from openmldb_spark.sql.lowering.aggs import (  # noqa: F401
     _AGGS,
-    _RID,
-    _RN,
     _SPARK_AGG_HEADS,
     _TEXT_GROUP_AGGS,
     _build_agg,

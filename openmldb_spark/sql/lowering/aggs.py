@@ -18,9 +18,6 @@ from openmldb_spark.sql.parser import OverCall, Tok, render, tokenize
 from openmldb_spark.sql.rewrite import rewrite_expr
 
 
-_RID = "__omsql_rid"
-_RN = "__omsql_rn"
-
 # ---------------------------------------------------------------------------
 # aggregate registry: dialect name -> (AggSpec builder, arg kinds)
 #   c = column expression, i = int literal, f = float literal

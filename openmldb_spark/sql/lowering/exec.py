@@ -12,16 +12,17 @@ import copy
 import itertools
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from openmldb_spark.operators.last_join import lower_last_join
 from openmldb_spark.operators.window import WindowDef, window_agg
 from openmldb_spark.sql import parser as P
 from openmldb_spark.sql.parser import Join, Query, Select, SelectItem, SetOp, TableRef, Tok, WindowClause
 from openmldb_spark.sql.rewrite import rewrite_expr
 
 
-from openmldb_spark.sql.lowering.aggs import _AGGS, _RID, _RN, _SPARK_AGG_HEADS, _build_agg, _split_embedded_overs, _split_nested_aggs
+from openmldb_spark.sql.lowering.aggs import _AGGS, _SPARK_AGG_HEADS, _build_agg, _split_embedded_overs, _split_nested_aggs
 from openmldb_spark.sql.lowering.shape import (  # noqa: F401
     _ambiguous_qualifiers,
     _depth_at,
@@ -114,6 +115,28 @@ class Lowerer:
             df = self._select_text(base, env)
             return self._group_structural(df, sel)
         return self._select_text(sel, env)
+
+    def _group(self, df: DataFrame, sel: Select) -> DataFrame:
+        """The GROUP BY stage of ``sel`` over ``df``, its already-joined
+        and filtered FROM relation: the structural lowering for dialect
+        aggregates, else the select list re-rendered as text over ``df``.
+        Alias qualifiers don't survive the relation, so qualified refs are
+        stripped — legal when the bare name is unambiguous in ``df``."""
+        if _needs_structural_group(sel):
+            return self._group_structural(df, sel)
+        cols = df.columns
+        g = copy.copy(sel)
+        g.items = [
+            SelectItem([], None, star=True) if it.star else SelectItem(
+                _dequalify(it.expr, cols), it.alias or _derived_name(it.expr)
+            )
+            for it in sel.items
+        ]
+        g.from_, g.joins, g.where = TableRef(name="__omsql_joined"), [], None
+        g.group_by = [_dequalify(k, cols) for k in sel.group_by]
+        if sel.having is not None:
+            g.having = _dequalify(sel.having, cols)
+        return self._select_text(g, {"__omsql_joined": df})
 
     def _group_structural(self, df: DataFrame, sel: Select) -> DataFrame:
         """GROUP BY with dialect aggregates, lowered onto
@@ -270,34 +293,7 @@ class Lowerer:
             df = df.filter(F.expr(rewrite_expr(sel.where)))
 
         if sel.group_by:
-            # hybrid: LAST JOIN lowered structurally above, the group stage
-            # re-rendered as text over the joined relation. Alias qualifiers
-            # don't survive a temp view, so qualified refs are stripped —
-            # legal when the bare name is unambiguous in the join output.
-            cols = df.columns
-            views: list[str] = []
-            view = self._view(df, views)
-            parts = ["SELECT"]
-            if sel.distinct:
-                parts.append("DISTINCT")
-            items = []
-            for it in sel.items:
-                if it.star:
-                    items.append("*")
-                    continue
-                txt = rewrite_expr(_dequalify(it.expr, cols))
-                alias = it.alias or _derived_name(it.expr)
-                items.append(f"{txt} AS `{alias}`")
-            parts.append(", ".join(items))
-            parts.append(f"FROM {view}")
-            parts.append(
-                "GROUP BY " + ", ".join(rewrite_expr(_dequalify(g, cols)) for g in sel.group_by)
-            )
-            if sel.having is not None:
-                parts.append("HAVING " + rewrite_expr(_dequalify(sel.having, cols)))
-            if sel.limit is not None:
-                parts.append(f"LIMIT {sel.limit}")
-            return self._sql(parts, views)
+            return self._group(df, sel)
 
         base_cols = list(df.columns)
 
@@ -710,27 +706,26 @@ class Lowerer:
 
     def _last_join(self, left: DataFrame, right: DataFrame, j: Join) -> DataFrame:
         """LAST JOIN (ref semantics: JOIN_CLAUSE.md:5-11 — per left row keep
-        the right match with max ORDER BY; unsorted variant uses a
-        deterministic hash tiebreak in place of the reference's storage
-        order, which is undefined after any shuffle)."""
+        the right match with max ORDER BY) as the dialect's inputs to the
+        one lowering, :func:`operators.last_join.lower_last_join`: a
+        null-safe struct key condition, the ORDER BY columns then a row
+        hash as the rank (the unsorted variant's deterministic stand-in for
+        the reference's storage order, which is undefined after any
+        shuffle), and the remaining ON conjuncts."""
         if j.on is None:
             raise ValueError("LAST JOIN requires an ON condition")
         ralias = j.table.bind_name
         if not ralias:
             raise ValueError("LAST JOIN right side needs a name or alias")
-        rcols = list(right.columns)
-        tiebreak = F.xxhash64(*[F.col(f"{ralias}.{c}") for c in rcols])
         # a trailing ASC/DESC keyword flips which end of the order the join
         # picks: LAST JOIN takes the max-order match by default; `ORDER BY
         # ts DESC` takes the MIN (query/last_join_query.yaml id 9)
-        obs: list[tuple[list[Tok], bool]] = []
-        for ob in j.order_by or []:
+        rank: list[tuple[Column, bool]] = []
+        for oi, ob in enumerate(j.order_by or []):
+            is_desc = False
             if ob and ob[-1].kind == "name" and ob[-1].upper in ("ASC", "DESC"):
-                obs.append((ob[:-1], ob[-1].upper == "DESC"))
-            else:
-                obs.append((ob, False))
-        order_cols: list[Column] = []
-        for oi, (ob, is_desc) in enumerate(obs):
+                ob, is_desc = ob[:-1], ob[-1].upper == "DESC"
+            e = F.expr(rewrite_expr(ob))
             if oi == 0:
                 # dialect rule: LAST JOIN ORDER BY must be timestamp or an
                 # integer type — test_lastjoin_simple.yaml ids 7-10/29
@@ -738,97 +733,36 @@ class Lowerer:
                 # explicitly offline-supported there, id 6). Applies to the
                 # FIRST column only: extra tiebreak columns are this repo's
                 # documented superset and may be any orderable type.
-                dtype = right.select(F.expr(rewrite_expr(ob)).alias("__t")).dtypes[0][1]
+                dtype = right.select(e.alias("__t")).dtypes[0][1]
                 if dtype not in ("timestamp", "timestamp_ntz", "bigint", "int", "smallint"):
                     raise ValueError(
                         f"LAST JOIN ORDER BY must be timestamp or an integer "
                         f"type, got {dtype}"
                     )
-            e = F.expr(rewrite_expr(ob))
-            order_cols.append(e.asc_nulls_last() if is_desc else e.desc_nulls_last())
-        order_cols.append(tiebreak.asc())
-
-        equi_pairs = self._equi_right_keys(j.on, ralias)
-        equi = [rc for _, rc in equi_pairs] if equi_pairs is not None else None
+            rank.append((e, is_desc))
+        # the smallest hash wins a tie on every ORDER BY column
+        rank.append((F.xxhash64(*[F.col(f"{ralias}.{c}") for c in right.columns]), True))
+        pairs, rest = self._equi_right_keys(j.on, ralias)
         # the struct key's right-side refs are unresolved `{ralias}.{col}`
-        # attributes — built against `right` here, they resolve identically
-        # against the deduped dd below (same alias, same key columns/types).
-        # None = some key pair's types can't be reconciled exactly: fall
-        # through to the generic plan where Spark's own coercion applies.
-        cond = (
-            _struct_eq(equi_pairs, ralias, left, right) if equi is not None else None
-        )
-        if equi is not None and cond is not None:
-            # scale plan: dedupe right to one row per key via
-            # max_by(payload, (order, ~hash)) — partial map-side combine
-            # (at most one candidate per key per input partition reaches
-            # the shuffle; the old row_number window shuffled every row),
-            # then plain left join — broadcast-able by AQE. Struct-max
-            # picks exactly the window's rank-1 row: isNotNull flag =
-            # desc_nulls_last, bitwise NOT flips the hash so max(~h) is
-            # the window's asc-first h (no negation overflow: ~x = -x-1
-            # is strictly order-reversing on longs).
-            ord_fields: list[Column] = []
-            for ob, is_desc in obs:
-                from openmldb_spark.sql.rewrite import _t_bigint
-
-                e = F.expr(rewrite_expr(ob))
-                ord_fields.append(e.isNotNull())
-                if is_desc:
-                    # max_by picks the struct MAX; ~x is strictly
-                    # order-reversing on longs, so this selects the MIN
-                    # order value (nulls still lose via the isNotNull flag)
-                    ord_fields.append(
-                        F.bitwise_not(F.expr(_t_bigint(rewrite_expr(ob))))
-                    )
-                else:
-                    ord_fields.append(e)
-            ord_fields.append(F.bitwise_not(tiebreak))
-            ord_struct = F.struct(
-                *[f.alias(f"__o{i}") for i, f in enumerate(ord_fields)]
-            )
-            # keys come back from the groupBy output so their partitioning
-            # survives to the join (struct-field extraction would hide it
-            # and force a re-shuffle); non-keys ride in the payload.
-            from openmldb_spark.engine import servingmat
-
-            keyset = set(equi)
-            nonkey_idx = [i for i, c in enumerate(rcols) if c not in keyset]
-            if not nonkey_idx:
-                dd = servingmat.offer(right.distinct()).alias(ralias)
-                return left.join(dd, cond, "left")
-            # positional payload fields: the dialect permits DUPLICATE
-            # projected names in the right subquery (last_join_where.yaml
-            # id 1 projects c4 twice) — name-based struct extraction would
-            # be ambiguous, positional __f{i} aliases re-created as the
-            # original names are not.
-            payload = F.struct(*[right[i].alias(f"__f{i}") for i in nonkey_idx])
-            sel = [
-                F.col(c) if c in keyset else F.col(f"__omsk_s.__f{i}").alias(c)
-                for i, c in enumerate(rcols)
-            ]
-            dd = servingmat.offer(
-                right.groupBy(*[F.col(f"{ralias}.{c}") for c in equi])
-                .agg(F.max_by(payload, ord_struct).alias("__omsk_s"))
-                .select(*sel)
-            ).alias(ralias)
-            return left.join(dd, cond, "left")
-
-        # generic plan: left row-id, join, keep max-order match per row
-        lid = left.withColumn(_RID, F.monotonically_increasing_id())
-        joined = lid.join(right, F.expr(rewrite_expr(j.on)), "left")
-        w = Window.partitionBy(F.col(_RID)).orderBy(*order_cols)
-        return (
-            joined.withColumn(_RN, F.row_number().over(w))
-            .filter(F.col(_RN) == 1)
-            .drop(_RID, _RN)
+        # attributes: they resolve against `right` and its deduped form
+        # alike (same alias, same key columns/types)
+        on = _struct_eq(pairs, ralias, left, right) if pairs else None
+        if on is None:
+            # no key pair, or one whose types can't be reconciled exactly:
+            # the ON condition joins as written, under Spark's own coercion
+            pairs, rest = [], [j.on]
+        return lower_last_join(
+            left, right, ralias, [rc for _, rc in pairs], on, rank,
+            [F.expr(rewrite_expr(c)) for c in rest],
         )
 
     @staticmethod
-    def _equi_right_keys(on: list[Tok], ralias: str) -> Optional[list[str]]:
-        """If ON is a pure conjunction of `<left expr> = <ralias>.<col>`
-        equi-pairs, return the right key column names (enables the
-        dedupe-right plan); else None."""
+    def _equi_right_keys(
+        on: list[Tok], ralias: str
+    ) -> tuple[list[tuple[list[Tok], str]], list[list[Tok]]]:
+        """Split ON into its top-level conjuncts: the `<left expr> =
+        <ralias>.<col>` equi-pairs as (left tokens, right key column), and
+        every other conjunct as tokens."""
         conjuncts: list[list[Tok]] = []
         cur: list[Tok] = []
         depth = 0
@@ -844,45 +778,44 @@ class Lowerer:
                 cur.append(t)
         conjuncts.append(cur)
 
-        keys: list[str] = []
+        def right_col(side: list[Tok]) -> Optional[str]:
+            if (
+                len(side) == 3
+                and side[0].kind == "name"
+                and side[0].text == ralias
+                and side[1].text == "."
+                and side[2].kind == "name"
+            ):
+                return side[2].text.strip("`")
+            return None
+
+        def mentions_right(side: list[Tok]) -> bool:
+            return any(
+                t.kind == "name" and t.text == ralias and i + 1 < len(side)
+                and side[i + 1].text == "."
+                for i, t in enumerate(side)
+            )
+
+        keys: list[tuple[list[Tok], str]] = []
+        rest: list[list[Tok]] = []
         for c in conjuncts:
             eq_at = [
                 i
                 for i, t in enumerate(c)
                 if t.text == "=" and _depth_at(c, i) == 0
             ]
-            if len(eq_at) != 1:
-                return None
-            lhs, rhs = c[: eq_at[0]], c[eq_at[0] + 1 :]
-
-            def right_col(side: list[Tok]) -> Optional[str]:
-                if (
-                    len(side) == 3
-                    and side[0].kind == "name"
-                    and side[0].text == ralias
-                    and side[1].text == "."
-                    and side[2].kind == "name"
-                ):
-                    return side[2].text
-                return None
-
-            def mentions_right(side: list[Tok]) -> bool:
-                return any(
-                    t.kind == "name" and t.text == ralias and i + 1 < len(side)
-                    and side[i + 1].text == "."
-                    for i, t in enumerate(side)
-                )
-
-            rc = right_col(rhs)
-            if rc is not None and not mentions_right(lhs):
-                keys.append((lhs, rc))
-                continue
-            rc = right_col(lhs)
-            if rc is not None and not mentions_right(rhs):
-                keys.append((rhs, rc))
-                continue
-            return None
-        return keys
+            if len(eq_at) == 1:
+                lhs, rhs = c[: eq_at[0]], c[eq_at[0] + 1 :]
+                rc = right_col(rhs)
+                if rc is not None and not mentions_right(lhs):
+                    keys.append((lhs, rc))
+                    continue
+                rc = right_col(lhs)
+                if rc is not None and not mentions_right(rhs):
+                    keys.append((rhs, rc))
+                    continue
+            rest.append(c)
+        return keys, rest
 
 
 

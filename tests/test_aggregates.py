@@ -222,17 +222,17 @@ def test_nth_value_where(spark):
 
 
 def test_group_agg_having_dataframe_path(spark):
-    # DataFrame-path HAVING (R.group_agg having=) — kept here after the
-    # `having` gate query was retired into sql_group for the 50-row cap.
-    from openmldb_spark.operators import relational as R
-
+    # DataFrame-path HAVING (a filter on the aggregate) — kept here after
+    # the `having` gate query was retired into sql_group for the 50-row cap.
     df = spark.createDataFrame(
         [("a", 1), ("a", 2), ("a", 3), ("b", 10)], "k string, v long"
     )
-    out = R.group_agg(
-        df, ["k"], {"n": F.count(F.lit(1)), "s": F.sum("v")},
-        having=F.count(F.lit(1)) >= 2,
-    ).collect()
+    out = (
+        df.groupBy("k")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
+        .filter(F.count(F.lit(1)) >= 2)
+        .collect()
+    )
     assert len(out) == 1 and out[0]["k"] == "a" and out[0]["s"] == 6
 
 

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from openmldb_spark.operators.last_join import last_join
+from openmldb_spark.sql import sql
 
 
 @pytest.fixture(scope="module")
@@ -124,3 +125,115 @@ def test_colliding_condition_name(spark):
             left, right, on="col1", order_by=None, tiebreak="seq",
             condition=F.col("std_ts") > 50, right_prefix="r_",
         ).collect()
+
+
+# ---------------------------------------------------------------------------
+# one lowering: the SQL front end and the operator share the plan choice
+# and the rank
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "on", ["l.k = r.rk", "l.k = r.rk AND l.lid < r.ts"], ids=["keys_only", "two_sided"]
+)
+def test_desc_string_rank_gives_one_answer(spark, on):
+    """Three matches tie on ts; `r.name DESC` picks the smallest name
+    whichever plan the ON clause selects. A string has no exact
+    order-reversing long, so it never ranks inside the max_by struct."""
+    tables = {
+        "l": spark.createDataFrame([(1, "x")], "lid int, k string"),
+        "r": spark.createDataFrame(
+            [("x", 10, n) for n in "abc"], "rk string, ts long, name string"
+        ),
+    }
+    out = sql(
+        spark,
+        f"SELECT r.name FROM l LAST JOIN r ORDER BY r.ts, r.name DESC ON {on}",
+        tables,
+    )
+    assert [r["name"] for r in out.collect()] == ["a"]
+
+
+def test_backquoted_right_key(spark):
+    """A backquoted right key column names the same key as a bare one."""
+    tables = {
+        "l": spark.createDataFrame([(1, "x")], "lid int, k string"),
+        "r": spark.createDataFrame([("x", 10, "a")], "rk string, ts long, name string"),
+    }
+    out = sql(
+        spark, "SELECT r.name FROM l LAST JOIN r ORDER BY r.ts ON l.k = r.`rk`", tables
+    )
+    assert [r["name"] for r in out.collect()] == ["a"]
+
+
+def test_right_only_conjunct_keeps_dedupe_plan(spark):
+    """A right-only ON conjunct pre-filters the right side: the engine plans
+    the max_by dedupe, with no Window node, as the operator does."""
+    tables = {
+        "l": spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "lid int, k string"),
+        "r": spark.createDataFrame(
+            [("a", 1, 50), ("a", 2, 70), ("a", 3, 55), ("b", 1, 40), ("c", 5, 61), ("c", 6, 90)],
+            "rk string, ts long, v long",
+        ),
+    }
+    out = sql(
+        spark,
+        "SELECT l.lid, r.ts, r.v FROM l LAST JOIN r ORDER BY r.ts "
+        "ON l.k = r.rk AND r.v > 60",
+        tables,
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "max_by" in plan, plan
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 2, 70), (2, None, None), (3, 6, 90)]
+
+
+def test_sql_and_operator_pick_the_same_rows(spark):
+    """Generated tables without NULL keys, NULLs and ties in every rank
+    column but a unique last one: SQL `ORDER BY ts, tb1, tb2` and
+    `last_join(order_by="ts", tiebreak=["tb1", "tb2"])` agree row for row."""
+    import random
+
+    rnd = random.Random(11)
+    left = spark.createDataFrame(
+        [(i, rnd.randrange(30)) for i in range(300)], "lid int, k int"
+    )
+    tb2 = list(range(2000))
+    rnd.shuffle(tb2)
+    right = spark.createDataFrame(
+        [
+            (rid, rnd.randrange(25), rnd.choice([None, 0, 1, 2, 3]),
+             rnd.choice([None, 0, 1]), tb2[rid])
+            for rid in range(2000)
+        ],
+        "rid int, k int, ts long, tb1 int, tb2 int",
+    )
+    via_sql = sql(
+        spark,
+        "SELECT l.lid, r.rid FROM l LAST JOIN r ORDER BY r.ts, r.tb1, r.tb2 "
+        "ON l.k = r.k",
+        {"l": left, "r": right},
+    )
+    via_op = last_join(
+        left, right, on="k", order_by="ts", tiebreak=["tb1", "tb2"], right_prefix="r_"
+    ).select("lid", "r_rid")
+    want = sorted(tuple(r) for r in via_op.collect())
+    assert len(want) == 300 and any(r[1] is None for r in want)
+    assert sorted(tuple(r) for r in via_sql.collect()) == want
+
+
+def test_null_keys_match_in_sql_only(spark):
+    """The one difference between the entry points, by their key
+    conditions: the dialect's index join matches NULL keys (null-safe
+    struct equality), the operator's plain equality does not."""
+    left = spark.createDataFrame([(1, None), (2, "a")], "lid int, k string")
+    right = spark.createDataFrame([(None, 1, 10), ("a", 1, 20)], "k string, ts long, rid int")
+    via_sql = sql(
+        spark,
+        "SELECT l.lid, r.rid FROM l LAST JOIN r ORDER BY r.ts ON l.k = r.k",
+        {"l": left, "r": right},
+    )
+    assert sorted(tuple(r) for r in via_sql.collect()) == [(1, 10), (2, 20)]
+    via_op = last_join(left, right, on="k", order_by="ts", right_prefix="r_")
+    assert sorted(tuple(r) for r in via_op.select("lid", "r_rid").collect()) == [
+        (1, None), (2, 20),
+    ]

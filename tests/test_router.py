@@ -119,3 +119,53 @@ def test_deployment_names_route_as_written(eng):
     eng.execute("USE db2")
     assert eng.execute("DROP DEPLOYMENT d1") is None
     assert eng.execute("SHOW DEPLOYMENTS").count() == 0
+
+
+def test_drop_table_forms(eng):
+    """DROP TABLE t1 / DROP TABLE db1.t1 / DROP TABLE IF EXISTS t1 (plan
+    corpus cmd.yaml ids 14-1..14-3): the IF EXISTS form drops t1, not a
+    table named IF, and is a no-op once t1 is gone."""
+    def tables():
+        return [r[0] for r in eng.execute("SHOW TABLES").collect()]
+
+    eng.execute("CREATE TABLE t1 (c1 int, ts timestamp, INDEX(KEY=c1, TS=ts))")
+    assert eng.execute("DROP TABLE IF EXISTS t1;") is None
+    assert tables() == ["t"]
+    assert eng.execute("DROP TABLE IF EXISTS t1;") is None
+    with pytest.raises(ValueError, match="does not exist"):
+        eng.execute("DROP TABLE t1;")
+    eng.execute("CREATE TABLE t1 (c1 int, ts timestamp, INDEX(KEY=c1, TS=ts))")
+    eng.execute("DROP TABLE t1;")
+    assert tables() == ["t"]
+    eng.execute("CREATE DATABASE db1")
+    eng.execute("CREATE TABLE db1.t1 (c1 int, ts timestamp, INDEX(KEY=c1, TS=ts))")
+    eng.execute("DROP TABLE db1.t1;")
+    eng.execute("USE db1")
+    assert tables() == []
+
+
+def test_deploy_if_not_exists(eng):
+    """DEPLOY IF NOT EXISTS (plan corpus deploy_stmt_2 /
+    deploy_stmt_options): the name after the guard is the deployment's,
+    and an existing name is a no-op that returns the deployment."""
+    eng.execute("CREATE TABLE t1 (col1 int, ts timestamp, INDEX(KEY=col1, TS=ts))")
+    dep = eng.execute("DEPLOY IF NOT EXISTS foo2 SELECT col1 from t1;")
+    assert dep.name == "foo2" and set(eng.deployments) == {"foo2"}
+    assert eng.execute("DEPLOY IF NOT EXISTS foo2 SELECT col1 from t1;") is dep
+    with pytest.raises(ValueError, match="already exists"):
+        eng.execute("DEPLOY foo2 SELECT col1 from t1;")
+    # the option is read in double quotes too: the corpus statement names
+    # a window its SELECT does not use, which the deploy refuses
+    with pytest.raises(ValueError, match="long_windows"):
+        eng.execute(
+            'DEPLOY IF NOT EXISTS foo_op OPTIONS(long_windows="w1:100") SELECT col1 from t1;'
+        )
+    windowed = (
+        'DEPLOY IF NOT EXISTS foo_op OPTIONS(long_windows="w1:100") '
+        "SELECT col1, sum(col1) OVER w1 AS s FROM t1 WINDOW w1 AS "
+        "(PARTITION BY col1 ORDER BY ts ROWS_RANGE BETWEEN 1s PRECEDING AND CURRENT ROW)"
+    )
+    op = eng.execute(windowed)
+    assert op.name == "foo_op" and op.long_windows == {"w1": "100"}
+    assert eng.execute(windowed) is op
+    assert set(eng.deployments) == {"foo2", "foo_op"}

@@ -340,6 +340,19 @@ def test_last_join_then_group_by(spark, t1, dim):
     assert rows == {"A": (5, 1000), "B": (4, 1600)}
 
 
+def test_last_join_then_group_by_dialect_aggregate(spark, t1, dim):
+    # a dialect aggregate with no Spark SQL spelling groups the joined
+    # relation structurally, as it does without the join
+    out = sql(
+        spark,
+        "SELECT t1.pk1, count_cate(col1, t2.tag) AS cc FROM t1 "
+        "LAST JOIN dim t2 ORDER BY t2.rts ON t1.pk1 = t2.k "
+        "GROUP BY t1.pk1",
+        {"t1": t1, "dim": dim},
+    )
+    assert {tuple(r) for r in out.collect()} == {("A", "a-new:5"), ("B", "b-future:4")}
+
+
 def test_last_join_into_window(spark, t1, dim):
     # join then window over the joined relation (last_join_window_query.yaml)
     out = sql(
