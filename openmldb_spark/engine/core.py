@@ -665,13 +665,14 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
         dotted Python-API names ('db1.s'), so register_stream, the DDL
         guards, and the SELECT router all agree on scoping (r9 ADVICE: the
         raw-name keying left 'db1.s' unguarded against CREATE TABLE s and
-        rejected CREATE TABLE db2.s when a stream 's' existed)."""
+        rejected CREATE TABLE db2.s when a stream 's' existed). DROP TABLE
+        resolves its as-written name through it too."""
         if name is None:
             return ("", "")  # subquery FROM: never a stream key
         if name in self._mangled:
             return self._mangled[name]
         db, _, bare = name.rpartition(".")
-        return (db or self.current_db), bare.strip("`")
+        return (db.strip("`") or self.current_db), bare.strip("`")
 
     # -- public ---------------------------------------------------------------
     def register(self, name: str, df: DataFrame) -> None:

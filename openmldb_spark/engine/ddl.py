@@ -206,8 +206,7 @@ class DdlMixin:
         return None
 
     def _drop_table(self, name: str, if_exists: bool):
-        db, _, bare = name.rpartition(".")
-        db, bare = db.strip("`") or self.current_db, bare.strip("`")
+        db, bare = self._stream_loc(name)
         if bare not in self._dbs.get(db, {}):
             if if_exists:
                 return None

@@ -90,6 +90,10 @@ def _reversed(c: Column, dtype: str) -> Optional[Column]:
         return F.bitwise_not(F.unix_date(c))
     if dtype == "timestamp":
         return F.bitwise_not(F.unix_micros(c))
+    if dtype == "timestamp_ntz":
+        # wall-clock micros since the epoch, free of any session time zone
+        epoch = F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'")
+        return F.bitwise_not(F.timestamp_diff("MICROSECOND", epoch, c))
     return None
 
 

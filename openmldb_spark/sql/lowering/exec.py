@@ -762,7 +762,9 @@ class Lowerer:
     ) -> tuple[list[tuple[list[Tok], str]], list[list[Tok]]]:
         """Split ON into its top-level conjuncts: the `<left expr> =
         <ralias>.<col>` equi-pairs as (left tokens, right key column), and
-        every other conjunct as tokens."""
+        every other conjunct as tokens. An ON whose top level is not a
+        plain AND chain (an OR or XOR, or a BETWEEN/CASE whose own AND is no
+        conjunction) comes back whole, as one conjunct with no pairs."""
         conjuncts: list[list[Tok]] = []
         cur: list[Tok] = []
         depth = 0
@@ -771,6 +773,8 @@ class Lowerer:
                 depth += 1
             elif t.text in ")]":
                 depth -= 1
+            if depth == 0 and t.upper in ("OR", "XOR", "BETWEEN", "CASE"):
+                return [], [on]
             if depth == 0 and t.upper == "AND":
                 conjuncts.append(cur)
                 cur = []
@@ -804,7 +808,8 @@ class Lowerer:
                 for i, t in enumerate(c)
                 if t.text == "=" and _depth_at(c, i) == 0
             ]
-            if len(eq_at) == 1:
+            # `NOT a = b` negates the whole comparison: no key pair
+            if len(eq_at) == 1 and c[0].upper != "NOT":
                 lhs, rhs = c[: eq_at[0]], c[eq_at[0] + 1 :]
                 rc = right_col(rhs)
                 if rc is not None and not mentions_right(lhs):

@@ -237,3 +237,79 @@ def test_null_keys_match_in_sql_only(spark):
     assert sorted(tuple(r) for r in via_op.select("lid", "r_rid").collect()) == [
         (1, None), (2, 20),
     ]
+
+
+def _lj_tables(spark):
+    return {
+        "l": spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "c"), (4, "d")], "lid int, k string"
+        ),
+        "r": spark.createDataFrame(
+            [("a", 1, 50), ("a", 2, 70), ("a", 3, 55), ("b", 1, 40), ("c", 5, 61), ("c", 6, 90)],
+            "rk string, ts long, v long",
+        ),
+    }
+
+
+def test_between_in_on_clause(spark):
+    """The AND of a BETWEEN is no conjunction: the ON clause joins whole."""
+    out = sql(
+        spark,
+        "SELECT l.lid, r.ts, r.v FROM l LAST JOIN r ORDER BY r.ts "
+        "ON l.k = r.rk AND r.ts BETWEEN 2 AND 5",
+        _lj_tables(spark),
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 3, 55), (2, None, None), (3, 5, 61), (4, None, None),
+    ]
+
+
+def test_top_level_or_in_on_clause(spark):
+    """`k AND v > 60 OR v < 45` is `(k AND v > 60) OR v < 45`: the row with
+    v = 40 matches every left row, keyed or not."""
+    out = sql(
+        spark,
+        "SELECT l.lid, r.ts, r.v FROM l LAST JOIN r ORDER BY r.ts "
+        "ON l.k = r.rk AND r.v > 60 OR r.v < 45",
+        _lj_tables(spark),
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 2, 70), (2, 1, 40), (3, 6, 90), (4, 1, 40),
+    ]
+
+
+def test_desc_timestamp_ntz_keeps_dedupe_plan(spark):
+    """A timestamp_ntz column reverses exactly onto a long, so `ORDER BY
+    ts DESC` over one still plans the max_by dedupe and picks the min."""
+    tables = {
+        "l": spark.createDataFrame([(1, "a"), (2, "b")], "lid int, k string"),
+        "r": spark.sql(
+            "SELECT * FROM VALUES "
+            "('a', TIMESTAMP_NTZ'2024-03-10 02:30:00.000002', 1), "
+            "('a', TIMESTAMP_NTZ'2024-03-10 02:30:00.000001', 2), "
+            "('a', TIMESTAMP_NTZ'1960-01-01 00:00:00', 3), "
+            "('b', TIMESTAMP_NTZ'2024-11-03 01:30:00', 4), "
+            "('b', TIMESTAMP_NTZ'2024-11-03 01:30:00.5', 5) AS t(rk, ts, rid)"
+        ),
+    }
+    out = sql(
+        spark,
+        "SELECT l.lid, r.rid FROM l LAST JOIN r ORDER BY r.ts DESC ON l.k = r.rk",
+        tables,
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "max_by" in plan, plan
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 3), (2, 4)]
+
+
+def test_negated_equality_is_no_key_pair(spark):
+    """`NOT l.k = r.rk` negates the comparison; it is no key equality."""
+    out = sql(
+        spark,
+        "SELECT l.lid, r.ts, r.v FROM l LAST JOIN r ORDER BY r.ts "
+        "ON NOT l.k = r.rk AND r.v < 60",
+        _lj_tables(spark),
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 1, 40), (2, 3, 55), (3, 3, 55), (4, 3, 55),
+    ]
