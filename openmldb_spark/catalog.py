@@ -70,11 +70,14 @@ def apply_ttl(
     index: IndexDef,
     *,
     now_ms: Optional[int] = None,
+    staged: bool = False,
 ) -> DataFrame:
     """Enforce an index's TTL as a filter (batch equivalent of online GC).
 
     ``now_ms`` pins "now" for determinism; defaults to the max ts in the data
-    (the only reproducible choice for a batch engine).
+    (the only reproducible choice for a batch engine). ``staged`` marks
+    ``df`` as a compiled serve's single-partition staged rows: the max then
+    comes from an unpartitioned window, which needs no Exchange there.
     """
     if index.ttl is None or index.ts_col is None:
         return df
@@ -97,6 +100,9 @@ def apply_ttl(
         ttl_ms = parse_interval_ms(ttl_str)
         if now_ms is not None:
             return d, ts_ms > F.lit(now_ms - ttl_ms)
+        if staged:
+            d = d.withColumn("__omsk_ttl_max", F.max(ts_ms).over(Window.partitionBy()))
+            return d, ts_ms > F.col("__omsk_ttl_max") - F.lit(ttl_ms)
         mx = d.agg(F.max(ts_ms).alias("__omsk_ttl_max"))
         return d.crossJoin(F.broadcast(mx)), ts_ms > F.col("__omsk_ttl_max") - F.lit(ttl_ms)
 

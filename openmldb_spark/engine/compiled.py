@@ -1,11 +1,14 @@
-"""The compiled request plan — build once per deployment, swap staged
-request rows per call (the Spark analog of the reference's per-DEPLOY
-compiled-plan cache, ``hybridse/src/vm/engine.cc:453-496``). Split from
+"""The compiled request plan — built and planned once per deployment,
+re-run per call over a staged file holding the request rows and their key
+segments (the Spark analog of the reference's per-DEPLOY compiled-plan
+cache, ``hybridse/src/vm/engine.cc:453-496``, reading one in-memory pk
+segment per index, ``src/storage/mem_table.cc``). Split from
 :mod:`openmldb_spark.engine.serving` (house <=900-line module bar)."""
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 
@@ -19,16 +22,14 @@ STAGING_DIR_CONF = "spark.openmldb.serving.stagingDir"
 
 
 def resolve_staging_dir(master: str, explicit: str | None) -> str | None:
-    """Pick the staging root for compiled-plan request batches.
+    """Pick the staging root for compiled-plan staged files.
 
     ``explicit`` (Engine arg or the ``spark.openmldb.serving.stagingDir``
-    conf) wins. With no explicit dir, a driver-local tempdir is only
-    correct when driver and executors share a filesystem — i.e. local
-    mode; on any other master this RAISES instead of silently serving
-    empty results when executors fail to open the driver's tempfile. The
-    reference has no such gap (request rows travel inside the RPC,
-    ``src/sdk/sql_cluster_router.h:116-190``); ours is a file handoff, so
-    the cluster contract is enforced here rather than docstring-only.
+    conf) wins. With none, a driver-local tempdir is only correct when
+    driver and executors share a filesystem (local mode); any other
+    master RAISES instead of silently serving empty results. (The
+    reference sends request rows inside the RPC,
+    ``src/sdk/sql_cluster_router.h:116-190``; ours is a file handoff.)
     """
     if explicit:
         return explicit
@@ -43,21 +44,20 @@ def resolve_staging_dir(master: str, explicit: str | None) -> str | None:
     return None
 
 
-#: spark.conf key for the fixed size (bytes) of the JVM-staged request
-#: file; requests whose encoding exceeds it raise with instructions
+#: spark.conf key for the fixed size (bytes) of the JVM-staged file (the
+#: request rows plus their key segments); a serve whose encoding exceeds
+#: it raises with instructions
 STAGING_BYTES_CONF = "spark.openmldb.serving.stagingBytes"
-DEFAULT_STAGING_BYTES = 262_144
+DEFAULT_STAGING_BYTES = 1 << 20
 
 # Serving-tuned confs are applied to an ISOLATED serving session (a
 # ``newSession()`` clone — own conf, shared SparkContext/catalog/cache):
-# AQE's per-stage materialization and 32-task shuffle stages are built
-# for data-sized queries, but a serve's shuffles carry request-row-sized
-# data (history is key-pruned), so the fixed tiny plan wins ~40% wall
-# latency. Serves re-root the compiled plan's ANALYZED tree onto the
-# clone, so physical planning picks the serving confs up while the
-# user's session confs are NEVER touched — a batch query planned
-# concurrently with a serve sees its own AQE/partition settings (swapping
-# confs on the shared session per serve was session-global and racy).
+# AQE's per-stage materialization, shuffle fan-out and broadcast joins are
+# built for data-sized queries, but a serve reads a few staged key
+# segments. The compiled plan's ANALYZED tree is re-rooted onto the
+# clone, so physical planning picks the serving confs up while the user's
+# session confs are NEVER touched — a batch query planned concurrently
+# with a serve sees its own AQE/partition settings.
 
 #: simple types the JVM text staging can round-trip exactly (base64 cell
 #: -> decode -> cast, all Catalyst expressions); a deployment whose input
@@ -76,18 +76,21 @@ def _jvm_stageable(schema) -> bool:
     )
 
 
-def _jvm_source(spark, path: str, schema) -> DataFrame:
-    """JVM-only staged request source: ``spark.read.text`` over a
-    FIXED-SIZE padded file (the scan's FileIndex caches the length at
-    compile time, so the file must never change size — the writer pads
-    with ONE line of spaces), one base64-cell CSV-ish line per row, decoded
-    and cast entirely with Catalyst expressions, so the serving hot path
-    starts no Python worker."""
+def _jvm_source(spark, path: str, schema, role: str | None = None) -> DataFrame:
+    """JVM-only staged source: ``spark.read.text`` over a FIXED-SIZE padded
+    file (the scan's FileIndex caches the length at compile time, so the
+    file must never change size — the writer pads with ONE line of
+    spaces), one base64-cell CSV-ish line per row, decoded and cast
+    entirely with Catalyst expressions, so the serving hot path starts no
+    Python worker. With ``role``, the source reads only the lines
+    :func:`_encode_rows` tagged with it, so one file carries the rows of
+    several schemas."""
     raw = spark.read.text(path)
     parts = F.split(F.col("value"), ",", -1)
+    first = 1 if role is None else 2
     cols = []
     for i, f in enumerate(schema.fields):
-        cell = F.element_at(parts, i + 1)
+        cell = F.element_at(parts, i + first)
         decoded = F.unbase64(cell)
         tn = f.dataType.typeName()
         if tn == "timestamp":
@@ -102,13 +105,17 @@ def _jvm_source(spark, path: str, schema) -> DataFrame:
         col = F.when(cell == "~", F.lit(None).cast(f.dataType)).otherwise(decoded)
         cols.append(col.alias(f.name))
     # every encoded row ends with a trailing ","; the padding line never does
-    return raw.where(F.col("value").endswith(",")).select(*cols)
+    keep = F.col("value").endswith(",")
+    if role is not None:
+        keep = keep & F.col("value").startswith(role + ",")
+    return raw.where(keep).select(*cols)
 
 
-def _encode_rows(table, schema=None) -> bytes:
+def _encode_rows(table, schema=None, role: str | None = None) -> bytes:
     """Encode an Arrow table of rows into staged text lines (base64
     cells, "~" nulls, a trailing comma, one newline-terminated line per
-    row). ``timestamp``-typed fields encode as epoch-MICROS (decoded by
+    row, led by a ``role`` cell when given). ``timestamp``-typed fields
+    encode as epoch-MICROS (decoded by
     ``timestamp_micros`` — timezone-free on the wire). Both staging
     producers (``toArrow`` and ``LocalDataToArrowConversion``) emit
     TZ-AWARE datetimes for timestamp columns, so the epoch math is
@@ -157,8 +164,9 @@ def _encode_rows(table, schema=None) -> bytes:
             raw = str(v)
         return base64.b64encode(raw.encode("utf-8")).decode("ascii")
 
+    lead = "" if role is None else role + ","
     return "".join(
-        ",".join(fmt(k, v) for k, v in row.items()) + ",\n"
+        lead + ",".join(fmt(k, v) for k, v in row.items()) + ",\n"
         for row in table.to_pylist()
     ).encode("utf-8")
 
@@ -169,9 +177,9 @@ def _pad_staged(data: bytes, pad_bytes: int) -> bytes:
     make every scan read one empty record per pad byte)."""
     if len(data) > pad_bytes:
         raise ValueError(
-            f"staged request batch encodes to {len(data)} bytes, over the "
-            f"fixed staging size {pad_bytes} (the compiled plan's scan "
-            f"caches the file length). Set spark conf {STAGING_BYTES_CONF} "
+            f"staged request rows and key segments encode to {len(data)} "
+            f"bytes, over the fixed staging size {pad_bytes} (the compiled "
+            f"plan's scan caches the file length). Set spark conf {STAGING_BYTES_CONF} "
             "higher BEFORE the deployment compiles, or serve the batch "
             "through the uncompiled DataFrame path."
         )
@@ -244,12 +252,12 @@ def _rows_to_arrow(rows, ts_idx, schema):
 
 def _serving_session(spark):
     """The isolated serving session: a ``newSession()`` clone sharing the
-    SparkContext, catalog and cache manager but owning its conf — AQE off
-    and a tiny shuffle fan-out are set ONCE here instead of swapped on
-    the shared session per serve. ``newSession`` does NOT inherit
+    SparkContext, catalog and cache manager but owning its conf — AQE,
+    shuffle fan-out and auto-broadcast are set ONCE here instead of swapped
+    on the shared session per serve. ``newSession`` does NOT inherit
     runtime-set confs (session timezone, ANSI flags, … would silently
     reset and change serve SEMANTICS), so the engine session's conf
-    state is copied first, then the two serving overrides applied."""
+    state is copied first, then the serving overrides applied."""
     clone = spark.newSession()
     for k, v in spark.conf.getAll.items():
         if v is None:
@@ -260,64 +268,109 @@ def _serving_session(spark):
         except Exception:  # non-modifiable/static conf: context-level anyway
             pass
     clone.conf.set("spark.sql.adaptive.enabled", "false")
-    # 1: serve shuffles carry request-row-sized data (history is
-    # key-pruned), so even a 2-task fan-out only adds scheduling latency —
-    # measured ~25% p50 on a two-window deploy (r12 A/B)
+    # a plan that keeps a store read still shuffles request-sized data:
+    # even a 2-task fan-out only adds scheduling latency (~25% p50, r12)
     clone.conf.set("spark.sql.shuffle.partitions", "1")
+    # staged leaves are single-partition, so a join between them plans as
+    # a sort-merge join with no Exchange; a broadcast would add one
+    clone.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     return clone
 
 
+#: physical-plan words that make re-collecting a planned Dataset unsafe:
+#: a shuffle or broadcast keeps the rows of the execution that built it,
+#: and a subquery result is computed once per plan
+_REPLAN_NODE = re.compile(r"\b\w*(?:Exchange|[Ss]ubquery)\w*")
+
+
+class SegmentIndex:
+    """One table's rows, resident on the driver as Arrow, ordered by
+    (key, ts), with the row positions of every key of each key set: the
+    analog of a tablet's in-memory pk segment indexes
+    (``src/storage/mem_table.cc``). A segment is the union of the rows
+    sharing a probed key under any key set; each window or join reads its
+    own key set's part, and the other rows fall in other partitions.
+
+    ``anchors`` are the ts columns of absolute TTLs whose "now" is the
+    table's max ts: every segment carries the row holding each max, so the
+    in-plan TTL filter over the staged rows computes the table-wide bound.
+    That row has a probed key (it is in the segment anyway) or none, so it
+    enters no frame and matches no join key."""
+
+    def __init__(self, table: str, rows, keysets, ts, anchors):
+        import pyarrow.compute as pc
+
+        self.table = table
+        self.keysets = [list(ks) for ks in keysets]
+        self.anchors = list(anchors)
+        order = [(k, "ascending") for k in self.keysets[0] + ([ts] if ts else [])]
+        self.rows = rows.take(pc.sort_indices(rows, sort_keys=order))
+        self._pos: list[dict[tuple, list[int]]] = [{} for _ in self.keysets]
+        self._add(self.rows, 0)
+
+    def _add(self, rows, base: int) -> None:
+        for ks, pos in zip(self.keysets, self._pos):
+            cols = [rows.column(k).to_pylist() for k in ks]
+            for i, key in enumerate(zip(*cols), base):
+                pos.setdefault(key, []).append(i)
+
+    def append(self, rows) -> None:
+        import pyarrow as pa
+
+        base = self.rows.num_rows
+        self.rows = pa.concat_tables([self.rows, rows.cast(self.rows.schema)])
+        self._add(rows, base)
+
+    def segment(self, keys):
+        """The rows of ``keys[j]`` (key tuples) under each key set ``j``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        ids = {i for ks, pos in zip(keys, self._pos) for k in ks for i in pos.get(k, ())}
+        for c in self.anchors:
+            col = self.rows.column(c)
+            top = pc.max(col)
+            if top.is_valid:
+                ids.add(pc.index(col, top).as_py())
+        return self.rows.take(pa.array(sorted(ids), pa.int64()))
+
+
 class CompiledRequestPlan:
-    """A deployment's request plan, compiled ONCE and re-served by swapping
-    staged request rows — the Spark analog of the reference's per-DEPLOY
-    compiled-plan cache (``hybridse/src/vm/engine.cc:453-496``: CompileSql
-    caches the physical plan; ``src/sdk/sql_cluster_router.h:116-190``
-    CallProcedure binds a request row per call).
+    """A deployment's request plan, compiled and physically planned ONCE,
+    then re-run per serve over newly staged rows — the Spark analog of the
+    reference's per-DEPLOY compiled-plan cache
+    (``hybridse/src/vm/engine.cc:453-496``; ``src/sdk/
+    sql_cluster_router.h:116-190`` CallProcedure binds a row per call)
+    answering from resident pk segments (``src/storage/mem_table.cc``).
 
-    Mechanics, and why each piece is needed:
+    - **Index.** At compile time each table the deployment can key
+      (:meth:`SqlDeployment._serving_layout`: the request table's history,
+      WINDOW UNION tables, LAST JOIN right sides) is copied from its store
+      into a :class:`SegmentIndex`; any other table stays a store read in
+      the same plan. An online append (``INSERT``, REST ``PUT``) reaches
+      :meth:`append`; any other write makes the plan stale
+      (:meth:`current`), and the next serve rebuilds index and plan.
+    - **Staging.** Each serve writes ONE fixed-size padded text file: the
+      request rows plus the segments of the keys they probe, each line
+      tagged with its role and read by its own ``coalesce(1)`` leaf. TTLs
+      apply in-plan over the staged rows.
+    - **Planned once.** A plan whose executed form holds no Exchange,
+      broadcast or subquery (``replan_node`` None) reads nothing a serve
+      could leave stale — each execution reads the staged file anew — so
+      every serve collects the Dataset planned at compile time. Otherwise
+      each serve plans a fresh Dataset, since re-collecting a shuffle or
+      broadcast would serve the previous request's rows.
 
-    - the request source reads a staged file when the job RUNS, so new
-      rows flow through the already-built plan without re-lowering (parse
-      + Lowerer + per-intermediate-Dataset Catalyst analysis — ~50% of
-      the uncached per-call latency). The rows stage as a FIXED-SIZE
-      padded text file read by ``spark.read.text`` + Catalyst decode/cast
-      projections, so a serve runs zero Python stages. Only input schemas
-      :func:`_jvm_stageable` accepts compile; ``SqlDeployment`` serves any
-      other through its per-call path.
-    - each serve returns a FRESH Dataset over the cached ANALYZED plan
-      (re-rooted onto the isolated serving session, else
-      ``.where(lit(True))``): re-collecting the same Dataset would REUSE
-      its shuffle map outputs (ShuffleExchangeExec caches its ShuffledRowRDD
-      and the DAGScheduler skips registered map stages), silently serving
-      the PREVIOUS request's rows. Fresh physical planning per call is the
-      correct/fast split: analysis of an already-resolved tree is cheap;
-      the Python-side lowering never re-runs.
-    - ``key`` (from ``SqlDeployment._serving_key``) pins the engine state
-      the plan captured: a TTL pin / mode / db change, and every write
-      except an absorbed INSERT, bumps an epoch past it and makes
-      ``run_request`` drop and recompile.
-    - the plan also owns an APPEND LOG, a second fixed-size
-      staged file that serving history reads as ``store ∪ log`` before its
-      TTL filters. An online ``INSERT … VALUES`` into the request table
-      is written through to it by :meth:`absorb` (which then advances the
-      epoch in ``key``), so the next serve sees the row without
-      re-lowering — the analog of a tablet ``Put`` being readable by the
-      very next request. A log that would overflow its fixed size is not
-      written; the key stays stale and the next serve recompiles.
-
-    Both serve arms are EAGER and hold the per-plan lock across
-    stage+collect, so concurrent callers (the ThreadingHTTPServer RESTful
-    handler, parallel ``run_request`` calls) serialize per deployment
-    instead of overwriting each other's staged rows: :meth:`serve_rows`
-    returns collected rows; :meth:`serve` returns the collected result
-    re-wrapped as a driver-local DataFrame (job-free to collect).
+    Both serve arms hold the per-plan lock across stage+collect, so
+    concurrent callers (the ThreadingHTTPServer RESTful handler, parallel
+    ``run_request`` calls) serialize per deployment instead of overwriting
+    each other's staged rows.
     """
 
-    def __init__(self, dep: "SqlDeployment", key: tuple):
+    def __init__(self, dep: "SqlDeployment"):
         import threading
 
         self.dep = dep
-        self.key = key
         self.spark = dep.engine.spark
         self._lock = threading.Lock()
         root = resolve_staging_dir(
@@ -332,54 +385,50 @@ class CompiledRequestPlan:
             self.spark.conf.get(STAGING_BYTES_CONF, str(DEFAULT_STAGING_BYTES))
         )
         self._staged = os.path.join(self._dir, "requests.txt")
-        # stage an empty batch so compile-time analysis sees the schema
-        # and the FIXED file size the scan will cache
-        self._write_staged(
-            self.spark.createDataFrame([], dep.input_schema).toArrow()
+        # an empty file of the FIXED size the scans will cache
+        self._write_file(self._staged, _pad_staged(b"", self._pad))
+        eng = dep.engine
+        segments, self.store_reads = dep._serving_layout()
+        self.key = dep._serving_key(self.store_reads)
+        #: (db, bare) -> the store DataFrame an index mirrors
+        self.mirrors: dict = {}
+        #: binding name -> (loc, index, probes, Spark schema)
+        self.indexes: dict = {}
+        leaves = {}
+        for i, (name, (table, keysets, ts, probes, anchors)) in enumerate(
+            segments.items()
+        ):
+            loc = eng._loc(table)
+            store = self.mirrors[loc] = eng._dbs[loc[0]][loc[1]]
+            idx = SegmentIndex(table, store.toArrow(), keysets, ts, anchors)
+            self.indexes[name] = (loc, idx, probes, store.schema)
+            leaves[name] = _jvm_source(
+                self.spark, self._staged, store.schema, role=f"s{i}"
+            ).coalesce(1)
+        src = _jvm_source(
+            self.spark, self._staged, dep.input_schema, role="q"
+        ).coalesce(1)
+        self.plan = dep._run_request_on(
+            dep._query_with_params(None), src, None, leaves
         )
-        from openmldb_spark.engine import servingmat
-
-        #: encoded rows of the append log (see absorb)
-        self._log_data = b""
-        self._log = os.path.join(self._dir, "appended.txt")
-        src = _jvm_source(self.spark, self._staged, dep.input_schema)
-        self._write_file(self._log, _pad_staged(b"", self._pad))
-        appended = servingmat.mark_staged(
-            _jvm_source(self.spark, self._log, dep.input_schema)
-        )
-        # marker filter (constant-folded away) so servingmat.offer can
-        # refuse subtrees reading the staged source — or the append log,
-        # whose rows change without a recompile
-        src = servingmat.mark_staged(src)
-        self._src = src
-        # serving-static materialization: history-only intermediates the
-        # lowering offers (LAST JOIN deduped right sides) persist for the
-        # plan's lifetime and materialize NOW, so serves read in-memory
-        # state instead of re-running their shuffle chains — the analog of
-        # the reference tablet's resident segment indexes. Invalidation is
-        # already correct: they never read the staged source or the append
-        # log (both marked), and every write the log does not absorb bumps
-        # the serving key, which drops this plan (and these caches).
-
-        self._materialized: list = []
-        with servingmat.collecting(self._materialized):
-            self.plan = dep._run_request_on(
-                dep._query_with_params(None), src, None, appended=appended
-            )
-        for df in self._materialized:
-            df.count()
-        # isolated serving session + the compiled plan's analyzed tree:
-        # each serve re-roots the (immutable) tree onto the clone via
-        # Dataset.ofRows — a FRESH QueryExecution per call (no stale
-        # shuffle reuse) planned under the serving confs, with the user's
-        # session confs never touched. Availability-probed once; any
-        # failure falls back to serving on the engine session.
+        # the analyzed tree is re-rooted onto the isolated serving session
+        # and planned there; without one, serves plan per call
         self._lp = self.plan._jdf.queryExecution().analyzed()
+        self._df = self._exact = None
         try:
             self._serve_spark = _serving_session(self.spark)
-            self._reroot(self._serve_spark)._jdf.queryExecution()
+            df = self._reroot(self._serve_spark)
+            found = _REPLAN_NODE.search(
+                df._jdf.queryExecution().executedPlan().toString()
+            )
         except Exception:  # pragma: no cover - e.g. non-classic backends
             self._serve_spark = None
+            self.replan_node = "no serving session"
+        else:
+            #: the node that makes each serve plan anew, or None
+            self.replan_node = found.group(0) if found else None
+            if found is None:
+                self._df = df
 
     def _reroot(self, session) -> DataFrame:
         jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
@@ -388,15 +437,11 @@ class CompiledRequestPlan:
         return DataFrame(jdf, session)
 
     #: REGISTRY CONTRACT: any runtime conf that changes serve RESULT
-    #: VALUES (not merely plan shape) and can legitimately be SET after a
-    #: deployment compiles MUST be listed here — it is re-synced from the
-    #: engine session onto the serving clone before every serve (a few
-    #: gets, rarely a set), so a post-deploy ``SET`` reaches compiled
-    #: serves exactly like uncompiled ones. Planning confs (AQE, shuffle
-    #: fan-out) intentionally stay pinned to the serving profile. Anything
-    #: semantics-bearing left off this list silently diverges between the
-    #: two paths (ADVICE r12 named caseSensitive / timeParserPolicy /
-    #: mapKeyDedupPolicy — now listed).
+    #: VALUES and can be SET after a deployment compiles MUST be listed
+    #: here — it is re-synced from the engine session onto the serving
+    #: clone before every serve, so a post-deploy ``SET`` reaches compiled
+    #: serves exactly like uncompiled ones. Planning confs stay pinned to
+    #: the serving profile.
     _SEMANTIC_CONFS = (
         "spark.sql.session.timeZone",
         "spark.sql.ansi.enabled",
@@ -406,21 +451,26 @@ class CompiledRequestPlan:
     )
 
     def _fresh_serve_df(self) -> DataFrame:
-        """A fresh Dataset over the compiled plan for one serve — on the
-        serving clone when there is one, else the engine session
-        (``.where(lit(True))`` forces a new physical plan there; see the
-        class docstring's stale-shuffle note). The clone's
-        conf snapshot froze at compile time; the semantics-bearing confs
-        are re-synced per serve so a post-deploy ``SET`` of the session
-        timezone or ANSI mode reaches compiled serves like it reaches the
-        uncompiled path (planning confs intentionally stay pinned)."""
-        if self._serve_spark is not None:
-            for k in self._SEMANTIC_CONFS:
-                v = self.spark.conf.get(k, None)
-                if v is not None and self._serve_spark.conf.get(k, None) != v:
-                    self._serve_spark.conf.set(k, v)
-            return self._reroot(self._serve_spark)
-        return self.plan.where(F.lit(True))
+        """The Dataset one serve collects: the one planned at compile time
+        when the plan can be re-collected (see the class docstring), else a
+        fresh one — on the serving clone when there is one, else the engine
+        session (``.where(lit(True))`` forces a new physical plan there).
+        The semantics-bearing confs are re-synced onto the clone first; a
+        change drops the planned Dataset so it is planned again."""
+        spark = self._serve_spark
+        if spark is None:
+            return self.plan.where(F.lit(True))
+        for k in self._SEMANTIC_CONFS:
+            v = self.spark.conf.get(k, None)
+            if v is not None and spark.conf.get(k, None) != v:
+                spark.conf.set(k, v)
+                self._df = None
+        if self._df is not None:
+            return self._df
+        df = self._reroot(spark)
+        if self.replan_node is None:
+            self._df = df
+        return df
 
     @staticmethod
     def _write_file(path: str, data: bytes) -> None:
@@ -429,54 +479,68 @@ class CompiledRequestPlan:
             f.write(data)
         os.replace(tmp, path)
 
-    def _write_staged(self, table) -> None:
-        self._write_file(
-            self._staged,
-            _pad_staged(_encode_rows(table, self.dep.input_schema), self._pad),
+    def _stage(self, requests) -> None:
+        """Write the request rows (Arrow, input schema) and the segments
+        they probe as the one staged file. History comes first, so a LAST
+        JOIN that history flows through is probed by its rows too."""
+        parts = [_encode_rows(requests, self.dep.input_schema, "q")]
+        probers = {False: [requests], True: [requests]}
+        for i, (name, (_, idx, probes, schema)) in enumerate(self.indexes.items()):
+            keys = [set() for _ in idx.keysets]
+            for ki, cols, via_history in probes:
+                for t in probers[via_history]:
+                    keys[ki].update(zip(*(t.column(c).to_pylist() for c in cols)))
+            seg = idx.segment(keys)
+            if name == "__history":
+                probers[True] = [requests, seg]
+            parts.append(_encode_rows(seg, schema, f"s{i}"))
+        self._write_file(self._staged, _pad_staged(b"".join(parts), self._pad))
+
+    def current(self) -> bool:
+        """Whether the serving key holds and every index mirrors its store."""
+        dbs = self.dep.engine._dbs
+        return self.key == self.dep._serving_key(self.store_reads) and all(
+            dbs.get(db, {}).get(bare) is df for (db, bare), df in self.mirrors.items()
         )
 
-    def absorb(self, rows: list, expect_key: tuple, new_key: tuple) -> bool:
-        """Write-through of an online INSERT into the request table: append
-        ``rows`` (already coerced to the input schema) to the append log
-        and move ``key`` from ``expect_key`` (the pre-insert serving key)
-        to ``new_key`` (the post-insert one). Runs under the serve lock,
-        so a serve sees the log before or after the append, never half of
-        it. Returns False, leaving the key stale so the next serve
-        recompiles, when the plan is released, its key is
-        no longer ``expect_key``, or the log would overflow its fixed size.
-
-        Rows encode through ``LocalDataToArrowConversion``, like
-        :meth:`serve_rows`, so log rows are bit-identical to the store's
-        ``createDataFrame`` rows and a later recompile serves the same
-        answers."""
+    def append(self, loc: tuple, old: DataFrame, new: DataFrame, rows: list) -> None:
+        """An online append to table ``loc``: store ``old`` became ``new``
+        by adding ``rows`` (coerced value lists, converted here like
+        ``createDataFrame`` does). An index mirroring ``old`` takes them
+        and mirrors ``new``; otherwise :meth:`current` reports staleness."""
         from pyspark.sql.conversion import LocalDataToArrowConversion
 
-        if not rows:
-            return False
-        data = _encode_rows(
-            LocalDataToArrowConversion.convert(rows, self.dep.input_schema, False),
-            self.dep.input_schema,
-        )
         with self._lock:
-            if self.key != expect_key:
-                return False
-            data = self._log_data + data
-            if len(data) > self._pad:
-                return False
-            self._write_file(self._log, _pad_staged(data, self._pad))
-            self._log_data = data
-            self.key = new_key
-            return True
+            if self.mirrors.get(loc) is not old:
+                return
+            table = LocalDataToArrowConversion.convert(rows, new.schema, False)
+            for at, idx, _, _ in self.indexes.values():
+                if at == loc:
+                    idx.append(table)
+            self.mirrors[loc] = new
+
+    def describe(self) -> list[tuple[str, str]]:
+        """(item, value) pairs for SHOW DEPLOYMENT: the path, indexed
+        tables with keys, store reads with why, and the index's rows and
+        Arrow bytes (driver Python memory, outside the JVM heap)."""
+        path = self.replan_node and f"re-planned per serve: {self.replan_node}"
+        idxs = [idx for _, idx, _, _ in self.indexes.values()]
+        return [
+            ("path", path or "planned once"),
+            ("indexed", ", ".join(
+                f"{i.table}({'|'.join(','.join(ks) for ks in i.keysets)})" for i in idxs
+            )),
+            ("store_reads", "; ".join(f"{t}: {w}" for t, w in sorted(self.store_reads.items()))),
+            ("index_rows", str(sum(i.rows.num_rows for i in idxs))),
+            ("index_arrow_bytes", str(sum(i.rows.nbytes for i in idxs))),
+        ]
 
     def _local_request_table(self, requests: DataFrame):
-        """The request batch as an Arrow table WITHOUT a Spark job, when
-        the caller's plan collapses to a ``LocalRelation`` (arrow- or
-        pandas-created frames; the optimizer folds deterministic
-        projections into the relation, and ``LocalTableScanExec``'s
-        collect is job-free) — else ``None`` and the caller pays the one
-        evaluation job via ``toArrow``. Tuple-list ``createDataFrame``
-        output is RDD-backed in classic PySpark, so it does NOT take this
-        path (use :meth:`serve_rows` for driver-held rows)."""
+        """The request batch as an Arrow table WITHOUT a Spark job when the
+        caller's plan collapses to a ``LocalRelation`` (arrow- or
+        pandas-created frames: ``LocalTableScanExec``'s collect is
+        job-free), else ``None`` (RDD-backed frames, e.g. tuple-list
+        ``createDataFrame`` output, pay one ``toArrow`` job)."""
         schema = self.dep.input_schema
         proj, ts_idx = _exact_collect_plan(requests, schema)
         if proj is None:
@@ -492,30 +556,22 @@ class CompiledRequestPlan:
 
     def serve(self, requests: DataFrame) -> DataFrame:
         """Stage a request DataFrame, run the serve, and return the result
-        as a driver-local DataFrame. Staging AND the serve's collect run
-        under the per-plan lock (the same discipline as
-        :meth:`serve_rows`), so two concurrent ``run_request(df)`` calls
-        on one deployment can no longer interleave stage/collect and
-        serve each other's rows (r12 verdict #3) — the old contract
-        ("collect the returned Dataset before the next serve") is now
-        enforced by construction instead of documented.
-
-        Cost shape: driver-local request plans (``LocalRelation`` — see
-        :meth:`_local_request_table`) stage with ZERO extra Spark jobs;
-        RDD-backed plans pay one ``toArrow`` evaluation job. The serve
-        itself collects through the timestamp-exact projection (ONE job —
-        ``toArrow`` on the result would run two) and is handed back as a
-        ``LocalRelation``-backed DataFrame (job-free to collect again),
-        so a driver-local request round-trips in a single Spark job,
-        matching the rows arm's job count."""
+        as a driver-local DataFrame (job-free to collect). Driver-local
+        request plans (:meth:`_local_request_table`) stage with ZERO extra
+        Spark jobs; RDD-backed ones pay one ``toArrow`` job. The serve
+        collects through the timestamp-exact projection (ONE job), kept
+        with the Dataset it projects so a planned-once plan stays planned
+        once."""
         table = self._local_request_table(requests)
         if table is None:
             table = requests.toArrow()
         out_schema = self.plan.schema
         with self._lock:
-            self._write_staged(table)
+            self._stage(table)
             sdf = self._fresh_serve_df()
-            proj, ts_idx = _exact_collect_plan(sdf, out_schema)
+            if self._exact is None or self._exact[0] is not sdf:
+                self._exact = (sdf, *_exact_collect_plan(sdf, out_schema))
+            _, proj, ts_idx = self._exact
             if proj is None:  # nested/duplicate-name timestamps: exact, 2 jobs
                 out = sdf.toArrow()
             else:
@@ -532,23 +588,16 @@ class CompiledRequestPlan:
 
         if not rows:
             return []
+        table = LocalDataToArrowConversion.convert(rows, self.dep.input_schema, False)
         with self._lock:
-            self._write_staged(
-                LocalDataToArrowConversion.convert(
-                    rows, self.dep.input_schema, False
-                )
-            )
+            self._stage(table)
             return self._fresh_serve_df().collect()
 
     def release(self) -> None:
-        """Drop the staged directory and resident join-side caches —
-        under the per-plan lock, so an epoch-bump recompile triggered by
-        one thread cannot yank the staged file / materialized state out
-        from under another thread's in-flight locked serve (the release
-        simply queues behind it)."""
+        """Drop the staged directory and the indexes — under the per-plan
+        lock, so a recompile triggered by one thread cannot yank the staged
+        file out from under another thread's in-flight locked serve (the
+        release simply queues behind it)."""
         with self._lock:
-            for df in self._materialized:
-                df.unpersist()
-            self._materialized.clear()
             shutil.rmtree(self._dir, ignore_errors=True)
-            self.key = None  # a released plan absorbs nothing
+            self.indexes, self.mirrors, self.key = {}, {}, None

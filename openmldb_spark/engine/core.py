@@ -521,24 +521,33 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
             return self._mangled[name]
         return self.current_db, name.strip("`")
 
-    def _with_ttl(self, db: str, name: str, df: DataFrame) -> DataFrame:
-        """Online-mode reads see only TTL-live rows (the reference's online
-        storage GCs per the FIRST index's TTL; data_expiration corpus).
+    def _ttl_index(self, db: str, name: str):
+        """The index whose TTL online reads of a table enforce (the
+        reference's online storage GCs per the FIRST index's TTL;
+        data_expiration corpus), or None."""
+        if self.variables.get("execute_mode", "online") != "online":
+            return None
+        td = self._db_defs.get(db, {}).get(name)
+        for idx in td.indexes if td is not None else ():
+            if idx.ttl and idx.ts_col and idx.origin == "ddl":
+                return idx
+        return None
+
+    def _with_ttl(
+        self, db: str, name: str, df: DataFrame, staged: bool = False
+    ) -> DataFrame:
+        """Online-mode reads see only TTL-live rows (:meth:`_ttl_index`).
         ``SET @@ttl_now_ms = <ms>`` pins "now" (deterministic tests);
         unset, the absolute bound derives from max(ts) in the data — the
-        reproducible batch choice (catalog.apply_ttl)."""
+        reproducible batch choice (catalog.apply_ttl; ``staged`` as
+        there)."""
         from openmldb_spark.catalog import apply_ttl
 
-        if self.variables.get("execute_mode", "online") != "online":
+        idx = self._ttl_index(db, name)
+        if idx is None:
             return df
-        td = self._db_defs.get(db, {}).get(name)
-        if td is None:
-            return df
-        for idx in td.indexes:
-            if idx.ttl and idx.ts_col and idx.origin == "ddl":
-                now = self.variables.get("ttl_now_ms")
-                return apply_ttl(df, idx, now_ms=int(now) if now else None)
-        return df
+        now = self.variables.get("ttl_now_ms")
+        return apply_ttl(df, idx, now_ms=int(now) if now else None, staged=staged)
 
     @property
     def _offline_mode(self) -> bool:
@@ -586,11 +595,10 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
         Offline appends write through the offline-info ledger (into
         ``parts['base']``) so symbolic paths added by ALTER TABLE are never
         double-counted and later mode='append' loads keep the inserted
-        rows. Online appends bump the table epoch, and every deployment
-        whose live compiled plan serves the table as request history
-        absorbs the rows into its append log instead of recompiling
-        (:meth:`SqlDeployment._absorbing_plan`,
-        :meth:`CompiledRequestPlan.absorb`)."""
+        rows. Online appends bump the table epoch and reach every live
+        compiled plan (:meth:`CompiledRequestPlan.append`): a plan that
+        indexes the table appends the rows to its index instead of
+        recompiling."""
         online = self._dbs[db][bare]
         if offline:
             store = self._db_off.get(db, {}).get(bare, online)
@@ -601,17 +609,13 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
             )
             self._off_rebuild(db, bare)
             return
-        new = self.spark.createDataFrame(rows, online.schema)
-        live = []
+        grown = online.unionByName(self.spark.createDataFrame(rows, online.schema))
+        self._dbs[db][bare] = grown
+        self._bump_epoch(db, bare)
         for deps in self._db_deps.values():
             for dep in deps.values():
-                hit = dep._absorbing_plan((db, bare), online.schema)
-                if hit is not None:
-                    live.append((dep, *hit))
-        self._dbs[db][bare] = online.unionByName(new)
-        self._bump_epoch(db, bare)
-        for dep, plan, key in live:
-            plan.absorb(rows, key, dep._serving_key())
+                if dep._compiled is not None:
+                    dep._compiled.append((db, bare), online, grown, rows)
 
     def _table_view(self) -> dict[str, DataFrame]:
         """Resolution mapping for the Lowerer: current db's tables under

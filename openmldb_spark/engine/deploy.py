@@ -266,7 +266,10 @@ class DeployMixin:
     def _show_deployment(self, name: str) -> DataFrame:
         """SHOW DEPLOYMENT [db.]name -> one row per input/output column:
         (deployment, db, sql, section, idx, column_name, column_type).
-        Types use the reference's naming (kVarchar/kInt32/...)."""
+        Types use the reference's naming (kVarchar/kInt32/...). Rows of
+        section ``serving`` carry an item name and its value in the last
+        two columns: how the deployment serves
+        (:meth:`SqlDeployment.serving_info`)."""
         db, dep = self._dep_lookup(name)
         rows = []
         sections = [("input", dep.input_schema), ("output", dep.output_schema)]
@@ -279,6 +282,8 @@ class DeployMixin:
                     (dep.name, db, dep.sql_text, section, i, f.name,
                      self._KTYPES.get(st, st))
                 )
+        for i, (item, value) in enumerate(dep.serving_info(), 1):
+            rows.append((dep.name, db, dep.sql_text, "serving", i, item, value))
         return self.spark.createDataFrame(
             rows,
             "deployment string, db string, sql string, section string, "

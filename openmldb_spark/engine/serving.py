@@ -6,6 +6,7 @@ cache (the Spark analog of the reference's per-DEPLOY compiled-plan cache,
 from __future__ import annotations
 
 import copy
+from collections import Counter
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
@@ -16,6 +17,18 @@ from openmldb_spark.sql.lowering import Lowerer
 
 from openmldb_spark.engine.compiled import CompiledRequestPlan, _jvm_stageable
 from openmldb_spark.engine.preagg_serving import PreaggServing
+
+
+def _innermost(sel):
+    """The Select at the end of ``sel``'s chain of subquery FROMs."""
+    while (
+        isinstance(sel, P.Select)
+        and sel.from_ is not None
+        and sel.from_.name is None
+        and sel.from_.subquery is not None
+    ):
+        sel = sel.from_.subquery.body
+    return sel
 
 
 class SqlDeployment(PreaggServing):
@@ -50,25 +63,19 @@ class SqlDeployment(PreaggServing):
         self.long_windows = dict(long_windows or {})
         self.query = P.parse(select_sql)
         self._preagg: dict[tuple[str, str], DataFrame] = {}
-        #: provenance of the cached pre-agg: ("tbl", epoch, ttl_pin) when
-        #: built from the engine store, or a STRONG reference to the
-        #: explicit history DataFrame (identity-compared; a raw id() could
-        #: be reused by a new object after GC — r9 review finding) —
-        #: checked on every prepare_preagg so DML invalidates the cache
+        #: provenance of the cached pre-agg: ("tbl", epoch, ttl_pin), or a
+        #: STRONG reference to the explicit history DataFrame (an id()
+        #: could be reused after GC), checked on every prepare_preagg
         self._preagg_src: Optional[tuple] = None
         self._preagg_hist: Optional[DataFrame] = None
         #: compiled request plan (the reference compiles once per DEPLOY,
-        #: ``hybridse/src/vm/engine.cc:453-496``; rebuilt here when
-        #: :meth:`_serving_key` changes — DML epochs / TTL pin / mode —
-        #: except for INSERTs it absorbs into its append log)
+        #: ``hybridse/src/vm/engine.cc:453-496``; rebuilt here once it is
+        #: no longer :meth:`CompiledRequestPlan.current`)
         self._compiled: Optional["CompiledRequestPlan"] = None
         #: escape hatch: False forces the per-call plan-build path
         self.use_compiled = True
-        #: parameterized body (`?` placeholders): binding happens by
-        #: literal-folding into the text per call, so there is no single
-        #: plan to compile — every serving surface must take the
-        #: per-call build path (same check deploy-time schema inference
-        #: uses, engine/deploy.py)
+        #: parameterized body (`?` placeholders, literal-folded per call):
+        #: no single plan to compile, so every serve builds one per call
         self.has_params = any(t.text == "?" for t in P.tokenize(select_sql))
         self.db_name = engine.current_db
         #: output schema, filled by Engine._deploy's validation lowering
@@ -77,14 +84,7 @@ class SqlDeployment(PreaggServing):
         # the request table may sit under subquery FROMs (`select ... from
         # (select ... from t) as x` — test_create_deploy id 4): descend to
         # the innermost named main table
-        sel = body
-        while (
-            isinstance(sel, P.Select)
-            and sel.from_ is not None
-            and sel.from_.name is None
-            and sel.from_.subquery is not None
-        ):
-            sel = sel.from_.subquery.body
+        sel = _innermost(body)
         if not isinstance(sel, P.Select) or sel.from_ is None or sel.from_.name is None:
             if self.long_windows and not isinstance(body, P.Select):
                 # the reference rejects long-window deploys over set-op
@@ -99,17 +99,31 @@ class SqlDeployment(PreaggServing):
         t = engine.tables.get(self.request_table)
         self.input_schema = t.schema if t is not None else None
 
-    def _serves_compiled(self) -> bool:
-        """Whether engine-store serves go through the compiled plan. A
-        parameterized body has no single plan, and an input schema the
-        staged text source cannot round-trip (nested types) has no staged
-        source; both take the per-call path."""
-        return (
-            self.use_compiled
-            and not self.has_params
-            and self.input_schema is not None
-            and _jvm_stageable(self.input_schema)
-        )
+    def _per_call_reason(self) -> Optional[str]:
+        """Why engine-store serves build their plan per call, or None when
+        they go through the compiled plan (nested types have no staged
+        text source)."""
+        if not self.use_compiled:
+            return "compiled serving switched off"
+        if self.has_params:
+            return "parameterized body"
+        if self.input_schema is None:
+            return "no request table schema"
+        if not _jvm_stageable(self.input_schema):
+            return "input schema has nested types"
+        return None
+
+    def serving_info(self) -> list[tuple[str, str]]:
+        """(item, value) pairs saying how this deployment serves (SHOW
+        DEPLOYMENT): per call and why, or the compiled plan's
+        :meth:`CompiledRequestPlan.describe`, compiling it if needed."""
+        why = self._per_call_reason()
+        if why is not None:
+            return [("path", f"per call: {why}")]
+        try:
+            return self._live_plan().describe()
+        except Exception as e:  # the first serve raises the same error
+            return [("path", f"not compiled: {type(e).__name__}: {e}")]
 
     def _query_with_params(self, parameters: Optional[Sequence]) -> P.Query:
         """The deployed query, with positional ``?`` placeholders bound to
@@ -155,34 +169,20 @@ class SqlDeployment(PreaggServing):
         as the reference's compute-then-store serving flow.
 
         The engine-store path (``history=None``, no ``?`` parameters)
-        serves from the COMPILED request plan: the SQL is parsed, lowered,
-        and analyzed once per deployment (against a staged request
-        source), and each call only swaps the staged rows — the Spark
-        analog of the reference compiling once per DEPLOY and binding rows
-        per call (``engine.cc:453-496``, ``sql_cluster_router.h:116-190``
-        CallProcedure). An online ``INSERT … VALUES`` into the request
-        table is written through to the plan's append log, so the next
-        call sees the row without recompiling. Any other write to a table
-        the query reads (DELETE, TRUNCATE, LOAD DATA, register, an INSERT
-        into a join-side or UNION table, an offline-mode INSERT, or one
-        that would overflow the log) bumps its epoch and the next call
-        recompiles. Explicit-history and parameterized calls, and input
-        schemas with nested types, build their plan per call.
-
-        r13: compiled serves are EAGER — the serve runs (stage + collect)
-        under the deployment's plan lock and the returned DataFrame is a
-        driver-local snapshot of the result (job-free to collect), so
-        concurrent ``run_request`` calls on one deployment cannot serve
-        each other's staged rows. Driver-local request plans
-        (arrow/pandas-created frames) stage without any extra Spark job;
-        RDD-backed frames pay one ``toArrow`` evaluation job."""
+        serves eagerly from the compiled plan
+        (:class:`CompiledRequestPlan`: planned once, fed the request rows
+        plus their key segments per call); an online ``INSERT`` or REST
+        ``PUT`` into an indexed table reaches it without a recompile, any
+        other write to a table the query reads recompiles it. The other
+        calls (:meth:`_per_call_reason`) build their plan per call and
+        frame over the whole history."""
         if self.input_schema is not None and requests.schema != self.input_schema:
             raise ValueError(
                 f"deployment {self.name!r}: request schema "
                 f"{requests.schema.simpleString()} != contract "
                 f"{self.input_schema.simpleString()}"
             )
-        if history is None and parameters is None and self._serves_compiled():
+        if history is None and parameters is None and not self._per_call_reason():
             return self._live_plan().serve(requests)
         q = self._query_with_params(parameters)
         return self._run_request_on(q, requests, history)
@@ -196,93 +196,35 @@ class SqlDeployment(PreaggServing):
         produces bit-identical batches to ``DataFrame.toArrow``), stage
         into the compiled plan, and the serve job is the only job. Returns
         the collected result rows. Falls back to the DataFrame path when
-        no compiled plan applies (see :meth:`_serves_compiled`)."""
+        no compiled plan applies (see :meth:`_per_call_reason`)."""
         rows = list(rows)
-        if self._serves_compiled():
+        if not self._per_call_reason():
             return self._live_plan().serve_rows(rows)
         return self.run_request(
             self.engine.spark.createDataFrame(rows, self.input_schema)
         ).collect()
 
     def _live_plan(self) -> CompiledRequestPlan:
-        """The compiled plan for the current serving key: the live one,
-        or a fresh compile replacing it when a write made it stale."""
-        key = self._serving_key()
-        if self._compiled is None or self._compiled.key != key:
+        """The compiled plan: the live one, or a fresh compile replacing
+        it when a write made it stale."""
+        if self._compiled is None or not self._compiled.current():
             self._release_compiled()
-            self._compiled = CompiledRequestPlan(self, key)
+            self._compiled = CompiledRequestPlan(self)
         return self._compiled
 
-    def _serving_key(self) -> tuple:
-        """Staleness token for the compiled plan: the epoch of EVERY table
-        the deployed query reads (main + join sides + window unions +
-        subqueries — DML bumps epochs via ``Engine._bump_epoch``), plus the
-        TTL pin, execute mode, and current db (they shape
-        ``_serving_history`` / name resolution)."""
+    def _serving_key(self, tables) -> tuple:
+        """Staleness token for the compiled plan: the epochs of ``tables``,
+        the ones it reads from the store (DML bumps epochs via
+        ``Engine._bump_epoch``), plus the TTL pin, execute mode, and
+        current db (they shape TTL filters and name resolution)."""
         eng = self.engine
-        deps = tuple(
-            (eng._loc(t), eng.table_epoch(t))
-            for t in sorted(self._query_table_names())
-        )
+        deps = tuple((eng._loc(t), eng.table_epoch(t)) for t in sorted(tables))
         return (
             deps,
             eng.variables.get("ttl_now_ms"),
             eng.variables.get("execute_mode", "online"),
             eng.current_db,
         )
-
-    def _query_table_names(self) -> set:
-        """Every table name the deployed query references (recursing into
-        subqueries, set-op arms, CTE bodies, and window UNION tables)."""
-        names: set = set()
-
-        def walk_q(q):
-            for _, cq in getattr(q, "ctes", None) or []:
-                walk_q(cq)
-            walk_b(q.body)
-
-        def walk_b(b):
-            if not isinstance(b, P.Select):  # SetOp
-                walk_q(b.left)
-                walk_q(b.right)
-                return
-            for ref in [b.from_] + [j.table for j in b.joins]:
-                walk_ref(ref)
-            for w in (b.windows or {}).values():
-                for ref in w.union_tables:
-                    walk_ref(ref)
-
-        def walk_ref(ref):
-            if ref is None:
-                return
-            if ref.name:
-                names.add(ref.name)
-            if ref.subquery is not None:
-                walk_q(ref.subquery)
-
-        walk_q(self.query)
-        return names
-
-    def _absorbing_plan(self, loc: tuple, schema) -> Optional[tuple]:
-        """``(plan, key)`` when an online INSERT into table ``loc`` (a
-        ``(db, bare)`` pair) can be written through to this deployment's
-        live compiled plan (:meth:`CompiledRequestPlan.absorb`), ``key``
-        being the pre-insert serving key the plan still holds. None — the
-        insert then recompiles the plan, as any write does — when there is
-        no live plan, its key is stale, the rows do not have the input
-        schema, or ``loc`` is not the request table. The query must name
-        that table only as ``request_table``: every such reference binds
-        to the staged request source, so the plan reads the store only
-        through :meth:`_serving_history`, where the log is."""
-        plan = self._compiled
-        if plan is None or schema != self.input_schema:
-            return None
-        eng = self.engine
-        names = [n for n in self._query_table_names() if eng._loc(n) == loc]
-        if names != [self.request_table]:
-            return None
-        key = self._serving_key()
-        return (plan, key) if plan.key == key else None
 
     def _release_compiled(self) -> None:
         if self._compiled is not None:
@@ -292,14 +234,13 @@ class SqlDeployment(PreaggServing):
     def _serving_history(
         self,
         history: Optional[DataFrame],
-        appended: Optional[DataFrame] = None,
+        staged: Optional[DataFrame] = None,
     ) -> DataFrame:
         """Stored history for request-mode serving — TTL-filtered like every
         other online read (the reference's online storage GCs expired rows
         before serving sees them, so batch and request mode agree).
-        ``appended`` (a compiled plan's append log) joins the store BEFORE
-        the filters, so absorbed INSERTs expire exactly like stored rows
-        (``apply_ttl`` evaluates its bound when the serve runs).
+        ``staged`` (a compiled plan's history segment) stands in for the
+        store (:class:`SegmentIndex` says why the filters stay exact).
 
         DEPLOY-derived absolute indexes (``Engine._auto_index``) additionally
         bound THIS deployment's serving reads: the reference's storage
@@ -312,15 +253,28 @@ class SqlDeployment(PreaggServing):
             return history
         eng = self.engine
         db, bare = eng._loc(self.request_table)
-        df = eng.tables[self.request_table]
-        if appended is not None:
-            df = df.unionByName(appended)
-        df = eng._with_ttl(db, bare, df)
+        df = eng.tables[self.request_table] if staged is None else staged
+        df = eng._with_ttl(db, bare, df, staged is not None)
+        idx = self._deploy_ttl_index()
+        if idx is None:
+            return df
+        from openmldb_spark.catalog import apply_ttl
+
+        now = eng.variables.get("ttl_now_ms")
+        return apply_ttl(
+            df, idx, now_ms=int(now) if now else None, staged=staged is not None
+        )
+
+    def _deploy_ttl_index(self):
+        """The DEPLOY-derived absolute index :meth:`_serving_history`
+        enforces, or None."""
+        eng = self.engine
+        db, bare = eng._loc(self.request_table)
         td = eng._db_defs.get(db, {}).get(bare)
         if td is None:
-            return df
+            return None
         wants = set()
-        for w in self.query.body.windows.values():
+        for w in getattr(self.query.body, "windows", {}).values():
             keys = frozenset(
                 toks[-1].text
                 for toks in ([t for t in k if t.kind == "name"] for k in w.partition_by)
@@ -337,12 +291,7 @@ class SqlDeployment(PreaggServing):
             and i.ts_col
             and (frozenset(i.keys), i.ts_col) in wants
         ]
-        if len(dep_idx) == 1:
-            from openmldb_spark.catalog import apply_ttl
-
-            now = eng.variables.get("ttl_now_ms")
-            df = apply_ttl(df, dep_idx[0], now_ms=int(now) if now else None)
-        return df
+        return dep_idx[0] if len(dep_idx) == 1 else None
 
     def _history_from_ref(self, body: "P.Select") -> "P.TableRef":
         """FROM ref binding ``__history`` through the deployed query's own
@@ -354,129 +303,278 @@ class SqlDeployment(PreaggServing):
                 name="__history", alias=body.from_.alias or body.from_.name
             )
         ref = copy.deepcopy(body.from_)
-        sel = ref.subquery.body
-        while (
-            isinstance(sel, P.Select)
-            and sel.from_ is not None
-            and sel.from_.name is None
-            and sel.from_.subquery is not None
-        ):
-            sel = sel.from_.subquery.body
+        sel = _innermost(ref.subquery.body)
         if not sel.from_.alias:
             sel.from_.alias = sel.from_.name
         sel.from_.name = "__history"
         return ref
-
-    def _prune_history_to_request_keys(
-        self, hist: DataFrame, requests: DataFrame, body: "P.Select"
-    ) -> DataFrame:
-        """Serving-path analog of the reference's index lookup: a request
-        row's frames only ever contain history rows whose window partition
-        key equals the request's (the tablet reads ONE pk segment,
-        ``src/storage/mem_table.cc`` iterators) — so history is
-        pre-filtered with a broadcast join on the DISTINCT request key
-        tuples before the window-union plan is built. At sf0.01 this turns
-        a ~150k-row scan per request into ~window-size rows; at 100 TB it
-        is the difference between serving and a full table scan per call.
-
-        Applied only when provably safe: every window partitions by plain
-        request-table columns (no subquery FROM rewiring the columns, no
-        join-side shadowing); null keys match null-safely (null-key
-        history rows DO share a frame with a null-key request). Zero
-        driver actions — the key sides stay DataFrames."""
-        import functools
-
-        if body.from_.subquery is not None or not body.windows:
-            return hist
-        req_cols = set(requests.columns)
-        join_cols: set = set()
-        for j in body.joins:
-            rdf = self.engine.tables.get(j.table.name) if j.table.name else None
-            if rdf is None:
-                return hist  # unresolvable join side: stay conservative
-            join_cols |= set(rdf.columns)
-        keysets = set()
-        for w in body.windows.values():
-            names = []
-            for ktoks in w.partition_by:
-                toks = list(ktoks)
-                # plain column only — `c` or `alias.c`. An EXPRESSION key
-                # (c1 % 10, substr(c1, ...)) groups DIFFERENT column
-                # values into one frame, so pruning on the operand column
-                # would drop frame members (r9 review finding): skip.
-                if len(toks) == 1 and toks[0].kind == "name":
-                    nm = toks[0].text
-                elif (
-                    len(toks) == 3
-                    and toks[0].kind == "name"
-                    and toks[1].text == "."
-                    and toks[2].kind == "name"
-                ):
-                    nm = toks[2].text
-                else:
-                    return hist
-                if nm not in req_cols or nm in join_cols:
-                    return hist
-                names.append(nm)
-            if not names:
-                return hist  # an unkeyed window frames over everything
-            keysets.add(tuple(sorted(set(names))))
-        out, markers = hist, []
-        for i, ks in enumerate(sorted(keysets)):
-            marker = f"__rq_m{i}"
-            kdf = (
-                requests.select(*ks).distinct()
-                .select(
-                    *[F.col(c).alias(f"__rqk{i}_{c}") for c in ks],
-                    F.lit(1).alias(marker),
-                )
-            )
-            on = functools.reduce(
-                lambda a, b: a & b,
-                [F.col(c).eqNullSafe(F.col(f"__rqk{i}_{c}")) for c in ks],
-            )
-            out = out.join(F.broadcast(kdf), on, "left").drop(
-                *[f"__rqk{i}_{c}" for c in ks]
-            )
-            markers.append(marker)
-        keep = functools.reduce(
-            lambda a, b: a | b, [F.col(m).isNotNull() for m in markers]
-        )
-        return out.filter(keep).drop(*markers)
 
     def _run_request_on(
         self,
         q: "P.Query",
         requests: DataFrame,
         history: Optional[DataFrame] = None,
-        appended: Optional[DataFrame] = None,
+        leaves: Optional[dict] = None,
     ) -> DataFrame:
-        hist = self._serving_history(history, appended)
-        body = q.body
-        hist = self._prune_history_to_request_keys(hist, requests, body)
-        hist_from = self._history_from_ref(body)
-        if body.joins or body.where is not None:
-            # the window runs over the POST-join/filter relation (batch =
-            # join then window), so the history side must flow through the
-            # same joins/filters for schemas and semantics to line up
+        """Lower ``q`` in request mode: ``requests`` bind the request table,
+        and every window over it also frames over the request table's
+        history. ``leaves`` (a compiled plan's staged key segments, by
+        binding name — ``"__history"`` for that history) stand in for
+        their stores."""
+        eng = self.engine
+        leaves = dict(leaves or {})
+        hist = self._serving_history(history, leaves.pop("__history", None))
+        # every union is built before any window is rewritten, so no
+        # history copy of a subquery carries a rewritten window
+        for sel, union_ref in [
+            (sel, self._history_union(sel)) for sel in self._request_selects(q)
+        ]:
+            for w in sel.windows.values():
+                # INSTANCE_NOT_IN_WINDOW frames hold no main-table row but
+                # the current one, so history stays out of them
+                if not w.instance_not_in_window:
+                    w.union_tables.append(copy.deepcopy(union_ref))
+                w.instance_not_in_window = True
+        tables = eng._table_view()
+        for name, leaf in leaves.items():
+            tables[name] = eng._with_ttl(*eng._loc(name), leaf, True)
+        tables[self.request_table] = requests
+        tables["__history"] = hist
+        return Lowerer(eng.spark, tables).query(q, {})
+
+    def _request_selects(self, q: "P.Query") -> list:
+        """The Selects of ``q`` whose windows frame over the request table:
+        the body, and each windowed Select whose FROM chain ends at the
+        request table that a FROM, JOIN or set-operation arm of it runs."""
+        out = []
+
+        def walk(query, top: bool) -> None:
+            b = query.body
+            if isinstance(b, P.Query):
+                return walk(b, top)
+            if isinstance(b, P.SetOp):
+                walk(b.left, False)
+                walk(b.right, False)
+                return
+            if not isinstance(b, P.Select) or b.from_ is None:
+                return
+            inner = _innermost(b)
+            if b.windows and (top or getattr(inner.from_, "name", None) == self.request_table):
+                out.append(b)
+            for ref in [b.from_] + [j.table for j in b.joins]:
+                if ref is not None and ref.subquery is not None:
+                    walk(ref.subquery, False)
+
+        walk(q, True)
+        return out
+
+    def _history_union(self, sel: "P.Select") -> "P.TableRef":
+        """The relation ``sel``'s windows frame history over: history
+        through ``sel``'s own FROM pipeline, then its joins and WHERE when
+        the windows run over their output (batch = join then window)."""
+        hist_from = self._history_from_ref(sel)
+        joins = sel.joins if self._history_joins(sel) else []
+        if joins or sel.where is not None:
             hist_sel = P.Select(
                 items=[P.SelectItem([], None, star=True)],
                 from_=hist_from,
-                joins=copy.deepcopy(body.joins),
-                where=copy.deepcopy(body.where),
+                joins=copy.deepcopy(joins),
+                where=copy.deepcopy(sel.where),
             )
-            union_ref = P.TableRef(subquery=P.Query(hist_sel))
-        elif hist_from.subquery is not None:
-            union_ref = hist_from
-        else:
-            union_ref = P.TableRef(name="__history")
+            return P.TableRef(subquery=P.Query(hist_sel))
+        return hist_from if hist_from.subquery is not None else P.TableRef(name="__history")
+
+    def _join_side_reader(self, body: "P.Select"):
+        """Predicate over a token stream: True when it reads a column of a
+        join's right side — a bare name only a right side defines, or any
+        ref qualified by a join table's name or alias (which also catches
+        a right column SHADOWING a request-column name)."""
+        req_cols = {f.name for f in (self.input_schema or [])}
+        right: set = set()
+        aliases: set = set()
+        for j in body.joins:
+            rdf = self.engine.tables.get(j.table.name) if j.table.name else None
+            if rdf is not None:
+                right |= set(rdf.columns)
+            aliases |= {a for a in (j.table.alias, j.table.name) if a}
+        only_right = right - req_cols
+
+        def reads(toks_seq) -> bool:
+            toks = list(toks_seq or [])
+            if {t.text for t in toks if t.kind == "name"} & only_right:
+                return True
+            return any(
+                t.kind == "name"
+                and t.text in aliases
+                and k + 2 < len(toks)
+                and toks[k + 1].text == "."
+                and toks[k + 2].kind == "name"
+                for k, t in enumerate(toks)
+            )
+
+        return reads
+
+    def _history_joins(self, body: "P.Select") -> bool:
+        """Whether request history must flow through the query's joins
+        before windowing. A LAST JOIN keeps every left row and adds at most
+        one match, so when no window key, order, aggregate argument or the
+        WHERE clause reads a joined column, the frames are the same without
+        it (history rows then carry NULL joined columns). A column name
+        shared with a right side makes the window union match by position,
+        so it keeps the join."""
+        if not body.joins or not body.windows:
+            return False
+        if any(j.kind != "last" or j.table.name is None for j in body.joins):
+            return True
+        req = {f.name.lower() for f in self.input_schema.fields}
+        for j in body.joins:
+            rdf = self.engine.tables.get(j.table.name)
+            if rdf is None or req & {c.lower() for c in rdf.columns}:
+                return True
+        reads = self._join_side_reader(body)
+        streams = [body.where]
         for w in body.windows.values():
-            w.union_tables.append(copy.deepcopy(union_ref))
-            w.instance_not_in_window = True
-        tables = self.engine._table_view()
-        tables[self.request_table] = requests
-        tables["__history"] = hist
-        return Lowerer(self.engine.spark, tables).query(q, {})
+            streams += [*w.partition_by, w.order_by]
+        for it in body.items:
+            if it.over is not None or any(t.upper == "OVER" for t in it.expr):
+                streams += [it.expr, *(it.over.args if it.over else [])]
+        return any(reads(st) for st in streams)
+
+    def _serving_layout(self) -> tuple[dict, dict]:
+        """``(segments, reads)``: the tables a compiled serve reads as staged
+        key segments, and the ones it reads from the store, each with why.
+
+        ``segments`` maps a binding name (``"__history"`` for the request
+        table's history, else the table name as written) to ``(table,
+        keysets, ts, probes, anchors)``: key column sets and sort column,
+        the ``(key set index, request columns, via_history)`` probes
+        selecting the segment, and the :class:`SegmentIndex` anchors. A
+        table is keyed when every reference to it is the history or a
+        WINDOW UNION of plain-column windows, or a LAST JOIN right side
+        keyed on request columns, with key types matching (no floating
+        point) and TTLs exact over a segment."""
+        eng = self.engine
+        body = self.query.body
+        toks = P.tokenize(self.sql_text)
+        # every stored table named outside a qualifier: FROM/JOIN/UNION
+        # refs, and any a subquery inside an expression reads in full
+        refs = Counter(
+            t.text
+            for t, nxt in zip(toks, toks[1:] + [None])
+            if t.kind == "name" and (nxt is None or nxt.text != ".")
+        )
+        reads = {
+            n: "read outside a join or window UNION"
+            for n in refs
+            if n != self.request_table and n in eng.tables
+        }
+        plain = isinstance(body, P.Select) and not body.from_.subquery
+        if eng._offline_mode or self.query.ctes or not plain or any(
+            sel is not body for sel in self._request_selects(self.query)
+        ):
+            why = "offline execute mode" if eng._offline_mode else (
+                "WITH, set operation, subquery FROM or windows in a subquery"
+            )
+            reads[self.request_table] = why
+            return {}, dict.fromkeys(reads, why)
+        req = {f.name.lower(): f for f in self.input_schema.fields}
+        main = body.from_.bind_name
+
+        def req_col(toks):
+            toks = list(toks or [])
+            if len(toks) == 3 and toks[0].text == main and toks[1].text == ".":
+                toks = toks[2:]
+            if len(toks) == 1 and toks[0].kind == "name":
+                return req.get(toks[0].text.strip("`").lower())
+            return None
+
+        refused: dict = {}
+        uses: dict = {}  # binding name -> [(table, keys, ts, probe, via_history)]
+        through = self._history_joins(body)
+        for w in body.windows.values():
+            keys = [req_col(p) for p in w.partition_by]
+            unions = [self.request_table] + [
+                u.name for u in w.union_tables if u.name and u.name != self.request_table
+            ]
+            if not keys or None in keys:
+                refused.update(dict.fromkeys(unions, "a window key is not a request column"))
+                continue
+            keys = sorted({f.name for f in keys})
+            ts = req_col(w.order_by)
+            for name in unions[1:] if w.instance_not_in_window else unions:
+                uses.setdefault("__history" if name == self.request_table else name, []).append(
+                    (name, keys, ts and ts.name, keys, False)
+                )
+        for j in body.joins:
+            r = j.table.name
+            if not r or r == self.request_table:
+                continue
+            pairs = Lowerer._equi_right_keys(j.on or [], j.table.bind_name)[0]
+            left = [req_col(lt) for lt, _ in pairs]
+            if j.kind != "last" or not pairs or None in left:
+                refused[r] = "not a LAST JOIN keyed on request columns"
+                continue
+            pairs = sorted((rc, f.name) for (_, rc), f in zip(pairs, left))
+            ob = [t for t in (j.order_by or [[]])[0] if t.upper not in ("ASC", "DESC")]
+            ts = ob[-1].text if len(ob) in (1, 3) and ob[-1].kind == "name" else None
+            uses.setdefault(r, []).append(
+                (r, [k for k, _ in pairs], ts, [c for _, c in pairs], through)
+            )
+        ints = ("tinyint", "smallint", "int", "bigint")
+        segments: dict = {}
+        for name, us in uses.items():
+            table = us[0][0]
+            store = eng.tables.get(table)
+            types = {f.name.lower(): f for f in store.schema.fields} if store else {}
+            why = refused.get(table)
+            if why is None and name != "__history" and refs[name] != len(us):
+                why = "also read outside a join or window UNION"
+            keysets, probes = [], []
+            for _, keys, _, probe, via in us if why is None else ():
+                for k, p in zip(keys, probe):
+                    kt = types[k.lower()].dataType.simpleString() if k.lower() in types else None
+                    pt = req[p.lower()].dataType.simpleString()
+                    if kt is None or kt in ("float", "double") or kt != pt and not (
+                        kt in ints and pt in ints
+                    ):
+                        why = f"key {k} ({kt}) cannot probe with {p} ({pt})"
+                ks = [types[k.lower()].name for k in keys if k.lower() in types]
+                keysets += [ks] if ks not in keysets else []
+                probes.append((keysets.index(ks), probe, via))
+            if why is None and any(via for *_, via in probes) and "__history" not in segments:
+                why = "history flows through this join from the store"
+            if why is None:
+                anchors = self._ttl_anchors(table, name == "__history", keysets)
+                if anchors is None:
+                    why = "a latest-N TTL keyed by other columns"
+            if why is not None:
+                refused[table] = why
+                continue
+            ts = types.get((us[0][2] or "").lower())
+            segments[name] = (table, keysets, ts and ts.name, probes, anchors)
+        reads.update(refused)
+        for table, *_ in segments.values():
+            reads.pop(table, None)
+        return segments, reads
+
+    def _ttl_anchors(self, table: str, history: bool, keysets) -> Optional[list]:
+        """The ts columns to anchor (:class:`SegmentIndex`) so the TTL
+        filters read over ``table``'s segments keep the store's rows, or
+        None when a latest-N TTL partitions by columns that do not include
+        every key set (its ranks then count rows of other segments)."""
+        eng = self.engine
+        idxs = [eng._ttl_index(*eng._loc(table))]
+        if history:
+            idxs.append(self._deploy_ttl_index())
+        anchors = []
+        for idx in filter(None, idxs):
+            t = idx.ttl_type.lower()
+            part = {k.lower() for k in idx.keys}
+            if t != "absolute" and any({k.lower() for k in ks} - part for ks in keysets):
+                return None
+            if t != "latest" and not eng.variables.get("ttl_now_ms"):
+                anchors.append(idx.ts_col)
+        return anchors
 
     # -- batch-request common-column optimization (SURVEY §4.1) -------------
     def _item_out_name(self, it) -> str:
@@ -524,8 +622,7 @@ class SqlDeployment(PreaggServing):
         window into 1 window evaluation + a broadcast of its scalar
         outputs, instead of B frame evaluations — exactly the reference's
         BatchRequestOptimize contract. Falls back to the plain vectorized
-        request path when nothing (or everything) is common.
-        """
+        request path when nothing is common."""
         common = set(common_columns)
         body = self.query.body
         if not common:
@@ -590,48 +687,14 @@ class SqlDeployment(PreaggServing):
         # otherwise the joined-in values are per-row (conservative: one
         # non-common join input makes ALL joined columns non-common)
         join_common = True
-        join_right_names: set = set()
-        req_cols = (
-            {f.name for f in self.input_schema.fields}
-            if self.input_schema is not None
-            else set()
-        )
-        join_aliases: set = set()
         for j in body.joins:
             jtoks = list(j.on or [])
             for ob in j.order_by or []:
                 jtoks += list(ob)
-            need = {t.text for t in jtoks if t.kind == "name" and t.text in req_cols}
+            need = {t.text for t in jtoks if t.kind == "name" and t.text in req_cols_all}
             if not need <= common:
                 join_common = False
-            rdf = self.engine.tables.get(j.table.name) if j.table.name else None
-            if rdf is not None:
-                join_right_names |= set(rdf.columns)
-            if j.table.alias:
-                join_aliases.add(j.table.alias)
-            if j.table.name:
-                join_aliases.add(j.table.name)
-
-        def _refs_join_side(toks_seq) -> bool:
-            """True if a token stream references the join side: a bare name
-            that only the right side defines, or any alias-qualified ref
-            ``t1.c`` whose qualifier names a join table — the latter catches
-            right-side columns that SHADOW a request-column name (bare-name
-            set difference would miss them)."""
-            toks = list(toks_seq)
-            names = {t.text for t in toks if t.kind == "name"}
-            if names & (join_right_names - req_cols):
-                return True
-            for k, t in enumerate(toks):
-                if (
-                    t.kind == "name"
-                    and t.text in join_aliases
-                    and k + 2 < len(toks)
-                    and toks[k + 1].text == "."
-                    and toks[k + 2].kind == "name"
-                ):
-                    return True
-            return False
+        _refs_join_side = self._join_side_reader(body)
 
         common_idx, noncommon_idx = [], []
         for idx, it in enumerate(body.items):

@@ -65,13 +65,15 @@ def _empty_null(arr: Column, out: Column) -> Column:
 
 
 def _arr_sum(arr: Column) -> Column:
-    # zero = first_elem * 0 preserves the element's numeric type (long sums
-    # stay long, double sums stay double) so the array path agrees with the
-    # caller-declared type rather than silently widening.
+    # zero = first_elem * 0L keeps fractional element types (double sums
+    # stay double, a -0.0 stays -0.0) and widens integral ones to bigint,
+    # as the native window sum does: an int frame sum must not wrap where
+    # the native one does not
     return _bind(
         _nn(arr),
         lambda nn: _empty_null(
-            nn, F.aggregate(nn, F.element_at(nn, 1) * 0, lambda a, x: a + x)
+            nn,
+            F.aggregate(nn, F.element_at(nn, 1) * F.lit(0).cast("long"), lambda a, x: a + x),
         ),
     )
 

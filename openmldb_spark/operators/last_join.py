@@ -161,8 +161,6 @@ def lower_last_join(
     rest  : the ON conjuncts that are not key equalities.
 
     Returns the left columns followed by the right columns."""
-    from openmldb_spark.engine import servingmat
-
     kept = []
     for c in rest:
         if _references_right_only(left, right, c):
@@ -175,8 +173,7 @@ def lower_last_join(
     if keys and not kept:
         dd = _dedupe(right, keys, rank)
         if dd is not None:
-            # a compiled serve keeps the deduped side resident
-            return left.join(servingmat.offer(dd).alias(alias), on, "left")
+            return left.join(dd.alias(alias), on, "left")
     lid = left.withColumn(_LID, F.monotonically_increasing_id())
     conds = [c for c in (on, *kept) if c is not None]
     joined = lid.join(right, reduce(Column.__and__, conds) if conds else F.lit(True), "left")

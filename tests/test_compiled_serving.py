@@ -1,9 +1,10 @@
-"""The compiled request plan (engine/serving.py CompiledRequestPlan) —
-the r10 headline: the reference compiles a deployment's plan once per
-DEPLOY and binds rows per call (hybridse/src/vm/engine.cc:453-496,
-src/sdk/sql_cluster_router.h:116-190 CallProcedure); here the SQL is
-parsed + lowered + analyzed once against a staged Arrow request source
-and each serve swaps the staged rows."""
+"""The compiled request plan (engine/compiled.py CompiledRequestPlan): the
+reference compiles a deployment's plan once per DEPLOY and binds rows per
+call (hybridse/src/vm/engine.cc:453-496, src/sdk/sql_cluster_router.h:
+116-190 CallProcedure), reading one in-memory pk segment per index
+(src/storage/mem_table.cc); here the SQL is parsed, lowered and planned
+once against staged sources, and each serve stages the request rows plus
+their key segments from a driver-resident index."""
 
 import os
 
@@ -103,12 +104,12 @@ def test_dml_invalidates_compiled_plan(spark):
     assert dep.run_request(req).collect()[0]["s"] == 30 + 31 + 40
     first = dep._compiled
     assert first is not None
-    # an online INSERT into the request table is absorbed: same plan
+    # an online INSERT into the request table is an index append: same plan
     eng.execute(
         "INSERT INTO t0 VALUES (4, 'aa', 100, 1590738994000)"
     )
     assert dep.run_request(req).collect()[0]["s"] == 30 + 31 + 100 + 40
-    assert dep._compiled is first, "an absorbed INSERT recompiled"
+    assert dep._compiled is first, "an appended INSERT recompiled"
     # any other write still recompiles
     eng.execute("DELETE FROM t0 WHERE id = 4")
     assert dep.run_request(req).collect()[0]["s"] == 30 + 31 + 40
@@ -419,41 +420,11 @@ def test_nested_request_schema_serves_per_call(spark):
     assert got[0]["tags"] == ["x", "y"] and got[0]["c"] == 2
 
 
-def test_offer_refuses_staged_source_in_both_modes(spark):
-    """servingmat.offer must decline any subtree reading the staged
-    request source. The staged text source has no MapInArrow node, so
-    refusal keys on the STAGED_MARKER tag — which must survive analysis
-    (where offer looks) and constant-fold away before execution (zero
-    serve cost)."""
-    from openmldb_spark.engine import servingmat
-
-    src = servingmat.mark_staged(spark.range(3).toDF("x"))
-    analyzed = src._jdf.queryExecution().analyzed().toString()
-    assert servingmat.STAGED_MARKER in analyzed
-    optimized = src._jdf.queryExecution().optimizedPlan().toString()
-    assert servingmat.STAGED_MARKER not in optimized  # folded away
-
-    sink = []
-    with servingmat.collecting(sink):
-        # the marker survives through derived subtrees (the shape offer
-        # actually sees: an aggregate over a join touching the source)
-        derived = src.groupBy("x").count()
-        out = servingmat.offer(derived)
-        assert out is derived and sink == []
-        # a genuinely history-only subtree is still accepted
-        plain = spark.range(3).toDF("x").distinct()
-        kept = servingmat.offer(plain)
-        assert sink == [kept]
-    kept.unpersist()
-
-
 def test_self_last_join_on_request_table_jvm_mode(spark):
     """The ADVICE r11 scenario: a deployment whose LAST JOIN right side
-    IS the request table. In JVM staging mode the right side reads the
-    staged text source (no MapInArrow); offering it would persist the
-    compile-time EMPTY staged file and every serve would join against
-    nothing. The marker must keep it un-materialized and the compiled
-    result equal to the uncompiled path."""
+    IS the request table. Every reference to the request table binds to
+    the staged request rows, so the right side is no indexed store and the
+    compiled result equals the uncompiled path."""
     eng = _engine(spark)
     dep = eng.execute(
         "DEPLOY dself SELECT t0.id, t0.c1, r.c4 as rc4 FROM t0 "
@@ -463,9 +434,7 @@ def test_self_last_join_on_request_table_jvm_mode(spark):
     compiled = sorted(
         map(tuple, dep.run_request(_req(spark, dep, rows)).collect())
     )
-    assert dep._compiled is not None
-    # nothing offered over the request source was materialized
-    assert dep._compiled._materialized == []
+    assert dep._compiled is not None and dep._compiled.indexes == {}
     dep.use_compiled = False
     plain = sorted(
         map(tuple, dep.run_request(_req(spark, dep, rows)).collect())
@@ -474,33 +443,6 @@ def test_self_last_join_on_request_table_jvm_mode(spark):
     assert compiled == plain and len(compiled) == 2
     # the request rows themselves ARE the join's right side here
     assert {t[2] for t in compiled} == {40, 7}
-
-
-def test_materialized_join_side_cache_hits_from_serving_clone(spark):
-    """The resident LAST JOIN right sides are persisted on the engine
-    session but serves execute on the clone — the shared cache manager
-    must still substitute them (InMemoryTableScan in the serve plan)."""
-    eng = _engine(spark)
-    eng.execute(
-        "CREATE TABLE tm1 (c1 string, v bigint, c7 timestamp,"
-        " INDEX(KEY=(c1), TS=c7))"
-    )
-    eng.execute(
-        "INSERT INTO tm1 VALUES ('aa', 7, 1590738991000),"
-        " ('aa', 8, 1590738992000), ('bb', 9, 1590738991000)"
-    )
-    dep = eng.execute(
-        "DEPLOY dmat SELECT t0.id, tm1.v AS rv FROM t0 "
-        "LAST JOIN tm1 ORDER BY tm1.c7 ON t0.c1 = tm1.c1"
-    )
-    got = dep.run_request_rows(_conv([(9, "aa", 40, 1590738995000)]))
-    assert [(r["id"], r["rv"]) for r in got] == [(9, 8)]
-    cp = dep._compiled
-    assert cp is not None and cp._materialized, "right side was not offered"
-    sdf = cp._fresh_serve_df()
-    assert sdf.sparkSession is cp._serve_spark
-    plan = sdf._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, plan
 
 
 def test_jvm_staging_timestamps_survive_non_utc_session(spark):
@@ -712,7 +654,7 @@ def test_exact_collect_plan_handles_dotted_and_nested_names(spark):
     assert _exact_collect_plan(spark.createDataFrame([], dup), dup) == (None, None)
 
 
-# -- the staged text format and the write-through append log ---------------
+# -- the staged text format and the key-segment index ----------------------
 
 
 def test_staged_file_pads_with_one_line(spark, tmp_path):
@@ -785,18 +727,77 @@ def _served(dep, rows):
     return sorted(map(tuple, dep.run_request_rows(_conv(rows))))
 
 
-def test_inserts_write_through_without_recompiling(spark, monkeypatch):
-    """Several online INSERTs into the request table are absorbed by the
-    live plan's append log: every serve equals the uncompiled path over
-    the grown store, and no new CompiledRequestPlan is built (nothing is
-    lowered again)."""
-    from openmldb_spark.engine import compiled
+# the request table t0, a WINDOW UNION table tu and a LAST JOIN right side
+# tj: all three are indexed, and tj's key is named apart from t0's columns
+SQL_ALL = (
+    "SELECT t0.id, t0.c1, sum(t0.c4) OVER w1 AS s, count(t0.c4) OVER w2 AS n,"
+    " tj.tag AS tag FROM t0 LAST JOIN tj ORDER BY tj.jt ON t0.c1 = tj.k"
+    " WINDOW w1 AS (PARTITION BY t0.c1 ORDER BY t0.c7 ROWS_RANGE BETWEEN 10s"
+    " PRECEDING AND CURRENT ROW), w2 AS (UNION tu PARTITION BY c1 ORDER BY c7"
+    " ROWS_RANGE BETWEEN 10s PRECEDING AND CURRENT ROW)"
+)
 
-    eng = _join_engine(spark)
-    dep = eng.execute(f"DEPLOY dwt1 {SQL_JOIN}")
-    req = [(9, "aa", 40, 1590738995000), (10, "bb", 7, 1590738995000)]
-    assert _served(dep, req) == _uncompiled(dep, req)
+
+def _all_engine(spark):
+    eng = _engine(spark)
+    eng.execute(
+        "CREATE TABLE tu (id int, c1 string, c4 bigint, c7 timestamp,"
+        " INDEX(KEY=(c1), TS=c7))"
+    )
+    eng.execute(
+        "INSERT INTO tu VALUES (50, 'aa', 5, 1590738993000),"
+        " (51, 'bb', 6, 1590738993000)"
+    )
+    eng.execute(
+        "CREATE TABLE tj (k string, tag bigint, jt timestamp, INDEX(KEY=(k), TS=jt))"
+    )
+    eng.execute(
+        "INSERT INTO tj VALUES ('aa', 7, 1590738990000), ('bb', 8, 1590738990000)"
+    )
+    return eng
+
+
+def _batch_row(eng, dep, row):
+    """The batch (offline) result row of ``row`` over the stored tables."""
+    hist = eng.tables[dep.request_table].unionByName(
+        eng.spark.createDataFrame(_conv([row]), dep.input_schema)
+    )
+    got = [tuple(r) for r in dep.run_batch(history=hist).collect() if r["id"] == row[0]]
+    assert len(got) == 1, got
+    return got[0]
+
+
+def _check_serves(eng, dep, reqs):
+    """Each request served alone equals its batch row and the per-call
+    path; returns the served rows."""
+    out = []
+    for row in reqs:
+        got = _served(dep, [row])
+        assert got == [_batch_row(eng, dep, row)], row
+        assert got == _uncompiled(dep, [row]), row
+        out.append(got[0])
+    return out
+
+
+def test_index_follows_appends_without_recompiling(spark, monkeypatch):
+    """An online INSERT into the request table, the UNION table or the LAST
+    JOIN right side, and a REST PUT, each become an index append: the same
+    plan object serves next, no CompiledRequestPlan is built, and every
+    serve equals its batch row. The plan is planned once throughout."""
+    import json
+
+    from openmldb_spark.engine import compiled
+    from openmldb_spark.restful import ApiServer
+
+    eng = _all_engine(spark)
+    dep = eng.execute(f"DEPLOY dix1 {SQL_ALL}")
+    reqs = [(9, "aa", 40, 1590738995000), (10, "bb", 7, 1590738995000)]
+    assert [r[2:] for r in _check_serves(eng, dep, reqs)] == [
+        (30 + 31 + 40, 1 + 2 + 1, 7), (50 + 7, 1 + 1 + 1, 8)
+    ]
     plan = dep._compiled
+    assert plan.replan_node is None
+    planned = plan._fresh_serve_df()
     builds = []
     orig = compiled.CompiledRequestPlan.__init__
 
@@ -806,64 +807,188 @@ def test_inserts_write_through_without_recompiling(spark, monkeypatch):
 
     monkeypatch.setattr(compiled.CompiledRequestPlan, "__init__", counting)
     eng.execute("INSERT INTO t0 VALUES (20, 'aa', 100, 1590738993500)")
-    eng.execute(
-        "INSERT INTO t0 (id, c1, c7) VALUES (21, 'bb', 1590738994000),"
-        " (22, 'aa', 1590738994500)"
+    eng.execute("INSERT INTO tu VALUES (52, 'aa', 9, 1590738994000)")
+    eng.execute("INSERT INTO tj VALUES ('aa', 70, 1590738991000)")
+    r = ApiServer(eng).handle(
+        "PUT",
+        f"/dbs/{eng.current_db}/tables/t0",
+        json.dumps({"value": [[21, "bb", 200, 1590738994500]]}),
     )
-    eng.execute("INSERT INTO t0 VALUES (23, NULL, 5, 1590738994600)")
-    got = _served(dep, req)
+    assert r == {"code": 0, "msg": "ok"}
+    got = _check_serves(eng, dep, reqs)
+    assert [r[2:] for r in got] == [
+        (30 + 31 + 100 + 40, 1 + 2 + 2 + 1, 70), (50 + 200 + 7, 1 + 1 + 1 + 1, 8)
+    ]
     assert dep._compiled is plan and builds == []
-    assert plan._log_data.count(b"\n") == 4
-    assert got == _uncompiled(dep, req)
-    assert {r[0]: r[2] for r in got} == {9: 30 + 31 + 100 + 40, 10: 50 + 7}
-    # the null-key row is history for a null-key request
-    null_req = [(11, None, 1, 1590738995000)]
-    assert _served(dep, null_req) == _uncompiled(dep, null_req)
-    assert builds == []
+    assert plan._fresh_serve_df() is planned
+    assert plan.indexes["__history"][1].rows.num_rows == 5
+    # a NULL-key row is a segment of its own
+    eng.execute("INSERT INTO t0 VALUES (23, NULL, 5, 1590738994600)")
+    assert _served(dep, [(11, None, 1, 1590738995000)])[0][2] == 5 + 1
+    assert dep._compiled is plan and builds == []
 
 
-def test_writes_that_cannot_be_absorbed_recompile(spark):
-    """After absorbed INSERTs, a DELETE, a write to a join-side table and
-    an append that would overflow the log each drop the plan, and the
-    recompiled plan serves the same answers as the uncompiled path."""
-    from openmldb_spark.engine.compiled import STAGING_BYTES_CONF
-
-    eng = _join_engine(spark)
-    dep = eng.execute(f"DEPLOY dwt2 {SQL_JOIN}")
+def test_rewrites_rebuild_index_and_plan(spark, tmp_path):
+    """DELETE, TRUNCATE and LOAD DATA are no appends: each makes the next
+    serve rebuild index and plan, which then equals the batch row."""
+    eng = _all_engine(spark)
+    dep = eng.execute(f"DEPLOY dix2 {SQL_ALL}")
     req = [(9, "aa", 40, 1590738995000)]
-
-    def absorb_then(stmt):
+    csv = tmp_path / "tu.csv"
+    csv.write_text("id,c1,c4,c7\n60,aa,11,1590738994000\n")
+    for stmt, want in [
+        ("DELETE FROM t0 WHERE id = 2", (30 + 40, 1 + 1 + 1, 7)),
+        ("TRUNCATE TABLE tj", (30 + 40, 1 + 1 + 1, None)),
+        (f"LOAD DATA INFILE '{csv}' INTO TABLE tu"
+         " OPTIONS(format='csv', mode='append')", (30 + 40, 1 + 2 + 1, None)),
+    ]:
         _served(dep, req)
         plan = dep._compiled
-        eng.execute("INSERT INTO t0 VALUES (30, 'aa', 100, 1590738994000)")
-        assert dep._compiled is plan
         eng.execute(stmt)
-        got = _served(dep, req)
+        got = _check_serves(eng, dep, req)
         assert dep._compiled is not plan, stmt
-        assert got == _uncompiled(dep, req), stmt
-        return got[0]
+        assert got[0][2:] == want, stmt
 
-    assert absorb_then("DELETE FROM t0 WHERE id = 2")[2:] == (30 + 100 + 40, 7)
-    eng.execute("DELETE FROM t0 WHERE id = 30")
-    got = absorb_then("INSERT INTO tj VALUES ('aa', 70, 1590738991000)")
-    assert got[2:] == (30 + 100 + 40, 70)
-    eng.execute("DELETE FROM t0 WHERE id = 30")
-    # overflow: each encoded row here is 41 bytes, so a 100-byte log
-    # holds two rows, not three
-    spark.conf.set(STAGING_BYTES_CONF, "100")
+
+def test_offline_insert_leaves_the_index_untouched(spark):
+    """An offline-mode INSERT writes the offline store only: online serving
+    never sees the row."""
+    eng = _engine(spark)
+    dep = eng.execute(f"DEPLOY dix3 {SQL}")
+    req = [(9, "aa", 40, 1590738995000)]
+    assert _served(dep, req)[0][2] == 30 + 31 + 40
+    eng.execute("SET @@execute_mode = 'offline'")
     try:
-        dep2 = eng.execute(f"DEPLOY dwt3 {SQL_JOIN}")
-        _served(dep2, req)
-        plan = dep2._compiled
-        eng.execute("INSERT INTO t0 VALUES (40, 'aa', 1, 1590738994000)")
-        eng.execute("INSERT INTO t0 VALUES (41, 'aa', 2, 1590738994100)")
-        assert dep2._compiled is plan and plan._log_data.count(b"\n") == 2
-        eng.execute("INSERT INTO t0 VALUES (42, 'aa', 4, 1590738994200)")
-        assert plan._log_data.count(b"\n") == 2, "overflowing append was written"
-        got = _served(dep2, req)
-        assert dep2._compiled is not plan, "an overflowed log did not recompile"
-        assert got == _uncompiled(dep2, req)
-        assert got[0][2] == 30 + 1 + 2 + 4 + 40
+        eng.execute("INSERT INTO t0 VALUES (4, 'aa', 100, 1590738994000)")
+    finally:
+        eng.execute("SET @@execute_mode = 'online'")
+    assert _served(dep, req)[0][2] == 30 + 31 + 40
+    assert dep._compiled.indexes["__history"][1].rows.num_rows == 3
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        # no key equality: the right side stays a store read, joined by a
+        # broadcast nested-loop join
+        "SELECT t0.id, tj.tag AS tag FROM t0 LAST JOIN tj ORDER BY tj.jt"
+        " ON t0.c4 > tj.tag",
+        # an expression key: history stays a store read, shuffled together
+        # with the staged request rows
+        "SELECT id, sum(c4) OVER w1 AS s FROM t0 WINDOW w1 AS (PARTITION BY"
+        " substr(c1, 1, 1) ORDER BY c7 ROWS_RANGE BETWEEN 10s PRECEDING AND"
+        " CURRENT ROW)",
+    ],
+    ids=["keyless-last-join", "expression-key"],
+)
+def test_plans_with_store_reads_are_planned_per_serve(spark, sql):
+    """A plan that keeps an Exchange or broadcast is never re-collected:
+    two consecutive serves for different keys each return their own batch
+    row, from two Datasets."""
+    eng = _all_engine(spark)
+    dep = eng.execute(f"DEPLOY dix4 {sql}")
+    reqs = [(9, "aa", 40, 1590738995000), (10, "bb", 7, 1590738996000)]
+    got = _check_serves(eng, dep, reqs)
+    assert got[0] != got[1]
+    plan = dep._compiled
+    assert plan.replan_node is not None and plan.store_reads
+    assert plan._fresh_serve_df() is not plan._fresh_serve_df()
+
+
+def _perfbench_engine(spark, tmp_path):
+    """The benchmark's tables (perfbench/gen.py) at 3k events, its feature
+    SQL and four request rows after the history."""
+    import datetime
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "perfbench"))
+    import features
+    import gen
+
+    paths = gen.generate(str(tmp_path / "data"), 3, rows=3000, users=40)
+    eng = Engine(spark)
+    for name in ("events", "views", "customer"):
+        eng.register(name, spark.read.parquet(paths[name]))
+    end = eng.tables["events"].agg(F.max("ts")).collect()[0][0]
+    end_ms = (end - datetime.datetime(1970, 1, 1)) // datetime.timedelta(milliseconds=1)
+    return eng, features.SQL, gen.request_rows(3, 4, 40, end_ms, 10**9)
+
+
+def test_perfbench_shaped_deployment_is_planned_once(spark, tmp_path):
+    """The benchmark's feature SQL (three windows over events, one UNION
+    views window, LAST JOIN customer) serves from three indexes through a
+    plan with no Exchange or broadcast, planned at compile time: every
+    serve collects the same Dataset, and each response equals the per-call
+    path. History is not sent through the LAST JOIN, which no frame reads."""
+    eng, sql, reqs = _perfbench_engine(spark, tmp_path)
+    dep = eng.execute(f"DEPLOY dpb {sql}")
+    first = dep.run_request_rows([reqs[0]])
+    plan = dep._compiled
+    df = plan._fresh_serve_df()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in executed and "Broadcast" not in executed, executed
+    assert plan.replan_node is None and plan.store_reads == {}
+    assert [i.table for _, i, _, _ in plan.indexes.values()] == [
+        "events", "views", "customer"
+    ]
+    assert executed.count("SortMergeJoin") == 1, executed
+    for row in reqs[1:]:
+        got = dep.run_request_rows([row])
+        assert plan._fresh_serve_df() is df
+        dep.use_compiled = False
+        assert got == dep.run_request_rows([row])
+        dep.use_compiled = True
+    assert len(first) == 1
+
+
+def test_show_deployment_reports_the_serving_path(spark):
+    """SHOW DEPLOYMENT's serving rows: the path, indexed tables with their
+    keys, store reads with why, and the index's rows and Arrow bytes."""
+    eng = _all_engine(spark)
+    eng.execute(f"DEPLOY dsh1 {SQL_ALL}")
+    eng.execute(
+        "DEPLOY dsh2 SELECT t0.id, tj.tag AS tag FROM t0 LAST JOIN tj"
+        " ORDER BY tj.jt ON t0.c4 > tj.tag"
+    )
+    eng.execute("DEPLOY dsh3 SELECT id, c1 FROM t0 WHERE id > ?")
+
+    def serving(name):
+        rows = eng.execute(f"SHOW DEPLOYMENT {name}").collect()
+        return {
+            r["column_name"]: r["column_type"]
+            for r in rows
+            if r["section"] == "serving"
+        }
+
+    one = serving("dsh1")
+    assert one["path"] == "planned once"
+    assert one["indexed"] == "t0(c1), tu(c1), tj(k)"
+    assert one["store_reads"] == ""
+    assert one["index_rows"] == "7" and int(one["index_arrow_bytes"]) > 0
+    two = serving("dsh2")
+    assert two["path"].startswith("re-planned per serve: ")
+    assert "Exchange" in two["path"]
+    assert two["indexed"] == ""
+    assert two["store_reads"] == "tj: not a LAST JOIN keyed on request columns"
+    assert serving("dsh3") == {"path": "per call: parameterized body"}
+
+
+def test_hot_key_segment_over_the_staging_size_fails_loudly(spark):
+    """A key segment that does not fit the fixed staged file fails that
+    serve with the stagingBytes instructions; other keys still serve."""
+    from openmldb_spark.engine.compiled import STAGING_BYTES_CONF
+
+    spark.conf.set(STAGING_BYTES_CONF, "2048")
+    try:
+        eng = _engine(spark)
+        vals = ", ".join(
+            f"({100 + i}, 'aa', {i}, {1590738980000 + i})" for i in range(60)
+        )
+        eng.execute(f"INSERT INTO t0 VALUES {vals}")
+        dep = eng.execute(f"DEPLOY dhot {SQL}")
+        with pytest.raises(ValueError, match="stagingBytes"):
+            dep.run_request_rows(_conv([(9, "aa", 1, 1590738995000)]))
+        assert _served(dep, [(10, "bb", 7, 1590738995000)])[0][2] == 50 + 7
     finally:
         spark.conf.unset(STAGING_BYTES_CONF)
 
@@ -898,23 +1023,6 @@ def test_absorbed_rows_expire_like_stored_rows(spark, ttl, want):
     assert dep._compiled is plan
     assert got == _uncompiled(dep, req)
     assert got[0][2] == want
-
-
-def test_offline_insert_leaves_the_log_untouched(spark):
-    eng = _engine(spark)
-    dep = eng.execute(f"DEPLOY dwt4 {SQL}")
-    req = [(9, "aa", 40, 1590738995000)]
-    assert _served(dep, req)[0][2] == 30 + 31 + 40
-    plan = dep._compiled
-    before = open(plan._log, "rb").read()
-    eng.execute("SET @@execute_mode = 'offline'")
-    try:
-        eng.execute("INSERT INTO t0 VALUES (4, 'aa', 100, 1590738994000)")
-    finally:
-        eng.execute("SET @@execute_mode = 'online'")
-    assert plan._log_data == b"" and open(plan._log, "rb").read() == before
-    # online serving never sees offline rows
-    assert _served(dep, req)[0][2] == 30 + 31 + 40
 
 
 def test_insert_racing_a_serving_thread(spark):

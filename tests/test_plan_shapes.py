@@ -201,11 +201,12 @@ def test_curation_sample_is_filter_only_pack_one_exchange(spark, qs):
     assert re.search(r"\(\d+\) Filter", plan), plan
 
 
-def test_request_serving_history_is_key_pruned(spark):
-    """r9: the serving path pre-filters history with a broadcast join on
-    the distinct request keys (the tablet pk-segment analog). The plan
-    must carry the prune markers and a BroadcastHashJoin — a regression
-    here silently returns serving to full-history scans per request."""
+def test_request_serving_history_is_a_staged_segment(spark):
+    """The compiled serve reads history as the staged key segment of the
+    request (the tablet pk-segment analog), not the store: its plan scans
+    only the staged file, once for the request rows and once for the
+    segment, with no Exchange — a regression here silently returns serving
+    to full-history scans per request."""
     import datetime
 
     from openmldb_spark.engine import Engine
@@ -229,9 +230,10 @@ def test_request_serving_history_is_key_pruned(spark):
     # the pin targets the COMPILED SERVE PLAN — run_request now returns
     # an eager driver-local result, so inspect the plan the serve runs
     out = dep._compiled._fresh_serve_df()
-    analyzed = out._jdf.queryExecution().analyzed().toString()
-    assert "__rq_m0" in analyzed, "history key-prune marker missing"
-    assert "BroadcastHashJoin" in _plan(out)
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in executed, executed
+    assert executed.count("FileScan text") == 2, executed
+    assert "StringStartsWith(value,s0,)" in executed, executed
 
 
 def test_banded_lsh_join_stays_single_bucket_equijoin(spark):
@@ -296,17 +298,11 @@ def test_same_spec_union_windows_fuse_to_one_union(spark):
     # the pin targets the COMPILED SERVE PLAN (r13: run_request returns
     # an eager driver-local result, not the serve Dataset)
     out = dep._compiled._fresh_serve_df()
-    analyzed = out._jdf.queryExecution().analyzed().toString()
-    import re
-
-    # the decisive pin: the request-history prune marker subtree exists
-    # ONCE (pre-fusion request plans carried it once per window)
-    assert analyzed.count("__rq_m0#") > 0
-    distinct_markers = len(set(re.findall(r"__rq_m0#\d+", analyzed)))
-    assert distinct_markers <= 2, (
-        f"history subtree duplicated across windows: {distinct_markers} "
-        "distinct prune-marker ids (expected one per union build, got one "
-        "per window)"
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    # the decisive pin: the staged history segment is scanned ONCE
+    # (pre-fusion request plans read it once per window)
+    assert executed.count("StringStartsWith(value,s0,)") == 1, (
+        "history subtree duplicated across windows:\n" + executed
     )
 
 
