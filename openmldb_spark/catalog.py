@@ -61,9 +61,6 @@ class TableDef:
     #: as Storage_type). Metadata only: every table here is a DataFrame.
     storage_mode: str = "memory"
 
-    def primary_index(self) -> Optional[IndexDef]:
-        return self.indexes[0] if self.indexes else None
-
 
 def apply_ttl(
     df: DataFrame,

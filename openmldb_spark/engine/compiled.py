@@ -181,7 +181,7 @@ def _pad_staged(data: bytes, pad_bytes: int) -> bytes:
             f"bytes, over the fixed staging size {pad_bytes} (the compiled "
             f"plan's scan caches the file length). Set spark conf {STAGING_BYTES_CONF} "
             "higher BEFORE the deployment compiles, or serve the batch "
-            "through the uncompiled DataFrame path."
+            "with run_request(..., history=...), which plans per call."
         )
     room = pad_bytes - len(data)
     return data + (b" " * (room - 1) + b"\n" if room else b"")
@@ -412,23 +412,17 @@ class CompiledRequestPlan:
             dep._query_with_params(None), src, None, leaves
         )
         # the analyzed tree is re-rooted onto the isolated serving session
-        # and planned there; without one, serves plan per call
+        # and planned there
         self._lp = self.plan._jdf.queryExecution().analyzed()
-        self._df = self._exact = None
-        try:
-            self._serve_spark = _serving_session(self.spark)
-            df = self._reroot(self._serve_spark)
-            found = _REPLAN_NODE.search(
-                df._jdf.queryExecution().executedPlan().toString()
-            )
-        except Exception:  # pragma: no cover - e.g. non-classic backends
-            self._serve_spark = None
-            self.replan_node = "no serving session"
-        else:
-            #: the node that makes each serve plan anew, or None
-            self.replan_node = found.group(0) if found else None
-            if found is None:
-                self._df = df
+        self._exact = None
+        self._serve_spark = _serving_session(self.spark)
+        df = self._reroot(self._serve_spark)
+        found = _REPLAN_NODE.search(
+            df._jdf.queryExecution().executedPlan().toString()
+        )
+        #: the node that makes each serve plan anew, or None
+        self.replan_node = found.group(0) if found else None
+        self._df = None if found else df
 
     def _reroot(self, session) -> DataFrame:
         jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
@@ -453,13 +447,10 @@ class CompiledRequestPlan:
     def _fresh_serve_df(self) -> DataFrame:
         """The Dataset one serve collects: the one planned at compile time
         when the plan can be re-collected (see the class docstring), else a
-        fresh one — on the serving clone when there is one, else the engine
-        session (``.where(lit(True))`` forces a new physical plan there).
-        The semantics-bearing confs are re-synced onto the clone first; a
-        change drops the planned Dataset so it is planned again."""
+        fresh one on the serving clone. The semantics-bearing confs are
+        re-synced onto the clone first; a change drops the planned Dataset
+        so it is planned again."""
         spark = self._serve_spark
-        if spark is None:
-            return self.plan.where(F.lit(True))
         for k in self._SEMANTIC_CONFS:
             v = self.spark.conf.get(k, None)
             if v is not None and spark.conf.get(k, None) != v:

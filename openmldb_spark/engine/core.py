@@ -476,11 +476,8 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
         self._streams: dict[str, DataFrame] = {}
         #: (db, bare) -> mutation epoch, bumped on EVERY store write
         #: (INSERT/DELETE/LOAD DATA/TRUNCATE/register/offline rebuild).
-        #: Derived caches — the long-window pre-agg above all — key their
-        #: validity on it, the Spark-side stand-in for the reference's
-        #: maintain-on-every-Put/Delete aggregator tables
-        #: (src/storage/aggregator.cc; pinned by the ported
-        #: integration_test/long_window delete cases).
+        #: Derived serving state — the compiled request plan's key — keys
+        #: its validity on it.
         self._epochs: dict[tuple, int] = {}
 
     def _bump_epoch(self, db: str, bare: str) -> None:

@@ -217,9 +217,9 @@ class DdlMixin:
         self._db_off.get(db, {}).pop(bare, None)
         self._off_parts.pop((db, bare), None)
         self._table_ids.pop((db, bare), None)
-        # deployments serving this table hold .persist()ed pre-agg
-        # buckets — release them (r9 verdict #3: dropping the request
-        # table must not leak the serving caches)
+        # deployments serving this table hold a compiled plan's staged
+        # directory and indexes — release them (dropping the request table
+        # must not leak the serving state)
         for dep in self._db_deps.get(db, {}).values():
             # a deployment's unqualified request table resolves in the
             # db it was deployed in, not the session's current one

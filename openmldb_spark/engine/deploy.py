@@ -1,7 +1,9 @@
 """Deployment DDL: DEPLOY, auto-indexing, CREATE PROCEDURE, SHOW/DROP
 DEPLOYMENT — the serving object itself (SqlDeployment: request mode,
-batch-request optimization, long-window pre-agg, compiled request plan)
-lives in :mod:`openmldb_spark.engine.serving`."""
+batch-request optimization, compiled request plan) lives in
+:mod:`openmldb_spark.engine.serving`. DEPLOY's ``long_windows`` option is
+validated like the reference's; those windows serve exactly from raw
+history through the same compiled plan as any other."""
 
 from __future__ import annotations
 

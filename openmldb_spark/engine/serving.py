@@ -1,7 +1,8 @@
 """The SqlDeployment serving object: request mode, batch-request
-optimization, long-window pre-agg serving, and the compiled request-plan
-cache (the Spark analog of the reference's per-DEPLOY compiled-plan cache,
-``hybridse/src/vm/engine.cc:453-496``)."""
+optimization, and the compiled request-plan cache (the Spark analog of the
+reference's per-DEPLOY compiled-plan cache,
+``hybridse/src/vm/engine.cc:453-496``). A ``long_windows`` deploy serves
+like any other, exactly over raw history."""
 
 from __future__ import annotations
 
@@ -16,7 +17,6 @@ from openmldb_spark.sql import parser as P
 from openmldb_spark.sql.lowering import Lowerer
 
 from openmldb_spark.engine.compiled import CompiledRequestPlan, _jvm_stageable
-from openmldb_spark.engine.preagg_serving import PreaggServing
 
 
 def _innermost(sel):
@@ -31,16 +31,15 @@ def _innermost(sel):
     return sel
 
 
-class SqlDeployment(PreaggServing):
+class SqlDeployment:
     """A deployed SELECT: named, schema-contracted, two execution modes
     (see module docstring).
 
     ``long_windows`` ({window_name: bucket interval, e.g. 'w1': '1h'}) is
-    the reference's ``OPTIONS(long_windows=...)`` — eligible windows
-    (ROWS_RANGE, plain keys/order, single-column sum/count/avg/min/max,
-    no EXCLUDE/MAXSIZE/UNION; ``long_window_optimized.cc
-    VerifySingleAggregation``) are served from a materialized pre-agg
-    table via :meth:`prepare_preagg` + :meth:`run_request_preagg`.
+    the reference's ``OPTIONS(long_windows=...)``: DEPLOY validates it
+    like the reference's cluster router, and the windows it names serve
+    exactly like any other, from raw history. Bucketed pre-aggregation is
+    the :mod:`openmldb_spark.plans.longwindow` operator.
     """
 
     def __init__(
@@ -62,18 +61,10 @@ class SqlDeployment(PreaggServing):
         self.const_cols: list[str] = []
         self.long_windows = dict(long_windows or {})
         self.query = P.parse(select_sql)
-        self._preagg: dict[tuple[str, str], DataFrame] = {}
-        #: provenance of the cached pre-agg: ("tbl", epoch, ttl_pin), or a
-        #: STRONG reference to the explicit history DataFrame (an id()
-        #: could be reused after GC), checked on every prepare_preagg
-        self._preagg_src: Optional[tuple] = None
-        self._preagg_hist: Optional[DataFrame] = None
         #: compiled request plan (the reference compiles once per DEPLOY,
         #: ``hybridse/src/vm/engine.cc:453-496``; rebuilt here once it is
         #: no longer :meth:`CompiledRequestPlan.current`)
         self._compiled: Optional["CompiledRequestPlan"] = None
-        #: escape hatch: False forces the per-call plan-build path
-        self.use_compiled = True
         #: parameterized body (`?` placeholders, literal-folded per call):
         #: no single plan to compile, so every serve builds one per call
         self.has_params = any(t.text == "?" for t in P.tokenize(select_sql))
@@ -95,6 +86,12 @@ class SqlDeployment(PreaggServing):
                 )
             raise ValueError("DEPLOY needs a SELECT with a named main table")
         self.request_table = sel.from_.name
+        if self.request_table in {name for name, _ in self.query.ctes}:
+            # request rows would bind under a name the WITH shadows
+            raise ValueError(
+                f"DEPLOY main table {self.request_table!r} is a WITH table; "
+                "deploy a SELECT whose main table is a stored table"
+            )
         #: schema contract pinned at deploy time (if the table exists)
         t = engine.tables.get(self.request_table)
         self.input_schema = t.schema if t is not None else None
@@ -103,8 +100,6 @@ class SqlDeployment(PreaggServing):
         """Why engine-store serves build their plan per call, or None when
         they go through the compiled plan (nested types have no staged
         text source)."""
-        if not self.use_compiled:
-            return "compiled serving switched off"
         if self.has_params:
             return "parameterized body"
         if self.input_schema is None:
@@ -208,7 +203,7 @@ class SqlDeployment(PreaggServing):
         """The compiled plan: the live one, or a fresh compile replacing
         it when a write made it stale."""
         if self._compiled is None or not self._compiled.current():
-            self._release_compiled()
+            self.release_serving()
             self._compiled = CompiledRequestPlan(self)
         return self._compiled
 
@@ -225,11 +220,6 @@ class SqlDeployment(PreaggServing):
             eng.variables.get("execute_mode", "online"),
             eng.current_db,
         )
-
-    def _release_compiled(self) -> None:
-        if self._compiled is not None:
-            self._compiled.release()
-            self._compiled = None
 
     def _serving_history(
         self,
@@ -713,8 +703,8 @@ class SqlDeployment(PreaggServing):
         return common_idx, noncommon_idx
 
     def release_serving(self) -> None:
-        """Free every cached serving resource (persisted pre-agg buckets +
-        the compiled request plan's staged directory) — called from all
-        drop paths."""
-        self._release_preagg()
-        self._release_compiled()
+        """Free the compiled request plan's staged directory and indexes —
+        called from every drop path and before a recompile."""
+        if self._compiled is not None:
+            self._compiled.release()
+            self._compiled = None

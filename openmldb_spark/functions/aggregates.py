@@ -36,6 +36,7 @@ from typing import Callable, Optional, Union
 
 from pyspark.sql import Column, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, DecimalType
 
 ColumnOrName = Union[Column, str]
 
@@ -64,18 +65,19 @@ def _empty_null(arr: Column, out: Column) -> Column:
     return F.when(F.size(arr) > 0, out)
 
 
-def _arr_sum(arr: Column) -> Column:
+def _arr_sum(arr: Column, dtype: Optional[DataType] = None) -> Column:
     # zero = first_elem * 0L keeps fractional element types (double sums
     # stay double, a -0.0 stays -0.0) and widens integral ones to bigint,
     # as the native window sum does: an int frame sum must not wrap where
-    # the native one does not
-    return _bind(
-        _nn(arr),
-        lambda nn: _empty_null(
-            nn,
-            F.aggregate(nn, F.element_at(nn, 1) * F.lit(0).cast("long"), lambda a, x: a + x),
-        ),
-    )
+    # the native one does not. A DECIMAL merge widens past any zero, so a
+    # decimal element ``dtype`` folds in the native sum's result type.
+    def fold(nn: Column) -> Column:
+        if isinstance(dtype, DecimalType):
+            t = DecimalType(min(dtype.precision + 10, 38), dtype.scale)
+            return F.aggregate(nn, F.lit(0).cast(t), lambda a, x: (a + x).cast(t))
+        return F.aggregate(nn, F.element_at(nn, 1) * F.lit(0).cast("long"), lambda a, x: a + x)
+
+    return _bind(_nn(arr), lambda nn: _empty_null(nn, fold(nn)))
 
 
 def _arr_count(arr: Column) -> Column:
@@ -114,7 +116,9 @@ class AggSpec:
     fields: dict[str, Column]
     #: (resolved_fields, WindowSpec) -> Column. None => needs array path.
     native: Optional[Callable[[dict[str, Column], WindowSpec], Column]] = None
-    #: (elems array<struct>, field getter) -> Column. Always present.
+    #: (elems array<struct>, field getter) -> Column. Always present. The
+    #: getter maps a field name to its element accessor, which may carry
+    #: the field's Spark type as ``dtype``.
     array: Optional[Callable[[Column, Callable], Column]] = None
     #: resolved_fields -> Column for groupBy().agg(). None => window-only.
     group: Optional[Callable[[dict[str, Column]], Column]] = None
@@ -123,9 +127,6 @@ class AggSpec:
     #: spec-specific parameters the window engine needs for native lowering
     #: (e.g. lag's offset for the frame-relative bound check)
     params: dict = dc_field(default_factory=dict)
-
-    def with_name(self, out: str) -> tuple[str, "AggSpec"]:
-        return out, self
 
     def as_group(self) -> Column:
         """This aggregate as a groupBy().agg() column."""
@@ -140,11 +141,15 @@ class AggSpec:
 
 
 def sum_(value: ColumnOrName) -> AggSpec:
+    def arr(e, f):
+        get = f("v")
+        return _arr_sum(F.transform(e, get), getattr(get, "dtype", None))
+
     return AggSpec(
         "sum",
         {"v": _c(value)},
         native=lambda f, ws: F.sum(f["v"]).over(ws),
-        array=lambda e, f: _arr_sum(F.transform(e, f("v"))),
+        array=arr,
         group=lambda f: F.sum(f["v"]),
     )
 

@@ -47,11 +47,6 @@ JOB_SCHEMA = (
     "application_id string, error string"
 )
 
-#: JobInfo.java:32 FINAL_STATE (+ our STOPPED, which the reference sets
-#: post-hoc through stopJob)
-FINAL_STATES = {"finished", "failed", "killed", "lost", "stopped"}
-
-
 def _ts(ms: Optional[int]) -> Optional[datetime.datetime]:
     return datetime.datetime.fromtimestamp(ms / 1000.0) if ms else None
 
@@ -88,10 +83,6 @@ class JobInfo:
     @property
     def group_id(self) -> str:
         return f"openmldb-job-{self.id}"
-
-    @property
-    def is_final(self) -> bool:
-        return self.state.lower() in FINAL_STATES
 
     def row(self) -> tuple:
         return (

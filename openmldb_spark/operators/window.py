@@ -226,6 +226,17 @@ def _collect_window(
     return Window.partitionBy(*parts).orderBy(F.col(_ORD).asc()).rangeBetween(-r, 0)
 
 
+def _slot(name: str, types: dict):
+    """Accessor of the collected struct field ``name``; its ``dtype`` is
+    the field's Spark type."""
+
+    def get(s: Column) -> Column:
+        return s[name]
+
+    get.dtype = types[name]
+    return get
+
+
 def _take_last(arr: Column, k: Column) -> Column:
     """Last k elements of arr (most recent; arr is ts-ascending)."""
     n = F.size(arr)
@@ -410,8 +421,14 @@ def window_agg(
         if wdef.maxsize is not None and wdef.exclude_current_row:
             elems = _take_last(elems, F.lit(wdef.maxsize))
 
+        # each accessor carries its field's type: a DECIMAL sum folds in
+        # its own result type (``_arr_sum``)
+        slot_types = {
+            f.name: f.dataType
+            for f in df.select(struct_col.alias("s")).schema[0].dataType.fields
+        }
         for i, (name, spec) in enumerate(array_specs.items()):
-            getter = lambda fk, i=i: (lambda s: s[slot_of[(i, fk)]])
+            getter = lambda fk, i=i: _slot(slot_of[(i, fk)], slot_types)
             native_cols[name] = spec.array(elems, getter)
 
     # select("*") (not a by-name re-projection) so joined inputs keep their

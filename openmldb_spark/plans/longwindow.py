@@ -7,8 +7,11 @@ rows — ``src/storage/aggregator.h:39-75`` maintains an ``AggrBuffer``
 ``PhysicalRequestAggUnionNode`` (``hybridse/include/vm/physical_op.h:1617-1692``,
 ``RequestAggUnionRunner`` ``hybridse/src/vm/runner.h:554``) answers a request
 by combining *full* buckets from the pre-agg table with raw-row scans of the
-two *partial* buckets at the window edges. Enabled per-deploy via
-``OPTIONS(long_windows='w1:1d')`` (``DEPLOY_STATEMENT.md:143-156``).
+two *partial* buckets at the window edges. The reference enables it per
+deploy via ``OPTIONS(long_windows='w1:1d')`` (``DEPLOY_STATEMENT.md:143-156``);
+this engine's DEPLOY validates that option like the reference and serves
+those windows exactly from raw history. This module is the operator, run
+by the ``long_window_preagg`` query and ``tools/bench_longwindow.py``.
 
 Spark-first translation:
 
@@ -37,7 +40,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_SUPPORTED = ("sum", "count", "avg", "min", "max", "raw")
+_SUPPORTED = ("sum", "count", "avg", "min", "max")
 
 
 def preaggregate(
@@ -46,8 +49,6 @@ def preaggregate(
     ts_col: str,
     value_col: str,
     bucket_ms: int,
-    *,
-    filter_col: str = None,
 ) -> DataFrame:
     """Materialize per-(key, bucket) partial aggregates of ``value_col``.
 
@@ -56,21 +57,10 @@ def preaggregate(
     — the same quartet the reference's AggrBuffer keeps
     (``aggregator.h:56-75``), from which sum/count/avg/min/max (and any
     combination) are all answerable.
-
-    ``filter_col`` (the reference's long-window ``*_where`` support,
-    ``aggregator.cc`` filter-key variant): buckets are additionally keyed
-    by that column's value (output column ``__fv``), so any
-    ``<filter_col> <op> <const>`` predicate is answerable at serve time by
-    filtering pre-agg rows on ``__fv`` — the pre-agg grows by the filter
-    column's per-key-bucket cardinality, exactly the reference's storage
-    trade.
     """
     b = (F.col(ts_col) / F.lit(bucket_ms)).cast("long").alias("bucket")
-    gcols = [F.col(k) for k in keys]
-    if filter_col is not None:
-        gcols.append(F.expr(filter_col).alias("__fv"))
     return (
-        history.groupBy(*gcols, b)
+        history.groupBy(*[F.col(k) for k in keys], b)
         .agg(
             F.sum(value_col).alias("sum_v"),
             F.count(value_col).alias("cnt_v"),
@@ -193,17 +183,6 @@ def request_long_window(
         )
     )
     sum_v, cnt_v = F.col("__sum"), F.col("__cnt")
-    if agg == "raw":
-        # the combinable quartet (callers merging extra rows, e.g. the
-        # request row itself in request mode, finish the aggregation)
-        combined = parts.select(
-            request_id,
-            F.when(cnt_v > 0, sum_v).alias("agg_sum"),
-            cnt_v.alias("agg_cnt"),
-            F.col("__min").alias("agg_min"),
-            F.col("__max").alias("agg_max"),
-        )
-        return requests.join(combined, request_id, "left")
     if agg == "sum":
         out = F.when(cnt_v > 0, sum_v)
     elif agg == "count":

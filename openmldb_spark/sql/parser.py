@@ -655,16 +655,6 @@ class Parser:
             items.append(self.take_expr())
         return items
 
-    def skip_parens(self) -> None:
-        self.expect("(")
-        depth = 1
-        while depth and self.peek() is not None:
-            t = self.eat()
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                depth -= 1
-
 
 #: words that may legally appear *inside* an expression (so a name after a
 #: primary is not an alias boundary when it's one of these)

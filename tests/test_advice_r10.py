@@ -4,11 +4,12 @@
 2. long-window deploy over a set-op body gets the reference's
    'unsupported multi tables' error, not an AttributeError — deploy.py
 3. '2min' bucket units rejected like the reference aggregator — deploy.py
-4. pre-agg cache key includes execute_mode (+ resolved table loc) —
-   deploy.py
+4. the compiled request plan's key includes execute_mode — serving.py
 5. budget_chunks eager materialization leaves no CacheManager entry —
    sampling.py
 """
+
+import datetime
 
 import pytest
 
@@ -92,12 +93,12 @@ def test_long_window_min_bucket_unit_rejected(spark):
     eng.execute(f"DEPLOY dm OPTIONS(long_windows='w1:2m') {sql}")
 
 
-# -- 4: pre-agg cache key carries execute_mode -------------------------------
+# -- 4: the compiled plan's key carries execute_mode --------------------------
 
-def test_execute_mode_switch_invalidates_preagg(spark):
-    """online->offline drops the TTL filter from _serving_history, so
-    buckets built online may cover different rows: the mode switch must
-    rebuild (the old key was ('tbl', epoch, ttl_now_ms) only)."""
+def test_execute_mode_switch_rebuilds_compiled_plan(spark):
+    """online->offline drops the TTL filter from _serving_history, so a
+    plan compiled online frames over different rows: the mode switch must
+    rebuild it."""
     eng = Engine(spark)
     eng.execute(
         "CREATE TABLE t0 (id int, c1 string, c4 bigint, c7 timestamp,"
@@ -113,19 +114,17 @@ def test_execute_mode_switch_invalidates_preagg(spark):
         "(PARTITION BY t0.c1 ORDER BY t0.c7 ROWS_RANGE BETWEEN 10s "
         "PRECEDING AND CURRENT ROW)"
     )
+    req = [(9, "aa", 40, datetime.datetime.utcfromtimestamp(1590738996))]
     try:
-        dep.prepare_preagg()
-        (online_pre,) = dep._preagg.values()
         # online (TTL 2s from max ts): only the newest row survives
-        assert sum(r["cnt_v"] for r in online_pre.collect()) == 1
+        assert dep.run_request_rows(req)[0]["s"] == 31 + 40
+        online_plan = dep._compiled
         eng.execute("SET @@execute_mode = 'offline'")
-        dep.prepare_preagg()
-        (offline_pre,) = dep._preagg.values()
-        assert offline_pre is not online_pre, "mode switch reused stale buckets"
-        assert sum(r["cnt_v"] for r in offline_pre.collect()) == 2
+        assert dep.run_request_rows(req)[0]["s"] == 30 + 31 + 40
+        assert dep._compiled is not online_plan, "mode switch reused a stale plan"
     finally:
         eng.execute("SET @@execute_mode = 'online'")
-        dep._release_preagg()
+        dep.release_serving()
 
 
 # -- 5: budget_chunks leaves no CacheManager entry ---------------------------

@@ -53,6 +53,11 @@ def _req(spark, dep, rows):
     return spark.createDataFrame(_conv(rows), dep.input_schema)
 
 
+def _per_call(dep, requests):
+    """The per-call lowering every compiled serve must agree with."""
+    return dep._run_request_on(dep._query_with_params(None), requests)
+
+
 def test_lowering_runs_once_across_requests(spark, monkeypatch):
     """The compile-once pin: N run_request calls -> ONE Lowerer.query
     (the compile), not N."""
@@ -87,9 +92,7 @@ def test_compiled_matches_uncached_path(spark):
     ]
     for rows in reqs:
         compiled = sorted(map(tuple, dep.run_request(_req(spark, dep, rows)).collect()))
-        dep.use_compiled = False
-        plain = sorted(map(tuple, dep.run_request(_req(spark, dep, rows)).collect()))
-        dep.use_compiled = True
+        plain = sorted(map(tuple, _per_call(dep, _req(spark, dep, rows)).collect()))
         assert compiled == plain, rows
     # second request's values are its own, not the first's (stale-shuffle
     # hazard the fresh-Dataset-per-serve design exists to avoid)
@@ -435,11 +438,7 @@ def test_self_last_join_on_request_table_jvm_mode(spark):
         map(tuple, dep.run_request(_req(spark, dep, rows)).collect())
     )
     assert dep._compiled is not None and dep._compiled.indexes == {}
-    dep.use_compiled = False
-    plain = sorted(
-        map(tuple, dep.run_request(_req(spark, dep, rows)).collect())
-    )
-    dep.use_compiled = True
+    plain = sorted(map(tuple, _per_call(dep, _req(spark, dep, rows)).collect()))
     assert compiled == plain and len(compiled) == 2
     # the request rows themselves ARE the join's right side here
     assert {t[2] for t in compiled} == {40, 7}
@@ -464,9 +463,7 @@ def test_jvm_staging_timestamps_survive_non_utc_session(spark):
             dep._compiled._serve_spark.conf.get("spark.sql.session.timeZone")
             == "America/New_York"
         )
-        dep.use_compiled = False
-        plain = sorted(map(tuple, dep.run_request(req).collect()))
-        dep.use_compiled = True
+        plain = sorted(map(tuple, _per_call(dep, req).collect()))
         assert compiled == plain, (compiled, plain)
         # rows arm agrees with the DataFrame arm too
         via_rows = sorted(
@@ -716,11 +713,7 @@ def _join_engine(spark):
 
 
 def _uncompiled(dep, rows):
-    dep.use_compiled = False
-    try:
-        return sorted(map(tuple, dep.run_request_rows(_conv(rows))))
-    finally:
-        dep.use_compiled = True
+    return sorted(map(tuple, _per_call(dep, _req(dep.engine.spark, dep, rows)).collect()))
 
 
 def _served(dep, rows):
@@ -935,9 +928,7 @@ def test_perfbench_shaped_deployment_is_planned_once(spark, tmp_path):
     for row in reqs[1:]:
         got = dep.run_request_rows([row])
         assert plan._fresh_serve_df() is df
-        dep.use_compiled = False
-        assert got == dep.run_request_rows([row])
-        dep.use_compiled = True
+        assert got == _per_call(dep, spark.createDataFrame([row], dep.input_schema)).collect()
     assert len(first) == 1
 
 

@@ -100,8 +100,8 @@ def test_execute_script(eng):
 
 @pytest.mark.slow
 def test_deploy_long_windows_preagg(eng, spark):
-    """OPTIONS(long_windows=...): pre-agg-served request mode must equal
-    the standard RequestUnion path exactly."""
+    """OPTIONS(long_windows=...): request mode serves the exact frame over
+    raw history plus the request row."""
     eng.execute("CREATE TABLE lw (pk string, ts bigint, v double)")
     rows = [("a", t * 1000, float(t % 5) + 0.5) for t in range(1, 40)] + [
         ("b", t * 1000, 2.0 * t) for t in range(1, 20)
@@ -119,18 +119,22 @@ def test_deploy_long_windows_preagg(eng, spark):
         [("a", 41000, 9.0), ("b", 21000, 1.0), ("c", 5000, 3.0)],
         "pk string, ts bigint, v double",
     )
-    fast = {
-        (r["pk"], r["ts"]): (r["sv"], r["av"], r["cv"], r["xv"])
-        for r in dep.run_request_preagg(reqs).collect()
-    }
-    slow = {
+    got = {
         (r["pk"], r["ts"]): (r["sv"], r["av"], r["cv"], r["xv"])
         for r in dep.run_request(reqs).collect()
     }
-    assert set(fast) == set(slow)
-    for k in slow:
-        for a, b in zip(fast[k], slow[k]):
-            assert a == pytest.approx(b), (k, fast[k], slow[k])
+    # DEPLOY derives a 1min absolute TTL index on (pk, ts), and that TTL
+    # reads the BIGINT ts as epoch seconds while the window reads epoch
+    # ms: history keeps only ts > 39000 - 60 (the table's newest row, a's
+    # t = 39, v 4.5). The raw-ms frames would read a 38.5 and b 309.0.
+    want = {
+        ("a", 41000): (13.5, 6.75, 2, 9.0),
+        ("b", 21000): (1.0, 1.0, 1, 1.0),
+        ("c", 5000): (3.0, 3.0, 1, 3.0),
+    }
+    assert set(got) == set(want)
+    for k in want:
+        assert got[k] == pytest.approx(want[k]), (k, got[k], want[k])
 
 
 def test_deploy_with_last_join_and_window(eng, spark):

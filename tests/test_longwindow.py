@@ -110,12 +110,11 @@ def test_bucket_partitioned_history_prunes_partitions(spark, tmp_path):
     ["sum"]
     + [pytest.param(a, marks=pytest.mark.slow) for a in ("avg", "min", "max", "count")],
 )
-def test_ported_long_window_family_preagg_equals_request(spark, agg):
+def test_ported_long_window_family_serves_exact_frames(spark, agg):
     """The ported long_window.yaml family (ids 1/5/6/7/8 shape: each
     aggregate over a bounded ROWS_RANGE window deployed with
-    OPTIONS(long_windows=...)) served from the PRE-AGG path must equal the
-    plain request path — the rewrite rule itself, exercised end-to-end on
-    the reference's own case data."""
+    OPTIONS(long_windows=...)) serves the exact frame: the stored rows in
+    range plus the request row."""
     from openmldb_spark.engine import Engine
 
     eng = Engine(spark)
@@ -150,11 +149,16 @@ def test_ported_long_window_family_preagg_equals_request(spark, agg):
          (10, "bb", 31, 41, 2.1, 3.1, ts(1590738996000), None)],
         dep.input_schema,
     )
-    got = {r["id"]: r["m"] for r in dep.run_request_preagg(reqs).collect()}
-    want = {r["id"]: r["m"] for r in dep.run_request(reqs).collect()}
-    assert got == want and len(got) == 2
-    # the pre-agg path actually engaged (materialized buckets exist)
-    assert dep._preagg, "preagg path did not engage"
+    got = {r["id"]: r["m"] for r in dep.run_request(reqs).collect()}
+    # id 9 (aa, 995s): row 3 (32) + 40; id 10 (bb, 996s): rows 4, 5 (33, 34) + 41
+    want = {
+        "sum": {9: 72, 10: 108},
+        "avg": {9: 36.0, 10: 36.0},
+        "min": {9: 32, 10: 33},
+        "max": {9: 40, 10: 41},
+        "count": {9: 2, 10: 3},
+    }[agg]
+    assert got == want
 
 
 @pytest.mark.parametrize(
@@ -163,10 +167,10 @@ def test_ported_long_window_family_preagg_equals_request(spark, agg):
     + [pytest.param(a, marks=pytest.mark.slow)
        for a in ("avg_where", "min_where", "max_where", "count_where")],
 )
-def test_long_window_xxx_where_preagg_equals_request(spark, agg):
+def test_long_window_xxx_where_serves_exact_frames(spark, agg):
     """Long-window *_where (reference integration_test/long_window/
-    test_xxx_where.yaml): the filter-keyed pre-agg path must equal the
-    plain request path for <col> <op> <const> conditions."""
+    test_xxx_where.yaml): the condition filters the exact frame, the
+    request row included."""
     import datetime
 
     from openmldb_spark.engine import Engine
@@ -197,7 +201,14 @@ def test_long_window_xxx_where_preagg_equals_request(spark, agg):
         [(9, "aa", 3, 40, ts(1590738995500)), (10, "bb", 1, 41, ts(1590738996000))],
         dep.input_schema,
     )
-    got = {r["id"]: r["m"] for r in dep.run_request_preagg(reqs).collect()}
-    want = {r["id"]: r["m"] for r in dep.run_request(reqs).collect()}
-    assert got == want and len(got) == 2, (got, want)
-    assert any(k[2] is not None for k in dep._preagg), "filter-keyed preagg missing"
+    got = {r["id"]: r["m"] for r in dep.run_request(reqs).collect()}
+    # id 9 (aa, 995.5s, c2 3): row 4 (c2 4, 33) + 40; id 10 (bb, 996s,
+    # c2 1): row 5 (c2 5, 34) — row 6 and the request fail c2 > 2
+    want = {
+        "sum_where": {9: 73, 10: 34},
+        "avg_where": {9: 36.5, 10: 34.0},
+        "min_where": {9: 33, 10: 34},
+        "max_where": {9: 40, 10: 34},
+        "count_where": {9: 2, 10: 1},
+    }[agg]
+    assert got == want

@@ -2,29 +2,31 @@
 (13 cases, ids 0-12) — the long-window integration tier: bucket time
 units 2y/2d/2h/2m/2s, window-merge legality, the unknown-window deploy
 error, the count_where deploy, and the two DELETE cases (ids 10/11) that
-pin pre-agg invalidation under DML (the reference maintains its
-aggregator tables on every Put/Delete, src/storage/aggregator.cc; here
-`Engine.table_epoch` invalidates `SqlDeployment._preagg` and the next
-serve rebuilds from live rows).
+pin DML under a long-window deploy (the reference maintains its
+aggregator tables on every Put/Delete, src/storage/aggregator.cc; here a
+long-window deploy serves from raw history, so the next serve sees every
+write). Each deploy's request serve is checked against its literal
+frame value.
 
 Pre-agg golden mapping (reference preAgg rows are
 [key, bucket_start_ms, bucket_end_ms, rows_in_bucket, agg_value, filter]):
-our `preaggregate` bucket ids map to start = bucket*bucket_ms,
+the goldens are checked on `plans.longwindow.preaggregate` over the
+stored rows; its bucket ids map to start = bucket*bucket_ms,
 end = start + bucket_ms - 1; composite keys join with '|'. DIVERGENCE
 (noted per-case, DIVERGENCES #25): the reference's aggregator only
 FLUSHES a bucket when a newer one opens — its preAgg goldens exclude the
-newest (still-buffered) bucket per key — while this engine materializes
+newest (still-buffered) bucket per key — while `preaggregate` materializes
 every bucket. The comparison therefore checks the flushed set exactly and
-separately asserts the open bucket is present and correct. Row-count
-buckets (bare-number bucket sizes, reference kRowsNum) are accepted at
-deploy but served from raw rows (fallback), also DIVERGENCES #25.
+separately asserts the open bucket is present and correct.
 """
 
 import datetime
 
 import pytest
+from pyspark.sql import functions as F
 
 from openmldb_spark.engine import Engine
+from openmldb_spark.plans.longwindow import preaggregate
 
 DDL8 = (
     "CREATE TABLE t0 (id int, c1 string, c3 int, c4 bigint, c5 float,"
@@ -62,14 +64,19 @@ def _got_rows(df, ncols=3):
     return sorted(tuple(r)[:ncols] for r in df.collect())
 
 
-def _flushed_and_open(dep, agg, bucket_ms, nkeys=1):
-    """(flushed_rows, open_rows) from the deployment's single pre-agg cache,
+def _flushed_and_open(eng, agg, arg, bucket_ms, keys=("c1",)):
+    """(flushed_rows, open_rows) of `preaggregate` over the stored t0 rows,
     in the reference golden layout (key, start, end, cnt, value)."""
-    (pre,) = dep._preagg.values()
-    rows = pre.collect()
+    knames = [f"__lwk{i}" for i in range(len(keys))]
+    stored = eng.tables["t0"].select(
+        *[F.col(k).alias(n) for k, n in zip(keys, knames)],
+        F.unix_millis("c7").alias("ts"),
+        F.col(arg).alias("v"),
+    )
+    rows = preaggregate(stored, knames, "ts", "v", bucket_ms).collect()
     by_key = {}
     for r in rows:
-        k = "|".join(str(r[f"__lwk{i}"]) for i in range(nkeys))
+        k = "|".join(str(r[kn]) for kn in knames)
         by_key.setdefault(k, []).append(r)
     pick = {"count": "cnt_v", "sum": "sum_v", "min": "min_v", "max": "max_v"}[agg]
     flushed, open_ = [], []
@@ -182,26 +189,25 @@ def test_bucket_time_units(spark, cid, bucket, agg, arg, rows, want, rng,
     got = _got_rows(eng.execute(sql))
     assert got == [(r[0], "aa", w) for r, w in zip(rows, want)]
     dep = eng.execute(f"DEPLOY d{cid} OPTIONS(long_windows='w1:{bucket}') {sql}")
-    dep.prepare_preagg()
-    flushed, open_ = _flushed_and_open(dep, agg, bucket_ms)
+    flushed, open_ = _flushed_and_open(eng, agg, arg, bucket_ms)
     assert flushed == golden, (flushed, golden)
-    # the engine also materializes the newest (reference: still-buffered)
+    # preaggregate also materializes the newest (reference: still-buffered)
     # bucket — present, covering the remaining rows
     assert sum(r[3] for r in flushed) + sum(r[3] for r in open_) == len(rows)
-    # preagg-served request == raw request (end-to-end rewrite check)
+    # a request one step after the last row frames the last two stored
+    # rows (c4 33, 34) and itself (c4 40)
     reqs = spark.createDataFrame(
         [(9, "aa", 30, 40, 2.0, 3.0, _ts(rows[-1][6] + 1000), None)],
         dep.input_schema,
     )
-    got_p = [tuple(r) for r in dep.run_request_preagg(reqs).collect()]
-    got_r = [tuple(r) for r in dep.run_request(reqs).collect()]
-    assert got_p == got_r
+    served = dep.run_request(reqs).collect()[0]["w1_long"]
+    assert served == (3 if agg == "count" else 33 + 34 + 40)
 
 
 # -- ids 5-8: window-merge legality (long+short / long+long / mixed keys) --
 _MERGE_CASES = [
     (
-        5, "w1:2",
+        5, "w1:2", (9, "aa", 107, 4),
         "SELECT id, c1, sum(c4) OVER w1 as w1_long, count(c4) OVER w2 as "
         "w2_long from t0 WINDOW w1 AS (PARTITION BY t0.c1 ORDER BY t0.c7 "
         "ROWS_RANGE BETWEEN 2 PRECEDING AND CURRENT ROW), w2 AS (PARTITION "
@@ -211,7 +217,7 @@ _MERGE_CASES = [
          (4, "aa", 96, 4), (5, "aa", 99, 4)],
     ),
     (
-        6, "w1:2,w2:2",
+        6, "w1:2,w2:2", (9, "aa", 107, 20),
         "SELECT id, c1, sum(c4) OVER w1 as w1_long, min(c3) OVER w2 as "
         "w2_long from t0 WINDOW w1 AS (PARTITION BY t0.c1 ORDER BY t0.c7 "
         "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), w2 AS (PARTITION BY "
@@ -221,7 +227,7 @@ _MERGE_CASES = [
          (4, "aa", 96, 20), (5, "aa", 99, 21)],
     ),
     (
-        7, "w1:2",
+        7, "w1:2", (9, "aa", 107, 22.0, 4),
         "SELECT id, c1, sum(c4) OVER w1 as w1_long, avg(c3) OVER w2 as "
         "w2_c3_avg, count(c3) OVER w3 as w3_c3_count from t0 WINDOW w1 AS "
         "(PARTITION BY t0.c1 ORDER BY t0.c7 ROWS BETWEEN 2 PRECEDING AND "
@@ -234,7 +240,7 @@ _MERGE_CASES = [
          (5, "aa", 99, 23.5, 4)],
     ),
     (
-        8, "w1:2",
+        8, "w1:2", (9, "aa", 20, 107, 3),
         "SELECT id, c1, c3, sum(c4) OVER w1 as w1_long, count(c5) OVER w2 "
         "as w2_c5_count from t0 WINDOW w1 AS (PARTITION BY t0.c1 ORDER BY "
         "t0.c7 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), w2 AS (PARTITION "
@@ -253,24 +259,20 @@ _MERGE_CASES = [
 
 
 @pytest.mark.parametrize(
-    "cid,lw,sql,rows,want", _MERGE_CASES, ids=[f"id{c[0]}" for c in _MERGE_CASES]
+    "cid,lw,served,sql,rows,want", _MERGE_CASES, ids=[f"id{c[0]}" for c in _MERGE_CASES]
 )
-def test_window_merge_shapes(spark, cid, lw, sql, rows, want):
+def test_window_merge_shapes(spark, cid, lw, served, sql, rows, want):
     eng = _engine(spark, rows)
     got = _got_rows(eng.execute(sql), ncols=len(want[0]))
     assert got == want
     # the deploy with count-bucket / ROWS-frame long_windows is ACCEPTED
-    # (function-tier corpus) and served via the raw-request fallback —
-    # results must match the plain request path exactly
+    # (function-tier corpus) and serves the exact frames
     dep = eng.execute(f"DEPLOY dm{cid} OPTIONS(long_windows='{lw}') {sql}")
-    assert dep._lw_items() == []  # nothing preagg-servable: fallback path
     reqs = spark.createDataFrame(
         [(9, "aa", 20, 40, 2.0, 3.0, _ts(1590738990005), None)],
         dep.input_schema,
     )
-    got_p = [tuple(r) for r in dep.run_request_preagg(reqs).collect()]
-    got_r = [tuple(r) for r in dep.run_request(reqs).collect()]
-    assert got_p == got_r
+    assert [tuple(r) for r in dep.run_request(reqs).collect()] == [served]
 
 
 # -- id 9: unknown window name in long_windows -> deploy error -------------
@@ -284,7 +286,7 @@ def test_id9_unknown_window_rejected(spark):
         )
 
 
-# -- ids 10/11: DELETE invalidates the pre-agg -----------------------------
+# -- ids 10/11: DELETE reaches the next serve ------------------------------
 @pytest.mark.parametrize(
     "cid,part,delete,nkeys",
     [
@@ -293,7 +295,7 @@ def test_id9_unknown_window_rejected(spark):
     ],
     ids=["id10_delete_pk", "id11_delete_composite"],
 )
-def test_delete_invalidates_preagg(spark, cid, part, delete, nkeys):
+def test_delete_reaches_next_serve(spark, cid, part, delete, nkeys):
     rows = (
         ROWS_2S
         if cid == 10
@@ -313,35 +315,31 @@ def test_delete_invalidates_preagg(spark, cid, part, delete, nkeys):
         f"SELECT {sel} FROM t0 WINDOW w1 AS (PARTITION BY {part} ORDER BY "
         "t0.c7 ROWS_RANGE BETWEEN 2s PRECEDING AND CURRENT ROW)"
     )
+    keys = ("c1",) if nkeys == 1 else ("c1", "c3")
     # step 1: batch result + flushed preAgg golden
     want_vals = [30, 61, 93, 96, 99]
     got = _got_rows(eng.execute(sql), ncols=2 + nkeys)
     assert [r[-1] for r in got] == want_vals
     dep = eng.execute(f"DEPLOY dd{cid} OPTIONS(long_windows='w1:2s') {sql}")
-    dep.prepare_preagg()
-    flushed, _ = _flushed_and_open(dep, "sum", 2000, nkeys=nkeys)
+    flushed, _ = _flushed_and_open(eng, "sum", "c4", 2000, keys)
     assert flushed == [
         (key, 1590738990000, 1590738991999, 1, 30),
         (key, 1590738992000, 1590738993999, 2, 63),
     ]
-    # serve once so the cache is hot (the staleness repro needs a hit)
+    # serve once so the plan is compiled before the DELETE
     req_row = (9, "aa", 30, 40, 2.0, 3.0, _ts(1590738996000), None) \
         if nkeys == 1 else (9, "aa", 20, 40, 2.0, 3.0, _ts(1590738996000), None)
     reqs = spark.createDataFrame([req_row], dep.input_schema)
-    before = dep.run_request_preagg(reqs).collect()[0]["w1_long"]
+    before = dep.run_request(reqs).collect()[0]["w1_long"]
     # rows 4+5 in the inclusive [t-2s, t] range + the request row itself
     assert before == 33 + 34 + 40
 
-    # step 2: DELETE empties the key -> pre-agg must not serve stale buckets
+    # step 2: DELETE empties the key -> the next serve sees only itself
     eng.execute(delete)
-    after = dep.run_request_preagg(reqs).collect()[0]["w1_long"]
-    assert after == 40, "stale pre-agg served deleted rows"
-    raw = dep.run_request(reqs).collect()[0]["w1_long"]
-    assert after == raw
+    after = dep.run_request(reqs).collect()[0]["w1_long"]
+    assert after == 40, "a serve after the DELETE saw deleted rows"
     # reference golden: preAgg count 0 after the delete
-    dep.prepare_preagg()
-    (pre,) = dep._preagg.values()
-    assert pre.count() == 0
+    assert _flushed_and_open(eng, "sum", "c4", 2000, keys) == ([], [])
 
 
 # -- id 12: count_where over a 2s long window ------------------------------
@@ -379,15 +377,13 @@ def test_id12_count_where_long_window(spark):
         [(9, "aa", 3, 30, 40, 2.0, 3.0, _ts(1590738995000), None, True)],
         dep.input_schema,
     )
-    got_p = [tuple(r) for r in dep.run_request_preagg(reqs).collect()]
-    got_r = [tuple(r) for r in dep.run_request(reqs).collect()]
-    assert got_p == got_r
-    assert dep._preagg, "filter-keyed preagg path did not engage"
+    # rows 4 and 5 are in range but fail c2 < 4; the request (c2 3) counts
+    assert [tuple(r) for r in dep.run_request(reqs).collect()] == [(9, "aa", 1)]
 
 
-# -- the r8 verdict's direct staleness repros (beyond the corpus) ----------
+# -- direct staleness repros (beyond the corpus) ---------------------------
 @pytest.mark.slow
-def test_insert_invalidates_preagg(spark):
+def test_insert_reaches_next_serve(spark):
     eng = _engine(spark, ROWS_2S)
     sql = (
         "SELECT id, c1, sum(c4) OVER w1 as w1_long FROM t0 WINDOW w1 AS "
@@ -399,39 +395,19 @@ def test_insert_invalidates_preagg(spark):
         [(9, "aa", 30, 40, 2.0, 3.0, _ts(1590738996000), None)],
         dep.input_schema,
     )
-    assert dep.run_request_preagg(reqs).collect()[0]["w1_long"] == 33 + 34 + 40
+    assert dep.run_request(reqs).collect()[0]["w1_long"] == 33 + 34 + 40
     eng.execute(
         "INSERT INTO t0 VALUES (6, 'aa', 25, 100, 1.6, 2.6, "
         "1590738995500, '2020-05-06')"
     )
-    got = dep.run_request_preagg(reqs).collect()[0]["w1_long"]
-    assert got == 33 + 34 + 100 + 40, "stale pre-agg missed inserted row"
-    assert got == dep.run_request(reqs).collect()[0]["w1_long"]
-
-
-def test_unchanged_table_reuses_preagg_cache(spark):
-    """No DML between serves -> the persisted buckets are reused, not
-    rebuilt (the point of the cache)."""
-    eng = _engine(spark, ROWS_2S)
-    sql = (
-        "SELECT id, c1, sum(c4) OVER w1 as w1_long FROM t0 WINDOW w1 AS "
-        "(PARTITION BY t0.c1 ORDER BY t0.c7 ROWS_RANGE BETWEEN 2s "
-        "PRECEDING AND CURRENT ROW)"
-    )
-    dep = eng.execute(f"DEPLOY dc OPTIONS(long_windows='w1:2s') {sql}")
-    dep.prepare_preagg()
-    (first,) = dep._preagg.values()
-    dep.prepare_preagg()
-    (second,) = dep._preagg.values()
-    assert first is second
+    got = dep.run_request(reqs).collect()[0]["w1_long"]
+    assert got == 33 + 34 + 100 + 40, "a serve after the INSERT missed its row"
 
 
 @pytest.mark.slow
-def test_explicit_history_switch_invalidates_preagg(spark):
-    """r9 review finding: the cache token for an explicit history was
-    id(history) — CPython can reuse the id after GC, inheriting a stale
-    cache. The deployment now holds the history reference and compares by
-    identity: a DIFFERENT history DataFrame must rebuild the buckets."""
+def test_explicit_history_switch_serves_each_history(spark):
+    """Each explicit history DataFrame frames its own rows, and switching
+    back to engine-store history serves the stored rows again."""
     eng = _engine(spark, ROWS_2S)
     sql = (
         "SELECT id, c1, sum(c4) OVER w1 as w1_long FROM t0 WINDOW w1 AS "
@@ -446,12 +422,11 @@ def test_explicit_history_switch_invalidates_preagg(spark):
     full = eng.tables["t0"]
     h1 = full.where("id <= 3")
     h2 = full.where("id >= 4")
-    got1 = dep.run_request_preagg(reqs, history=h1).collect()[0]["w1_long"]
-    got2 = dep.run_request_preagg(reqs, history=h2).collect()[0]["w1_long"]
+    got1 = dep.run_request(reqs, history=h1).collect()[0]["w1_long"]
+    got2 = dep.run_request(reqs, history=h2).collect()[0]["w1_long"]
     assert got1 == 40            # rows 1-3 out of the 2s range: request only
     assert got2 == 33 + 34 + 40  # rows 4+5 + request
-    # and switching back to engine-store history also rebuilds
-    got3 = dep.run_request_preagg(reqs).collect()[0]["w1_long"]
+    got3 = dep.run_request(reqs).collect()[0]["w1_long"]
     assert got3 == 33 + 34 + 40
 
 

@@ -19,11 +19,18 @@ Roots:
 Tests and the other ``tools/`` scripts are not roots: a library def only a
 test calls is dead code, unless it is the oracle a test checks a live def
 against (``TEST_ORACLES``).
+
+A second, repo-wide guard covers every def in ``openmldb_spark/``, methods
+and nested defs included: its name must appear in some ``.py`` file of the
+repository outside the def itself, as an identifier, an attribute, an
+imported name or a whole string constant. Hooks a framework calls by name
+are listed in ``FRAMEWORK_HOOKS``; dunder methods are exempt.
 """
 
 from __future__ import annotations
 
 import ast
+import collections
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -36,6 +43,11 @@ TEST_ORACLES = {
         "tests/test_pipeline.py::test_lsh_topk_join_matches_broadcast_path",
     f"{PKG}.pipeline.similarity.kmeans_centroids":
         "tests/test_pipeline.py::test_ivf_topk_join_with_trained_centroids",
+}
+
+#: defs a framework calls by name -> the framework
+FRAMEWORK_HOOKS = {
+    "log_message": "http.server.BaseHTTPRequestHandler (restful.py handler)",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -210,3 +222,44 @@ def test_oracle_allow_list_is_current():
         called = {n.attr if isinstance(n, ast.Attribute) else n.id
                   for n in ast.walk(fn) if isinstance(n, (ast.Attribute, ast.Name))}
         assert qual.rsplit(".", 1)[1] in called, f"{test_id} does not use {qual}"
+
+
+def _named(node) -> collections.Counter:
+    """How often each name appears in ``node`` as an identifier, an
+    attribute, an imported name or a whole string constant."""
+    out: collections.Counter = collections.Counter()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            out[n.attr] += 1
+        elif isinstance(n, ast.alias):
+            out[n.name.rsplit(".", 1)[-1]] += 1
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            out[n.value] += 1
+    return out
+
+
+def test_every_library_def_is_named_outside_itself():
+    named: collections.Counter = collections.Counter()
+    defs = []
+    for dp, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if not d.startswith(".") and d != "spark-warehouse"]
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dp, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            named += _named(tree)
+            rel = os.path.relpath(path, REPO)
+            if rel.startswith(PKG + os.sep):
+                defs += [(rel, n) for n in ast.walk(tree) if isinstance(n, _DEFS)]
+    unnamed = [
+        f"{rel}:{d.lineno} {d.name}"
+        for rel, d in defs
+        if not (d.name.startswith("__") and d.name.endswith("__"))
+        and d.name not in FRAMEWORK_HOOKS
+        and named[d.name] <= _named(d)[d.name]
+    ]
+    assert not unnamed, f"defs nothing names outside themselves (delete them): {unnamed}"

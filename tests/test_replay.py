@@ -36,19 +36,18 @@ from test_yaml_cases import _SPARK_TYPES, _eq, _parse_rows, _parse_schema, smoke
 
 CASE_DIR = os.path.join(os.path.dirname(__file__), "cases")
 
-#: refusal messages the replay accepts, by reason: the engine's DEPLOY
-#: check, and a main table that is no input of the golden (a WITH name)
+#: refusal messages of the engine's DEPLOY checks the replay accepts, by
+#: reason
 REFUSALS = {
     "no named main table": "DEPLOY needs a SELECT with a named main table",
     "not a SELECT": "DEPLOY requires a SELECT statement",
     "cross-database": "DEPLOY SQL must not reference other databases",
-    "main table is no input": "is no input",
+    "main table is a WITH name": "is a WITH table",
 }
 
 #: DIVERGENCES.md entries a replay mismatch is pinned to
 LATER_ROWS = "#26 request replay sees only the rows stored before it"
 GROUPED_REQUEST = "#27 GROUP BY over the request table aggregates the request alone"
-DECIMAL_ARRAY_SUM = "#28 array-path sum over a DECIMAL argument fails analysis"
 
 #: "<file>:<id>" -> the DIVERGENCES.md entry its mismatch is pinned to
 PINNED = {
@@ -70,7 +69,6 @@ PINNED = {
         LATER_ROWS,
     ),
     "ref_ported_groupby_v040_cases.yaml:22": GROUPED_REQUEST,
-    "ref_ported_udaf_function_cases.yaml:52": DECIMAL_ARRAY_SUM,
 }
 
 
@@ -120,8 +118,6 @@ def replay(spark, case) -> tuple[str, str]:
     except Exception as e:  # a refusal is an outcome; its reason is checked
         return "refused", f"{type(e).__name__}: {e}"
     main = dep.request_table
-    if main not in rows_of:
-        return "refused", f"main table {main} is no input"
     db, bare = eng._loc(main)
     eng.register(main, eng.tables[main].limit(0))
     served = []

@@ -142,12 +142,11 @@ def test_long_window_where_negative_constant(spark, eng):
         "rows_range between 1d preceding and current row)"
     )
     dep = eng.deployments["d4"]
-    dep.prepare_preagg()
     reqs = spark.createDataFrame(
         [(9, "a", 7, -8, datetime.datetime(1970, 1, 1, 0, 0, 3))],
         "id int, cc string, v int, c2 int, ts timestamp"
     )
-    [row] = dep.run_request_preagg(reqs).collect()
+    [row] = dep.run_request(reqs).collect()
     assert row["sw"] == 17  # 10 (c2=-9) + 7 (request, c2=-8); c2=4 excluded
 
 

@@ -1,7 +1,10 @@
-"""Pins for the r9 verdict's "What's wrong" items #3 (DROP paths leak
-persisted pre-agg caches) — save_bucketed orphan resilience (#2) is pinned
-in tests/test_bucketed.py, the suite-count fix (#1) is a README process
-change, and the SCALE items (#4) are probed by tools/scale_probe.py."""
+"""Every DROP path releases a deployment's serving state: the compiled
+request plan's staged directory (and its indexes). DROP DEPLOYMENT is
+pinned in tests/test_compiled_serving.py; save_bucketed orphan
+resilience is pinned in tests/test_bucketed.py."""
+
+import datetime
+import os
 
 import pytest
 
@@ -22,10 +25,7 @@ SQL = (
     "(PARTITION BY t0.c1 ORDER BY t0.c7 ROWS_RANGE BETWEEN 2s "
     "PRECEDING AND CURRENT ROW)"
 )
-
-
-def _cache_empty(spark) -> bool:
-    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+REQUEST = (9, "aa", 40, datetime.datetime.utcfromtimestamp(1590738993))
 
 
 def _engine(spark):
@@ -38,42 +38,41 @@ def _engine(spark):
     return eng
 
 
+def _staged_dir(dep) -> str:
+    """Serve once (which compiles the plan) and return its staged dir."""
+    [row] = dep.run_request_rows([REQUEST])
+    assert row["w1_long"] == 30 + 31 + 40
+    assert os.path.isdir(dep._compiled._dir)
+    return dep._compiled._dir
+
+
 @pytest.mark.parametrize(
     "drop_sql",
     ["DROP DEPLOYMENT d1", "DROP TABLE t0"],
     ids=["drop_deployment", "drop_table"],
 )
-def test_drop_releases_preagg_cache(spark, drop_sql):
-    """deploy -> prepare_preagg -> DROP must leave zero entries in the
-    Spark cache manager: the old paths del'd the deployment without the
-    unpersist loop, leaving the .persist()ed bucket DataFrames cached
-    until the ContextCleaner happened to collect them (r9 verdict #3)."""
-    spark.catalog.clearCache()
+def test_drop_releases_compiled_plan(spark, drop_sql):
     eng = _engine(spark)
     dep = eng.execute(f"DEPLOY d1 OPTIONS(long_windows='w1:2s') {SQL}")
-    dep.prepare_preagg()
-    assert not _cache_empty(spark)
+    staged = _staged_dir(dep)
     eng.execute(drop_sql)
-    assert _cache_empty(spark), f"{drop_sql} leaked persisted pre-agg buckets"
-    assert not dep._preagg
+    assert not os.path.exists(staged), f"{drop_sql} leaked the staged dir"
+    assert dep._compiled is None
 
 
-def test_drop_procedure_releases_preagg_cache(spark):
-    spark.catalog.clearCache()
+def test_drop_procedure_releases_compiled_plan(spark):
     eng = _engine(spark)
     dep = eng.execute(
         "CREATE PROCEDURE p1(id int, c1 string, c4 bigint, c7 timestamp) "
         f"BEGIN {SQL}; END"
     )
-    dep.long_windows = {"w1": "2s"}
-    dep.prepare_preagg()
-    assert not _cache_empty(spark)
+    staged = _staged_dir(dep)
     eng.execute("DROP PROCEDURE p1")
-    assert _cache_empty(spark), "DROP PROCEDURE leaked persisted pre-agg buckets"
+    assert not os.path.exists(staged), "DROP PROCEDURE leaked the staged dir"
+    assert dep._compiled is None
 
 
-def test_drop_database_releases_preagg_cache(spark):
-    spark.catalog.clearCache()
+def test_drop_database_releases_compiled_plan(spark):
     eng = _engine(spark)  # creates t0 in 'default'
     eng.execute("CREATE DATABASE lwdb")
     eng.execute("USE lwdb")
@@ -81,8 +80,8 @@ def test_drop_database_releases_preagg_cache(spark):
     vals = ", ".join("(%d, %r, %d, %d)" % r for r in ROWS)
     eng.execute(f"INSERT INTO t0 VALUES {vals}")
     dep = eng.execute(f"DEPLOY d2 OPTIONS(long_windows='w1:2s') {SQL}")
-    dep.prepare_preagg()
-    assert not _cache_empty(spark)
+    staged = _staged_dir(dep)
     eng.execute("USE default")
     eng.execute("DROP DATABASE lwdb")
-    assert _cache_empty(spark), "DROP DATABASE leaked persisted pre-agg buckets"
+    assert not os.path.exists(staged), "DROP DATABASE leaked the staged dir"
+    assert dep._compiled is None

@@ -87,6 +87,19 @@ def test_maxsize(spark, t1):
     assert _col(out) == {1: 1, 2: 3, 3: 5, 4: 7, 5: 9, 6: 6, 7: 13, 8: 15, 9: 17}
 
 
+def test_array_path_decimal_sum_matches_native(spark, t1):
+    """``col1 * 1.0`` is DECIMAL in Spark: the array-path sum (a MAXSIZE
+    frame) folds in the native sum's result type, not a widening one."""
+    dec = t1.withColumn("d", F.expr("col1 * 1.0"))
+    wide = WindowDef(partition_by=["pk1"], order_by="ts", rows_range="40s", maxsize=10)
+    native = WindowDef(partition_by=["pk1"], order_by="ts", rows_range="40s")
+    got = window_agg(dec, wide, {"s": A.sum_("d")})
+    want = window_agg(dec, native, {"s": A.sum_("d")})
+    assert got.schema["s"].dataType == want.schema["s"].dataType
+    assert got.schema["s"].dataType.simpleString() == "decimal(33,1)"
+    assert _col(got) == _col(want)
+
+
 def test_unbounded(spark, t1):
     wd = WindowDef(partition_by=["pk1"], order_by="ts", unbounded=True)
     out = window_agg(t1, wd, {"s": A.sum_("col1")})
